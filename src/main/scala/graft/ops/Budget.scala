@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -17,12 +16,10 @@ import org.apache.spark.sql.functions._
  * that would cross the budget is dropped, as is everything below it —
  * the largest budget-respecting prefix of the ranked corpus).
  *
- * Scale shape: the same two-level distributed scan as [[Packing.layout]]
- * — the corpus-wide prefix sum is the one genuinely order-coupled step —
- * but over the SCORE order instead of the id order: one range exchange
- * of fixed-width (id, score, n_tokens) rows (text dies at the scan),
- * per-partition totals to the driver (O(nParts)), then a
- * partition-local window. No global single-partition window anywhere.
+ * Scale shape: the corpus-wide prefix sum is the one genuinely
+ * order-coupled step, so it runs as [[PrefixScan]] — the same scan as
+ * [[Packing.layout]] but over the SCORE order instead of the id order,
+ * on fixed-width (id, score, n_tokens) rows (text dies at the scan).
  */
 object Budget {
 
@@ -34,7 +31,7 @@ object Budget {
   def selectByBudget(docs: DataFrame, idCol: String, scoreCol: String,
       textCol: String, budgetTokens: Long, nParts: Int = 32,
       tokenCount: Column => Column = TextStats.tokenCount,
-      maxDriverDocs: Int = MaxDriverDocs): DataFrame = {
+      maxDriverDocs: Int = PrefixScan.MaxDriverDocs): DataFrame = {
     require(budgetTokens >= 0, s"budgetTokens=$budgetTokens")
     selectRanked(docs, idCol, scoreCol, textCol, nParts, tokenCount,
       _ => budgetTokens, maxDriverDocs)
@@ -50,99 +47,24 @@ object Budget {
   def selectByBudgetFraction(docs: DataFrame, idCol: String, scoreCol: String,
       textCol: String, num: Long, den: Long, nParts: Int = 32,
       tokenCount: Column => Column = TextStats.tokenCount,
-      maxDriverDocs: Int = MaxDriverDocs): DataFrame = {
+      maxDriverDocs: Int = PrefixScan.MaxDriverDocs): DataFrame = {
     require(num >= 0 && den > 0, s"fraction=$num/$den")
     selectRanked(docs, idCol, scoreCol, textCol, nParts, tokenCount,
       total => total * num / den, maxDriverDocs)
   }
 
-  /** Doc-count gate for the driver fast path (same bounded-driver-plane
-    * posture as Packing.layout's: ~24 bytes/doc of rank metadata). */
-  private val MaxDriverDocs = 1 << 20
-
   private def selectRanked(docs: DataFrame, idCol: String, scoreCol: String,
       textCol: String, nParts: Int, tokenCount: Column => Column,
       budgetOf: Long => Long, maxDriverDocs: Int): DataFrame = {
-    // SIZE-GATED driver fast path (see Packing.layout): the ranked
-    // ledger is one fixed-width row per doc, so under the gate one
-    // limit-collect + an in-memory (score DESC, id) sort + prefix sum
-    // replaces the range-sample job, the checkpoint materialization and
-    // the partials collect. Integral id+score only (driver sort order ==
-    // Spark's); nulls or over-gate fall through unchanged.
-    val integral = Seq(idCol, scoreCol).forall(c =>
-      docs.schema(c).dataType match {
-        case org.apache.spark.sql.types.LongType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.ShortType => true
-        case _ => false
-      })
-    // see Packing.layout: the output schema must not change with corpus
-    // size, so the count type must be integral and the fast path
-    // re-emits the collected n_tokens value and field verbatim
-    lazy val proj = docs
-      .select(col(idCol), col(scoreCol), tokenCount(col(textCol)).as("n_tokens"))
-    lazy val integralCount = proj.schema("n_tokens").dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    }
-    if (integral && maxDriverDocs > 0 && integralCount) {
-      val head = proj.limit(maxDriverDocs + 1).collect()
-      if (head.length <= maxDriverDocs &&
-          !head.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))) {
-        val spark = docs.sparkSession
-        val sorted = head.sortBy(r =>
-          (r.getAs[Number](1).longValue(), r.getAs[Number](0).longValue()))(
-          Ordering.Tuple2(Ordering.Long.reverse, Ordering.Long))
-        val budget = budgetOf(sorted.iterator.map(_.getAs[Number](2).longValue()).sum)
-        val out = new Array[org.apache.spark.sql.Row](sorted.length)
-        var cum = 0L
-        var i = 0
-        while (i < sorted.length) {
-          val r = sorted(i)
-          cum += r.getAs[Number](2).longValue()
-          out(i) = org.apache.spark.sql.Row(r.get(0), r.get(1),
-            r.get(2), cum, cum <= budget)
-          i += 1
-        }
-        import org.apache.spark.sql.types._
-        val schema = StructType(Seq(
-          proj.schema(idCol), proj.schema(scoreCol),
-          proj.schema("n_tokens"),
-          StructField("cum_tokens", LongType, nullable = false),
-          StructField("kept", BooleanType, nullable = false)))
-        return spark.createDataFrame(
-          new java.util.ArrayList(java.util.Arrays.asList(out: _*)), schema)
-      }
-    }
-    // 1. slim + range-partition by the rank key (see Packing.layout for
-    // why localCheckpoint and not cache: offsets must pair with the ONE
-    // materialized partitioning)
     val slim = docs
       .select(col(idCol), col(scoreCol), tokenCount(col(textCol)).as("n_tokens"))
-      .repartitionByRange(nParts, col(scoreCol).desc, col(idCol))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
-    // 2. per-partition totals -> broadcast offsets (pid order IS rank order)
-    val partials = slim.groupBy(col("__pid"))
-      .agg(sum(col("n_tokens")).as("s"))
-      .collect()
-      .sortBy(_.getAs[Int]("__pid"))
-    val budgetTokens = budgetOf(partials.map(_.getAs[Long]("s")).sum)
-    val offsetMap =
-      if (partials.isEmpty) map(lit(0), lit(0L))
-      else map(partials.map(_.getAs[Int]("__pid"))
-        .zip(partials.scanLeft(0L)(_ + _.getAs[Long]("s")).init)
-        .flatMap { case (pid, off) => Seq(lit(pid), lit(off)) }: _*)
-    // 3. partition-local inclusive running sum + offset
-    val w = Window.partitionBy(col("__pid"))
-      .orderBy(col(scoreCol).desc, col(idCol))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    slim
-      .withColumn("cum_tokens",
-        sum(col("n_tokens")).over(w) + element_at(offsetMap, col("__pid")))
-      .withColumn("kept", col("cum_tokens") <= budgetTokens)
-      .drop("__pid")
+    val (scanned, total) = PrefixScan.exclusiveSum(slim,
+      Seq(PrefixScan.Key(scoreCol, desc = true), PrefixScan.Key(idCol)),
+      Some("n_tokens"), nParts, maxDriverDocs)
+    // inclusive: a doc's own tokens count toward its cut; a null count
+    // (null text) adds nothing, as it adds nothing to the prefix
+    val cum = col(PrefixScan.Prefix) + coalesce(col("n_tokens"), lit(0L))
+    scanned.select(col(idCol), col(scoreCol), col("n_tokens"),
+      cum.as("cum_tokens"), (cum <= budgetOf(total)).as("kept"))
   }
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -18,140 +17,32 @@ import org.apache.spark.sql.functions._
  * n_seqs) with end_tok exclusive and seq indices 0-based.
  *
  * Scale shape: this is a corpus-wide prefix sum over a total order — the
- * one genuinely order-coupled op in the pipeline. It runs as the textbook
- * two-level distributed scan:
- *   1. (id, n_tokens) rows — tokens counted by the codegen'd counter at
- *      the scan; TEXT never leaves the scan projection — are
- *      range-partitioned by the order key (one range exchange of 16-byte
- *      rows);
- *   2. per-partition token totals (one row per partition) come to the
- *      driver and turn into a broadcast offset map;
- *   3. each partition computes its local running sum + its offset — a
- *      partition-local window, no further exchange.
- * A global `Window.orderBy` (no partition) would instead drag the whole
- * corpus through ONE task — the plan this op exists to avoid.
+ * one genuinely order-coupled op in the pipeline — so it runs as
+ * [[PrefixScan]] over (id, n_tokens) rows: tokens are counted by the
+ * codegen'd counter at the scan and TEXT never leaves the scan
+ * projection.
  */
 object Packing {
 
-  /** Doc-count gate for the driver prefix-sum fast path: (id, n_tokens)
-    * pairs are 16 bytes, so 2^20 docs is ~16 MB of driver rows — the
-    * same bounded-driver-plane posture as Cluster's union-find gate. At
-    * corpus scale the gate never fires and the two-level distributed
-    * scan below is the path. */
-  private val MaxDriverDocs = 1 << 20
-
-  /** `ord` must be a total order on rows (ties break nothing — equal keys
-    * get an arbitrary but range-contiguous placement); default orders by
-    * the id column. */
+  /** The stream is in `idCol` order, so ids should be unique (equal ids
+    * get an arbitrary but range-contiguous placement). Under
+    * `maxDriverDocs` docs the prefix sum runs on the driver (see
+    * [[PrefixScan.exclusiveSum]]). */
   def layout(docs: DataFrame, idCol: String, textCol: String, seqLen: Long,
       nParts: Int = 32, tokenCount: Column => Column = TextStats.tokenCount,
-      maxDriverDocs: Int = MaxDriverDocs): DataFrame = {
+      maxDriverDocs: Int = PrefixScan.MaxDriverDocs): DataFrame = {
     require(seqLen > 0, "seqLen must be positive")
-    // SIZE-GATED driver fast path: the layout's output is one SMALL
-    // fixed-width row per document (the text dies at the scan either
-    // way), so when the doc plane fits the driver comfortably AND the
-    // id is integral (driver sort order == Spark's), one limit-collect
-    // + an in-memory prefix sum replaces the range-sample job, the
-    // checkpoint materialization and the per-partition-totals collect —
-    // three driver barriers per call on a path q57/q85/q87/q95 all
-    // take. Over the gate (or a non-integral id) nothing changes.
-    val integralId = docs.schema(idCol).dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    }
     // n_tokens keeps the tokenCount expression's OWN type (charTable
-    // passes length+1 = int): the output schema must not change with
-    // corpus size, so the gate also requires an integral count type and
-    // the fast path re-emits the collected value and field verbatim
-    lazy val proj = docs
-      .select(col(idCol), tokenCount(col(textCol)).as("n_tokens"))
-    lazy val integralCount = proj.schema("n_tokens").dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    }
-    if (integralId && maxDriverDocs > 0 && integralCount) {
-      val head = proj.limit(maxDriverDocs + 1).collect()
-      // null ids/token counts take the distributed path (its null
-      // propagation semantics are not worth re-implementing here)
-      if (head.length <= maxDriverDocs &&
-          !head.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        val spark = docs.sparkSession
-        val sorted = head.sortBy(r => r.getAs[Number](0).longValue())
-        val out = new Array[org.apache.spark.sql.Row](sorted.length)
-        var start = 0L
-        var i = 0
-        while (i < sorted.length) {
-          val r = sorted(i)
-          val n = r.getAs[Number](1).longValue()
-          val end = start + n
-          val firstSeq = start / seqLen
-          // Scala Long division truncates toward zero — the same as SQL
-          // DIV, so the n = 0, start % seqLen == 0 corner ((end-1) DIV
-          // seqLen) matches the distributed expression exactly
-          val lastSeq = (end - 1) / seqLen
-          out(i) = org.apache.spark.sql.Row(
-            r.get(0), r.get(1), start, end, firstSeq, lastSeq, lastSeq - firstSeq + 1L)
-          start = end
-          i += 1
-        }
-        import org.apache.spark.sql.types._
-        val schema = StructType(Seq(
-          proj.schema(idCol),
-          proj.schema("n_tokens"),
-          StructField("start_tok", LongType, nullable = false),
-          StructField("end_tok", LongType, nullable = false),
-          StructField("first_seq", LongType, nullable = false),
-          StructField("last_seq", LongType, nullable = false),
-          StructField("n_seqs", LongType, nullable = false)))
-        return spark.createDataFrame(
-          new java.util.ArrayList(java.util.Arrays.asList(out: _*)), schema)
-      }
-      // over the gate: fall through to the distributed scan (the probe
-      // cost one bounded collect; corpus-scale callers pay it once)
-    }
-    // 1. slim to (id, n_tokens), range-partition by the order key.
-    // localCheckpoint (eager), NOT cache: the offsets below are computed
-    // from ONE materialization of this range shuffle, and the returned
-    // (lazy) frame must read the very same partitioning — a cache could
-    // be evicted (or unpersisted before the caller executes) and the
-    // re-run RangePartitioner may sample different bounds, silently
-    // pairing local sums with offsets from a different partitioning.
-    val slim = docs
-      .select(col(idCol), tokenCount(col(textCol)).as("n_tokens"))
-      .repartitionByRange(nParts, col(idCol))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
-    // 2. per-partition totals -> driver (nParts rows) -> offset literal
-    // range partitioner numbers partitions in key order: pid order IS
-    // the global order
-    val partials = slim.groupBy(col("__pid"))
-      .agg(sum(col("n_tokens")).as("s"))
-      .collect()
-      .sortBy(_.getAs[Int]("__pid"))
-    // empty corpus: map() would be map<string,string> and poison the
-    // arithmetic types downstream; any typed single-entry map works
-    // because no row will look anything up
-    val offsetMap =
-      if (partials.isEmpty) map(lit(0), lit(0L))
-      else map(partials.map(_.getAs[Int]("__pid"))
-        .zip(partials.scanLeft(0L)(_ + _.getAs[Long]("s")).init)
-        .flatMap { case (pid, off) => Seq(lit(pid), lit(off)) }: _*)
-    // 3. partition-local running sum + broadcast offset
-    val w = Window.partitionBy(col("__pid")).orderBy(col(idCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    slim
-      .withColumn("start_tok",
-        coalesce(sum(col("n_tokens")).over(w), lit(0L)) +
-          element_at(offsetMap, col("__pid")))
-      .withColumn("end_tok", col("start_tok") + col("n_tokens"))
-      .withColumn("first_seq", expr(s"start_tok DIV $seqLen"))
-      .withColumn("last_seq", expr(s"(end_tok - 1) DIV $seqLen"))
-      .withColumn("n_seqs", col("last_seq") - col("first_seq") + lit(1L))
-      .drop("__pid")
+    // passes length+1 = int)
+    val slim = docs.select(col(idCol), tokenCount(col(textCol)).as("n_tokens"))
+    val (scanned, _) = PrefixScan.exclusiveSum(slim, Seq(PrefixScan.Key(idCol)),
+      Some("n_tokens"), nParts, maxDriverDocs)
+    val start = PrefixScan.Prefix
+    val firstSeq = expr(s"$start DIV $seqLen")
+    val lastSeq = expr(s"($start + n_tokens - 1) DIV $seqLen")
+    scanned.select(col(idCol), col("n_tokens"), col(start).as("start_tok"),
+      (col(start) + col("n_tokens")).as("end_tok"), firstSeq.as("first_seq"),
+      lastSeq.as("last_seq"), (lastSeq - firstSeq + lit(1L)).as("n_seqs"))
   }
 
   /** Interleaved multimodal packing layout (the Flamingo/MM1-style batch
@@ -163,8 +54,8 @@ object Packing {
     *
     * Per-document costs collapse map-side out of the span table (one
     * combinable groupBy of (id, long) rows — span text dies at its scan),
-    * then ride [[layout]]'s two-level distributed scan unchanged: the
-    * cost table IS the (id, n_tokens) input, tokenCount = identity. */
+    * then ride [[layout]]'s prefix scan unchanged: the cost table IS the
+    * (id, n_tokens) input, tokenCount = identity. */
   def interleavedLayout(spans: DataFrame, idCol: String, seqLen: Long,
       mediaTokens: Long, nParts: Int = 32,
       tokenCount: Column => Column = TextStats.tokenCount): DataFrame = {

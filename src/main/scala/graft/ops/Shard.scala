@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -21,12 +20,9 @@ import org.apache.spark.sql.functions._
  * different epoch orders. Everything is integer arithmetic both Spark
  * and any SQL oracle express identically — no float, no rand().
  *
- * Scale shape: the global ordinal over permuted-key order is the same
- * two-level distributed scan as [[Packing.layout]] — one range exchange
- * of (id, key) 16-byte rows, per-partition counts to the driver
- * (nParts rows), partition-local row_number + broadcast offsets. No
- * global single-partition Window anywhere; text/media never travel —
- * the layout is metadata the loader joins back at read time.
+ * Scale shape: the global ordinal over permuted-key order is a
+ * [[PrefixScan]] row count over (id, key) 16-byte rows; text/media never
+ * travel — the layout is metadata the loader joins back at read time.
  * A shard is `shardSize` consecutive ordinals, so each shard's permuted
  * keys form a contiguous range — the manifest's (min_key, max_key) per
  * shard are non-overlapping, which makes shard-level resume/audit a
@@ -52,82 +48,20 @@ object Shard {
     * 0-based global position in permuted order, shard = ordinal DIV
     * shardSize, pos_in_shard = ordinal MOD shardSize. Ordering is total
     * (perm_key is injective on distinct ids), so the layout is a pure
-    * function of (ids, a, b, p, shardSize). */
-  /** Doc-count gate for the driver fast path (same bounded-driver-plane
-    * posture as Packing.layout's: 16 bytes/doc of (id, key) metadata). */
-  private val MaxDriverDocs = 1 << 20
-
+    * function of (ids, a, b, p, shardSize). Under `maxDriverDocs` docs
+    * the ordinals are counted on the driver (see
+    * [[PrefixScan.exclusiveSum]]). */
   def globalShuffleLayout(docs: DataFrame, idCol: String, a: Long, b: Long,
       p: Long, shardSize: Long, nParts: Int = 32,
-      maxDriverDocs: Int = MaxDriverDocs): DataFrame = {
+      maxDriverDocs: Int = PrefixScan.MaxDriverDocs): DataFrame = {
     require(shardSize > 0, s"shardSize must be positive, got $shardSize")
-    // SIZE-GATED driver fast path (see Packing.layout): the layout is
-    // one fixed-width row per doc, so under the gate one limit-collect
-    // + in-memory sort by the (injective) permuted key replaces the
-    // range-sample job, the checkpoint materialization and the
-    // per-partition-counts collect. Over the gate (or null ids) the
-    // distributed scan below is unchanged.
-    val integralId = docs.schema(idCol).dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    }
-    if (integralId && maxDriverDocs > 0) {
-      val head = docs
-        .select(col(idCol), permKey(col(idCol), a, b, p).as("perm_key"))
-        .limit(maxDriverDocs + 1).collect()
-      if (head.length <= maxDriverDocs &&
-          !head.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        val spark = docs.sparkSession
-        val sorted = head.sortBy(_.getLong(1))
-        val out = new Array[org.apache.spark.sql.Row](sorted.length)
-        var i = 0
-        while (i < sorted.length) {
-          val r = sorted(i)
-          val ord = i.toLong
-          out(i) = org.apache.spark.sql.Row(
-            r.get(0), r.getLong(1), ord, ord / shardSize, ord % shardSize)
-          i += 1
-        }
-        import org.apache.spark.sql.types._
-        val schema = StructType(Seq(
-          docs.schema(idCol),
-          StructField("perm_key", LongType, nullable = false),
-          StructField("ordinal", LongType, nullable = false),
-          StructField("shard", LongType, nullable = false),
-          StructField("pos_in_shard", LongType, nullable = false)))
-        return spark.createDataFrame(
-          new java.util.ArrayList(java.util.Arrays.asList(out: _*)), schema)
-      }
-    }
-    // 1. slim to (id, perm_key), range-partition by the permuted key.
-    // localCheckpoint (eager), NOT cache: the offsets below are computed
-    // from ONE materialization of this range shuffle; a re-run
-    // RangePartitioner may sample different bounds (see Packing.layout).
-    val slim = docs
-      .select(col(idCol), permKey(col(idCol), a, b, p).as("perm_key"))
-      .repartitionByRange(nParts, col("perm_key"))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
-    // 2. per-partition row counts -> driver (nParts rows) -> offsets
-    val partials = slim.groupBy(col("__pid"))
-      .agg(count(lit(1)).as("n"))
-      .collect()
-      .sortBy(_.getAs[Int]("__pid"))
-    val offsetMap =
-      if (partials.isEmpty) map(lit(0), lit(0L))
-      else map(partials.map(_.getAs[Int]("__pid"))
-        .zip(partials.scanLeft(0L)(_ + _.getAs[Long]("n")).init)
-        .flatMap { case (pid, off) => Seq(lit(pid), lit(off)) }: _*)
-    // 3. partition-local row_number + broadcast offset
-    val w = Window.partitionBy(col("__pid")).orderBy(col("perm_key"))
-    slim
-      .withColumn("ordinal", (row_number().over(w) - 1).cast("long") +
-        element_at(offsetMap, col("__pid")))
-      .withColumn("shard", expr(s"ordinal DIV $shardSize"))
-      .withColumn("pos_in_shard", col("ordinal") % lit(shardSize))
-      .drop("__pid")
+    val slim = docs.select(col(idCol), permKey(col(idCol), a, b, p).as("perm_key"))
+    val (scanned, _) = PrefixScan.exclusiveSum(slim,
+      Seq(PrefixScan.Key("perm_key")), None, nParts, maxDriverDocs)
+    val ordinal = PrefixScan.Prefix
+    scanned.select(col(idCol), col("perm_key"), col(ordinal).as("ordinal"),
+      expr(s"$ordinal DIV $shardSize").as("shard"),
+      (col(ordinal) % lit(shardSize)).as("pos_in_shard"))
   }
 
   /** Per-shard manifest over a [[globalShuffleLayout]] result joined

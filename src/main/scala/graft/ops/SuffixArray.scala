@@ -29,9 +29,9 @@ import org.apache.spark.sql.functions._
  * Scale shape (the 100 TB story):
  *   - one row per corpus code point: (gpos, cp) — 16 bytes, fixed width;
  *     text explodes at the scan and never travels as strings again.
- *   - global positions come from [[Packing.layout]]'s two-level prefix
- *     sum (range exchange of (id, len) pairs + broadcast offsets), never
- *     a global window.
+ *   - global positions come from [[Packing.layout]]'s [[PrefixScan]]
+ *     (range exchange of (id, len) pairs + broadcast offsets), never a
+ *     global window.
  *   - the base rank is a base-256 pack of 8 code points — ONE map-side-
  *     combinable groupBy (each char row contributes its byte to the 8
  *     packs that cover it) replaces the first three doubling rounds;
@@ -42,8 +42,9 @@ import org.apache.spark.sql.functions._
  *     range-partition by (r1, r2) — equal keys never straddle partitions
  *     (RangePartitioner assigns by key) — then partition-local
  *     dense_rank + broadcast per-partition distinct counts as offsets
- *     (the Packing idiom). No stage ever holds more than (gpos, r1, r2)
- *     24-byte rows; nothing corpus-sized touches the driver.
+ *     (the [[PrefixScan]] idiom). No stage ever holds more than
+ *     (gpos, r1, r2) 24-byte rows; nothing corpus-sized touches the
+ *     driver.
  *   - rounds localCheckpoint, so lineage stays O(1) per round instead of
  *     compounding log(W) joins into one exponential plan.
  */
@@ -138,25 +139,14 @@ object SuffixArray {
   }
 
   /** Distributed dense rank of (r1, r2) pairs over rows (gpos, r1, r2):
-    * returns ((gpos, r) with r 0-based, number of distinct pairs). */
+    * returns ((gpos, r) with r 0-based, number of distinct pairs) — the
+    * [[PrefixScan.scan]] with distinct pairs as the partition partial
+    * (equal pairs never straddle a range partition). */
   private def denseRankPairs(df: DataFrame, nParts: Int): (DataFrame, Long) = {
-    val part = df.repartitionByRange(nParts, col("r1"), col("r2"))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true) // pin: offsets below must see THIS partitioning
-    val partials = part.groupBy(col("__pid"))
-      .agg(count_distinct(struct(col("r1"), col("r2"))).as("nd"))
-      .collect().sortBy(_.getAs[Int]("__pid"))
-    val cum = partials.map(_.getAs[Long]("nd")).scanLeft(0L)(_ + _)
-    val offsetMap =
-      if (partials.isEmpty) map(lit(0), lit(0L))
-      else map(partials.map(_.getAs[Int]("__pid")).zip(cum.init)
-        .flatMap { case (p, o) => Seq(lit(p), lit(o)) }: _*)
-    val w = Window.partitionBy(col("__pid")).orderBy(col("r1"), col("r2"))
-    val ranked = part
-      .withColumn("r", (dense_rank().over(w) - 1).cast("long") +
-        element_at(offsetMap, col("__pid")))
-      .select(col("gpos"), col("r"))
-    (ranked, cum.last)
+    val s = PrefixScan.scan(df, Seq(col("r1"), col("r2")), nParts,
+      count_distinct(struct(col("r1"), col("r2"))))
+    (s.pinned.select(col("gpos"),
+      ((dense_rank().over(s.window) - 1).cast("long") + s.offset).as("r")), s.total)
   }
 
   /** The doubling ladder + fused final pass over an (eagerly pinned)
@@ -201,34 +191,18 @@ object SuffixArray {
   }
 
   /** Global 0-based row_number over `keys` order (keys must be a total
-    * order) — ONE range exchange + the two-level offset idiom of
-    * [[denseRankPairs]] with plain counts (row numbers need no dedup).
-    * All input columns are kept alongside the new `sa_rank`. */
-  private def globalRowNumber(df: DataFrame, keys: Seq[Column],
-      nParts: Int): DataFrame = {
-    val part = df
-      .repartitionByRange(nParts, keys: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
-    val partials = part.groupBy(col("__pid"))
-      .agg(count(lit(1)).as("nd"))
-      .collect().sortBy(_.getAs[Int]("__pid"))
-    val cum = partials.map(_.getAs[Long]("nd")).scanLeft(0L)(_ + _)
-    val offsetMap =
-      if (partials.isEmpty) map(lit(0), lit(0L))
-      else map(partials.map(_.getAs[Int]("__pid")).zip(cum.init)
-        .flatMap { case (p, o) => Seq(lit(p), lit(o)) }: _*)
-    val w = Window.partitionBy(col("__pid")).orderBy(keys: _*)
-    part
-      .withColumn("sa_rank", (row_number().over(w) - 1).cast("long") +
-        element_at(offsetMap, col("__pid")))
-      .drop("__pid")
-  }
+    * order) as `sa_rank` — a [[PrefixScan]] row count, always distributed
+    * (the char plane is corpus-sized). All input columns are kept. */
+  private def globalRowNumber(df: DataFrame, keys: Seq[String],
+      nParts: Int): DataFrame =
+    PrefixScan.exclusiveSum(df, keys.map(PrefixScan.Key(_)), None, nParts,
+        maxDriverDocs = 0)._1
+      .withColumnRenamed(PrefixScan.Prefix, "sa_rank")
 
   /** Global row_number over (r1, r2, gpos) order — the final SA rank in
     * one range exchange. */
   private def rowNumberByPairPos(df: DataFrame, nParts: Int): DataFrame =
-    globalRowNumber(df, Seq(col("r1"), col("r2"), col("gpos")), nParts)
+    globalRowNumber(df, Seq("r1", "r2", "gpos"), nParts)
       .select(col("sa_rank"), col("gpos"))
 
   /** The W-bounded suffix array of `chars` (from [[charTable]]):
@@ -253,7 +227,7 @@ object SuffixArray {
       val nw = (window + math.min(8, window) - 1) / math.min(8, window)
       val pw = packedWindows(chars, window).localCheckpoint(true)
       globalRowNumber(pw,
-          (0 until nw).map(j => col(s"w$j")) :+ col("gpos"), nParts)
+          (0 until nw).map(j => s"w$j") :+ "gpos", nParts)
         .select(col("sa_rank"), col("gpos"))
     } else {
       val b = 8
@@ -306,7 +280,7 @@ object SuffixArray {
     val pw = packedWindows(chars, window).localCheckpoint(true)
     // pin: read twice by the adjacent-pair self-join
     val sa = globalRowNumber(pw,
-        (0 until nw).map(j => col(s"w$j")) :+ col("gpos"), nParts)
+        (0 until nw).map(j => s"w$j") :+ "gpos", nParts)
       .localCheckpoint(true)
     val pairs = sa
       .join(sa.select(Seq((col("sa_rank") - 1).as("sa_rank"),

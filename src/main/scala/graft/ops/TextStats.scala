@@ -13,9 +13,12 @@ object TextStats {
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
   /** size(split(trim(text), "\\s+")) — computed by the native one-scan
-    * counter (TokenCountExpr, equality pinned in TextStatsSpec): the
+    * counter (TokenCountExpr, equality pinned in TokenCountSpec): the
     * split form materialized the whole token array per row everywhere
-    * only the count was needed. */
+    * only the count was needed. NULL text counts NULL (also pinned
+    * there), where the legacy `size(split(...))` form gave −1 under
+    * `spark.sql.legacy.sizeOfNull`: sums skip the row, and the
+    * [[PrefixScan]] ops (Packing, Budget) give it no tokens. */
   def tokenCount(text: Column): Column = graft.functions.TextStatFns.tokenCountFast(text)
 
   /** BPE-ish subword count estimate: whitespace tokens plus an extra unit

@@ -30,14 +30,16 @@ class TokenCountSpec extends AnyFunSuite {
         TextStatFns.tokenCountFast(col("s")).as("fast"))
       .collect()
     rows.foreach { r =>
-      assert(r.getLong(1) == r.getLong(2),
+      // tokenCount(NULL) is NULL (the legacy split form gave -1)
+      if (r.isNullAt(0)) assert(r.isNullAt(2), "tokenCount(NULL) must be NULL")
+      else assert(r.getLong(1) == r.getLong(2),
         s"mismatch for ${r.getString(0).map(c => f"\\u${c.toInt}%04x").mkString}")
     }
   }
 
   test("fixed corner cases") {
     check(Seq(
-      "", " ", "   ", "a", " a ", "a b", "  a   b  ",
+      null, "", " ", "   ", "a", " a ", "a b", "  a   b  ",
       "\ta", "a\t", "\ta\t", "\na\nb\n", "ab", "a\fb", "a\rb",
       "a\r\n\t b", " a",
       "a b",           // NBSP is NOT java-regex \s

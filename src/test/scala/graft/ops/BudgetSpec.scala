@@ -14,8 +14,10 @@ class BudgetSpec extends AnyFunSuite {
     (3L, 9L, Seq.fill(20)("w").mkString(" ")),
     (4L, 8L, Seq.fill(30)("w").mkString(" "))).toDF("doc_id", "score", "text")
 
-  private def run(budget: Long, nParts: Int = 3) =
-    Budget.selectByBudget(docs, "doc_id", "score", "text", budget, nParts)
+  private def run(budget: Long, nParts: Int = 3,
+      maxDriverDocs: Int = PrefixScan.MaxDriverDocs) =
+    Budget.selectByBudget(docs, "doc_id", "score", "text", budget, nParts,
+        maxDriverDocs = maxDriverDocs)
       .collect().map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Long]("cum_tokens"), r.getAs[Boolean]("kept")))).toMap
 
@@ -40,5 +42,23 @@ class BudgetSpec extends AnyFunSuite {
     val a = run(55L, nParts = 1)
     val b = run(55L, nParts = 7)
     assert(a == b)
+    // gate forced off: nParts reaches the range exchange
+    assert(run(55L, nParts = 1, maxDriverDocs = 0) == a)
+    assert(run(55L, nParts = 3, maxDriverDocs = 0) == a)
+  }
+
+  test("a null-text doc adds no tokens and gets the same row across the gate") {
+    // ranked first, so under the distributed path it heads a range
+    // partition: its cumulative count is still the (empty) prefix
+    val withNull = Seq[(Long, Long, Option[String])](
+      (5L, 99L, None), (1L, 8L, Some("w w")), (2L, 1L, Some("w"))
+    ).toDF("doc_id", "score", "text")
+    def at(gate: Int) = Budget.selectByBudget(withNull, "doc_id", "score", "text",
+        2L, nParts = 3, maxDriverDocs = gate)
+      .orderBy("doc_id").collect().toSeq
+    val rows = at(PrefixScan.MaxDriverDocs)
+    assert(rows == at(0))
+    assert(rows.map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cum_tokens"),
+      r.getAs[Boolean]("kept"))) == Seq((1L, 2L, true), (2L, 3L, false), (5L, 0L, true)))
   }
 }

@@ -410,12 +410,17 @@ class OpsSpec extends AnyFunSuite {
     // the two-level scan's offsets come from per-partition counts — the
     // result must be a pure function of the data, not the partition count
     val ids = spark.range(0, 100).toDF("id")
-    def at(n: Int) = Shard.globalShuffleLayout(ids, "id",
-      a = 73L, b = 11L, p = 101L, shardSize = 16L, nParts = n)
+    def at(n: Int, gate: Int = PrefixScan.MaxDriverDocs) = Shard.globalShuffleLayout(
+        ids, "id", a = 73L, b = 11L, p = 101L, shardSize = 16L, nParts = n,
+        maxDriverDocs = gate)
       .select($"id", $"ordinal").as[(Long, Long)].collect().toMap
     val ref = at(1)
     assert(at(3) == ref)
     assert(at(8) == ref)
+    // gate forced off: nParts reaches the range exchange
+    assert(at(1, gate = 0) == ref)
+    assert(at(3, gate = 0) == ref)
+    assert(at(8, gate = 0) == ref)
   }
 
   test("shard manifest: sizes, weights, non-overlapping key ranges") {

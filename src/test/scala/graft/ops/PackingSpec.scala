@@ -37,12 +37,36 @@ class PackingSpec extends AnyFunSuite {
     val b = Packing.layout(corpus(40).repartition(13), "doc_id", "text", 8L, nParts = 7)
       .orderBy("doc_id").collect().toSeq
     assert(a == b)
+    // gate forced off: nParts reaches the range exchange
+    for (n <- Seq(1, 7)) {
+      val c = Packing.layout(corpus(40).repartition(13), "doc_id", "text", 8L,
+        nParts = n, maxDriverDocs = 0).orderBy("doc_id").collect().toSeq
+      assert(a == c, s"nParts=$n")
+    }
   }
 
   test("empty corpus yields an empty layout, not an analysis error") {
-    val out = Packing.layout(corpus(5).filter($"doc_id" > 100), "doc_id", "text", 16L)
-    assert(out.count() == 0)
-    assert(out.columns.contains("start_tok"))
+    // both sides of the gate; with it off, the distributed scan runs
+    // with no partials at all
+    for (gate <- Seq(PrefixScan.MaxDriverDocs, 0)) {
+      val out = Packing.layout(corpus(5).filter($"doc_id" > 100), "doc_id", "text", 16L,
+        maxDriverDocs = gate)
+      assert(out.count() == 0, s"maxDriverDocs=$gate")
+      assert(out.columns.contains("start_tok"))
+    }
+  }
+
+  test("a null-text doc adds no tokens and gets the same row across the gate") {
+    val df = Seq((0L, Some("a b")), (1L, None), (2L, Some("c")))
+      .toDF("doc_id", "text")
+    def at(gate: Int) = Packing.layout(df, "doc_id", "text", 16L, nParts = 2,
+      maxDriverDocs = gate).orderBy("doc_id").collect().toSeq
+    val rows = at(PrefixScan.MaxDriverDocs)
+    assert(rows == at(0))
+    assert(rows(1).isNullAt(rows(1).fieldIndex("n_tokens")))
+    assert(rows(1).getAs[Long]("start_tok") == 2L)
+    assert(rows(1).isNullAt(rows(1).fieldIndex("end_tok")))
+    assert(rows(2).getAs[Long]("start_tok") == 2L)
   }
 
   test("doc straddling a boundary spans both sequences") {

@@ -309,9 +309,23 @@ class PlanSpec extends AnyFunSuite {
       nParts = 8, maxDriverDocs = 0)
     assert(treeNames(executed(fast)).forall(!_.contains("Exchange")),
       treeNames(executed(fast)).distinct)
+    assert(fast.schema == dist.schema)
     val k = fast.columns.map(org.apache.spark.sql.functions.col)
     assert(fast.orderBy(k: _*).collect().toSeq ==
-      dist.select(k: _*).orderBy(k: _*).collect().toSeq)
+      dist.orderBy(k: _*).collect().toSeq)
+  }
+
+  test("shard layout under the doc-count gate: local plan, identical rows") {
+    val fast = graft.ops.Shard.globalShuffleLayout(
+      docs, "doc_id", a = 73L, b = 11L, p = 1000003L, shardSize = 16L, nParts = 8)
+    val dist = graft.ops.Shard.globalShuffleLayout(
+      docs, "doc_id", a = 73L, b = 11L, p = 1000003L, shardSize = 16L,
+      nParts = 8, maxDriverDocs = 0)
+    assert(treeNames(executed(fast)).forall(!_.contains("Exchange")),
+      treeNames(executed(fast)).distinct)
+    assert(fast.schema == dist.schema)
+    val k = org.apache.spark.sql.functions.col("doc_id")
+    assert(fast.orderBy(k).collect().toSeq == dist.orderBy(k).collect().toSeq)
   }
 
   test("SangiinPipeline dim joins broadcast the dims") {
@@ -667,9 +681,9 @@ class PlanSpec extends AnyFunSuite {
       maxDriverDocs = 0)
     assert(treeNames(executed(fast)).forall(!_.contains("Exchange")),
       treeNames(executed(fast)).distinct)
-    val k = fast.columns.map(col)
+    assert(fast.schema == dist.schema)
     assert(fast.orderBy(col("doc_id")).collect().toSeq ==
-      dist.select(k: _*).orderBy(col("doc_id")).collect().toSeq)
+      dist.orderBy(col("doc_id")).collect().toSeq)
   }
 
   test("curation funnel: bodies never shuffle — every exchange is metrics-width") {
