@@ -144,16 +144,9 @@ object Bench {
         // (measured: a near-empty wave cost 1017ms@2cores / 469ms@8),
         // the dominant residual Amdahl term of the 2→8 leg. 32 partitions
         // still give every bench level ≥ 1 task per core.
-        // filter capacity sized for the standard 2M-URL job; scale-stress
-        // runs (10×+) override it — though mis-sizing no longer cliffs:
-        // a saturated shard chains a 2× overflow level (CuckooFilter)
-        // instead of burning MaxKicks per insert (the 10× lesson)
-        val filterCap = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILTER_CAP",
-          (1 << 13).toString).toInt
         val cfg = CrawlConfig(checkpointDir = ckpt, hostBuckets = 128,
           fetchPartitions = 32, maxPerHostPerWave = Int.MaxValue,
-          keepFetched = false, checkpointEvery = 1000000,
-          filterCapacityPerBucket = filterCap)
+          keepFetched = false, checkpointEvery = 1000000)
         val engine = new WaveEngine(spark, site,
           Map[String, PageParser]("diet" -> DietParser), cfg)
         val res = engine.run(seeds)

@@ -26,8 +26,7 @@ import org.apache.spark.sql.functions._
  * driver or state term shows up as ratio >> scale).
  *
  * Env: SPARK_GRAFT_CPUS (32), STRESS_HOSTS (1024), STRESS_PAGES (2000),
- * STRESS_SCALE (10 — multiplies pages), STRESS_FILTER_CAP (1<<13 at 1×,
- * scaled ×SCALE for the big run).
+ * STRESS_SCALE (10 — multiplies pages).
  */
 object BenchStress {
 
@@ -65,11 +64,10 @@ object BenchStress {
     val hosts = sys.env.getOrElse("STRESS_HOSTS", "1024").toInt
     val basePages = sys.env.getOrElse("STRESS_PAGES", "2000").toInt
     val scale = sys.env.getOrElse("STRESS_SCALE", "10").toInt
-    val cap1 = sys.env.getOrElse("STRESS_FILTER_CAP", (1 << 13).toString).toInt
 
     val spark = session(cpus)
     try {
-      def crawl(pages: Int, cap: Int, paced: Boolean,
+      def crawl(pages: Int, paced: Boolean,
           revalidateFrom: Option[String], siteSeed: Long): (Phase, String) = {
         val site = SyntheticSite(nHosts = hosts, basePagesPerHost = pages,
           branching = 10, hotFactor = 4, seed = siteSeed, textSpansPerPage = 8)
@@ -85,7 +83,6 @@ object BenchStress {
           fetchPartitions = 32, maxPerHostPerWave = Int.MaxValue,
           keepFetched = revalidateFrom.isEmpty, // phase A keeps the corpus for B
           checkpointEvery = 1000000,
-          filterCapacityPerBucket = cap,
           hostRpsTable = if (paced) Some(rps) else None,
           revalidateFrom = revalidateFrom)
         val engine = new WaveEngine(spark, site,
@@ -103,10 +100,10 @@ object BenchStress {
       // volume. (An unchanged corpus 304s everything at wave 0 — the
       // contract case RevalidateSpec pins — and exercises nothing at
       // scale.)
-      def scaleRun(pages: Int, cap: Int): (Phase, Phase) = {
-        val (a, ckptA) = crawl(pages, cap, paced = true,
+      def scaleRun(pages: Int): (Phase, Phase) = {
+        val (a, ckptA) = crawl(pages, paced = true,
           revalidateFrom = None, siteSeed = 42L)
-        val (b, ckptB) = crawl(pages, cap, paced = true,
+        val (b, ckptB) = crawl(pages, paced = true,
           revalidateFrom = Some(s"$ckptA/fetched"), siteSeed = 43L)
         graft.util.Fs.deleteRecursively(new java.io.File(ckptA))
         graft.util.Fs.deleteRecursively(new java.io.File(ckptB))
@@ -114,9 +111,9 @@ object BenchStress {
       }
 
       // warmup (JIT) at 1/4 of the 1x shape
-      scaleRun(math.max(50, basePages / 4), cap1)
-      val (a1, b1) = scaleRun(basePages, cap1)
-      val (aN, bN) = scaleRun(basePages * scale, cap1 * scale)
+      scaleRun(math.max(50, basePages / 4))
+      val (a1, b1) = scaleRun(basePages)
+      val (aN, bN) = scaleRun(basePages * scale)
       def ratio(x: Long, y: Long): Double = x.toDouble / math.max(1L, y)
       println(
         s"""{"metric":"paced+revalidating frontier stress","scale":$scale,""" +

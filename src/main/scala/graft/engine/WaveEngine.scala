@@ -285,6 +285,7 @@ final case class CrawlConfig(
     // fetched table; ingestion can run post-hoc via MediaStore.ingestWave.
     mediaStoreDir: Option[String] = None,
     checkpointEvery: Int = 1, // durable checkpoint cadence in waves (always at loop exit)
+    // initial per-bucket cuckoo filter capacity: the reference-order path only
     filterCapacityPerBucket: Int = 1 << 16)
 
 final case class CrawlRunResult(
@@ -322,8 +323,8 @@ final case class Candidate(
 }
 
 /**
- * Per-bucket URL-seen state: the cuckoo pre-filter plus the exact
- * 128-bit membership set ([[graft.seen.SeenSet128]]) that makes dedup
+ * Per-bucket URL-seen state. Membership is the exact 128-bit set
+ * ([[graft.seen.SeenSet128]]) alone, which makes dedup
  * collision-proof — a 64-bit key alone would drop a distinct URL on a
  * collision (~3 expected at the 10^10-URL design scale by the birthday
  * bound); the (seed-42, seed-7919) xxhash64 pair pushes that to ~10^-19
@@ -359,24 +360,17 @@ final case class Candidate(
  *
  * At 10^10-URL scale one bucket holds |seen|/hostBuckets entries; the
  * state lives partitioned across executors (never on the driver, never
- * broadcast). A deployment whose per-executor seen share exceeds memory
- * would page the SeenSet128 to SSD behind the cuckoo pre-filter (whose
- * negatives skip the exact probe entirely) — the partitioning and wave
- * protocol stay identical.
+ * broadcast). The set is resident in primitive arrays, so a pre-filter in
+ * front of it would save no I/O: every probe goes straight to the exact
+ * set.
  */
 private[engine] final case class BucketSeen(
     bucket: Int,
-    filter: CuckooFilter,
     seen: graft.seen.SeenSet128,
     log: List[graft.seen.SeenChunk],
     count: Long,
     pace: Map[Long, Long] = Map.empty,
-    hostN: Map[Long, Long] = Map.empty) {
-  /** Exact membership; the filter short-circuits the common novel case
-    * (no false negatives; positives verified against the exact set). */
-  def isDup(h1: Long, h2: Long): Boolean =
-    filter.contains(h1) && seen.contains(h1, h2)
-}
+    hostN: Map[Long, Long] = Map.empty)
 
 /** One bucket's wave output: advanced state + novel rows (with assigned
   * seq) + the bucket's exact candidate count (for exact dedup metrics). */
@@ -642,13 +636,6 @@ private[engine] object WaveCore {
       }
     }
 
-  /** Advance every bucket of one partition through one wave: sort the
-    * bucket's candidates into discovery order, drop within-wave duplicates
-    * and already-seen URLs, assign interleaved seqs (base + rank·B +
-    * bucket — globally unique, per-host discovery order, independent of
-    * parallelism), and fold the novel keys into a fresh copy of the
-    * bucket's filter plus the structurally-shared exact map. Pure function
-    * of (state, candidates): deterministic, safe to recompute on retry. */
   /** Pace-mark pseudo-candidate marker (realtime politeness continuity):
     * `url_hash` carries the host hash, `parent_seq` the host's
     * next-allowed fetch ms. One per (host, wave) — never enters dedup. */
@@ -671,6 +658,14 @@ private[engine] object WaveCore {
       host_bucket = bucket, parse_fn = PaceFn,
       meta = Map.empty, priority = 0, parent_seq = nextAllowedMs, emission_idx = 0)
 
+  /** Advance every bucket of one partition through one wave: sort the
+    * bucket's candidates into discovery order, drop within-wave duplicates
+    * and already-seen URLs, assign interleaved seqs (base + rank·B +
+    * bucket — globally unique, per-host discovery order, independent of
+    * parallelism), and add the novel keys to a fresh copy of the bucket's
+    * exact seen set (the log chunks are shared by reference). Pure
+    * function of (state, candidates): the input state is never mutated,
+    * so a retried task recomputes the same wave. */
   def advancePartition(
       states: Iterator[(Int, BucketSeen)],
       cands: Iterator[(Int, Candidate)],
@@ -700,7 +695,6 @@ private[engine] object WaveCore {
         // comparator sort: sortBy would allocate a tuple key per candidate
         java.util.Arrays.sort(sorted, CandidateOrder)
         val novel = scala.collection.mutable.ArrayBuffer[Candidate]()
-        val filter = CuckooFilter.deserialize(st.filter.serialized) // copy-on-write
         val seen = st.seen.copy() // copy-on-write (flat array clone)
         var emittedW = 0L // exact emitted count (weights survive the combiner)
         // per-host budget (trap guard): active only for a finite cap. A
@@ -722,19 +716,16 @@ private[engine] object WaveCore {
         sorted.foreach { c =>
           emittedW += c.weight
           val h2 = UrlCanon.urlHash2(c.canonical)
-          // evolving copies: the same probe handles within-wave dups and
+          // evolving copy: the same probe handles within-wave dups and
           // the prior seen set in one pass
-          if (!(filter.contains(c.url_hash) && seen.contains(c.url_hash, h2))) {
+          if (!seen.contains(c.url_hash, h2)) {
+            seen.add(c.url_hash, h2)
             if (!budgeted) {
-              seen.add(c.url_hash, h2)
-              filter.insert(c.url_hash)
               novel += c
             } else {
               budgetHost = UrlCanon.hostOfOrSame(c.canonical, budgetHost)
               val hh = UrlCanon.urlHash(budgetHost)
               val n = hostCounts.getOrDefault(hh, 0L)
-              seen.add(c.url_hash, h2)
-              filter.insert(c.url_hash)
               if (n < maxPerHost) {
                 hostCounts.put(hh, n + 1L)
                 novel += c
@@ -786,7 +777,7 @@ private[engine] object WaveCore {
             hostCounts.forEach((k, v) => bld += (k -> v))
             bld.result()
           }
-        (b, BucketWave(BucketSeen(b, filter, seen, log, st.count + nn + nd, st.pace, hostN),
+        (b, BucketWave(BucketSeen(b, seen, log, st.count + nn + nd, st.pace, hostN),
           recs, emittedW))
       }
     }
@@ -801,16 +792,13 @@ private[engine] object WaveCore {
     }
 
   /** Rebuild one partition's bucket states from durable seen rows
-    * (resume path; the filter is re-derived from the hashes, so no filter
-    * blobs need checkpointing). */
-  /** Rebuilt entries are packed into ONE chunk tagged `resumedWave`: they
-    * are already durable (read from flush dirs ≤ resumedWave), so later
-    * changelog flushes — which write only chunks with wave > the last
-    * flushed wave — never rewrite them. */
+    * (resume path). Rebuilt entries are packed into ONE chunk tagged
+    * `resumedWave`: they are already durable (read from flush dirs ≤
+    * resumedWave), so later changelog flushes — which write only chunks
+    * with wave > the last flushed wave — never rewrite them. */
   def rebuildPartition(
       states: Iterator[(Int, BucketSeen)],
       rows: Iterator[(Int, (Long, String))],
-      capacity: Int,
       resumedWave: Int,
       paceRows: Iterator[(Int, (Long, Long))] = Iterator.empty,
       hostNRows: Iterator[(Int, (Long, Long))] = Iterator.empty): Iterator[(Int, BucketWave)] = {
@@ -842,20 +830,18 @@ private[engine] object WaveCore {
       val rs = byBucket.get(b)
       if (rs == null) (b, BucketWave(empty, Array.empty, 0L))
       else {
-        val f = new CuckooFilter(capacity)
         val seen = new graft.seen.SeenSet128(rs.size)
         val hashBuf = new scala.collection.mutable.ArrayBuffer[Long](rs.size)
         val canonBuf = new scala.collection.mutable.ArrayBuffer[String](rs.size)
         rs.foreach { case (h, c) =>
           if (seen.add(h, UrlCanon.urlHash2(c))) {
-            f.insert(h)
             hashBuf += h
             canonBuf += c
           }
         }
         val chunk = graft.seen.SeenChunk.pack(resumedWave, hashBuf.toArray, canonBuf.toArray)
         (b, BucketWave(
-          BucketSeen(b, f, seen, chunk :: Nil, hashBuf.length.toLong, empty.pace,
+          BucketSeen(b, seen, chunk :: Nil, hashBuf.length.toLong, empty.pace,
             empty.hostN),
           Array.empty, 0L))
       }
@@ -873,13 +859,13 @@ private[engine] object WaveCore {
  *
  *   pending(bucket-partitioned) ─mapPartitions{politeness slots + fetch +
  *   parse}─► candidates ─partitionBy(host_bucket)─► zipPartitions(seen
- *   state) {within-wave dedup + exact seen check + cuckoo probe + seq
- *   assignment + filter fold} ─► (new state, novel) = pending(wave+1)
+ *   state) {within-wave dedup + exact seen check + seq assignment +
+ *   seen-set add} ─► (new state, novel) = pending(wave+1)
  *
  * Dedup semantics = Scrapy's dupefilter: a URL is marked seen when
  * *enqueued* (never enqueued twice); the key is exact — (url_hash,
- * canonical) — so neither a cuckoo false positive nor a 64-bit hash
- * collision can drop or duplicate a URL.
+ * canonical) — so neither a filter false positive (reference-order path)
+ * nor a 64-bit hash collision can drop or duplicate a URL.
  *
  * Scale design (10^10 frontier):
  *  - the seen set is a bucket-partitioned state RDD co-partitioned with
@@ -887,8 +873,8 @@ private[engine] object WaveCore {
  *    by the accumulated seen set), zero driver collect, zero broadcast —
  *    the keyed-state-store layout Structured Streaming uses for
  *    mapGroupsWithState across micro-batches;
- *  - within-wave dedup, the exact-seen anti-join, seq assignment, and the
- *    cuckoo fold are ONE partition-local pass — no per-wave window
+ *  - within-wave dedup, the exact seen check, seq assignment and the
+ *    seen-set add are ONE partition-local pass — no per-wave window
  *    shuffle, no re-shuffle of the accumulated seen set, no driver-side
  *    filter map (round 1 collected and re-broadcast all filters per wave:
  *    ~20 GB resident at the 10^10 design point);
@@ -954,21 +940,6 @@ class WaveEngine(
   def latestCheckpointWave: Option[Int] = {
     val p = Paths.get(s"$ckpt/LATEST")
     if (Files.exists(p)) Some(Files.readString(p).trim.toInt) else None
-  }
-
-  private def saveFilters(wave: Int, filters: Map[Int, CuckooFilter]): Unit = {
-    val out = new java.io.ObjectOutputStream(
-      Files.newOutputStream(Paths.get(s"$ckpt/filters_w$wave.bin")))
-    out.writeObject(filters.map { case (k, v) => (k, v.serialized) })
-    out.close()
-  }
-
-  private def loadFilters(wave: Int): Map[Int, CuckooFilter] = {
-    val in = new java.io.ObjectInputStream(
-      Files.newInputStream(Paths.get(s"$ckpt/filters_w$wave.bin")))
-    val m = in.readObject().asInstanceOf[Map[Int, Array[Byte]]]
-    in.close()
-    m.map { case (k, v) => (k, CuckooFilter.deserialize(v)) }
   }
 
   /** Durable seen dirs covering waves ≤ `maxWave`. Two dir kinds under
@@ -1133,10 +1104,8 @@ class WaveEngine(
 
   /** Empty per-bucket state, one entry per bucket, bucket-partitioned. */
   private def emptyStateRdd(): RDD[(Int, BucketSeen)] = {
-    val capacity = cfg.filterCapacityPerBucket
     sc.parallelize(0 until cfg.hostBuckets, cfg.fetchPartitions)
-      .map(b => (b, BucketSeen(b, new CuckooFilter(capacity),
-        new graft.seen.SeenSet128(16), Nil, 0L)))
+      .map(b => (b, BucketSeen(b, new graft.seen.SeenSet128(16), Nil, 0L)))
       .partitionBy(partitioner)
   }
 
@@ -1217,7 +1186,7 @@ class WaveEngine(
     *    overwrites would smuggle a dead run's URLs into the seen set
     *    (round 2's full-snapshot read was immune; the changelog read is
     *    not);
-    *  - the resume lineage (LATEST + state/pending/filters files) goes
+    *  - the resume lineage (LATEST + state/pending files) goes
     *    FIRST: if only the seen dirs were wiped and the new run crashed
     *    before its first checkpoint, resume() would revive the OLD run's
     *    pending against an empty seen set — now it fails fast ("no
@@ -1230,8 +1199,7 @@ class WaveEngine(
     new java.io.File(dir, "LATEST").delete()
     Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith("state_w") || f.getName.startsWith("pending_w") ||
-        f.getName.startsWith("filters_w") || f.getName.startsWith("pace_w") ||
-        f.getName.startsWith("hostn_w"))
+        f.getName.startsWith("pace_w") || f.getName.startsWith("hostn_w"))
       .foreach(graft.util.Fs.deleteRecursively)
     graft.util.Fs.deleteRecursively(new java.io.File(dir, "seen"))
     graft.util.Fs.deleteRecursively(new java.io.File(dir, "seen_compacting"))
@@ -1267,7 +1235,6 @@ class WaveEngine(
     val wave = latestCheckpointWave.getOrElse(
       throw new IllegalStateException(s"no checkpoint under $ckpt"))
     val (nextSeq, fetched, deduped) = readState(wave)
-    val capacity = cfg.filterCapacityPerBucket
     // delete orphan flushes from a crash window (flush landed, state file
     // did not): a replay may checkpoint at different wave numbers, and a
     // later resume must never union stale marks twice
@@ -1309,7 +1276,7 @@ class WaveEngine(
     val out0 = emptyStateRdd().zipPartitions(seenRows, paceRows, hostNRows,
         preservesPartitioning = true) {
       (st, rows, pace, hostn) =>
-        WaveCore.rebuildPartition(st, rows, capacity, wave, pace, hostn)
+        WaveCore.rebuildPartition(st, rows, wave, pace, hostn)
     }
     out0.localCheckpoint()
     out0.count()
@@ -1728,7 +1695,7 @@ class WaveEngine(
             .map(c => (c.host_bucket, c)))
       val cands = candsRaw.partitionBy(partitioner)
 
-      // advance the seen state: dedup + seq + filter fold in one pass
+      // advance the seen state: dedup + seq + seen-set add in one pass
       val base = nextSeq
       val w1 = wave + 1
       val newOut = state.zipPartitions(cands, preservesPartitioning = true) { (st, cd) =>
@@ -1736,7 +1703,7 @@ class WaveEngine(
           maxPerHost = maxPerHostB)
       }
       // DESERIALIZED storage: since the state became packed primitive
-      // chunks (SeenChunk/SeenSet128/CuckooFilter — no per-URL objects),
+      // chunks (SeenChunk/SeenSet128 — no per-URL objects),
       // keeping the blocks live costs the GC O(chunks) per bucket, and
       // persist stores references instead of re-serializing the whole
       // accumulated seen state every wave (the r2 SER level paid an
@@ -1864,8 +1831,9 @@ class WaveEngine(
   }
 
   /** Driver-side per-bucket cuckoo update for the reference-order path
-    * (single-URL waves — the collected deltas are one row each). The
-    * scalable path folds filters inside the partition-resident state. */
+    * (single-URL waves — the collected deltas are one row each; a resume
+    * folds the whole durable seen set once). The filters are never
+    * checkpointed: the seen changelog is the durable record. */
   private def updateFilters(
       novel: DataFrame, // needs host_bucket + url_hash columns
       filters: Map[Int, CuckooFilter]): Map[Int, CuckooFilter] = {
@@ -1947,12 +1915,10 @@ class WaveEngine(
     // fingerprinted only when consumed, so a link-discovered copy can
     // pre-empt it.
     val seenView = spark.createDataFrame(sc.emptyRDD[Row], seenSchema)
-    val filters: Map[Int, CuckooFilter] = Map.empty
     pending.write.mode(SaveMode.Overwrite).parquet(s"$ckpt/pending_w0")
     seenView.write.mode(SaveMode.Overwrite).parquet(s"$ckpt/seen/flush_0")
-    saveFilters(0, filters)
     writeState(0, seedRows.length.toLong, 0, 0)
-    loopReference(0, pending, seenView, filters, seedRows.length.toLong, 0L, 0L)
+    loopReference(0, pending, seenView, Map.empty, seedRows.length.toLong, 0L, 0L)
   }
 
   private def resumeReference(): CrawlRunResult = {
@@ -1961,8 +1927,10 @@ class WaveEngine(
     val (nextSeq, fetched, deduped) = readState(wave)
     val pending = spark.read.schema(urlRecordSchema)
       .parquet(s"$ckpt/pending_w$wave").as[UrlRecord].cache()
-    val filters = loadFilters(wave)
-    loopReference(wave, pending, seenSoFar(wave).cache(), filters, nextSeq, fetched, deduped)
+    // the filters are derived state: rebuilt from the durable seen set
+    val seen = seenSoFar(wave).cache()
+    loopReference(wave, pending, seen, updateFilters(seen, Map.empty), nextSeq, fetched,
+      deduped)
   }
 
   private def loopReference(
@@ -1998,15 +1966,13 @@ class WaveEngine(
         unflushed = Nil
       }
       flushLineage(wave, lineageBuf)
-      saveFilters(wave, filters)
       writeState(wave, nextSeq, totalFetched, totalDeduped)
       // same bounded-artifact discipline as the scalable path: resume
-      // reads only the committed wave's pending/filters
+      // reads only the committed wave's pending
       Option(new java.io.File(ckpt).listFiles()).getOrElse(Array.empty)
         .filter { f =>
           val nm = f.getName
-          (nm.startsWith("pending_w") && nm.stripPrefix("pending_w").toIntOption.exists(_ < wave)) ||
-            (nm.startsWith("filters_w") && nm.stripPrefix("filters_w").stripSuffix(".bin").toIntOption.exists(_ < wave))
+          nm.startsWith("pending_w") && nm.stripPrefix("pending_w").toIntOption.exists(_ < wave)
         }
         .foreach(graft.util.Fs.deleteRecursively)
       compactSeen(wave) // single-URL waves accumulate one flush per checkpoint

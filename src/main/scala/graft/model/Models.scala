@@ -124,7 +124,7 @@ final case class Lineage(
     errors: Long,
     followups: Long)
 
-/** Exact URL-seen table row (authority behind the cuckoo pre-filter). */
+/** Exact URL-seen table row (one mark of the durable seen changelog). */
 final case class SeenRow(url_hash: Long, canonical: String, host_bucket: Int, wave: Int)
 
 /** Cursor state for sequential-id / paginated API sources (reference:

@@ -3,9 +3,10 @@ package graft.seen
 /**
  * A from-scratch cuckoo filter (Fan et al., "Cuckoo Filter: Practically
  * Better Than Bloom", CoNEXT 2014 — public paper) used as the URL-seen
- * pre-filter. One filter per host bucket; keys are xxhash64 values of
- * canonical URLs (the same hash the DataFrame plane computes with
- * Spark's `xxhash64`).
+ * pre-filter of the reference-order path only (the scalable path probes
+ * its exact per-bucket SeenSet128 directly). One filter per host bucket;
+ * keys are xxhash64 values of canonical URLs (the same hash the
+ * DataFrame plane computes with Spark's `xxhash64`).
  *
  * Semantics in the engine (SURVEY.md §4 "Request dedup"):
  *  - `contains == false` → URL is DEFINITELY new (no false negatives),
@@ -13,9 +14,12 @@ package graft.seen
  *  - `contains == true` → maybe seen; verified against the exact seen
  *    table. So the oracle-visible dedup is exact; the filter only prunes.
  *
+ * The filters are never checkpointed: a resume rebuilds them from the
+ * durable seen changelog.
+ *
  * Deterministic: kick eviction uses an LCG seeded from the key, no
  * global randomness — same inserts in the same order produce identical
- * filter bytes (needed for byte-equal checkpoint/resume tests).
+ * filter bytes.
  *
  * 4-way buckets, 16-bit fingerprints → ~2.1 bytes/key at 95% load,
  * <0.001 false-positive rate. At 10^10 URLs sharded over 2^14 host
@@ -41,11 +45,11 @@ final class CuckooFilter(requestedCapacity: Int) extends Serializable {
     * into a bigger table (the table stores fingerprints, not keys), so
     * graceful growth is a chain: inserts past the soft cap go to the
     * next level, `contains` probes every level. Growth points depend
-    * only on the insert sequence — determinism (and byte-equal
-    * checkpoint/resume) is preserved. Without this, every insert past
-    * capacity burned the full MaxKicks eviction chain before stashing:
-    * the 10×-frontier stress read 6.8× per-event cost from exactly that
-    * term when a shard outgrew its configured capacity. */
+    * only on the insert sequence — determinism is preserved. Without
+    * this, every insert past capacity burned the full MaxKicks eviction
+    * chain before stashing: the 10×-frontier stress read 6.8× per-event
+    * cost from exactly that term when a shard outgrew its configured
+    * capacity. */
   private var next: CuckooFilter = null
   /** 95% of slots: beyond this, kick chains thrash (and mostly fail) —
     * new keys go to the next level instead. */

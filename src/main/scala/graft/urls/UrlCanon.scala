@@ -304,7 +304,7 @@ object UrlCanon {
   }
 
   /** Same value as Spark SQL's `xxhash64(string)` (seed 42) — one hash
-    * shared by the DataFrame plane and the Scala-side cuckoo filter. */
+    * shared by the DataFrame plane and the Scala-side seen state. */
   def urlHash(canonical: String): Long =
     XxHash64Function.hash(UTF8String.fromString(canonical), StringType, 42L)
 

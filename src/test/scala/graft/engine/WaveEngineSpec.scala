@@ -52,6 +52,23 @@ class WaveEngineSpec extends AnyFunSuite {
     assert(seenCanonSet(ckpt) == oracleSeen)
   }
 
+  test("reference-order kill/resume replays the Scrapy LIFO order exactly; no filter blobs") {
+    // the reference path's cuckoo filters are not checkpointed: resume
+    // rebuilds them from the durable seen changelog
+    val (oracleOrder, oracleSeen) = ReferenceScheduler.crawl(seeds, site, parsers)
+    val ckpt = SparkTestSession.tmpDir("refresume")
+    def cfgOf(maxW: Int) = CrawlConfig(checkpointDir = ckpt, referenceOrder = true,
+      hostBuckets = 8, fetchPartitions = 2, maxWaves = maxW)
+    val partial = new WaveEngine(spark, site, parsers, cfgOf(5)).run(seeds)
+    assert(partial.fetched == 5L && partial.fetched < oracleOrder.size)
+    val resumed = new WaveEngine(spark, site, parsers, cfgOf(10000))
+    resumed.resume()
+
+    assert(fetchOrder(resumed) == oracleOrder)
+    assert(seenCanonSet(ckpt) == oracleSeen)
+    assert(new java.io.File(ckpt).listFiles().forall(!_.getName.startsWith("filters_w")))
+  }
+
   test("scalable mode fetches the same URL set; per-host order is deterministic across parallelism") {
     val (oracleOrder, _) = ReferenceScheduler.crawl(seeds, site, parsers)
 
