@@ -4,15 +4,15 @@ import com.esotericsoftware.kryo.Kryo
 import org.apache.spark.serializer.KryoRegistrator
 
 /**
- * Kryo registration for every class the frontier ships through shuffles
- * or cached blocks. Unregistered Kryo prefixes each object graph with
- * full class-name strings — on the candidate shuffle (millions of rows
- * per wave) that is measurable extra bytes and hashing; registered ids
- * are varints.
+ * Kryo registration for the classes the frontier keeps in serialized
+ * cached blocks and ships through the resume path's shuffles (seen rows,
+ * pending records). Unregistered Kryo prefixes each object graph with
+ * full class-name strings; registered ids are varints. The wave's
+ * candidate shuffle does not go through Kryo: it has its own fixed codec,
+ * [[CandidateSerializer]].
  */
 class GraftKryoRegistrator extends KryoRegistrator {
   override def registerClasses(kryo: Kryo): Unit = {
-    kryo.register(classOf[Candidate])
     kryo.register(classOf[graft.model.UrlRecord])
     kryo.register(classOf[graft.model.FetchResult])
     kryo.register(classOf[graft.model.Span])

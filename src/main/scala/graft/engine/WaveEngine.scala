@@ -5,7 +5,7 @@ import graft.model._
 import graft.seen.CuckooFilter
 import graft.urls.UrlCanon
 import org.apache.spark.{HashPartitioner, TaskContext}
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -873,6 +873,13 @@ private[engine] object WaveCore {
  *    by the accumulated seen set), zero driver collect, zero broadcast —
  *    the keyed-state-store layout Structured Streaming uses for
  *    mapGroupsWithState across micro-batches;
+ *  - fine partitions keep hot hosts from straggling only while a task's
+ *    fixed cost stays small next to its rows, so the loop carries no
+ *    per-task set-up it can avoid: the candidate shuffle is written by
+ *    the fixed [[CandidateSerializer]] codec (no per-task Kryo instances),
+ *    the empty seed/resume state is built in place (no shuffle), and the
+ *    pending and seen checkpoint writes coalesce their cached blocks to
+ *    one part file per 2^20 rows instead of one per fetch partition;
  *  - within-wave dedup, the exact seen check, seq assignment and the
  *    seen-set add are ONE partition-local pass — no per-wave window
  *    shuffle, no re-shuffle of the accumulated seen set, no driver-side
@@ -1102,12 +1109,29 @@ class WaveEngine(
   // scalable path: bucket-partitioned seen-state RDD core
   // ==================================================================
 
-  /** Empty per-bucket state, one entry per bucket, bucket-partitioned. */
+  /** Empty per-bucket state, built in place: partition p holds the
+    * buckets the frontier partitioner maps to p, so no shuffle is needed.
+    * The RDD itself carries no partitioner; zip it behind a partitioned
+    * parent, whose partitioner the zip output keeps. */
   private def emptyStateRdd(): RDD[(Int, BucketSeen)] = {
-    sc.parallelize(0 until cfg.hostBuckets, cfg.fetchPartitions)
-      .map(b => (b, BucketSeen(b, new graft.seen.SeenSet128(16), Nil, 0L)))
-      .partitionBy(partitioner)
+    val part = partitioner // local: closures must not capture `this`
+    val nBuckets = cfg.hostBuckets
+    sc.parallelize(0 until cfg.fetchPartitions, cfg.fetchPartitions)
+      .mapPartitionsWithIndex((p, _) =>
+        (0 until nBuckets).iterator.filter(part.getPartition(_) == p)
+          .map(b => (b, BucketSeen(b, new graft.seen.SeenSet128(16), Nil, 0L))))
   }
+
+  /** The wave's candidate shuffle, bucket-partitioned, through the fixed
+    * [[CandidateSerializer]] codec rather than the session serializer. */
+  private def shuffleCandidates(cands: RDD[(Int, Candidate)]): RDD[(Int, Candidate)] =
+    new ShuffledRDD[Int, Candidate, Candidate](cands, partitioner)
+      .setSerializer(new CandidateSerializer)
+
+  /** Part files of a checkpoint write of `rows` rows: one per 2^20 rows,
+    * at least one, at most one per fetch partition. */
+  private def checkpointFiles(rows: Long): Int =
+    math.min(cfg.fetchPartitions.toLong, math.max(1L, (rows + (1L << 20) - 1) >> 20)).toInt
 
   /** Novel rows of a wave output, keyed by bucket with the partitioner
     * preserved — the key keeps deferred∪novel a partitioner-aware union
@@ -1122,18 +1146,27 @@ class WaveEngine(
     * O(novel since last flush), never O(accumulated seen). Resume unions
     * all flush dirs ≤ LATEST; the committed-LATEST bound keeps a flush
     * that landed without its state file invisible (and resume deletes such
-    * orphans so a replay at different wave numbers can't double them). */
+    * orphans so a replay at different wave numbers can't double them).
+    *
+    * The pending and seen writes are sized to their rows: `pendingRows`
+    * (exact) and `novelRows` (the novel counts since `sinceWave`) pick
+    * [[checkpointFiles]] part files, so a small wave writes one file in
+    * one task instead of one per fetch partition. Both inputs are already
+    * materialized (the localCheckpointed wave output, the persisted
+    * pending union), so the coalesce only merges cached blocks. */
   private def writeScalableCheckpoint(
       wave: Int,
       state: RDD[(Int, BucketSeen)],
       pending: RDD[(Int, UrlRecord)],
+      pendingRows: Long,
+      novelRows: Long,
       nextSeq: Long,
       totalFetched: Long,
       totalDeduped: Long,
       sinceWave: Int): Unit = {
-    spark.createDataset(pending.values)
+    spark.createDataset(pending.values.coalesce(checkpointFiles(pendingRows)))
       .write.mode(SaveMode.Overwrite).parquet(s"$ckpt/pending_w$wave")
-    val seenRows = state.flatMap { case (b, st) =>
+    val seenRows = state.coalesce(checkpointFiles(novelRows)).flatMap { case (b, st) =>
       st.log.iterator.filter(_.wave > sinceWave).flatMap(ch =>
         (0 until ch.size).iterator.map(i => (ch.hashes(i), ch.canonical(i), b, ch.wave)))
     }
@@ -1214,12 +1247,12 @@ class WaveEngine(
     clearStaleRun()
     val nB = cfg.hostBuckets.toLong
     val maxPerHostB = cfg.maxPagesPerHost // local: closures must not capture `this`
-    val seedCands = sc.parallelize(seedCandidates(seeds), cfg.fetchPartitions)
-      .map(c => (c.host_bucket, c)).partitionBy(partitioner)
+    val seedCands = shuffleCandidates(
+      sc.parallelize(seedCandidates(seeds), cfg.fetchPartitions).map(c => (c.host_bucket, c)))
     // the seed wave runs through the same advance pass as every other wave:
     // seeds are marked seen at enqueue and get interleaved seqs
-    val out0 = emptyStateRdd().zipPartitions(seedCands, preservesPartitioning = true) {
-      (st, cd) => WaveCore.advancePartition(st, cd, base = 0L, newWave = 0,
+    val out0 = seedCands.zipPartitions(emptyStateRdd(), preservesPartitioning = true) {
+      (cd, st) => WaveCore.advancePartition(st, cd, base = 0L, newWave = 0,
         seedWave = true, nBuckets = nB, maxPerHost = maxPerHostB)
     }
     out0.localCheckpoint()
@@ -1227,7 +1260,8 @@ class WaveEngine(
     val nextSeq = (nSeeds + 1) * nB
     val state0 = out0.mapValues(_.state)
     val pending0 = novelOf(out0)
-    writeScalableCheckpoint(0, state0, pending0, nextSeq, 0L, 0L, sinceWave = -1)
+    writeScalableCheckpoint(0, state0, pending0, nSeeds, nSeeds, nextSeq, 0L, 0L,
+      sinceWave = -1)
     loopScalable(0, out0, pending0, None, nextSeq, 0L, 0L, lastFlushed0 = 0)
   }
 
@@ -1273,9 +1307,9 @@ class WaveEngine(
         .as[(Int, Long, Long)].rdd
         .map { case (b, h, n) => (b, (h, n)) }
         .partitionBy(partitioner)
-    val out0 = emptyStateRdd().zipPartitions(seenRows, paceRows, hostNRows,
+    val out0 = seenRows.zipPartitions(paceRows, hostNRows, emptyStateRdd(),
         preservesPartitioning = true) {
-      (st, rows, pace, hostn) =>
+      (rows, pace, hostn, st) =>
         WaveCore.rebuildPartition(st, rows, wave, pace, hostn)
     }
     out0.localCheckpoint()
@@ -1289,10 +1323,13 @@ class WaveEngine(
   }
 
   /**
-   * The scalable wave loop. Per wave: one candidate shuffle, one
-   * materializing action (the per-bucket novel/candidate counts, which
-   * also populates the localCheckpoint blocks), plus the optional fetched
-   * table write. No driver-side collect of state, no broadcast.
+   * The scalable wave loop. Per wave: one candidate shuffle (through the
+   * [[CandidateSerializer]] codec), one materializing action (the
+   * per-bucket novel/candidate counts, which also populates the
+   * localCheckpoint blocks), plus the optional fetched table write. No
+   * driver-side collect of state, no broadcast. A checkpoint's pending
+   * and seen writes are sized by the counts the driver already holds (the
+   * exact pending count, the novel counts since the last flush).
    */
   private def loopScalable(
       startWave: Int,
@@ -1307,6 +1344,7 @@ class WaveEngine(
     val nB = cfg.hostBuckets.toLong
     var wave = startWave
     var lastFlushed = lastFlushed0
+    var novelSinceFlush = 0L // sizes the next seen flush
     var nextSeq = nextSeq0
     var totalFetched = fetched0
     var totalDeduped = deduped0
@@ -1693,7 +1731,7 @@ class WaveEngine(
           WaveCore.combineCandidates(it.flatMap(fr =>
               WaveCore.candidateIter(fr, parsersB.value, buckets, robotsEnabled, robotsW)))
             .map(c => (c.host_bucket, c)))
-      val cands = candsRaw.partitionBy(partitioner)
+      val cands = shuffleCandidates(candsRaw)
 
       // advance the seen state: dedup + seq + seen-set add in one pass
       val base = nextSeq
@@ -1720,6 +1758,7 @@ class WaveEngine(
       totalFetched += waveBatchCount
       val dedupedCount = emitted - novelCount // exact: both from the same pass
       totalDeduped += dedupedCount
+      novelSinceFlush += novelCount
       lineageAcc.value.asScala.foreach { case (pid, in, ok, err) =>
         lineageBuf += ((wave, pid, in, ok, err, dedupedCount, novelCount))
       }
@@ -1755,16 +1794,17 @@ class WaveEngine(
       wave += 1
 
       if (wave % cfg.checkpointEvery == 0 || done) {
-        writeScalableCheckpoint(wave, state, pending, nextSeq, totalFetched, totalDeduped,
-          sinceWave = lastFlushed)
+        writeScalableCheckpoint(wave, state, pending, batchCount, novelSinceFlush, nextSeq,
+          totalFetched, totalDeduped, sinceWave = lastFlushed)
         lastFlushed = wave
+        novelSinceFlush = 0L
         flushLineage(wave, lineageBuf)
       }
     }
     if (latestCheckpointWave.forall(_ < wave)) {
       // loop exited on maxWaves/maxUrls between checkpoints
-      writeScalableCheckpoint(wave, state, pending, nextSeq, totalFetched, totalDeduped,
-        sinceWave = lastFlushed)
+      writeScalableCheckpoint(wave, state, pending, batchCount, novelSinceFlush, nextSeq,
+        totalFetched, totalDeduped, sinceWave = lastFlushed)
       lastFlushed = wave
       flushLineage(wave, lineageBuf)
     }

@@ -28,6 +28,18 @@ class WaveEngineSpec extends AnyFunSuite {
       .parquet(s"$ckpt/seen").select("url_hash").as[Long].collect().toSet
   }
 
+  /** Checkpoint writes are sized to their rows: a small crawl's pending
+    * and seen-flush dirs each hold one parquet part file. */
+  def assertOneFilePerCheckpointDir(ckpt: String): Unit = {
+    val dirs = new java.io.File(ckpt).listFiles().filter(_.getName.startsWith("pending_w")) ++
+      new java.io.File(s"$ckpt/seen").listFiles().filter(_.getName.startsWith("flush_"))
+    assert(dirs.exists(_.getName.startsWith("pending_w")) && dirs.length >= 3, dirs.toSeq)
+    dirs.foreach { d =>
+      val parts = d.listFiles().count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      assert(parts == 1, d.getPath)
+    }
+  }
+
   def fetchOrder(engine: WaveEngine): Seq[String] = {
     import spark.implicits._
     engine.fetchedTable()
@@ -88,10 +100,16 @@ class WaveEngineSpec extends AnyFunSuite {
 
     val (set2, perHost2, res2) = run(2)
     val (set8, perHost8, _) = run(8)
+    // above bypassMergeThreshold the candidate codec writes through
+    // SortShuffleWriter/ExternalSorter instead of the bypass writer
+    assert(spark.sparkContext.getConf.getInt("spark.shuffle.sort.bypassMergeThreshold", 200) < 256)
+    val (set256, perHost256, res256) = run(256)
     assert(set2 == oracleOrder.toSet)
-    assert(set8 == set2)
-    assert(perHost2 == perHost8) // per-host fetch order independent of parallelism
+    assert(set8 == set2 && set256 == set2)
+    // per-host fetch order independent of parallelism
+    assert(perHost2 == perHost8 && perHost256 == perHost2)
     assert(res2.fetched == oracleOrder.size)
+    assert(res256.deduped == res2.deduped)
   }
 
   test("lineage surface: per-wave report reconciles with the fetched table; skew audited") {
@@ -366,14 +384,17 @@ class WaveEngineSpec extends AnyFunSuite {
     val full = new WaveEngine(spark, site, parsers,
       CrawlConfig(checkpointDir = ckptFull, hostBuckets = 8, fetchPartitions = 4))
     val resFull = full.run(seeds)
+    assertOneFilePerCheckpointDir(ckptFull) // the exit pending_w* is empty
 
     val ckptPart = SparkTestSession.tmpDir("partial")
     val partial = new WaveEngine(spark, site, parsers,
       CrawlConfig(checkpointDir = ckptPart, hostBuckets = 8, fetchPartitions = 4, maxWaves = 2))
     partial.run(seeds)
+    assertOneFilePerCheckpointDir(ckptPart) // a non-empty mid-run pending_w*
     val resumed = new WaveEngine(spark, site, parsers,
       CrawlConfig(checkpointDir = ckptPart, hostBuckets = 8, fetchPartitions = 4))
     val resResumed = resumed.resume()
+    assertOneFilePerCheckpointDir(ckptPart)
 
     import spark.implicits._
     def fetchedSet(e: WaveEngine): Set[(String, Int)] =
