@@ -20,7 +20,7 @@ class GraftKryoRegistrator extends KryoRegistrator {
     kryo.register(classOf[graft.model.FollowUp])
     kryo.register(classOf[BucketSeen])
     kryo.register(classOf[BucketWave])
-    kryo.register(classOf[graft.seen.CuckooFilter])
+    kryo.register(classOf[RefState])
     kryo.register(classOf[graft.seen.SeenSet128])
     kryo.register(classOf[graft.seen.SeenChunk])
     kryo.register(classOf[Array[Int]])

@@ -2,12 +2,10 @@ package graft.engine
 
 import graft.fetch.Fetcher
 import graft.model._
-import graft.seen.CuckooFilter
 import graft.urls.UrlCanon
 import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.CollectionAccumulator
@@ -189,7 +187,10 @@ final case class CrawlConfig(
     politenessRps: Double = 1.0, // per host (reference: 1 rps GLOBAL; cross-host parallelism is the whole point)
     maxPerHostPerWave: Int = 256, // politeness budget per wave per host (Int.MaxValue = uncapped fast path)
     realtime: Boolean = false, // actually sleep between same-host fetches
-    referenceOrder: Boolean = false, // replay Scrapy's sequential LIFO order exactly
+    // replay Scrapy's sequential LIFO order exactly: one Spark task per
+    // checkpoint interval pops, fetches and dedups one request at a time
+    // at one global `politenessRps` (Scrapy's DOWNLOAD_DELAY)
+    referenceOrder: Boolean = false,
     robotsEnabled: Boolean = false, // reference: ROBOTSTXT_OBEY = False (settings.py:20)
     robotsDisallow: Map[String, Seq[String]] = Map.empty, // host -> path prefixes
     // S12 at depth — robots for hosts DISCOVERED mid-crawl: a driver-side
@@ -285,7 +286,9 @@ final case class CrawlConfig(
     // fetched table; ingestion can run post-hoc via MediaStore.ingestWave.
     mediaStoreDir: Option[String] = None,
     checkpointEvery: Int = 1, // durable checkpoint cadence in waves (always at loop exit)
-    // initial per-bucket cuckoo filter capacity: the reference-order path only
+    // ignored by the engine: no crawl path has a cuckoo filter (the exact
+    // seen set is the only URL-seen state); kept so callers that set it
+    // still compile
     filterCapacityPerBucket: Int = 1 << 16)
 
 final case class CrawlRunResult(
@@ -378,6 +381,17 @@ private[engine] final case class BucketWave(
     state: BucketSeen,
     novel: Array[UrlRecord],
     nCandidates: Long)
+
+/** The reference-order replay's state at a checkpoint, in the scalable
+  * path's own types: every bucket's seen state (`seen(b)` is bucket b) and
+  * the queued requests. An interval's output also carries its fetched
+  * rows and one lineage row per pop, for the interval's writes. */
+private[engine] final case class RefState(
+    seen: Array[BucketSeen],
+    queued: Array[UrlRecord],
+    nextSeq: Long,
+    fetched: Array[FetchResult] = Array.empty,
+    lineage: Array[(Int, Int, Long, Long, Long, Long, Long)] = Array.empty)
 
 /**
  * Partition-level pure functions of the scalable core. Static (no
@@ -575,53 +589,59 @@ private[engine] object WaveCore {
           lastFetchMs = t
           t
         } else plannedMs
-        // media rows route to the binary plane; both kinds consume a
-        // politeness slot on their host (a media GET is a request like any
-        // other — the reference's global 1 rps would pace it identically)
-        val (status, doc, mediaType, mediaBytes) =
-          if (r.parse_fn == MediaFn) {
-            val (st, blob) = f.fetchMedia(r.url)
-            (st, None: Option[Document],
-              blob.map(_.content_type).orNull, blob.map(_.bytes).orNull)
-          } else {
-            // S14 revalidation: a frontier row carrying a validator (stamped
-            // by Sources.revalidatingSeeds from the Revalidate plan) fetches
-            // conditionally — unchanged content comes back as a body-less
-            // 304 row (the HTTP If-None-Match contract). The meta.isEmpty
-            // fast path keeps the bench's hot loop allocation- and
-            // lookup-free: ordinary crawl rows carry no meta at all.
-            val (st, d) =
-              if (r.meta.isEmpty) f.fetch(r.url)
-              else r.meta.get(Sources.IfHashKey) match {
-                case Some(h) => f.fetchConditional(r.url, java.lang.Long.parseLong(h))
-                case None => f.fetch(r.url)
-              }
-            (st, d, null, null)
-          }
-        // wall-clock store time in BOTH modes, stamped AFTER the fetch
-        // returns: the S11 TTL predicate must never see a simulated
-        // planned stamp (future-dated on any warm run), and in realtime
-        // mode `stored_at_ms - fetched_at_ms` is the observed fetch
-        // latency — the signal ops/Throttle.adaptiveHostDelays feeds on —
-        // without a schema field or any cost on the simulated bench path
-        val storedAt = System.currentTimeMillis()
+        val out = fetchOne(r, f, fetchWave, fetchedAt, slot, pid)
         nIn += 1
-        if (status >= 200 && status < 300) nOk += 1
-        if (status >= 400) nErr += 1
-        val out = FetchResult(
-          url = r.url, canonical = r.canonical, url_hash = r.url_hash,
-          host = r.host, host_bucket = r.host_bucket, parse_fn = r.parse_fn,
-          meta = r.meta, wave = fetchWave, seq = r.seq, status = status,
-          from_cache = false, fetched_at_ms = fetchedAt, stored_at_ms = storedAt, slot = slot,
-          partition_id = pid,
-          doc_id = doc.map(_.doc_id).getOrElse(r.canonical),
-          spans = doc.map(_.spans).getOrElse(Nil),
-          media_type = mediaType, media_bytes = mediaBytes)
+        if (out.status >= 200 && out.status < 300) nOk += 1
+        if (out.status >= 400) nErr += 1
         slot += 1
         i += 1
         out
       }
     }
+  }
+
+  /** Fetch one frontier row, stamped `fetchedAt` by the caller's pacer. */
+  def fetchOne(r: UrlRecord, f: Fetcher, fetchWave: Int, fetchedAt: Long, slot: Int,
+      pid: Int): FetchResult = {
+    // media rows route to the binary plane; both kinds consume a
+    // politeness slot on their host (a media GET is a request like any
+    // other — the reference's global 1 rps would pace it identically)
+    val (status, doc, mediaType, mediaBytes) =
+      if (r.parse_fn == MediaFn) {
+        val (st, blob) = f.fetchMedia(r.url)
+        (st, None: Option[Document],
+          blob.map(_.content_type).orNull, blob.map(_.bytes).orNull)
+      } else {
+        // S14 revalidation: a frontier row carrying a validator (stamped
+        // by Sources.revalidatingSeeds from the Revalidate plan) fetches
+        // conditionally — unchanged content comes back as a body-less
+        // 304 row (the HTTP If-None-Match contract). The meta.isEmpty
+        // fast path keeps the bench's hot loop allocation- and
+        // lookup-free: ordinary crawl rows carry no meta at all.
+        val (st, d) =
+          if (r.meta.isEmpty) f.fetch(r.url)
+          else r.meta.get(Sources.IfHashKey) match {
+            case Some(h) => f.fetchConditional(r.url, java.lang.Long.parseLong(h))
+            case None => f.fetch(r.url)
+          }
+        (st, d, null, null)
+      }
+    // wall-clock store time in BOTH modes, stamped AFTER the fetch
+    // returns: the S11 TTL predicate must never see a simulated
+    // planned stamp (future-dated on any warm run), and in realtime
+    // mode `stored_at_ms - fetched_at_ms` is the observed fetch
+    // latency — the signal ops/Throttle.adaptiveHostDelays feeds on —
+    // without a schema field or any cost on the simulated bench path
+    val storedAt = System.currentTimeMillis()
+    FetchResult(
+      url = r.url, canonical = r.canonical, url_hash = r.url_hash,
+      host = r.host, host_bucket = r.host_bucket, parse_fn = r.parse_fn,
+      meta = r.meta, wave = fetchWave, seq = r.seq, status = status,
+      from_cache = false, fetched_at_ms = fetchedAt, stored_at_ms = storedAt, slot = slot,
+      partition_id = pid,
+      doc_id = doc.map(_.doc_id).getOrElse(r.canonical),
+      spans = doc.map(_.spans).getOrElse(Nil),
+      media_type = mediaType, media_bytes = mediaBytes)
   }
 
   private val UrlRecordOrder: java.util.Comparator[UrlRecord] =
@@ -847,6 +867,76 @@ private[engine] object WaveCore {
       }
     }
   }
+
+  /** One checkpoint interval of the reference-order replay: Scrapy's
+    * sequential loop (CONCURRENT_REQUESTS = 1) from pop `startWave` until
+    * pop `endWave`, `maxPops` pops or an empty queue. Each pop takes the
+    * next request in [[RefPopOrder]], dropping a start request whose
+    * fingerprint is already seen (start requests are fingerprinted when
+    * consumed); fetches it as wave = pop index, stamped `t0 + wave ·
+    * spacing` in simulated mode, or after sleeping until `spacing` ms past
+    * the previous fetch in realtime mode (Scrapy's global DOWNLOAD_DELAY;
+    * the seen states' pace maps carry that time between intervals); and
+    * marks each novel follow-up seen as it queues it. A pure function of
+    * `in`: the seen sets are copied once per interval and the input is
+    * never mutated, so a retried task redoes the same pops. The interval's
+    * marks form one chunk per bucket, tagged with the interval's last
+    * wave. */
+  def referenceInterval(in: RefState, f: Fetcher, parsers: Map[String, PageParser],
+      robotsEnabled: Boolean, robots: Map[String, Seq[String]], rps: Double,
+      realtime: Boolean, t0: Long, startWave: Int, endWave: Int, maxPops: Long,
+      keepFetched: Boolean): RefState = {
+    val spacingMs = math.round(1000.0 / rps)
+    val pid = TaskContext.getPartitionId()
+    val queue = scala.collection.mutable.PriorityQueue.from(in.queued)(RefPopOrder)
+    val seen = in.seen.map(st => st.copy(seen = st.seen.copy()))
+    val marks = Array.fill(seen.length)(scala.collection.mutable.ArrayBuffer.empty[(Long, String)])
+    def mark(b: Int, h: Long, canon: String): Boolean =
+      seen(b).seen.add(h, UrlCanon.urlHash2(canon)) && { marks(b) += ((h, canon)); true }
+    var nextFetchMs = in.seen.iterator.flatMap(_.pace.valuesIterator).maxOption.getOrElse(0L)
+    var nextSeq = in.nextSeq
+    val fetched = scala.collection.mutable.ArrayBuffer.empty[FetchResult]
+    val lineage = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long, Long, Long, Long, Long)]
+    var wave = startWave
+    while (wave < endWave && wave - startWave < maxPops && !queue.isEmpty) {
+      val r = queue.dequeue()
+      if (!r.is_seed || mark(r.host_bucket, r.url_hash, r.canonical)) {
+        val fetchedAt =
+          if (!realtime) t0 + wave * spacingMs
+          else {
+            var t = System.currentTimeMillis()
+            while (t < nextFetchMs) { Thread.sleep(nextFetchMs - t); t = System.currentTimeMillis() }
+            nextFetchMs = t + spacingMs
+            val st = seen(r.host_bucket)
+            seen(st.bucket) = st.copy(pace = st.pace.updated(UrlCanon.urlHash(r.host), nextFetchMs))
+            t
+          }
+        val fr = fetchOne(r, f, wave, fetchedAt, 0, pid)
+        val cands = candidateIter(fr, parsers, seen.length, robotsEnabled, robots).toArray
+        val novel = cands.filter(c => mark(c.host_bucket, c.url_hash, c.canonical))
+        for ((c, i) <- novel.zipWithIndex) queue.enqueue(UrlRecord(c.urlOrCanonical, c.canonical,
+          c.url_hash, UrlCanon.hostOf(c.canonical), c.host_bucket, c.parse_fn, c.meta, c.priority,
+          is_seed = false, wave = wave + 1, seq = nextSeq + i))
+        nextSeq += novel.length
+        if (keepFetched) fetched += fr
+        lineage += ((wave, pid, 1L, if (fr.ok) 1L else 0L, if (fr.status >= 400) 1L else 0L,
+          (cands.length - novel.length).toLong, novel.length.toLong))
+        wave += 1
+      }
+    }
+    val out = seen.zip(marks).map { case (st, m) =>
+      if (m.isEmpty) st
+      else st.copy(count = st.count + m.length, log =
+        graft.seen.SeenChunk.pack(wave, m.map(_._1).toArray, m.map(_._2).toArray) :: st.log)
+    }
+    RefState(out, queue.toArray, nextSeq, fetched.toArray, lineage.toArray)
+  }
+
+  /** Scrapy's pop order, greatest first: queued follow-ups by priority,
+    * then newest (highest seq) first (its LIFO queue); start requests only
+    * when no follow-up is queued, in listed (seq) order. */
+  private val RefPopOrder: Ordering[UrlRecord] = Ordering.by(r =>
+    if (r.is_seed) (false, 0L, -r.seq) else (true, r.priority.toLong, r.seq))
 }
 
 /**
@@ -864,8 +954,8 @@ private[engine] object WaveCore {
  *
  * Dedup semantics = Scrapy's dupefilter: a URL is marked seen when
  * *enqueued* (never enqueued twice); the key is exact — (url_hash,
- * canonical) — so neither a filter false positive (reference-order path)
- * nor a 64-bit hash collision can drop or duplicate a URL.
+ * canonical) — so a 64-bit hash collision can neither drop nor duplicate
+ * a URL.
  *
  * Scale design (10^10 frontier):
  *  - the seen set is a bucket-partitioned state RDD co-partitioned with
@@ -895,8 +985,11 @@ private[engine] object WaveCore {
  *
  * Ordering contract (SURVEY.md §2.5): `referenceOrder=true` replays
  * Scrapy's deterministic sequential order (start requests in listed
- * order, consumed lazily; follow-ups LIFO) with waves of size 1 on the
- * legacy DataFrame path. The scalable mode relaxes to per-host FIFO by
+ * order, consumed lazily; follow-ups LIFO), one pop per wave, inside one
+ * Spark task per checkpoint interval on the same core (fetchOne,
+ * candidateIter, per-bucket exact seen sets) and the same checkpoint
+ * layout; its lineage rows come from the task's output, one per pop,
+ * exactly once. The scalable mode relaxes to per-host FIFO by
  * discovery order, preserving the fetched *set* and per-host order across
  * any parallelism level.
  */
@@ -932,14 +1025,23 @@ class WaveEngine(
   // ------------------------------------------------------------------
 
   private def writeState(wave: Int, nextSeq: Long, fetched: Long, deduped: Long): Unit = {
-    val json = s"""{"wave":$wave,"next_seq":$nextSeq,"fetched":$fetched,"deduped":$deduped}"""
+    val json = s"""{"wave":$wave,"next_seq":$nextSeq,"fetched":$fetched,"deduped":$deduped,""" +
+      s""""reference_order":${cfg.referenceOrder}}"""
     Files.writeString(Paths.get(s"$ckpt/state_w$wave.json"), json)
     Files.writeString(Paths.get(s"$ckpt/LATEST"), wave.toString,
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
   }
 
+  /** (next seq, fetched, deduped) of the checkpoint at `wave`. Fails fast
+    * when the checkpoint was written in the other mode: the two modes
+    * assign seqs and order the frontier differently. */
   private def readState(wave: Int): (Long, Long, Long) = {
     val s = Files.readString(Paths.get(s"$ckpt/state_w$wave.json"))
+    def modeName(referenceOrder: Boolean) = if (referenceOrder) "referenceOrder" else "scalable"
+    """"reference_order":(true|false)""".r.findFirstMatchIn(s).map(_.group(1).toBoolean)
+      .foreach(written => require(written == cfg.referenceOrder,
+        s"the checkpoint under $ckpt was written in ${modeName(written)} mode; " +
+          s"it cannot resume in ${modeName(cfg.referenceOrder)} mode"))
     def field(k: String): Long = s""""$k":(-?\\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
     (field("next_seq"), field("fetched"), field("deduped"))
   }
@@ -997,21 +1099,6 @@ class WaveEngine(
       .foreach(graft.util.Fs.deleteRecursively)
   }
 
-  /** All durable seen marks up to `maxWave` (local-FS checkpoint layout; a
-    * cluster deployment would point this at a shared store).
-    *
-    * IMPORTANT: reads the EXPLICIT (growing) list of flush dirs, never the
-    * root path — Spark's CacheManager matches plans by canonicalized form,
-    * so a cached read of the constant root path would silently pin the
-    * FIRST file-listing snapshot forever and hide newer seen marks from
-    * the dedup anti-join. */
-  private def seenSoFar(maxWave: Int): DataFrame = {
-    val dirs = seenFlushDirs(maxWave)
-    if (dirs.isEmpty)
-      spark.createDataFrame(sc.emptyRDD[Row], seenSchema)
-    else spark.read.schema(seenSchema).parquet(dirs: _*)
-  }
-
   /** Seed URLs as wave-0 candidates (parent_seq = listed index, so listed
     * order is the per-host discovery order), deduped on the canonical. */
   private def seedCandidates(seeds: Seq[SeedSpec]): Seq[Candidate] = {
@@ -1032,24 +1119,19 @@ class WaveEngine(
   // ------------------------------------------------------------------
 
   def run(seeds: Seq[SeedSpec]): CrawlRunResult = {
-    // S11 is a scalable-loop feature: the reference-order replay fetches
-    // live (its contract is the exact Scrapy request sequence). Refuse the
-    // combination rather than silently ignoring the cache dir.
-    require(!(cfg.referenceOrder && cfg.fetchCacheDir.isDefined),
-      "fetchCacheDir is not supported in referenceOrder mode")
-    // same convention for the other scalable-loop-only features: the
-    // replay's contract is Scrapy's sequence (robots off, one global rps)
-    require(!(cfg.referenceOrder && (cfg.robotsResolve.isDefined || cfg.hostRps.nonEmpty)),
-      "robotsResolve/hostRps are not supported in referenceOrder mode")
-    require(!(cfg.referenceOrder && cfg.hostRpsTable.isDefined),
-      "hostRpsTable is not supported in referenceOrder mode")
+    // the scalable-loop features (S11 cache, live robots, per-host rates,
+    // S14 revalidation, crawl budget) have no place in the replay: its
+    // contract is Scrapy's exact request sequence (live fetches, robots
+    // off, one global rps). Refuse them rather than silently ignore them.
+    val scalableOnly = Seq("fetchCacheDir" -> cfg.fetchCacheDir.isDefined,
+      "robotsResolve" -> cfg.robotsResolve.isDefined, "hostRps" -> cfg.hostRps.nonEmpty,
+      "hostRpsTable" -> cfg.hostRpsTable.isDefined, "revalidateFrom" -> cfg.revalidateFrom.isDefined,
+      "maxPagesPerHost" -> (cfg.maxPagesPerHost != Long.MaxValue)).collect { case (k, true) => k }
+    require(!cfg.referenceOrder || scalableOnly.isEmpty,
+      s"${scalableOnly.mkString(", ")} not supported in referenceOrder mode")
     require(!(cfg.hostRps.nonEmpty && cfg.hostRpsTable.isDefined),
       "hostRps and hostRpsTable are mutually exclusive (use the table " +
         "form at frontier host cardinality)")
-    require(!(cfg.referenceOrder && cfg.revalidateFrom.isDefined),
-      "revalidateFrom is not supported in referenceOrder mode")
-    require(!(cfg.referenceOrder && cfg.maxPagesPerHost != Long.MaxValue),
-      "maxPagesPerHost is not supported in referenceOrder mode")
     if (cfg.referenceOrder) runReference(seeds) else runScalable(seeds)
   }
 
@@ -1113,10 +1195,9 @@ class WaveEngine(
     * buckets the frontier partitioner maps to p, so no shuffle is needed.
     * The RDD itself carries no partitioner; zip it behind a partitioned
     * parent, whose partitioner the zip output keeps. */
-  private def emptyStateRdd(): RDD[(Int, BucketSeen)] = {
-    val part = partitioner // local: closures must not capture `this`
+  private def emptyStateRdd(part: HashPartitioner = partitioner): RDD[(Int, BucketSeen)] = {
     val nBuckets = cfg.hostBuckets
-    sc.parallelize(0 until cfg.fetchPartitions, cfg.fetchPartitions)
+    sc.parallelize(0 until part.numPartitions, part.numPartitions)
       .mapPartitionsWithIndex((p, _) =>
         (0 until nBuckets).iterator.filter(part.getPartition(_) == p)
           .map(b => (b, BucketSeen(b, new graft.seen.SeenSet128(16), Nil, 0L))))
@@ -1265,7 +1346,12 @@ class WaveEngine(
     loopScalable(0, out0, pending0, None, nextSeq, 0L, 0L, lastFlushed0 = 0)
   }
 
-  private def resumeScalable(): CrawlRunResult = {
+  /** Reads the committed checkpoint (LATEST): (wave, next seq, fetched,
+    * deduped, bucket states rebuilt from the seen changelog, pending rows),
+    * keyed by bucket under `part` — the frontier partitioner for the
+    * scalable loop, one partition for the reference-order replay. */
+  private def readCheckpoint(part: HashPartitioner)
+      : (Int, Long, Long, Long, RDD[(Int, BucketWave)], RDD[(Int, UrlRecord)]) = {
     val wave = latestCheckpointWave.getOrElse(
       throw new IllegalStateException(s"no checkpoint under $ckpt"))
     val (nextSeq, fetched, deduped) = readState(wave)
@@ -1281,43 +1367,41 @@ class WaveEngine(
     // predecessor); rebuildPartition dedups, so a replayed overlap is safe
     val dirs = seenFlushDirs(wave)
     val seenRows: RDD[(Int, (Long, String))] =
-      if (dirs.isEmpty) sc.emptyRDD[(Int, (Long, String))].partitionBy(partitioner)
+      if (dirs.isEmpty) sc.emptyRDD[(Int, (Long, String))].partitionBy(part)
       else spark.read.schema(seenSchema).parquet(dirs: _*)
         .select($"host_bucket", $"url_hash", $"canonical")
         .as[(Int, Long, String)].rdd
         .map { case (b, h, c) => (b, (h, c)) }
-        .partitionBy(partitioner)
+        .partitionBy(part)
+    def hostPlane(dir: String, value: String): RDD[(Int, (Long, Long))] =
+      if (!new java.io.File(dir).isDirectory) sc.emptyRDD[(Int, (Long, Long))].partitionBy(part)
+      else spark.read.parquet(dir)
+        .select($"host_bucket", $"host_hash", col(value))
+        .as[(Int, Long, Long)].rdd
+        .map { case (b, h, v) => (b, (h, v)) }
+        .partitionBy(part)
     // restore the per-host pace map (absent for simulated-mode checkpoints
     // and checkpoints from before the pace file existed → empty, the
     // pre-round-4 behavior)
-    val paceDir = new java.io.File(s"$ckpt/pace_w$wave")
-    val paceRows: RDD[(Int, (Long, Long))] =
-      if (!paceDir.isDirectory) sc.emptyRDD[(Int, (Long, Long))].partitionBy(partitioner)
-      else spark.read.parquet(paceDir.getPath)
-        .select($"host_bucket", $"host_hash", $"next_allowed_ms")
-        .as[(Int, Long, Long)].rdd
-        .map { case (b, h, ms) => (b, (h, ms)) }
-        .partitionBy(partitioner)
+    val paceRows = hostPlane(s"$ckpt/pace_w$wave", "next_allowed_ms")
     // per-host crawl-budget counts (absent when the budget is off)
-    val hostNDir = new java.io.File(s"$ckpt/hostn_w$wave")
-    val hostNRows: RDD[(Int, (Long, Long))] =
-      if (!hostNDir.isDirectory) sc.emptyRDD[(Int, (Long, Long))].partitionBy(partitioner)
-      else spark.read.parquet(hostNDir.getPath)
-        .select($"host_bucket", $"host_hash", $"admitted")
-        .as[(Int, Long, Long)].rdd
-        .map { case (b, h, n) => (b, (h, n)) }
-        .partitionBy(partitioner)
-    val out0 = seenRows.zipPartitions(paceRows, hostNRows, emptyStateRdd(),
+    val hostNRows = hostPlane(s"$ckpt/hostn_w$wave", "admitted")
+    val out = seenRows.zipPartitions(paceRows, hostNRows, emptyStateRdd(part),
         preservesPartitioning = true) {
       (rows, pace, hostn, st) =>
         WaveCore.rebuildPartition(st, rows, wave, pace, hostn)
     }
+    val pending = spark.read.schema(urlRecordSchema)
+      .parquet(s"$ckpt/pending_w$wave").as[UrlRecord].rdd
+      .map(r => (r.host_bucket, r)).partitionBy(part)
+    (wave, nextSeq, fetched, deduped, out, pending)
+  }
+
+  private def resumeScalable(): CrawlRunResult = {
+    val (wave, nextSeq, fetched, deduped, out0, pending) = readCheckpoint(partitioner)
     out0.localCheckpoint()
     out0.count()
-    val pendingKeyed = spark.read.schema(urlRecordSchema)
-      .parquet(s"$ckpt/pending_w$wave").as[UrlRecord].rdd
-      .map(r => (r.host_bucket, r)).partitionBy(partitioner)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val pendingKeyed = pending.persist(StorageLevel.MEMORY_AND_DISK)
     loopScalable(wave, out0, pendingKeyed, Some(pendingKeyed), nextSeq, fetched, deduped,
       lastFlushed0 = wave)
   }
@@ -1826,281 +1910,91 @@ class WaveEngine(
   }
 
   // ==================================================================
-  // legacy DataFrame path — reference-order (Scrapy LIFO) replay only
+  // reference-order (Scrapy LIFO) replay: one task per checkpoint interval
   // ==================================================================
 
-  private def toCandidates(fetched: Dataset[FetchResult]): Dataset[Candidate] = {
-    val parsersB = sc.broadcast(parsers)
-    val buckets = cfg.hostBuckets
-    val robotsEnabled = cfg.robotsEnabled
-    val robots = cfg.robotsDisallow
-    fetched.flatMap(fr =>
-      WaveCore.candidateIter(fr, parsersB.value, buckets, robotsEnabled, robots))
-  }
-
-  /** Lazy novel-candidate plan: within-wave first-discovery dedup, cuckoo
-    * pre-filter, exact anti-join verification of filter positives. The
-    * caller materializes it exactly once (localCheckpoint) and unpersists
-    * the returned `flagged` handle afterwards. */
-  private def dedupe(
-      candidates: Dataset[Candidate],
-      seen: DataFrame,
-      filtersB: org.apache.spark.broadcast.Broadcast[Map[Int, CuckooFilter]]): (Dataset[Candidate], DataFrame) = {
-    // first discovery wins within the wave (deterministic: discovery order;
-    // parent_seq values are globally unique so the order is total).
-    // Dedup key is (url_hash, canonical): exact under hash collisions.
-    val w = Window.partitionBy($"url_hash", $"canonical")
-      .orderBy($"parent_seq", $"emission_idx")
-    val unique = candidates
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1).drop("rn")
-      .as[Candidate]
-
-    // cuckoo pre-filter: definitely-new rows skip the anti-join entirely
-    val flagged = unique.map { c =>
-      (c, filtersB.value.get(c.host_bucket).exists(_.contains(c.url_hash)))
-    }.toDF("c", "maybe_seen")
-    flagged.cache() // shared by both branches below within one job
-    val definiteNew = flagged.filter(!$"maybe_seen").select($"c.*").as[Candidate]
-    val maybeSeen = flagged.filter($"maybe_seen").select($"c.*").as[Candidate]
-    // exact verification for the filter positives
-    val verifiedNew = maybeSeen.join(seen.select("url_hash", "canonical"),
-        Seq("url_hash", "canonical"), "left_anti")
-      .as[Candidate]
-    (definiteNew.unionByName(verifiedNew), flagged)
-  }
-
-  /** Driver-side per-bucket cuckoo update for the reference-order path
-    * (single-URL waves — the collected deltas are one row each; a resume
-    * folds the whole durable seen set once). The filters are never
-    * checkpointed: the seen changelog is the durable record. */
-  private def updateFilters(
-      novel: DataFrame, // needs host_bucket + url_hash columns
-      filters: Map[Int, CuckooFilter]): Map[Int, CuckooFilter] = {
-    val filtersB = sc.broadcast(filters)
-    val capacity = cfg.filterCapacityPerBucket
-    val updated = novel
-      .select($"host_bucket", $"url_hash")
-      .as[(Int, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (bucket, it) =>
-        val f = filtersB.value.get(bucket) match {
-          case Some(existing) => CuckooFilter.deserialize(existing.serialized) // copy
-          case None => new CuckooFilter(capacity)
-        }
-        it.map(_._2).toArray.sorted.foreach(f.insert)
-        (bucket, f.serialized)
-      }
-      .collect()
-      .map { case (b, bytes) => b -> CuckooFilter.deserialize(bytes) }
-      .toMap
-    filters ++ updated
-  }
-
-  /** Reference mode batch pick: exactly one row — Scrapy's next pop: any
-    * non-seed by (priority desc, seq desc) [LIFO], else the lowest-seq
-    * seed (start requests are consumed lazily, in listed order); a seed
-    * whose fingerprint was already enqueued via a follow-up is
-    * dupefiltered (dropped). */
-  private def selectReferenceBatch(
-      pending: Dataset[UrlRecord],
-      seen: DataFrame): (Dataset[UrlRecord], Dataset[UrlRecord]) = {
-    // dupefilter unconsumed seeds that were meanwhile discovered as links
-    // (exact key: hash + canonical, same as the main dedup)
-    val live = pending.toDF.join(
-      seen.select($"url_hash".as("seen_hash"), $"canonical".as("seen_canonical")),
-      $"url_hash" === $"seen_hash" && $"canonical" === $"seen_canonical" && $"is_seed",
-      "left_anti").as[UrlRecord]
-    if (live.isEmpty) { // only dupefiltered seeds remained
-      val empty = live.filter(lit(false)).as[UrlRecord]
-      (empty, empty)
-    } else {
-      val nonSeed = live.filter(!_.is_seed)
-      val pick =
-        if (nonSeed.isEmpty) live.orderBy($"seq".asc).limit(1)
-        else nonSeed.orderBy($"priority".desc, $"seq".desc).limit(1)
-      val pickedSeq = pick.as[UrlRecord].head().seq
-      (pending.filter($"seq" === pickedSeq).as[UrlRecord],
-        live.filter($"seq" =!= pickedSeq).as[UrlRecord])
-    }
-  }
-
-  private def fetchBatch(
-      batch: Dataset[UrlRecord],
-      fetchWave: Int,
-      waveStartMs: Long,
-      lineageAcc: CollectionAccumulator[(Int, Long, Long, Long)]): Dataset[FetchResult] = {
-    val fetcherL = fetcher
-    val rps = cfg.politenessRps
-    val realtime = cfg.realtime
-    batch
-      .repartition(cfg.fetchPartitions, $"host_bucket")
-      .mapPartitions(it =>
-        WaveCore.fetchIter(it, fetcherL, rps, realtime, fetchWave, waveStartMs, lineageAcc))
-  }
-
+  /** A fresh replay commits the wave-0 checkpoint (the start requests,
+    * no seen marks) and resumes from it: one start path, one reader. */
   private def runReference(seeds: Seq[SeedSpec]): CrawlRunResult = {
     Files.createDirectories(Paths.get(ckpt))
-    // same must-not-inherit invariant as runScalable: the reference path's
-    // flushes are per-wave deltas too, and seenSoFar() unions them
     clearStaleRun()
+    // start requests queue unmarked: Scrapy fingerprints one only when it
+    // is consumed, so a link-discovered copy can pre-empt it
     val seedRows = seedCandidates(seeds).map { c =>
-      UrlRecord(c.urlOrCanonical, c.canonical, c.url_hash,
-        UrlCanon.hostOf(c.canonical), c.host_bucket,
-        c.parse_fn, c.meta, c.priority, is_seed = true, wave = 0, seq = c.parent_seq)
+      UrlRecord(c.urlOrCanonical, c.canonical, c.url_hash, UrlCanon.hostOf(c.canonical),
+        c.host_bucket, c.parse_fn, c.meta, c.priority, is_seed = true, wave = 0, seq = c.parent_seq)
     }
-    val pending = spark.createDataset(seedRows)
-      .repartition(cfg.fetchPartitions).cache()
-    // Reference mode enqueues start requests lazily (Scrapy): a seed is
-    // fingerprinted only when consumed, so a link-discovered copy can
-    // pre-empt it.
-    val seenView = spark.createDataFrame(sc.emptyRDD[Row], seenSchema)
-    pending.write.mode(SaveMode.Overwrite).parquet(s"$ckpt/pending_w0")
-    seenView.write.mode(SaveMode.Overwrite).parquet(s"$ckpt/seen/flush_0")
-    writeState(0, seedRows.length.toLong, 0, 0)
-    loopReference(0, pending, seenView, Map.empty, seedRows.length.toLong, 0L, 0L)
+    spark.createDataset(seedRows).coalesce(1)
+      .write.mode(SaveMode.Overwrite).parquet(s"$ckpt/pending_w0")
+    // seed seqs are listed indexes, so follow-up seqs start past the list
+    writeState(0, seeds.length.toLong, 0L, 0L)
+    resumeReference()
   }
 
   private def resumeReference(): CrawlRunResult = {
-    val wave = latestCheckpointWave.getOrElse(
-      throw new IllegalStateException(s"no checkpoint under $ckpt"))
-    val (nextSeq, fetched, deduped) = readState(wave)
-    val pending = spark.read.schema(urlRecordSchema)
-      .parquet(s"$ckpt/pending_w$wave").as[UrlRecord].cache()
-    // the filters are derived state: rebuilt from the durable seen set
-    val seen = seenSoFar(wave).cache()
-    loopReference(wave, pending, seen, updateFilters(seen, Map.empty), nextSeq, fetched,
-      deduped)
+    val (wave, nextSeq, fetched, deduped, out0, pending) = readCheckpoint(new HashPartitioner(1))
+    val st0 = out0.zipPartitions(pending) { (bs, rows) =>
+      Iterator.single(RefState(bs.map(_._2.state).toArray.sortBy(_.bucket),
+        rows.map(_._2).toArray, nextSeq))
+    }
+    loopReference(wave, st0, fetched, deduped)
   }
 
-  private def loopReference(
-      startWave: Int,
-      pending0: Dataset[UrlRecord],
-      seenView0: DataFrame,
-      filters0: Map[Int, CuckooFilter],
-      nextSeq0: Long,
-      fetched0: Long,
+  /**
+   * The reference-order loop: one Spark task per checkpoint interval, each
+   * running [[WaveCore.referenceInterval]] over the previous interval's
+   * one-partition output, pinned with localCheckpoint like the scalable
+   * loop's `out`. Per interval: the interval job, which also returns the
+   * task's lineage rows (one per pop, exactly once); one
+   * `fetched/wave_<first pop>` dir; the checkpoint; the lineage write. The
+   * job count per interval does not depend on the pages it fetches.
+   */
+  private def loopReference(startWave: Int, st0: RDD[RefState], fetched0: Long,
       deduped0: Long): CrawlRunResult = {
     val t0 = System.currentTimeMillis()
+    // locals for task closures (never capture `this`)
+    val parsersB = sc.broadcast(parsers)
+    val (fetcherL, robotsEnabled, robots) = (fetcher, cfg.robotsEnabled, cfg.robotsDisallow)
+    val (rps, realtime, keepFetched) = (cfg.politenessRps, cfg.realtime, cfg.keepFetched)
     var wave = startWave
-    var pending = pending0
-    var seenView = seenView0 // in-memory view: last flush + unflushed deltas
-    var unflushed = List.empty[DataFrame] // cached per-wave deltas since last flush
-    var filters = filters0
-    var nextSeq = nextSeq0
     var totalFetched = fetched0
     var totalDeduped = deduped0
-    val lineageBuf = scala.collection.mutable.ArrayBuffer[(Int, Int, Long, Long, Long, Long, Long)]()
-
-    def flushCheckpoint(): Unit = {
-      pending.write.mode(SaveMode.Overwrite).parquet(s"$ckpt/pending_w$wave")
-      // re-read: truncates the pending plan lineage (it otherwise grows
-      // across waves through the deferred branch and OOMs the planner)
-      pending.unpersist()
-      pending = spark.read.schema(urlRecordSchema)
-        .parquet(s"$ckpt/pending_w$wave").as[UrlRecord].cache()
-      if (unflushed.nonEmpty) {
-        unflushed.reduce(_.unionByName(_)).write.mode(SaveMode.Overwrite)
-          .parquet(s"$ckpt/seen/flush_$wave")
-        unflushed.foreach(_.unpersist())
-        unflushed = Nil
-      }
-      flushLineage(wave, lineageBuf)
-      writeState(wave, nextSeq, totalFetched, totalDeduped)
-      // same bounded-artifact discipline as the scalable path: resume
-      // reads only the committed wave's pending
-      Option(new java.io.File(ckpt).listFiles()).getOrElse(Array.empty)
-        .filter { f =>
-          val nm = f.getName
-          nm.startsWith("pending_w") && nm.stripPrefix("pending_w").toIntOption.exists(_ < wave)
-        }
-        .foreach(graft.util.Fs.deleteRecursively)
-      compactSeen(wave) // single-URL waves accumulate one flush per checkpoint
-      // truncate the in-memory seen view's plan to the durable data
-      val flushedSeen = seenSoFar(wave).cache()
-      seenView.unpersist()
-      seenView = flushedSeen
-    }
-
-    var done = pending.isEmpty
+    var st = st0
+    var done = false
     while (!done && wave < cfg.maxWaves && totalFetched < cfg.maxUrls) {
-      val waveStartMs =
-        if (cfg.realtime) System.currentTimeMillis() else t0 + wave.toLong * 1000L
-      val (batch, deferred) = selectReferenceBatch(pending, seenView)
-
-      // fingerprint the consumed request at schedule time (Scrapy
-      // semantics); keep the cuckoo filters in sync with the seen set
-      val seedmark = batch.select($"url_hash", $"canonical", $"host_bucket")
-        .withColumn("wave", lit(wave)).cache()
-      seedmark.count()
-      unflushed = unflushed :+ seedmark
-      seenView = seenView.unionByName(seedmark)
-      filters = updateFilters(batch.toDF, filters)
-
-      val lineageAcc = new CollectionAccumulator[(Int, Long, Long, Long)]()
-      sc.register(lineageAcc, s"lineage_w$wave")
-      val fetched = fetchBatch(batch, wave, waveStartMs, lineageAcc).cache()
-      if (cfg.keepFetched) {
-        fetched.write.mode(SaveMode.Overwrite).parquet(s"$ckpt/fetched/wave_$wave")
-        cfg.mediaStoreDir.foreach(dir =>
-          graft.sinks.MediaStore.ingestWave(spark, fetched.toDF(), dir))
+      val start = wave
+      val end = math.min(cfg.maxWaves.toLong,
+        (start / cfg.checkpointEvery + 1).toLong * cfg.checkpointEvery).toInt
+      val maxPops = cfg.maxUrls - totalFetched
+      val next = st.map(WaveCore.referenceInterval(_, fetcherL, parsersB.value, robotsEnabled,
+        robots, rps, realtime, t0, start, end, maxPops, keepFetched))
+      next.persist(StorageLevel.MEMORY_AND_DISK)
+      next.localCheckpoint()
+      val (lineage, pendingRows, nextSeq) = next
+        .map(s => (s.lineage, s.queued.length.toLong, s.nextSeq)).collect()(0) // materializes
+      st.unpersist(blocking = false)
+      st = next
+      val pops = lineage.length
+      // no pop: only seen start requests were left, nothing to commit
+      if (pops > 0) {
+        wave += pops
+        totalFetched += pops
+        totalDeduped += lineage.map(_._6).sum
+        if (keepFetched) {
+          val f = spark.createDataset(next.flatMap(_.fetched.iterator))
+          f.write.mode(SaveMode.Overwrite).parquet(s"$ckpt/fetched/wave_$start")
+          cfg.mediaStoreDir.foreach(dir => graft.sinks.MediaStore.ingestWave(spark, f.toDF(), dir))
+        }
+        // the scalable path's writer, read back by the same readCheckpoint;
+        // every pop marks at most itself and its novel follow-ups
+        writeScalableCheckpoint(wave, next.flatMap(_.seen.iterator.map(b => (b.bucket, b))),
+          next.flatMap(_.queued.iterator.map(r => (r.host_bucket, r))), pendingRows,
+          pops + lineage.map(_._7).sum, nextSeq, totalFetched, totalDeduped, sinceWave = start)
+        flushLineage(wave, scala.collection.mutable.ArrayBuffer.from(lineage))
       }
-
-      val candidates = toCandidates(fetched)
-      val filtersB = sc.broadcast(filters)
-      val (novel, flagged) = dedupe(candidates, seenView, filtersB)
-
-      // the global LIFO total order needs a global rank (batches are 1 row)
-      val base = nextSeq
-      val w1 = wave + 1
-      val ordered = novel
-        .withColumn("seq", lit(base) + row_number().over(
-          Window.orderBy($"parent_seq", $"emission_idx")).cast("long") - 1L)
-        .withColumn("is_seed", lit(false))
-        .withColumn("wave", lit(w1))
-        // Candidate ships neither a host nor a redundant url (shuffle-byte
-        // discipline); re-derive both from the canonical (native expr)
-        .select(coalesce($"url", $"canonical").as("url"), $"canonical", $"url_hash",
-          graft.functions.UrlFns.urlHost($"canonical").as("host"), $"host_bucket",
-          $"parse_fn", $"meta", $"priority", $"is_seed", $"wave", $"seq")
-        .as[UrlRecord]
-        .localCheckpoint()
-      flagged.unpersist()
-      val novelCount = ordered.count()
-      nextSeq += novelCount
-      val batchCount = batch.count() // exact (tiny batches on this path)
-      totalFetched += batchCount
-      val emitted = candidates.count() // candidates re-read the cached fetch
-      val dedupedCount = math.max(0L, emitted - novelCount)
-      totalDeduped += dedupedCount
-      lineageAcc.value.asScala.foreach { case (pid, in, ok, err) =>
-        lineageBuf += ((wave, pid, in, ok, err, dedupedCount, novelCount))
-      }
-
-      // mark novel as seen at enqueue time (Scrapy dupefilter semantics)
-      val seenDelta = ordered.select($"url_hash", $"canonical", $"host_bucket")
-        .withColumn("wave", lit(w1)).cache()
-      unflushed = unflushed :+ seenDelta
-      seenView = seenView.unionByName(seenDelta)
-      filters = updateFilters(ordered.toDF, filters)
-      filtersB.destroy()
-
-      val newPending = deferred.unionByName(ordered).cache()
-      // fully materialize BEFORE unpersisting parents — isEmpty would
-      // only populate one partition and later evaluations would
-      // recompute the whole wave chain recursively
-      done = newPending.count() == 0
-      pending.unpersist()
-      fetched.unpersist()
-      ordered.unpersist()
-      pending = newPending
-      wave += 1
-
-      if (wave % cfg.checkpointEvery == 0 || done) flushCheckpoint()
+      done = pendingRows == 0
     }
-    if (latestCheckpointWave.forall(_ < wave)) flushCheckpoint()
-    val totalSeen = seenView.select($"url_hash", $"canonical").distinct().count()
-    val elapsed = System.currentTimeMillis() - t0
-    CrawlRunResult(wave - startWave, totalFetched, totalDeduped, totalSeen, elapsed)
+    CrawlRunResult(wave - startWave, totalFetched, totalDeduped,
+      st.map(_.seen.iterator.map(_.count).sum).collect()(0), System.currentTimeMillis() - t0)
   }
 }

@@ -2,20 +2,14 @@ package graft.seen
 
 /**
  * A from-scratch cuckoo filter (Fan et al., "Cuckoo Filter: Practically
- * Better Than Bloom", CoNEXT 2014 — public paper) used as the URL-seen
- * pre-filter of the reference-order path only (the scalable path probes
- * its exact per-bucket SeenSet128 directly). One filter per host bucket;
- * keys are xxhash64 values of canonical URLs (the same hash the
- * DataFrame plane computes with Spark's `xxhash64`).
+ * Better Than Bloom", CoNEXT 2014 — public paper) over xxhash64 keys of
+ * canonical URLs.
  *
- * Semantics in the engine (SURVEY.md §4 "Request dedup"):
- *  - `contains == false` → URL is DEFINITELY new (no false negatives),
- *    skips the exact anti-join entirely — the common case for novel URLs.
- *  - `contains == true` → maybe seen; verified against the exact seen
- *    table. So the oracle-visible dedup is exact; the filter only prunes.
- *
- * The filters are never checkpointed: a resume rebuilds them from the
- * durable seen changelog.
+ * No crawl path uses it: both engine modes probe their exact per-bucket
+ * SeenSet128 directly, which is resident in memory — a pre-filter pays
+ * off only in front of an authoritative set that is expensive to reach.
+ * It stays for the benchmark's `seen.filter_*` metrics, which compile
+ * against this API.
  *
  * Deterministic: kick eviction uses an LCG seeded from the key, no
  * global randomness — same inserts in the same order produce identical

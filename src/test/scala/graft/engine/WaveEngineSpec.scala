@@ -47,6 +47,40 @@ class WaveEngineSpec extends AnyFunSuite {
       .select($"canonical").as[String].collect().toSeq
   }
 
+  def perHostOrder(engine: WaveEngine): Map[String, Seq[String]] = {
+    import spark.implicits._
+    engine.fetchedTable().orderBy($"wave", $"slot")
+      .select($"host", $"canonical").as[(String, String)].collect().toSeq
+      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+  }
+
+  def fetchedSet(engine: WaveEngine): Set[(String, Int)] = {
+    import spark.implicits._
+    engine.fetchedTable().select($"canonical", $"status").as[(String, Int)].collect().toSet
+  }
+
+  /** Spark jobs that `body` runs on this thread. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val out = body
+      org.apache.spark.ListenerDrain(sc)
+      (out, jobs.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("reference-order mode replays the Scrapy LIFO order exactly") {
     val (oracleOrder, oracleSeen) = ReferenceScheduler.crawl(seeds, site, parsers)
     assert(oracleOrder.size == site.totalPages) // every page reachable once
@@ -62,23 +96,115 @@ class WaveEngineSpec extends AnyFunSuite {
     assert(res.fetched == oracleOrder.size)
 
     assert(seenCanonSet(ckpt) == oracleSeen)
+
+    // lineage comes from the interval tasks' output: one row per pop,
+    // exactly once
+    import spark.implicits._
+    val lineage = engine.lineageTable().select($"wave", $"in_count", $"fetched")
+      .as[(Int, Long, Long)].collect()
+    assert(lineage.map(_._1).sorted.toSeq == (0 until res.fetched.toInt))
+    assert(lineage.forall(_._2 == 1L))
+    assert(lineage.map(_._3).sum == res.fetched)
+
+    // one checkpoint interval runs a fixed number of jobs, whatever the
+    // number of pages it fetches (the 4 x 20 site has 140 pages)
+    val big = SyntheticSite(nHosts = 4, basePagesPerHost = 20, branching = 2, hotFactor = 4)
+    def oneInterval(s: SyntheticSite): (CrawlRunResult, Int, Boolean) = {
+      val sd = (0 until s.nHosts).map(k => SeedSpec(s.pageUrl(k, 0)))
+      val e = new WaveEngine(spark, s, parsers, CrawlConfig(
+        checkpointDir = SparkTestSession.tmpDir("refjobs"), referenceOrder = true,
+        hostBuckets = 8, fetchPartitions = 2, checkpointEvery = 1000000))
+      val (r, jobs) = jobsOf(e.run(sd))
+      (r, jobs, fetchOrder(e) == ReferenceScheduler.crawl(sd, s, parsers)._1)
+    }
+    val (resSmall, jobsSmall, orderSmall) = oneInterval(site)
+    val (resBig, jobsBig, orderBig) = oneInterval(big)
+    assert(resSmall.fetched == site.totalPages && resBig.fetched == big.totalPages)
+    assert(big.totalPages == 140L)
+    assert(orderSmall && orderBig)
+    assert(jobsSmall == jobsBig, s"jobs: $jobsSmall for ${site.totalPages} pages, " +
+      s"$jobsBig for ${big.totalPages}")
   }
 
   test("reference-order kill/resume replays the Scrapy LIFO order exactly; no filter blobs") {
-    // the reference path's cuckoo filters are not checkpointed: resume
-    // rebuilds them from the durable seen changelog
+    // resume rebuilds the exact seen sets from the durable seen changelog,
+    // also when it runs at another fetchPartitions than the killed run
     val (oracleOrder, oracleSeen) = ReferenceScheduler.crawl(seeds, site, parsers)
-    val ckpt = SparkTestSession.tmpDir("refresume")
-    def cfgOf(maxW: Int) = CrawlConfig(checkpointDir = ckpt, referenceOrder = true,
-      hostBuckets = 8, fetchPartitions = 2, maxWaves = maxW)
-    val partial = new WaveEngine(spark, site, parsers, cfgOf(5)).run(seeds)
-    assert(partial.fetched == 5L && partial.fetched < oracleOrder.size)
-    val resumed = new WaveEngine(spark, site, parsers, cfgOf(10000))
-    resumed.resume()
+    for (resumeParts <- Seq(2, 8)) {
+      val ckpt = SparkTestSession.tmpDir(s"refresume$resumeParts")
+      def cfgOf(maxW: Int, parts: Int) = CrawlConfig(checkpointDir = ckpt, referenceOrder = true,
+        hostBuckets = 8, fetchPartitions = parts, maxWaves = maxW)
+      val partial = new WaveEngine(spark, site, parsers, cfgOf(5, 2)).run(seeds)
+      assert(partial.fetched == 5L && partial.fetched < oracleOrder.size)
+      val resumed = new WaveEngine(spark, site, parsers, cfgOf(10000, resumeParts))
+      resumed.resume()
 
-    assert(fetchOrder(resumed) == oracleOrder)
-    assert(seenCanonSet(ckpt) == oracleSeen)
-    assert(new java.io.File(ckpt).listFiles().forall(!_.getName.startsWith("filters_w")))
+      assert(fetchOrder(resumed) == oracleOrder)
+      assert(seenCanonSet(ckpt) == oracleSeen)
+      assert(new java.io.File(ckpt).listFiles().forall(!_.getName.startsWith("filters_w")))
+    }
+  }
+
+  test("reference-order realtime mode keeps one global DOWNLOAD_DELAY between fetches") {
+    // four pops per checkpoint interval: most gaps fall inside one task,
+    // where only the engine's own sleep spaces the fetches; the others
+    // cross a task boundary, where the carried pace does
+    val ckpt = SparkTestSession.tmpDir("refrt")
+    val cfg = CrawlConfig(checkpointDir = ckpt, referenceOrder = true, hostBuckets = 8,
+      fetchPartitions = 2, realtime = true, politenessRps = 20.0, checkpointEvery = 4)
+    val engine = new WaveEngine(spark, site, parsers, cfg)
+    val res = engine.run(seeds)
+    import spark.implicits._
+    val ts = engine.fetchedTable().orderBy($"wave").select($"fetched_at_ms").as[Long].collect()
+    assert(res.fetched == site.totalPages && ts.length == site.totalPages)
+    ts.zip(ts.tail).foreach { case (a, b) =>
+      assert(b - a >= 50L, s"consecutive fetches ${b - a}ms apart (< 1/rps)")
+    }
+  }
+
+  test("resume() in the other mode (scalable vs referenceOrder) fails fast, naming both") {
+    for (ref <- Seq(false, true)) {
+      val ckpt = SparkTestSession.tmpDir(s"mode$ref")
+      def cfgOf(r: Boolean) = CrawlConfig(checkpointDir = ckpt, referenceOrder = r,
+        hostBuckets = 8, fetchPartitions = 2, maxWaves = 2)
+      new WaveEngine(spark, site, parsers, cfgOf(ref)).run(seeds)
+      val e = intercept[IllegalArgumentException] {
+        new WaveEngine(spark, site, parsers, cfgOf(!ref)).resume()
+      }
+      assert(e.getMessage.contains("referenceOrder") && e.getMessage.contains("scalable"),
+        e.getMessage)
+    }
+  }
+
+  test("resume deletes an orphan seen flush from a crash before LATEST (scalable and reference-order)") {
+    // a crash after a seen flush but before its state file leaves
+    // seen/flush_<LATEST+1> behind. A replay that checkpoints at other
+    // waves never overwrites it, so a later resume would union its marks
+    // unless the first resume deleted it.
+    for (ref <- Seq(false, true)) {
+      def cfgOf(ckpt: String, maxW: Int = 10000, every: Int = 1) = CrawlConfig(
+        checkpointDir = ckpt, referenceOrder = ref, hostBuckets = 8, fetchPartitions = 2,
+        maxPerHostPerWave = 1, maxWaves = maxW, checkpointEvery = every)
+      val fullCkpt = SparkTestSession.tmpDir(s"orphanfull$ref")
+      val full = new WaveEngine(spark, site, parsers, cfgOf(fullCkpt))
+      full.run(seeds)
+
+      val ckpt = SparkTestSession.tmpDir(s"orphan$ref")
+      new WaveEngine(spark, site, parsers, cfgOf(ckpt, maxW = 2)).run(seeds)
+      assert(new WaveEngine(spark, site, parsers, cfgOf(ckpt)).latestCheckpointWave.contains(2))
+      val orphan = new java.io.File(s"$ckpt/seen/flush_3")
+      spark.read.schema("url_hash BIGINT, canonical STRING, host_bucket INT, wave INT")
+        .option("recursiveFileLookup", "true")
+        .parquet(s"$fullCkpt/seen").write.parquet(orphan.getPath)
+
+      new WaveEngine(spark, site, parsers, cfgOf(ckpt, maxW = 4, every = 2)).resume()
+      assert(!orphan.exists())
+      val resumed = new WaveEngine(spark, site, parsers, cfgOf(ckpt))
+      resumed.resume()
+      assert(fetchedSet(resumed) == fetchedSet(full))
+      assert(seenHashSet(ckpt) == seenHashSet(fullCkpt))
+      if (ref) assert(fetchOrder(resumed) == fetchOrder(full))
+    }
   }
 
   test("scalable mode fetches the same URL set; per-host order is deterministic across parallelism") {
@@ -386,23 +512,24 @@ class WaveEngineSpec extends AnyFunSuite {
     val resFull = full.run(seeds)
     assertOneFilePerCheckpointDir(ckptFull) // the exit pending_w* is empty
 
-    val ckptPart = SparkTestSession.tmpDir("partial")
-    val partial = new WaveEngine(spark, site, parsers,
-      CrawlConfig(checkpointDir = ckptPart, hostBuckets = 8, fetchPartitions = 4, maxWaves = 2))
-    partial.run(seeds)
-    assertOneFilePerCheckpointDir(ckptPart) // a non-empty mid-run pending_w*
-    val resumed = new WaveEngine(spark, site, parsers,
-      CrawlConfig(checkpointDir = ckptPart, hostBuckets = 8, fetchPartitions = 4))
-    val resResumed = resumed.resume()
-    assertOneFilePerCheckpointDir(ckptPart)
+    // resuming at another fetchPartitions re-buckets the same durable state
+    for (resumeParts <- Seq(4, 8)) {
+      val ckptPart = SparkTestSession.tmpDir(s"partial$resumeParts")
+      val partial = new WaveEngine(spark, site, parsers,
+        CrawlConfig(checkpointDir = ckptPart, hostBuckets = 8, fetchPartitions = 4, maxWaves = 2))
+      partial.run(seeds)
+      assertOneFilePerCheckpointDir(ckptPart) // a non-empty mid-run pending_w*
+      val resumed = new WaveEngine(spark, site, parsers,
+        CrawlConfig(checkpointDir = ckptPart, hostBuckets = 8, fetchPartitions = resumeParts))
+      val resResumed = resumed.resume()
+      assertOneFilePerCheckpointDir(ckptPart)
 
-    import spark.implicits._
-    def fetchedSet(e: WaveEngine): Set[(String, Int)] =
-      e.fetchedTable().select($"canonical", $"status").as[(String, Int)].collect().toSet
-    assert(fetchedSet(full) == fetchedSet(resumed))
-    assert(resResumed.seen == resFull.seen) // resume reports the cumulative seen count
-    // strict: final seen sets equal
-    assert(seenHashSet(ckptFull) == seenHashSet(ckptPart))
+      assert(fetchedSet(full) == fetchedSet(resumed))
+      assert(perHostOrder(resumed) == perHostOrder(full))
+      assert(resResumed.seen == resFull.seen) // resume reports the cumulative seen count
+      // strict: final seen sets equal
+      assert(seenHashSet(ckptFull) == seenHashSet(ckptPart))
+    }
   }
 
   test("seen flushes are a changelog: each flush holds only its delta, union = seen set") {
