@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.CollectionAccumulator
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** A seed request (reference: spider `start_urls` / seed builders,
@@ -207,22 +207,16 @@ final case class CrawlConfig(
     // below its configured pace. None = static maps only (the seed-host
     // workflow); ignored when robotsEnabled = false.
     robotsResolve: Option[Seq[String] => Map[String, graft.fetch.RobotsPolicy]] = None,
-    // per-host politeness override (host → requests/sec), e.g. built from
-    // seed-host robots Crawl-delay as 1/delay; hosts absent here pace at
-    // `politenessRps`. Empty = the scalar fast path (bench unchanged).
-    // DRIVER-RESIDENT — right for ≤10^4 hosts; at frontier host
-    // cardinality (10^6-10^7) use `hostRpsTable` instead.
-    hostRps: Map[String, Double] = Map.empty,
-    // TABLE-VALUED per-host pacing — the 10^10-frontier twin of
-    // `hostRps`: a (host: string, rps: double) DataFrame (e.g.
-    // graft.ops.Throttle.rpsTable of an adaptive-delay table). The
-    // engine bucket-partitions it ONCE with the frontier's own
-    // partitioner and stamps each pending row's rate per partition
+    // the per-host politeness override (host → requests/sec): a (host:
+    // string, rps: double) DataFrame, e.g. graft.ops.Throttle.rpsTable of
+    // an adaptive-delay table, or seed-host robots Crawl-delays as
+    // 1/delay. The engine bucket-partitions it ONCE with the frontier's
+    // own partitioner and stamps each pending row's rate per partition
     // (zipPartitions — no shuffle, no driver map, no fat task closure:
-    // each task ever sees only ITS buckets' hosts). Robots Crawl-delays
-    // discovered mid-crawl min-compose on top (robots can only slow a
-    // host, never speed it up). Mutually exclusive with `hostRps`;
-    // None = the existing map/scalar paths, bit-for-bit.
+    // each task ever sees only ITS buckets' hosts). Two rows for one host
+    // resolve to the slower rate. Hosts absent here pace at
+    // `politenessRps`; robots Crawl-delays discovered mid-crawl
+    // min-compose on top (see WaveCore.hostRps). None = no stamping.
     hostRpsTable: Option[DataFrame] = None,
     // upper clamp on a robots Crawl-delay (seconds). Hosts in a partition
     // fetch sequentially, so an unclamped hostile "Crawl-delay: 86400"
@@ -411,6 +405,10 @@ private[engine] object WaveCore {
     if (!fr.ok) Iterator.empty
     else {
       val parser = parserMap.getOrElse(fr.parse_fn, FollowAllLinks)
+      // the engine's own stamps (a row's table rate, its revalidation
+      // validator) describe THIS url: a parser that copies meta onto its
+      // follow-ups must not hand them to other urls or hosts
+      val meta = if (fr.meta.isEmpty) fr.meta else fr.meta - RpsKey - Sources.IfHashKey
       // relative hrefs resolve against the page that actually SERVED the
       // document — after a redirect that is the final response URI, which
       // URL-parsing fetchers record as doc_id (Scrapy's response.url);
@@ -421,7 +419,7 @@ private[engine] object WaveCore {
       // bucket hash of the one repeated host string is the same value
       var lastHost: String = null
       var lastBucket = 0
-      parser.followUps(fr.document, fr.meta).iterator.zipWithIndex.flatMap { case (f, idx) =>
+      parser.followUps(fr.document, meta).iterator.zipWithIndex.flatMap { case (f, idx) =>
         val abs = UrlCanon.resolve(base, f.url)
         val canon = UrlCanon.canonicalize(abs)
         // reference-identical when the host repeats (the common case) —
@@ -491,8 +489,9 @@ private[engine] object WaveCore {
   }
 
   /** Per-partition politeness + fetch: per host, slots in (priority desc,
-    * seq) order, paced at `rps` — or at `hostRps(host)` where a per-host
-    * override exists (robots Crawl-delay). In realtime mode the pace is
+    * seq) order, paced at [[hostRps]] of the host's first row — its
+    * stamped table rate or `rps`, slowed by any robots Crawl-delay in
+    * `robotsRps`. In realtime mode the pace is
     * enforced with actual sleeps against the wall clock and
     * `fetched_at_ms` records the true fetch time; in simulated mode the
     * planned timestamp is recorded (deterministic). `stored_at_ms` is
@@ -506,8 +505,7 @@ private[engine] object WaveCore {
       waveStartMs: Long,
       lineageAcc: CollectionAccumulator[(Int, Long, Long, Long)],
       pace: Map[Long, Long] = Map.empty,
-      hostRps: Map[String, Double] = Map.empty,
-      tablePaced: Boolean = false): Iterator[FetchResult] = {
+      robotsRps: Map[String, Double] = Map.empty): Iterator[FetchResult] = {
     // one comparator sort groups hosts AND orders each host's run by
     // (priority desc, seq) — replaces groupBy + per-host sortBy, which
     // allocated a map, per-host arrays, and a tuple key per row
@@ -527,7 +525,7 @@ private[engine] object WaveCore {
       private var slot = 0
       private var prevHost: String = null
       private var hostStartMs = waveStartMs
-      private var hostMsPerFetch = 1000.0 / rps
+      private var hostMsPerFetch = 0.0
       private var lastFetchMs = Long.MinValue // actual start of this host's previous fetch
       private var nIn = 0L
       private var nOk = 0L
@@ -557,19 +555,7 @@ private[engine] object WaveCore {
           hostStartMs =
             if (pace.isEmpty) waveStartMs
             else math.max(waveStartMs, pace.getOrElse(UrlCanon.urlHash(r.host), 0L))
-          if (tablePaced) {
-            // table mode: base rate rides the row (stamped per partition
-            // from the co-located rate plane); robots deltas min-compose
-            val base = r.meta.get(RpsKey) match {
-              case Some(v) => java.lang.Double.parseDouble(v)
-              case None => rps
-            }
-            val eff =
-              if (hostRps.isEmpty) base
-              else math.min(base, hostRps.getOrElse(r.host, Double.MaxValue))
-            hostMsPerFetch = 1000.0 / eff
-          } else if (!hostRps.isEmpty) // scalar fast path stays allocation-free
-            hostMsPerFetch = 1000.0 / hostRps.getOrElse(r.host, rps)
+          hostMsPerFetch = 1000.0 / hostRps(r.meta, r.host, rps, robotsRps)
         }
         val plannedMs = hostStartMs + math.round(slot * hostMsPerFetch)
         val fetchedAt = if (realtime) {
@@ -661,12 +647,28 @@ private[engine] object WaveCore {
     * next-allowed fetch ms. One per (host, wave) — never enters dedup. */
   val PaceFn = "__pace__"
 
-  /** Meta key carrying a row's table-sourced base rps (hostRpsTable
-    * mode): stamped per partition from the bucket-co-located rate plane,
-    * so the rate rides the ROW through every downstream path (cache
-    * misses, validator re-bucketing, unions) and no task closure ever
-    * holds a host→rate map. */
+  /** Meta key carrying a row's base rps from `CrawlConfig.hostRpsTable`:
+    * stamped per partition from the bucket-co-located rate plane, so the
+    * rate rides the ROW through every downstream path (cache misses,
+    * validator re-bucketing, unions) and no task closure ever holds a
+    * host→rate map. Read only by [[hostRps]]; stripped before a parser
+    * sees the meta. */
   val RpsKey = "__rps__"
+
+  /** The one per-host rate rule: the slower of the host's base rate — the
+    * row's stamped [[RpsKey]] rate, or `rps` (`politenessRps`) when it
+    * carries none — and its robots Crawl-delay rate in `robotsRps`
+    * (+∞ when it has none), so robots can only ever slow a host. Fetch
+    * pacing, the realtime stall budget, the pace marks and the robots
+    * hook all go through it. Allocation-free when `meta` and `robotsRps`
+    * are empty (the bench crawl). */
+  def hostRps(meta: Map[String, String], host: String, rps: Double,
+      robotsRps: Map[String, Double]): Double = {
+    val stamp = if (meta.isEmpty) null else meta.getOrElse(RpsKey, null)
+    val base = if (stamp == null) rps else java.lang.Double.parseDouble(stamp)
+    if (robotsRps.isEmpty) base
+    else math.min(base, robotsRps.getOrElse(host, Double.PositiveInfinity))
+  }
 
   /** parse_fn tag routing a frontier row to [[Fetcher.fetchMedia]] (binary
     * plane). Media rows emit no follow-ups (the engine registers NoFollow
@@ -1024,31 +1026,43 @@ class WaveEngine(
   // checkpointing (north rule: resumable, per-partition lineage + metrics)
   // ------------------------------------------------------------------
 
+  /** Commits the checkpoint at `wave`: the state file, then `LATEST`,
+    * which is written to a temp file and renamed into place, so a crash
+    * leaves the previous commit readable, never an empty `LATEST`. */
   private def writeState(wave: Int, nextSeq: Long, fetched: Long, deduped: Long): Unit = {
     val json = s"""{"wave":$wave,"next_seq":$nextSeq,"fetched":$fetched,"deduped":$deduped,""" +
       s""""reference_order":${cfg.referenceOrder}}"""
     Files.writeString(Paths.get(s"$ckpt/state_w$wave.json"), json)
-    Files.writeString(Paths.get(s"$ckpt/LATEST"), wave.toString,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
+    val tmp = Files.writeString(Paths.get(s"$ckpt/LATEST.tmp"), wave.toString)
+    Files.move(tmp, Paths.get(s"$ckpt/LATEST"), StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** (next seq, fetched, deduped) of the checkpoint at `wave`. Fails fast
     * when the checkpoint was written in the other mode: the two modes
     * assign seqs and order the frontier differently. */
   private def readState(wave: Int): (Long, Long, Long) = {
-    val s = Files.readString(Paths.get(s"$ckpt/state_w$wave.json"))
+    val p = Paths.get(s"$ckpt/state_w$wave.json")
+    if (!Files.exists(p)) throw new IllegalStateException(s"checkpoint state file $p is missing")
+    val s = Files.readString(p)
     def modeName(referenceOrder: Boolean) = if (referenceOrder) "referenceOrder" else "scalable"
     """"reference_order":(true|false)""".r.findFirstMatchIn(s).map(_.group(1).toBoolean)
       .foreach(written => require(written == cfg.referenceOrder,
         s"the checkpoint under $ckpt was written in ${modeName(written)} mode; " +
           s"it cannot resume in ${modeName(cfg.referenceOrder)} mode"))
-    def field(k: String): Long = s""""$k":(-?\\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
+    def field(k: String): Long = s""""$k":(-?\\d+)""".r.findFirstMatchIn(s)
+      .getOrElse(throw new IllegalStateException(s"checkpoint state file $p has no '$k' field"))
+      .group(1).toLong
     (field("next_seq"), field("fetched"), field("deduped"))
   }
 
   def latestCheckpointWave: Option[Int] = {
     val p = Paths.get(s"$ckpt/LATEST")
-    if (Files.exists(p)) Some(Files.readString(p).trim.toInt) else None
+    if (!Files.exists(p)) None
+    else {
+      val s = Files.readString(p).trim
+      Some(s.toIntOption.getOrElse(throw new IllegalStateException(
+        s"checkpoint pointer $p holds '$s', not a wave number")))
+    }
   }
 
   /** Durable seen dirs covering waves ≤ `maxWave`. Two dir kinds under
@@ -1087,9 +1101,7 @@ class WaveEngine(
     graft.util.Fs.deleteRecursively(tmp) // orphan from a crashed attempt
     spark.read.schema(seenSchema).parquet(dirs: _*)
       .write.mode(SaveMode.Overwrite).parquet(tmp.getPath)
-    java.nio.file.Files.move(tmp.toPath,
-      Paths.get(s"$ckpt/seen/compact_$wave"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    Files.move(tmp.toPath, Paths.get(s"$ckpt/seen/compact_$wave"), StandardCopyOption.ATOMIC_MOVE)
     Option(new java.io.File(s"$ckpt/seen").listFiles())
       .getOrElse(Array.empty).filter(_.isDirectory)
       .filter { f =>
@@ -1124,14 +1136,11 @@ class WaveEngine(
     // contract is Scrapy's exact request sequence (live fetches, robots
     // off, one global rps). Refuse them rather than silently ignore them.
     val scalableOnly = Seq("fetchCacheDir" -> cfg.fetchCacheDir.isDefined,
-      "robotsResolve" -> cfg.robotsResolve.isDefined, "hostRps" -> cfg.hostRps.nonEmpty,
-      "hostRpsTable" -> cfg.hostRpsTable.isDefined, "revalidateFrom" -> cfg.revalidateFrom.isDefined,
+      "robotsResolve" -> cfg.robotsResolve.isDefined, "hostRpsTable" -> cfg.hostRpsTable.isDefined,
+      "revalidateFrom" -> cfg.revalidateFrom.isDefined,
       "maxPagesPerHost" -> (cfg.maxPagesPerHost != Long.MaxValue)).collect { case (k, true) => k }
     require(!cfg.referenceOrder || scalableOnly.isEmpty,
       s"${scalableOnly.mkString(", ")} not supported in referenceOrder mode")
-    require(!(cfg.hostRps.nonEmpty && cfg.hostRpsTable.isDefined),
-      "hostRps and hostRpsTable are mutually exclusive (use the table " +
-        "form at frontier host cardinality)")
     if (cfg.referenceOrder) runReference(seeds) else runScalable(seeds)
   }
 
@@ -1442,15 +1451,14 @@ class WaveEngine(
     // boundary (see the hook at the top of the loop); static when no
     // resolver is configured — the common paths never touch them
     var robotsMap = cfg.robotsDisallow
-    // in table mode this map holds ONLY mid-crawl robots deltas (it
-    // starts empty — the requires forbid combining it with the table);
-    // consumers min-compose it with each row's stamped table rate
-    var hostRpsMap = cfg.hostRps
+    // host → 1/Crawl-delay of hosts whose robots set one mid-crawl; it
+    // starts empty, and WaveCore.hostRps min-composes it with each row's
+    // stamped table rate
+    var robotsRps = Map.empty[String, Double]
     // table-valued pacing plane: bucket-keyed with the frontier's OWN
     // partitioner, so each task's zipPartitions sees exactly its
     // buckets' hosts — the rate plane never rides a task closure and
     // never lives on the driver. Computed once, reused every wave.
-    val tablePaced = cfg.hostRpsTable.isDefined
     val hostRpsRdd: Option[RDD[(Int, (String, Double))]] =
       cfg.hostRpsTable.map { df =>
         // validate up front, FAIL-FAST: a null host NPEs inside the
@@ -1568,19 +1576,12 @@ class WaveEngine(
           val policies = cfg.robotsResolve.get(novel.map(_._2).distinct.sorted.toSeq)
           policies.foreach { case (h, p) =>
             // Crawl-delay clamped (a hostile 24h delay must not stall the
-            // wave barrier) and only ever SLOWING the host's current pace
-            // — robots cannot grant more than the operator configured
-            p.crawlDelaySec.foreach { d0 =>
-              val d = math.min(d0, cfg.maxRobotsDelaySec)
-              // table mode: record the delta unconditionally vs the map's
-              // own prior (consumers min-compose with the stamped table
-              // rate, so robots still only ever SLOWS the host); map
-              // mode: unchanged — write only if slower than effective
-              val cur =
-                if (tablePaced) hostRpsMap.getOrElse(h, Double.MaxValue)
-                else hostRpsMap.getOrElse(h, rps)
-              if (d > 0 && 1.0 / d < cur)
-                hostRpsMap += h -> 1.0 / d
+            // wave barrier); the rate rule keeps the slower of 1/delay and
+            // any delay already recorded, and min-composes the result with
+            // the host's base rate at every use — robots cannot grant more
+            // than the operator configured
+            p.crawlDelaySec.map(math.min(_, cfg.maxRobotsDelaySec)).filter(_ > 0).foreach { d =>
+              robotsRps += h -> WaveCore.hostRps(Map.empty, h, 1.0 / d, robotsRps)
             }
           }
           val newRules = policies.collect {
@@ -1611,23 +1612,28 @@ class WaveEngine(
       }
       // per-wave snapshots for the task closures (the vars above advance)
       val robotsW = robotsMap
-      val hostRpsW = hostRpsMap
+      val robotsRpsW = robotsRps
 
       // table-valued pacing: stamp each pending row's base rate from the
       // co-partitioned rate plane — zipPartitions, zero shuffle, and the
       // only per-task state is the PARTITION's own hosts. Idempotent
       // across waves (deferred rows re-stamp the same value); None = the
-      // bench/map paths, untouched.
+      // bench path, untouched.
       val pendingW = hostRpsRdd match {
         case None => pending
         case Some(rates) =>
           pending.zipPartitions(rates, preservesPartitioning = true) { (it, rs) =>
-            val m = new java.util.HashMap[String, String]()
-            rs.foreach { case (_, (h, rr)) => m.put(h, rr.toString) }
+            val m = new java.util.HashMap[String, java.lang.Double]()
+            // two rows for one host: the slower rate wins — the polite
+            // choice, and independent of the rows' shuffle arrival order
+            rs.foreach { case (_, (h, rr)) =>
+              val prev = m.get(h)
+              if (prev == null || rr < prev) m.put(h, rr)
+            }
             it.map { case (b, r) =>
               val v = m.get(r.host)
               if (v == null) (b, r)
-              else (b, r.copy(meta = r.meta + (WaveCore.RpsKey -> v)))
+              else (b, r.copy(meta = r.meta + (WaveCore.RpsKey -> v.toString)))
             }
           }
       }
@@ -1637,34 +1643,25 @@ class WaveEngine(
       // per-host groupBy+sort runs ONCE, persisted tagged — batch (fetch
       // job), its count, and the deferred complement all read the cached
       // selection instead of re-sorting the partition three times.
-      // a host paced SLOWER than the global rps (robots Crawl-delay)
-      // additionally caps at ~maxHostWaveStallSec of sequential sleeping
-      // per wave — delay × budget is what stalls the wave barrier, and
-      // the per-fetch clamp alone can't bound it. Realtime-only: in
-      // simulated mode nothing sleeps, and the scalar no-override path
-      // (the bench job) keeps the budget a plain constant.
+      // a host paced SLOWER than the global rps (table rate or robots
+      // Crawl-delay) additionally caps at ~maxHostWaveStallSec of
+      // sequential sleeping per wave — delay × budget is what stalls the
+      // wave barrier, and the per-fetch clamp alone can't bound it.
+      // Realtime-only: in simulated mode nothing sleeps, and the bench
+      // job's uncapped budget stays a plain constant.
       val stallSec = cfg.maxHostWaveStallSec
-      // budget from a representative ROW (not just the host): in table
-      // mode the base rate rides the row's stamped meta, so the budget
-      // function needs no host→rate map of any size
+      // budget from a representative ROW (not just the host): the base
+      // rate rides the row's stamped meta, so the budget function needs
+      // no host→rate map beyond the robots deltas
       val slowHostBudget: UrlRecord => Int =
-        if (!realtime || (hostRpsW.isEmpty && !tablePaced)) _ => maxPerHost
+        if (!realtime) _ => maxPerHost
         else { r0 =>
-          val hr =
-            if (tablePaced) {
-              val base = r0.meta.get(WaveCore.RpsKey) match {
-                case Some(v) => java.lang.Double.parseDouble(v)
-                case None => rps
-              }
-              if (hostRpsW.isEmpty) base
-              else math.min(base, hostRpsW.getOrElse(r0.host, Double.MaxValue))
-            } else hostRpsW.getOrElse(r0.host, rps)
+          val hr = WaveCore.hostRps(r0.meta, r0.host, rps, robotsRpsW)
           if (hr >= rps) maxPerHost
           else math.min(maxPerHost.toLong,
             math.max(1L, math.floor(stallSec * hr).toLong)).toInt
         }
-      val needBudget = maxPerHost != Int.MaxValue ||
-        (realtime && (hostRpsW.exists(_._2 < rps) || tablePaced))
+      val needBudget = maxPerHost != Int.MaxValue || realtime
       val (batch, deferred, waveBatchCount, selRetained) =
         if (!needBudget) (pendingW.values, None, batchCount, None)
         else {
@@ -1703,11 +1700,11 @@ class WaveEngine(
               }
             }
             WaveCore.fetchIter(it, fetcherL, rps, realtime, fetchWave, waveStartMs,
-              lineageAcc, pace, hostRpsW, tablePaced)
+              lineageAcc, pace, robotsRpsW)
           }
         else rows.mapPartitions(it =>
           WaveCore.fetchIter(it, fetcherL, rps, realtime, fetchWave, waveStartMs,
-            lineageAcc, hostRps = hostRpsW, tablePaced = tablePaced))
+            lineageAcc, robotsRps = robotsRpsW))
 
       // S14: stamp each live-fetch row with its stored validator (left
       // join on the O(urls) validator plane; rows the prior run never saw
@@ -1786,28 +1783,19 @@ class WaveEngine(
       // rows, nothing on the simulated/bench path.
       val candsRaw: RDD[(Int, Candidate)] =
         if (realtime) fetched.mapPartitions { it =>
-          // third element: the row-stamped table rate (null = none) so the
-          // pace mark can min-compose without any host→rate map in scope
-          val lastMs = new java.util.HashMap[String, (Int, Long, String)]()
+          // third element: the row's meta, which carries its stamped
+          // table rate, so the pace mark needs no host→rate map in scope
+          val lastMs = new java.util.HashMap[String, (Int, Long, Map[String, String])]()
           val main = WaveCore.combineCandidates(it.flatMap { fr =>
             val prev = lastMs.get(fr.host)
             if (prev == null || prev._2 < fr.fetched_at_ms)
-              lastMs.put(fr.host, (fr.host_bucket, fr.fetched_at_ms,
-                if (tablePaced) fr.meta.getOrElse(WaveCore.RpsKey, null) else null))
+              lastMs.put(fr.host, (fr.host_bucket, fr.fetched_at_ms, fr.meta))
             WaveCore.candidateIter(fr, parsersB.value, buckets, robotsEnabled, robotsW)
           }).map(c => (c.host_bucket, c))
           // ++ is by-name: the marks build AFTER `main` is exhausted
           main ++ lastMs.entrySet().iterator().asScala.map { e =>
-            val (b, ms, stamp) = e.getValue
-            val eff =
-              if (tablePaced) {
-                val base =
-                  if (stamp == null) rps else java.lang.Double.parseDouble(stamp)
-                if (hostRpsW.isEmpty) base
-                else math.min(base, hostRpsW.getOrElse(e.getKey, Double.MaxValue))
-              } else if (hostRpsW.isEmpty) rps
-              else hostRpsW.getOrElse(e.getKey, rps)
-            val hostMs = math.round(1000.0 / eff)
+            val (b, ms, meta) = e.getValue
+            val hostMs = math.round(1000.0 / WaveCore.hostRps(meta, e.getKey, rps, robotsRpsW))
             (b, WaveCore.paceMark(e.getKey, b, ms + hostMs))
           }
         }

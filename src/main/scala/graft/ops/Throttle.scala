@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
  *
  * This is a FRONTIER-FEEDBACK op like [[Mirror]]/[[Dust]]/[[Recrawl]]:
  * it consumes the fetched table of crawl N and emits the per-host rate
- * overrides crawl N+1 passes as `CrawlConfig.hostRps` (the engine always
- * honors the SLOWER of a config rate and a robots Crawl-delay, so
- * composing with robots is automatic). Latency needs no schema field:
+ * table crawl N+1 passes as `CrawlConfig.hostRpsTable` via [[rpsTable]]
+ * (the engine always honors the SLOWER of a table rate and a robots
+ * Crawl-delay, so composing with robots is automatic). Latency needs no schema field:
  * in realtime mode the engine stamps `fetched_at_ms` after the
  * politeness sleep and `stored_at_ms` after the fetch returns, so
  * `stored_at_ms - fetched_at_ms` IS the per-fetch service time.
@@ -93,21 +93,12 @@ object Throttle {
       col("avg_latency_ms"))
   }
 
-  /** Driver-side glue for the next crawl: (host → rps) from a delay
-    * table. O(hosts) collect — the same cardinality `CrawlConfig.hostRps`
-    * itself is; the engine keeps the slower of this and any robots
-    * Crawl-delay per host. Right for ≤10^4 hosts; at frontier host
-    * cardinality use [[rpsTable]] + `CrawlConfig.hostRpsTable` — no
-    * collect, no driver map, no fat task closure. */
-  def rpsOverrides(delays: DataFrame): Map[String, Double] =
-    delays.select(col("host"), col("delay_ms")).collect()
-      .map(r => r.getString(0) -> 1000.0 / math.max(1L, r.getLong(1))).toMap
-
-  /** The table-valued twin of [[rpsOverrides]]: (host, rps) as a
-    * DataFrame for `CrawlConfig.hostRpsTable`. Nothing is collected —
-    * the engine bucket-partitions this plane with the frontier's own
-    * partitioner and stamps rates per partition, so a 10^7-host delay
-    * table costs each task only ITS buckets' hosts. */
+  /** Glue for the next crawl: (host, rps = 1000 / delay_ms) from a
+    * delay table, as the DataFrame `CrawlConfig.hostRpsTable` takes.
+    * Nothing is collected — the engine bucket-partitions this plane with
+    * the frontier's own partitioner and stamps rates per partition, so a
+    * 10^7-host delay table costs each task only ITS buckets' hosts; the
+    * engine keeps the slower of this and any robots Crawl-delay per host. */
   def rpsTable(delays: DataFrame): DataFrame =
     delays.select(col("host"),
       (lit(1000.0) / greatest(lit(1L), col("delay_ms"))).as("rps"))

@@ -341,33 +341,13 @@ class WaveEngineSpec extends AnyFunSuite {
     }
   }
 
-  test("realtime: a Crawl-delay-slowed host's wave budget is capped by maxHostWaveStallSec") {
-    // host paced at 20 rps under a 100 rps global, stall bound 0.2 s →
-    // floor(0.2 × 20) = 4 rows per wave even though maxPerHostPerWave is
-    // uncapped; the other 8 seeds must defer to later waves instead of
-    // holding this wave's barrier for the whole sleep train
-    val site = SyntheticSite(nHosts = 1, basePagesPerHost = 12, branching = 1, hotFactor = 1)
-    val host = graft.urls.UrlCanon.hostOf(
-      graft.urls.UrlCanon.canonicalize(site.pageUrl(0, 0)))
-    val ckpt = SparkTestSession.tmpDir("stallcap")
-    val cfg = CrawlConfig(checkpointDir = ckpt, hostBuckets = 2, fetchPartitions = 2,
-      politenessRps = 100.0, realtime = true, maxPerHostPerWave = Int.MaxValue,
-      hostRps = Map(host -> 20.0), maxHostWaveStallSec = 0.2)
-    val engine = new WaveEngine(spark, site, parsers, cfg)
-    engine.run((0 until 12).map(i => SeedSpec(site.pageUrl(0, i))))
-    import spark.implicits._
-    val waves = engine.fetchedTable().select($"wave").as[Int].collect()
-    assert(waves.length >= 12) // every seed (and any followed link) fetched
-    val perWave = waves.groupBy(identity).view.mapValues(_.length).toMap
-    assert(perWave.values.forall(_ <= 4), s"wave budget exceeded: $perWave")
-    assert(perWave.size >= 3) // the overflow actually deferred across waves
-  }
-
-  test("hostRpsTable: stall cap, wave budget and pace marks match the map path exactly") {
-    // The SAME crawl as the maxHostWaveStallSec test, but the per-host
-    // rate arrives as a (host, rps) DataFrame instead of a driver map:
-    // row-stamped rates must drive the budget (4/wave), the deferral
-    // across waves, and the per-fetch spacing identically.
+  test("hostRpsTable: a slow table rate caps the wave budget and paces every fetch") {
+    // host paced at 20 rps by the rate table under a 100 rps global, stall
+    // bound 0.2 s → floor(0.2 × 20) = 4 rows per wave even though
+    // maxPerHostPerWave is uncapped; the other 8 seeds must defer to later
+    // waves instead of holding this wave's barrier for the whole sleep
+    // train. The rate rides the rows' stamps into the budget, the
+    // deferral and the per-fetch spacing.
     val site = SyntheticSite(nHosts = 1, basePagesPerHost = 12, branching = 1, hotFactor = 1)
     val host = graft.urls.UrlCanon.hostOf(
       graft.urls.UrlCanon.canonicalize(site.pageUrl(0, 0)))
@@ -381,10 +361,10 @@ class WaveEngineSpec extends AnyFunSuite {
     engine.run((0 until 12).map(i => SeedSpec(site.pageUrl(0, i))))
     val rows = engine.fetchedTable()
       .select($"wave", $"fetched_at_ms").as[(Int, Long)].collect()
-    assert(rows.length >= 12)
+    assert(rows.length >= 12) // every seed (and any followed link) fetched
     val perWave = rows.map(_._1).groupBy(identity).view.mapValues(_.length).toMap
     assert(perWave.values.forall(_ <= 4), s"wave budget exceeded: $perWave")
-    assert(perWave.size >= 3)
+    assert(perWave.size >= 3) // the overflow actually deferred across waves
     // per-fetch spacing at the table rate (50 ms), incl. wave boundaries
     // (pace marks must carry the table rate, not the global 100 rps)
     val ts = rows.map(_._2).sorted
@@ -393,35 +373,107 @@ class WaveEngineSpec extends AnyFunSuite {
     }
   }
 
-  test("hostRpsTable: simulated planned stamps are identical to the hostRps map path") {
-    // Map path and table path must be semantically interchangeable: the
-    // same per-host rates produce byte-identical planned fetch stamps,
-    // metrics, and seen sets in simulated mode.
+  test("hostRpsTable: simulated planned stamps follow the closed form of the table rates") {
+    // simulated fetched_at_ms is the politeness plan: t0 + wave·1000 +
+    // round(slot·1000/rate(host)), t0 being the run's wave-0 start (the
+    // stamp of every seed, all at slot 0). One table rate is faster than
+    // politenessRps and one slower: the table rate is the base either way.
     val site = SyntheticSite(nHosts = 4, basePagesPerHost = 6, branching = 2, hotFactor = 2)
     val hosts = (0 until 4).map(h => graft.urls.UrlCanon.hostOf(
       graft.urls.UrlCanon.canonicalize(site.pageUrl(h, 0))))
     val rates = hosts.zipWithIndex.map { case (h, i) => h -> (0.5 + i * 0.75) }.toMap
     import spark.implicits._
-    def crawl(tag: String, mk: CrawlConfig => CrawlConfig) = {
-      val cfg = mk(CrawlConfig(checkpointDir = SparkTestSession.tmpDir(tag),
-        hostBuckets = 4, fetchPartitions = 2, politenessRps = 2.0))
-      val e = new WaveEngine(spark, site, parsers, cfg)
-      val res = e.run((0 until 4).map(h => SeedSpec(site.pageUrl(h, 0))))
-      val raw = e.fetchedTable()
-        .select($"canonical", $"wave", $"slot", $"fetched_at_ms")
-        .as[(String, Int, Int, Long)].collect().sortBy(_._1).toSeq
-      // planned stamps are offsets from the run's own wave-0 wall-clock
-      // start; normalize so the two runs compare on pacing, not on when
-      // each happened to start
-      val t0 = raw.map(_._4).min
-      (res, raw.map { case (c, w, s, t) => (c, w, s, t - t0) })
+    val cfg = CrawlConfig(checkpointDir = SparkTestSession.tmpDir("closedform"),
+      hostBuckets = 4, fetchPartitions = 2, politenessRps = 2.0,
+      hostRpsTable = Some(rates.toSeq.toDF("host", "rps")))
+    val e = new WaveEngine(spark, site, parsers, cfg)
+    val res = e.run((0 until 4).map(h => SeedSpec(site.pageUrl(h, 0))))
+    val rows = e.fetchedTable().select($"host", $"wave", $"slot", $"fetched_at_ms")
+      .as[(String, Int, Int, Long)].collect()
+    assert(rows.length == res.fetched)
+    assert(rows.map(_._1).toSet == hosts.toSet && rows.exists(_._3 > 0))
+    val t0 = rows.filter(_._2 == 0).map(_._4).min
+    rows.foreach { case (h, w, s, t) =>
+      assert(t - t0 == w * 1000L + math.round(s * 1000.0 / rates(h)),
+        s"$h wave $w slot $s planned at +${t - t0} ms")
     }
-    val (resM, stampsM) = crawl("eqmap", _.copy(hostRps = rates))
-    val (resT, stampsT) = crawl("eqtab",
-      _.copy(hostRpsTable = Some(rates.toSeq.toDF("host", "rps"))))
-    assert(resM.fetched == resT.fetched && resM.deduped == resT.deduped &&
-      resM.seen == resT.seen)
-    assert(stampsM == stampsT) // planned politeness stamps byte-identical
+  }
+
+  test("hostRpsTable: two rows for one host resolve to the slower rate at any fetchPartitions") {
+    // a plane built as a union can hold two rows for one host; whichever
+    // order they arrive in, the slower (0.5 rps) wins: the seeds' gaps are
+    // 2000 ms, never the 4 rps row's 250 ms
+    val site = SyntheticSite(nHosts = 1, basePagesPerHost = 5, branching = 1, hotFactor = 1)
+    val host = graft.urls.UrlCanon.hostOf(
+      graft.urls.UrlCanon.canonicalize(site.pageUrl(0, 0)))
+    import spark.implicits._
+    val (fast, slow) = (Seq((host, 4.0)).toDF("host", "rps"), Seq((host, 0.5)).toDF("host", "rps"))
+    for (fp <- Seq(2, 8); plane <- Seq(fast.union(slow), slow.union(fast))) {
+      val cfg = CrawlConfig(checkpointDir = SparkTestSession.tmpDir("duprate"),
+        hostBuckets = 8, fetchPartitions = fp, maxWaves = 1, hostRpsTable = Some(plane))
+      val e = new WaveEngine(spark, site, parsers, cfg)
+      e.run((0 until 5).map(i => SeedSpec(site.pageUrl(0, i))))
+      val ts = e.fetchedTable().select($"fetched_at_ms").as[Long].collect().sorted
+      assert(ts.length == 5)
+      assert(ts.zip(ts.tail).map { case (a, b) => b - a }.toSeq == Seq.fill(4)(2000L),
+        s"fetchPartitions $fp: ${ts.toSeq}")
+    }
+  }
+
+  test("engine meta stamps never reach follow-ups, even through a meta-copying parser") {
+    // host a is at 100 rps in the rate table and links to three pages on
+    // host c, which is not. A parser that copies its page's meta onto
+    // every follow-up (as ShugiinBills.parseHonbun does) must not carry
+    // a's __rps__ stamp, nor its if_hash validator, onto c's rows: c paces
+    // at politenessRps = 1 (gaps of 1000 ms, not 10 ms), and the parser's
+    // own meta still reaches the follow-ups
+    import graft.model.{Document, Span}
+    def page(url: String, links: String*): (String, Document) =
+      url -> Document(url, links.zipWithIndex.map { case (l, i) => Span("link", "", l, i) })
+    val pages = Map(
+      page("https://a.example.jp/p0",
+        "https://c.example.jp/1", "https://c.example.jp/2", "https://c.example.jp/3"),
+      page("https://c.example.jp/1"), page("https://c.example.jp/2"),
+      page("https://c.example.jp/3"))
+    val copyMeta: PageParser = new PageParser {
+      def followUps(doc: Document, meta: Map[String, String]): Seq[graft.model.FollowUp] =
+        FollowAllLinks.followUps(doc, meta).map(_.copy(parse_fn = "copy_meta", meta = meta))
+    }
+    import spark.implicits._
+    val cfg = CrawlConfig(checkpointDir = SparkTestSession.tmpDir("metaleak"),
+      hostBuckets = 2, fetchPartitions = 2, politenessRps = 1.0,
+      hostRpsTable = Some(Seq(("a.example.jp", 100.0)).toDF("host", "rps")))
+    val e = new WaveEngine(spark, new graft.fetch.MapFetcher(pages), Map("copy_meta" -> copyMeta), cfg)
+    e.run(Seq(SeedSpec("https://a.example.jp/p0", parseFn = "copy_meta",
+      meta = Map("k" -> "v", Sources.IfHashKey -> "1"))))
+    val c = e.fetchedTable().filter($"host" === "c.example.jp")
+      .select($"wave", $"fetched_at_ms", $"meta").as[(Int, Long, Map[String, String])].collect()
+    assert(c.length == 3 && c.forall(_._1 == 1))
+    val ts = c.map(_._2).sorted
+    assert(ts.zip(ts.tail).map { case (a, b) => b - a }.toSeq == Seq(1000L, 1000L))
+    assert(c.forall(_._3 == Map("k" -> "v")), c.map(_._3).toSeq)
+  }
+
+  test("LATEST is renamed into place; a torn LATEST or state file fails resume by name") {
+    val ckpt = SparkTestSession.tmpDir("latest")
+    val cfg = CrawlConfig(checkpointDir = ckpt, hostBuckets = 2, fetchPartitions = 2, maxWaves = 2)
+    new WaveEngine(spark, site, parsers, cfg).run(seeds)
+    val names = new java.io.File(ckpt).list().toSeq
+    assert(!names.exists(n => n.contains("tmp") || n.contains("compacting")), names)
+    val latest = java.nio.file.Paths.get(s"$ckpt/LATEST")
+    val wave = java.nio.file.Files.readString(latest).trim.toInt
+    // a crash between truncating LATEST and rewriting it
+    java.nio.file.Files.writeString(latest, "")
+    val torn = intercept[IllegalStateException](new WaveEngine(spark, site, parsers, cfg).resume())
+    assert(torn.getMessage.contains(latest.toString), torn.getMessage)
+    // a state file without its next_seq field
+    java.nio.file.Files.writeString(latest, wave.toString)
+    val state = java.nio.file.Paths.get(s"$ckpt/state_w$wave.json")
+    java.nio.file.Files.writeString(state,
+      java.nio.file.Files.readString(state).replaceAll("\"next_seq\":-?\\d+,", ""))
+    val noSeq = intercept[IllegalStateException](new WaveEngine(spark, site, parsers, cfg).resume())
+    assert(noSeq.getMessage.contains(state.toString) && noSeq.getMessage.contains("next_seq"),
+      noSeq.getMessage)
   }
 
   test("realtime politeness: same-host spacing >= 1/rps holds ACROSS wave boundaries") {

@@ -107,22 +107,31 @@ class RobotsSpec extends AnyFunSuite {
       os.collect { case o if o == "https://c.example.jp" =>
         "c.example.jp" -> RobotsPolicy(Nil, crawlDelaySec = Some(2.0))
       }.toMap
-    val ckpt = SparkTestSession.tmpDir("robotsdelay")
     val parsers: Map[String, PageParser] = Map("follow_links" -> FollowAllLinks)
-    val engine = new WaveEngine(spark, new MapFetcher(pages), parsers,
-      CrawlConfig(checkpointDir = ckpt, hostBuckets = 2, fetchPartitions = 2,
-        politenessRps = 1.0, robotsEnabled = true, robotsResolve = Some(resolve)))
-    engine.run(Seq(SeedSpec("https://a.example.jp/p0")))
     import spark.implicits._
-    // simulated fetched_at_ms is the deterministic politeness PLAN — the
-    // per-host slot spacing is directly observable without sleeping
-    def gaps(host: String): Seq[Long] = {
-      val ts = engine.fetchedTable().filter($"host" === host && $"wave" === 1)
-        .select($"fetched_at_ms").as[Long].collect().sorted
-      ts.zip(ts.tail).map { case (x, y) => y - x }.toSeq
+    // (host a gaps, host c gaps) of wave 1, c optionally carrying a table
+    // rate: simulated fetched_at_ms is the deterministic politeness PLAN,
+    // so the per-host slot spacing is directly observable without sleeping
+    def gaps(cTableRps: Option[Double]): (Seq[Long], Seq[Long]) = {
+      val engine = new WaveEngine(spark, new MapFetcher(pages), parsers,
+        CrawlConfig(checkpointDir = SparkTestSession.tmpDir("robotsdelay"), hostBuckets = 2,
+          fetchPartitions = 2, politenessRps = 1.0, robotsEnabled = true,
+          robotsResolve = Some(resolve),
+          hostRpsTable = cTableRps.map(r => Seq(("c.example.jp", r)).toDF("host", "rps"))))
+      engine.run(Seq(SeedSpec("https://a.example.jp/p0")))
+      def of(host: String): Seq[Long] = {
+        val ts = engine.fetchedTable().filter($"host" === host && $"wave" === 1)
+          .select($"fetched_at_ms").as[Long].collect().sorted
+        ts.zip(ts.tail).map { case (x, y) => y - x }.toSeq
+      }
+      (of("a.example.jp"), of("c.example.jp"))
     }
-    assert(gaps("c.example.jp") == Seq(2000L, 2000L)) // 1/delay = 0.5 rps
-    assert(gaps("a.example.jp") == Seq(1000L)) // default politenessRps
+    // 1/delay = 0.5 rps for c; a keeps the default politenessRps
+    assert(gaps(None) == ((Seq(1000L), Seq(2000L, 2000L))))
+    // a table rate faster than the delay: the delay still paces c
+    assert(gaps(Some(4.0)) == ((Seq(1000L), Seq(2000L, 2000L))))
+    // a table rate slower than the delay (0.25 rps): the table paces c
+    assert(gaps(Some(0.25)) == ((Seq(1000L), Seq(4000L, 4000L))))
   }
 
   test("fetchRules: authorities collapsing to one gate key UNION their rules") {

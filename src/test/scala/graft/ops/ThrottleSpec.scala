@@ -70,9 +70,10 @@ class ThrottleSpec extends AnyFunSuite {
       .collect().map(r => r.getAs[String]("host") -> r.getAs[Long]("delay_ms")).toMap
     assert(d2("a") == 600L)                // (200+1000)/2 carried through crawl 2
     assert(d2("b") == 250L)                // (200+300)/2
-    val rps = Throttle.rpsOverrides(
+    val rps = Throttle.rpsTable(
       Throttle.adaptiveHostDelays(crawl2, d1, startDelayMs = 200L,
         minDelayMs = 1L, maxDelayMs = 60000L))
+      .collect().map(r => r.getAs[String]("host") -> r.getAs[Double]("rps")).toMap
     assert(math.abs(rps("a") - 1000.0 / 600.0) < 1e-9)
   }
 
@@ -113,44 +114,14 @@ class ThrottleSpec extends AnyFunSuite {
     assert(out("nodelay") == ((1L, 500L, 0.5, 1L, false)))  // default delay
   }
 
-  test("e2e: realtime crawl observes service latency; the next crawl honors the adapted pace") {
+  test("e2e: adapted pace honored through the TABLE path at 10^5-host cardinality") {
     // host serves at ~40 ms/request while the crawl is configured at
     // 50 rps (20 ms spacing): the observed latency must be the SERVICE
     // time (stored - fetched), and the adapted delay (start 20 ms ->
-    // (20+40)/2 = ~30 ms) must slow the second crawl's same-host spacing
-    val site = SyntheticSite(nHosts = 1, basePagesPerHost = 5, branching = 1, hotFactor = 1)
-    val slow = SlowFetcher(site, sleepMs = 40L)
-    val parsers = Map("follow_links" -> (FollowAllLinks: graft.engine.PageParser))
-    val cfg1 = CrawlConfig(checkpointDir = SparkTestSession.tmpDir("thr1"),
-      hostBuckets = 2, fetchPartitions = 2, politenessRps = 50.0, realtime = true)
-    val e1 = new WaveEngine(spark, slow, parsers, cfg1)
-    e1.run((0 until 5).map(i => SeedSpec(site.pageUrl(0, i))))
-    val f1 = e1.fetchedTable()
-    val lat = Throttle.observedLatencies(f1).collect()
-    assert(lat.length == 1)
-    val avg = lat.head.getAs[Double]("avg_latency_ms")
-    assert(avg >= 35.0, s"avg service latency $avg should reflect the 40ms fetcher")
-    val adapted = Throttle.adaptiveHostDelays(f1, delays(), startDelayMs = 20L,
-      targetConcurrency = 1.0, minDelayMs = 1L, maxDelayMs = 60000L)
-    val newDelay = adapted.collect().head.getAs[Long]("delay_ms")
-    assert(newDelay >= 27L, s"delay $newDelay should move toward the 40ms latency")
-
-    val cfg2 = CrawlConfig(checkpointDir = SparkTestSession.tmpDir("thr2"),
-      hostBuckets = 2, fetchPartitions = 2, politenessRps = 1000.0, realtime = true,
-      hostRps = Throttle.rpsOverrides(adapted))
-    val e2 = new WaveEngine(spark, slow, parsers, cfg2)
-    e2.run((0 until 5).map(i => SeedSpec(site.pageUrl(0, i))))
-    val ts = e2.fetchedTable().select($"fetched_at_ms").as[Long].collect().sorted
-    ts.zip(ts.tail).foreach { case (a, b) =>
-      assert(b - a >= newDelay - 1, s"spacing ${b - a}ms under adapted delay ${newDelay}ms")
-    }
-  }
-
-  test("e2e: adapted pace honored through the TABLE path at 10^5-host cardinality") {
-    // Same feedback loop as the map-path e2e, but the delay plane reaches
-    // the engine as a (host, rps) DataFrame (CrawlConfig.hostRpsTable) —
-    // padded with 10^5 synthetic host rows to pin the scale posture:
-    // cfg.hostRps stays EMPTY (no driver map of any size), tasks see only
+    // (20+40)/2 = ~30 ms) must slow the second crawl's same-host spacing.
+    // The delay plane reaches the engine as a (host, rps) DataFrame
+    // (CrawlConfig.hostRpsTable) padded with 10^5 synthetic host rows to
+    // pin the scale posture: no driver map of any size, tasks see only
     // their buckets' hosts via the co-partitioned plane, and the crawl
     // still paces the one real host from its adapted delay.
     val site = SyntheticSite(nHosts = 1, basePagesPerHost = 5, branching = 1, hotFactor = 1)
@@ -160,10 +131,15 @@ class ThrottleSpec extends AnyFunSuite {
       hostBuckets = 2, fetchPartitions = 2, politenessRps = 50.0, realtime = true)
     val e1 = new WaveEngine(spark, slow, parsers, cfg1)
     e1.run((0 until 5).map(i => SeedSpec(site.pageUrl(0, i))))
-    val adapted = Throttle.adaptiveHostDelays(e1.fetchedTable(), delays(),
+    val f1 = e1.fetchedTable()
+    val lat = Throttle.observedLatencies(f1).collect()
+    assert(lat.length == 1)
+    val avg = lat.head.getAs[Double]("avg_latency_ms")
+    assert(avg >= 35.0, s"avg service latency $avg should reflect the 40ms fetcher")
+    val adapted = Throttle.adaptiveHostDelays(f1, delays(),
       startDelayMs = 20L, targetConcurrency = 1.0, minDelayMs = 1L, maxDelayMs = 60000L)
     val newDelay = adapted.collect().head.getAs[Long]("delay_ms")
-    assert(newDelay >= 27L)
+    assert(newDelay >= 27L, s"delay $newDelay should move toward the 40ms latency")
 
     val filler = spark.range(100000).select(
       concat(lit("filler-"), $"id").as("host"), lit(5.0).as("rps"))
@@ -171,7 +147,6 @@ class ThrottleSpec extends AnyFunSuite {
     val cfg2 = CrawlConfig(checkpointDir = SparkTestSession.tmpDir("thrt2"),
       hostBuckets = 2, fetchPartitions = 2, politenessRps = 1000.0, realtime = true,
       hostRpsTable = Some(plane))
-    assert(cfg2.hostRps.isEmpty) // the whole point: no driver-resident map
     val e2 = new WaveEngine(spark, slow, parsers, cfg2)
     e2.run((0 until 5).map(i => SeedSpec(site.pageUrl(0, i))))
     val ts = e2.fetchedTable().select($"fetched_at_ms").as[Long].collect().sorted
