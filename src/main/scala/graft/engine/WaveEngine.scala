@@ -969,9 +969,11 @@ private[engine] object WaveCore {
  *    fixed cost stays small next to its rows, so the loop carries no
  *    per-task set-up it can avoid: the candidate shuffle is written by
  *    the fixed [[CandidateSerializer]] codec (no per-task Kryo instances),
- *    the empty seed/resume state is built in place (no shuffle), and the
- *    pending and seen checkpoint writes coalesce their cached blocks to
- *    one part file per 2^20 rows instead of one per fetch partition;
+ *    the empty seed/resume state is built in place (no shuffle), and a
+ *    checkpoint is ONE job whose tasks write every plane with
+ *    [[PlaneWriter]], coalesced to one part file per 2^20 rows instead of
+ *    one per fetch partition; the loop runs no count job outside its
+ *    waves and checkpoints;
  *  - within-wave dedup, the exact seen check, seq assignment and the
  *    seen-set add are ONE partition-local pass — no per-wave window
  *    shuffle, no re-shuffle of the accumulated seen set, no driver-side
@@ -1012,13 +1014,8 @@ class WaveEngine(
 
   private val sc = spark.sparkContext
   private val ckpt = cfg.checkpointDir
-  private val urlRecordSchema = org.apache.spark.sql.Encoders.product[UrlRecord].schema
   private val fetchResultSchema = org.apache.spark.sql.Encoders.product[FetchResult].schema
-  private val seenSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("url_hash", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("canonical", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("host_bucket", org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("wave", org.apache.spark.sql.types.IntegerType)))
+  import PlaneWriter.{lineageSchema, seenSchema, urlRecordSchema}
 
   private val partitioner = new HashPartitioner(cfg.fetchPartitions)
 
@@ -1152,15 +1149,6 @@ class WaveEngine(
   def fetchedTable(): DataFrame = spark.read.schema(fetchResultSchema)
     .option("recursiveFileLookup", "true").parquet(s"$ckpt/fetched")
 
-  private val lineageSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("wave", org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("partition_id", org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("in_count", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("fetched", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("errors", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("deduped_wave", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("novel_wave", org.apache.spark.sql.types.LongType)))
-
   /** The flushed per-(wave, partition) lineage rows — the north rule's
     * "per-partition lineage + metrics" as a queryable surface instead of
     * files an operator has to know the layout of. Explicit schema: an
@@ -1231,19 +1219,29 @@ class WaveEngine(
       _.flatMap { case (b, bw) => bw.novel.iterator.map(r => (b, r)) },
       preservesPartitioning = true)
 
-  /** CHANGELOG seen flush: writes only the log chunks created after
-    * `sinceWave` (the last flushed wave) — checkpoint write size is
-    * O(novel since last flush), never O(accumulated seen). Resume unions
-    * all flush dirs ≤ LATEST; the committed-LATEST bound keeps a flush
-    * that landed without its state file invisible (and resume deletes such
-    * orphans so a replay at different wave numbers can't double them).
-    *
-    * The pending and seen writes are sized to their rows: `pendingRows`
-    * (exact) and `novelRows` (the novel counts since `sinceWave`) pick
-    * [[checkpointFiles]] part files, so a small wave writes one file in
-    * one task instead of one per fetch partition. Both inputs are already
+  /** ONE Spark job writes the checkpoint at `wave`: `pending_w$wave`,
+    * the `seen/flush_$wave` changelog and, when active, `pace_w$wave` and
+    * `hostn_w$wave`. The job runs over `state` zipped with `pending` (both
+    * keyed by bucket under one partitioner) and coalesced to
+    * [[checkpointFiles]] tasks for the larger of `pendingRows` (exact) and
+    * `novelRows` (the novel counts since `sinceWave`), so a small wave
+    * writes one file per plane in one task. Both inputs are already
     * materialized (the localCheckpointed wave output, the persisted
-    * pending union), so the coalesce only merges cached blocks. */
+    * pending union): the coalesce only merges cached blocks. Each task
+    * writes its part file of every plane with [[PlaneWriter]].
+    *
+    * The seen flush is a CHANGELOG: only the log chunks created after
+    * `sinceWave` (the last flushed wave), so its size is O(novel since last
+    * flush), never O(accumulated seen). Resume unions all flush dirs ≤
+    * LATEST; the committed-LATEST bound keeps a flush that landed without
+    * its state file invisible (and resume deletes such orphans so a replay
+    * at different wave numbers can't double them).
+    *
+    * Commit order: the driver clears the plane dirs, the job writes them
+    * (a retried task replaces its own part files), and only after the job
+    * returns are the state file and `LATEST` written. The per-host planes
+    * carry realtime pacing and the crawl budget across resume; the bench
+    * path (simulated, uncapped) writes neither. */
   private def writeScalableCheckpoint(
       wave: Int,
       state: RDD[(Int, BucketSeen)],
@@ -1254,36 +1252,16 @@ class WaveEngine(
       totalFetched: Long,
       totalDeduped: Long,
       sinceWave: Int): Unit = {
-    spark.createDataset(pending.values.coalesce(checkpointFiles(pendingRows)))
-      .write.mode(SaveMode.Overwrite).parquet(s"$ckpt/pending_w$wave")
-    val seenRows = state.coalesce(checkpointFiles(novelRows)).flatMap { case (b, st) =>
-      st.log.iterator.filter(_.wave > sinceWave).flatMap(ch =>
-        (0 until ch.size).iterator.map(i => (ch.hashes(i), ch.canonical(i), b, ch.wave)))
-    }
-    spark.createDataset(seenRows)
-      .toDF("url_hash", "canonical", "host_bucket", "wave")
-      .write.mode(SaveMode.Overwrite).parquet(s"$ckpt/seen/flush_$wave")
-    // realtime politeness continuity across resume: persist the per-host
-    // pace map (O(hosts) rows — tiny next to the seen flush). Simulated
-    // mode carries no pace, so the bench path skips the extra write job.
-    if (cfg.realtime) {
-      val paceRows = state.flatMap { case (b, st) =>
-        st.pace.iterator.map { case (h, ms) => (b, h, ms) }
-      }
-      spark.createDataset(paceRows)
-        .toDF("host_bucket", "host_hash", "next_allowed_ms")
-        .write.mode(SaveMode.Overwrite).parquet(s"$ckpt/pace_w$wave")
-    }
-    // crawl-budget continuity across resume: persist per-host admission
-    // counts (O(hosts) rows; written only when the budget is active)
-    if (cfg.maxPagesPerHost != Long.MaxValue) {
-      val hostNRows = state.flatMap { case (b, st) =>
-        st.hostN.iterator.map { case (h, n) => (b, h, n) }
-      }
-      spark.createDataset(hostNRows)
-        .toDF("host_bucket", "host_hash", "admitted")
-        .write.mode(SaveMode.Overwrite).parquet(s"$ckpt/hostn_w$wave")
-    }
+    val dirs = PlaneWriter.Dirs(s"$ckpt/pending_w$wave", s"$ckpt/seen/flush_$wave",
+      if (cfg.realtime) Some(s"$ckpt/pace_w$wave") else None,
+      if (cfg.maxPagesPerHost != Long.MaxValue) Some(s"$ckpt/hostn_w$wave") else None)
+    dirs.all.foreach(PlaneWriter.clear)
+    val rows = state.zipPartitions(pending)((st, pd) => st ++ pd: Iterator[(Int, AnyRef)])
+      .coalesce(math.max(checkpointFiles(pendingRows), checkpointFiles(novelRows)))
+    sc.runJob(rows, (ctx: TaskContext, it: Iterator[(Int, AnyRef)]) => {
+      val (bytes, n) = PlaneWriter.checkpointTask(ctx.partitionId(), it, dirs, sinceWave)
+      org.apache.spark.sql.graftbridge.TaskOutputBridge.addOutput(bytes, n)
+    })
     writeState(wave, nextSeq, totalFetched, totalDeduped)
     // AFTER the commit (LATEST now points at `wave`): obsolete per-wave
     // artifacts die here — resume reads only the committed wave's
@@ -1346,13 +1324,14 @@ class WaveEngine(
         seedWave = true, nBuckets = nB, maxPerHost = maxPerHostB)
     }
     out0.localCheckpoint()
-    val nSeeds = out0.map(_._2.novel.length.toLong).reduce(_ + _)
+    val (nSeeds, seen0) = out0.map { case (_, bw) => (bw.novel.length.toLong, bw.state.count) }
+      .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
     val nextSeq = (nSeeds + 1) * nB
     val state0 = out0.mapValues(_.state)
     val pending0 = novelOf(out0)
     writeScalableCheckpoint(0, state0, pending0, nSeeds, nSeeds, nextSeq, 0L, 0L,
       sinceWave = -1)
-    loopScalable(0, out0, pending0, None, nextSeq, 0L, 0L, lastFlushed0 = 0)
+    loopScalable(0, out0, pending0, None, nSeeds, seen0, nextSeq, 0L, 0L, lastFlushed0 = 0)
   }
 
   /** Reads the committed checkpoint (LATEST): (wave, next seq, fetched,
@@ -1409,26 +1388,42 @@ class WaveEngine(
   private def resumeScalable(): CrawlRunResult = {
     val (wave, nextSeq, fetched, deduped, out0, pending) = readCheckpoint(partitioner)
     out0.localCheckpoint()
-    out0.count()
     val pendingKeyed = pending.persist(StorageLevel.MEMORY_AND_DISK)
-    loopScalable(wave, out0, pendingKeyed, Some(pendingKeyed), nextSeq, fetched, deduped,
-      lastFlushed0 = wave)
+    // one job materializes the rebuilt state and the pending rows, and
+    // counts the seen marks and the first batch
+    val (seen0, batch0) = out0.zipPartitions(pendingKeyed) { (o, p) =>
+      Iterator.single((o.map(_._2.state.count).sum, p.size.toLong))
+    }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+    loopScalable(wave, out0, pendingKeyed, Some(pendingKeyed), batch0, seen0, nextSeq, fetched,
+      deduped, lastFlushed0 = wave)
   }
 
   /**
    * The scalable wave loop. Per wave: one candidate shuffle (through the
-   * [[CandidateSerializer]] codec), one materializing action (the
-   * per-bucket novel/candidate counts, which also populates the
+   * [[CandidateSerializer]] codec) and one materializing action (the
+   * per-bucket novel, candidate and seen counts, which also populates the
    * localCheckpoint blocks), plus the optional fetched table write. No
-   * driver-side collect of state, no broadcast. A checkpoint's pending
-   * and seen writes are sized by the counts the driver already holds (the
-   * exact pending count, the novel counts since the last flush).
+   * driver-side collect of state, no broadcast.
+   *
+   * Job accounting: the driver keeps the counts it already has, so the
+   * loop runs no job of its own outside its waves and checkpoints. The
+   * first batch's size (`batchCount0`) and the seen total (`seen0`) come
+   * from the caller (the seed wave's reduce on `run`, resume's one
+   * materializing count), and each wave's reduce returns the next batch's
+   * novel count and the new seen total. A checkpoint is one job
+   * ([[writeScalableCheckpoint]], sized by those counts) and its lineage
+   * is written on the driver. With the per-host budget uncapped, no
+   * robots resolver and no fetched table, a fresh run is `waves + 3`
+   * jobs at `checkpointEvery` ≥ waves (seed wave, wave-0 and exit
+   * checkpoints) and one checkpoint job more per checkpointed wave.
    */
   private def loopScalable(
       startWave: Int,
       out0: RDD[(Int, BucketWave)],
       pending0: RDD[(Int, UrlRecord)],
       pending0Retained: Option[RDD[_]],
+      batchCount0: Long,
+      seen0: Long,
       nextSeq0: Long,
       fetched0: Long,
       deduped0: Long,
@@ -1541,7 +1536,8 @@ class WaveEngine(
         .cache()
     }
 
-    var batchCount = pending.count() // exact: every batch row yields one FetchResult
+    var batchCount = batchCount0 // exact: every batch row yields one FetchResult
+    var totalSeen = seen0
     var done = batchCount == 0
     while (!done && wave < cfg.maxWaves && totalFetched < cfg.maxUrls) {
       val tW0 = System.currentTimeMillis()
@@ -1822,15 +1818,16 @@ class WaveEngine(
       // young-GC copy time — but that object graph no longer exists)
       newOut.persist(StorageLevel.MEMORY_AND_DISK)
       newOut.localCheckpoint()
-      val (novelCount, emitted) = newOut
-        .map { case (_, bw) => (bw.novel.length.toLong, bw.nCandidates) }
-        .reduce((a, b) => (a._1 + b._1, a._2 + b._2)) // the materializing action
+      val (novelCount, emitted, seenCount) = newOut
+        .map { case (_, bw) => (bw.novel.length.toLong, bw.nCandidates, bw.state.count) }
+        .reduce((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3)) // the materializing action
 
       nextSeq += (novelCount + 1) * nB
       totalFetched += waveBatchCount
       val dedupedCount = emitted - novelCount // exact: both from the same pass
       totalDeduped += dedupedCount
       novelSinceFlush += novelCount
+      totalSeen = seenCount
       lineageAcc.value.asScala.foreach { case (pid, in, ok, err) =>
         lineageBuf += ((wave, pid, in, ok, err, dedupedCount, novelCount))
       }
@@ -1880,19 +1877,20 @@ class WaveEngine(
       lastFlushed = wave
       flushLineage(wave, lineageBuf)
     }
-    val totalSeen = state.map(_._2.count).reduce(_ + _)
     hostRpsRdd.foreach(_.unpersist(blocking = false))
     val elapsed = System.currentTimeMillis() - t0
     CrawlRunResult(wave - startWave, totalFetched, totalDeduped, totalSeen, elapsed)
   }
 
+  /** Writes the driver-held lineage rows since the last flush to
+    * `lineage/upto_$wave` with [[PlaneWriter]], on the driver: no Spark
+    * job. Runs after the checkpoint at `wave` commits: a crash in between
+    * loses these rows, because resume does not replay committed waves. */
   private def flushLineage(
       wave: Int,
       buf: scala.collection.mutable.ArrayBuffer[(Int, Int, Long, Long, Long, Long, Long)]): Unit = {
     if (buf.nonEmpty) {
-      spark.createDataset(buf.toSeq)
-        .toDF("wave", "partition_id", "in_count", "fetched", "errors", "deduped_wave", "novel_wave")
-        .write.mode(SaveMode.Overwrite).parquet(s"$ckpt/lineage/upto_$wave")
+      PlaneWriter.writeDir(s"$ckpt/lineage/upto_$wave", lineageSchema, buf.iterator)
       buf.clear()
     }
   }
@@ -1912,8 +1910,7 @@ class WaveEngine(
       UrlRecord(c.urlOrCanonical, c.canonical, c.url_hash, UrlCanon.hostOf(c.canonical),
         c.host_bucket, c.parse_fn, c.meta, c.priority, is_seed = true, wave = 0, seq = c.parent_seq)
     }
-    spark.createDataset(seedRows).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$ckpt/pending_w0")
+    PlaneWriter.writeDir(s"$ckpt/pending_w0", urlRecordSchema, seedRows.iterator)
     // seed seqs are listed indexes, so follow-up seqs start past the list
     writeState(0, seeds.length.toLong, 0L, 0L)
     resumeReference()
@@ -1932,10 +1929,16 @@ class WaveEngine(
    * The reference-order loop: one Spark task per checkpoint interval, each
    * running [[WaveCore.referenceInterval]] over the previous interval's
    * one-partition output, pinned with localCheckpoint like the scalable
-   * loop's `out`. Per interval: the interval job, which also returns the
-   * task's lineage rows (one per pop, exactly once); one
-   * `fetched/wave_<first pop>` dir; the checkpoint; the lineage write. The
-   * job count per interval does not depend on the pages it fetches.
+   * loop's `out`. Per interval: the interval job, whose collect also
+   * returns the task's lineage rows (one per pop, exactly once), the
+   * queue size, the next seq and the seen total; one
+   * `fetched/wave_<first pop>` write when `keepFetched`; the checkpoint,
+   * one job through the scalable path's [[writeScalableCheckpoint]]; and
+   * the lineage, written on the driver. That is 3 jobs per interval with
+   * the fetched table and 2 without (plus a seen compaction every
+   * `compactSeenAfter` checkpoints), whatever the pages it fetches. The
+   * run's seen total is the last interval's; a run always runs at least
+   * one interval, so it has one.
    */
   private def loopReference(startWave: Int, st0: RDD[RefState], fetched0: Long,
       deduped0: Long): CrawlRunResult = {
@@ -1948,8 +1951,11 @@ class WaveEngine(
     var totalFetched = fetched0
     var totalDeduped = deduped0
     var st = st0
+    var seen = 0L
     var done = false
-    while (!done && wave < cfg.maxWaves && totalFetched < cfg.maxUrls) {
+    // at least one interval: one with no pop left to it (a resume at
+    // maxWaves or maxUrls) only counts its input's seen marks
+    do {
       val start = wave
       val end = math.min(cfg.maxWaves.toLong,
         (start / cfg.checkpointEvery + 1).toLong * cfg.checkpointEvery).toInt
@@ -1958,10 +1964,12 @@ class WaveEngine(
         robots, rps, realtime, t0, start, end, maxPops, keepFetched))
       next.persist(StorageLevel.MEMORY_AND_DISK)
       next.localCheckpoint()
-      val (lineage, pendingRows, nextSeq) = next
-        .map(s => (s.lineage, s.queued.length.toLong, s.nextSeq)).collect()(0) // materializes
+      val (lineage, pendingRows, nextSeq, seenCount) = next
+        .map(s => (s.lineage, s.queued.length.toLong, s.nextSeq, s.seen.iterator.map(_.count).sum))
+        .collect()(0) // materializes
       st.unpersist(blocking = false)
       st = next
+      seen = seenCount
       val pops = lineage.length
       // no pop: only seen start requests were left, nothing to commit
       if (pops > 0) {
@@ -1981,8 +1989,8 @@ class WaveEngine(
         flushLineage(wave, scala.collection.mutable.ArrayBuffer.from(lineage))
       }
       done = pendingRows == 0
-    }
-    CrawlRunResult(wave - startWave, totalFetched, totalDeduped,
-      st.map(_.seen.iterator.map(_.count).sum).collect()(0), System.currentTimeMillis() - t0)
+    } while (!done && wave < cfg.maxWaves && totalFetched < cfg.maxUrls)
+    CrawlRunResult(wave - startWave, totalFetched, totalDeduped, seen,
+      System.currentTimeMillis() - t0)
   }
 }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
  * (`org.apache.spark.sql.classic.ExpressionUtils`), so third-party
  * native expressions need an accessor compiled inside the
  * `org.apache.spark.sql` package namespace — the same pattern public
- * Spark extension libraries use. This is the only file outside the
- * `graft` namespace; keep it free of any logic.
+ * Spark extension libraries use. This and [[TaskOutputBridge]] are the
+ * only files outside the `graft` namespace; keep them free of any logic.
  */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -1,0 +1,114 @@
+package graft.engine
+
+import graft.SparkTestSession
+import graft.model.UrlRecord
+import org.apache.spark.sql.{DataFrame, Row}
+import org.scalatest.funsuite.AnyFunSuite
+
+class PlaneWriterSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+
+  val urls = Seq(
+    UrlRecord(null, "https://例え.jp/パス?q=ü", Long.MinValue, "例え.jp", 3, "follow_links",
+      Map.empty, 0, is_seed = true, 0, Long.MaxValue),
+    UrlRecord("http://A.example/x#f", "http://a.example/x", Long.MaxValue, "a.example", 0, null,
+      Map("k" -> "v", "ключ" -> "значение", "empty" -> "", "none" -> null), -5, is_seed = false,
+      Int.MaxValue, Long.MinValue),
+    UrlRecord("u", "c", 0L, null, -1, "diet", Map("one" -> "1"), Int.MinValue, is_seed = false,
+      -1, 0L))
+  val seen = Seq((Long.MinValue, "https://例え.jp/パス", 3, 0),
+    (Long.MaxValue, "http://a.example/x", 0, 7), (0L, null, 1, 2))
+  val lineage = Seq((0, 1, 2L, 3L, 0L, Long.MaxValue, Long.MinValue), (5, 0, 0L, 0L, 1L, 2L, 3L))
+
+  def parts(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().toSeq.filter(f => f.getName.startsWith("part-") &&
+      f.getName.endsWith(".parquet"))
+
+  def hidden(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().toSeq.filter(_.getName.startsWith("."))
+
+  def sorted(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
+
+  /** `spark.read.parquet` sees the same schema and the same rows in both dirs. */
+  def assertSameRead(sparkDir: String, planeDir: String): Unit = {
+    val (a, b) = (spark.read.parquet(sparkDir), spark.read.parquet(planeDir))
+    assert(b.schema == a.schema)
+    assert(sorted(b) == sorted(a))
+  }
+
+  test("plane files read back like Spark's own: pending, seen and lineage planes") {
+    import spark.implicits._
+    val base = SparkTestSession.tmpDir("planes")
+    spark.createDataset(urls).write.parquet(s"$base/spark_pending")
+    PlaneWriter.writeDir(s"$base/plane_pending", PlaneWriter.urlRecordSchema, urls.iterator)
+    assertSameRead(s"$base/spark_pending", s"$base/plane_pending")
+    // the engine's typed read path returns the written records
+    val typed = spark.read.schema(PlaneWriter.urlRecordSchema).parquet(s"$base/plane_pending")
+      .as[UrlRecord].collect().toSeq
+    assert(typed.sortBy(_.seq) == urls.sortBy(_.seq))
+
+    spark.createDataset(seen).toDF("url_hash", "canonical", "host_bucket", "wave")
+      .write.parquet(s"$base/spark_seen")
+    PlaneWriter.writeDir(s"$base/plane_seen", PlaneWriter.seenSchema, seen.iterator)
+    assertSameRead(s"$base/spark_seen", s"$base/plane_seen")
+
+    spark.createDataset(lineage)
+      .toDF("wave", "partition_id", "in_count", "fetched", "errors", "deduped_wave", "novel_wave")
+      .write.parquet(s"$base/spark_lineage")
+    PlaneWriter.writeDir(s"$base/plane_lineage", PlaneWriter.lineageSchema, lineage.iterator)
+    assertSameRead(s"$base/spark_lineage", s"$base/plane_lineage")
+
+    for (p <- Seq("pending", "seen", "lineage")) {
+      assert(parts(s"$base/plane_$p").length == 1)
+      assert(hidden(s"$base/plane_$p").isEmpty) // the temp file was renamed
+    }
+  }
+
+  test("an empty plane leaves exactly one part file, with a footer Spark reads") {
+    import spark.implicits._
+    val base = SparkTestSession.tmpDir("emptyplane")
+    spark.createDataset(Seq.empty[UrlRecord]).write.parquet(s"$base/spark")
+    PlaneWriter.writeDir(s"$base/plane", PlaneWriter.urlRecordSchema, Iterator.empty)
+    assert(parts(s"$base/plane").length == 1)
+    assertSameRead(s"$base/spark", s"$base/plane")
+    assert(spark.read.parquet(s"$base/plane").count() == 0L)
+
+    // a checkpoint task with no rows: task 0 writes every plane, other
+    // tasks write none
+    val dirs = PlaneWriter.Dirs(s"$base/p", s"$base/s", Some(s"$base/pace"), Some(s"$base/hostn"))
+    dirs.all.foreach(PlaneWriter.clear)
+    PlaneWriter.checkpointTask(1, Iterator.empty, dirs, sinceWave = -1)
+    assert(dirs.all.forall(d => parts(d).isEmpty && hidden(d).isEmpty))
+    PlaneWriter.checkpointTask(0, Iterator.empty, dirs, sinceWave = -1)
+    assert(dirs.all.forall(d => parts(d).length == 1))
+    assert(spark.read.parquet(s"$base/pace").columns.toSeq ==
+      Seq("host_bucket", "host_hash", "next_allowed_ms"))
+    assert(spark.read.parquet(s"$base/hostn").count() == 0L)
+  }
+
+  test("writing the same task index twice leaves one file per plane, the second attempt's") {
+    val base = SparkTestSession.tmpDir("retry")
+    val dirs = PlaneWriter.Dirs(s"$base/pending", s"$base/seen", None, None)
+    dirs.all.foreach(PlaneWriter.clear)
+    def bucket(b: Int, canon: String, wave: Int): BucketSeen = {
+      val set = new graft.seen.SeenSet128(16)
+      val h = graft.urls.UrlCanon.urlHash(canon)
+      set.add(h, graft.urls.UrlCanon.urlHash2(canon))
+      BucketSeen(b, set, List(graft.seen.SeenChunk.pack(wave, Array(h), Array(canon))), 1L)
+    }
+    def attempt(canon: String): Unit = {
+      val rows: Iterator[(Int, AnyRef)] =
+        Iterator((2, bucket(2, canon, 1)), (2, urls.head.copy(canonical = canon)))
+      PlaneWriter.checkpointTask(0, rows, dirs, sinceWave = 0)
+    }
+    attempt("https://first.example/")
+    attempt("https://second.example/")
+    import spark.implicits._
+    for (d <- dirs.all) {
+      assert(parts(d).length == 1, d)
+      assert(hidden(d).isEmpty, d)
+      assert(spark.read.parquet(d).select($"canonical").as[String].collect().toSeq ==
+        Seq("https://second.example/"))
+    }
+  }
+}

@@ -2,6 +2,7 @@ package graft.engine
 
 import graft.SparkTestSession
 import graft.fetch.SyntheticSite
+import graft.model.UrlRecord
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -124,6 +125,10 @@ class WaveEngineSpec extends AnyFunSuite {
     assert(orderSmall && orderBig)
     assert(jobsSmall == jobsBig, s"jobs: $jobsSmall for ${site.totalPages} pages, " +
       s"$jobsBig for ${big.totalPages}")
+    // exactly: the interval, the fetched table write and the one-job
+    // checkpoint; the start requests, the lineage and the seen total come
+    // from the driver
+    assert(jobsSmall == 3, s"jobs: $jobsSmall")
   }
 
   test("reference-order kill/resume replays the Scrapy LIFO order exactly; no filter blobs") {
@@ -136,6 +141,10 @@ class WaveEngineSpec extends AnyFunSuite {
         hostBuckets = 8, fetchPartitions = parts, maxWaves = maxW)
       val partial = new WaveEngine(spark, site, parsers, cfgOf(5, 2)).run(seeds)
       assert(partial.fetched == 5L && partial.fetched < oracleOrder.size)
+      // a resume with no pop left to it commits nothing and reports the
+      // checkpoint's totals, its seen total included
+      val idle = new WaveEngine(spark, site, parsers, cfgOf(5, resumeParts)).resume()
+      assert(idle.copy(elapsedMs = 0L) == partial.copy(waves = 0, elapsedMs = 0L))
       val resumed = new WaveEngine(spark, site, parsers, cfgOf(10000, resumeParts))
       resumed.resume()
 
@@ -199,6 +208,67 @@ class WaveEngineSpec extends AnyFunSuite {
 
       new WaveEngine(spark, site, parsers, cfgOf(ckpt, maxW = 4, every = 2)).resume()
       assert(!orphan.exists())
+      val resumed = new WaveEngine(spark, site, parsers, cfgOf(ckpt))
+      resumed.resume()
+      assert(fetchedSet(resumed) == fetchedSet(full))
+      assert(seenHashSet(ckpt) == seenHashSet(fullCkpt))
+      if (ref) assert(fetchOrder(resumed) == fetchOrder(full))
+    }
+  }
+
+  test("scalable run: one job per wave and per checkpoint, and no other job") {
+    def runJobs(every: Int): (CrawlRunResult, Int) = {
+      val e = new WaveEngine(spark, site, parsers, CrawlConfig(
+        checkpointDir = SparkTestSession.tmpDir(s"jobs$every"), hostBuckets = 8, fetchPartitions = 4,
+        maxPerHostPerWave = Int.MaxValue, keepFetched = false, checkpointEvery = every))
+      jobsOf(e.run(seeds))
+    }
+    val (rare, jobsRare) = runJobs(1000000)
+    assert(rare.fetched == site.totalPages && rare.waves >= 3)
+    // the seed wave, the wave-0 checkpoint and the exit checkpoint
+    assert(jobsRare == rare.waves + 3, s"$jobsRare jobs for ${rare.waves} waves")
+    val (every, jobsEvery) = runJobs(1)
+    assert(every == rare.copy(elapsedMs = every.elapsedMs))
+    // one checkpoint job per wave; the last wave's is the exit checkpoint
+    assert(jobsEvery == 2 * every.waves + 2, s"$jobsEvery jobs for ${every.waves} waves")
+  }
+
+  test("a crashed checkpoint write's leftovers are ignored or cleared; resume equals an uninterrupted run") {
+    // a task killed mid-write leaves its hidden temp file, in a committed
+    // checkpoint's dirs (every reader skips it) and above LATEST; an
+    // attempt at the next checkpoint that never committed can also leave
+    // whole part files above LATEST. Resume deletes orphan seen flushes,
+    // and a checkpoint clears each plane dir before writing it.
+    for (ref <- Seq(false, true)) {
+      def cfgOf(ckpt: String, maxW: Int = 10000) = CrawlConfig(checkpointDir = ckpt,
+        referenceOrder = ref, hostBuckets = 8, fetchPartitions = 2, maxPerHostPerWave = 1,
+        maxWaves = maxW)
+      val fullCkpt = SparkTestSession.tmpDir(s"tmpfull$ref")
+      val full = new WaveEngine(spark, site, parsers, cfgOf(fullCkpt))
+      full.run(seeds)
+
+      val ckpt = SparkTestSession.tmpDir(s"tmpleft$ref")
+      new WaveEngine(spark, site, parsers, cfgOf(ckpt, maxW = 2)).run(seeds)
+      assert(new WaveEngine(spark, site, parsers, cfgOf(ckpt)).latestCheckpointWave.contains(2))
+      Seq("pending_w2", "seen/flush_2", "pending_w3", "seen/flush_3").foreach { d =>
+        val f = new java.io.File(s"$ckpt/$d/.part-00000-c000.snappy.parquet.crashed.tmp")
+        f.getParentFile.mkdirs()
+        java.nio.file.Files.writeString(f.toPath, "a torn write, not parquet")
+      }
+      // a part file of the uncommitted wave-3 attempt, holding a row no
+      // uninterrupted run fetches
+      val canon = "https://stale.example/x"
+      val staleDir = SparkTestSession.tmpDir("stale")
+      PlaneWriter.writeDir(staleDir, PlaneWriter.urlRecordSchema, Iterator(UrlRecord(canon, canon,
+        graft.urls.UrlCanon.urlHash(canon), "stale.example", 0, "follow_links", Map.empty, 0,
+        is_seed = false, wave = 3, seq = 1L << 40)))
+      java.nio.file.Files.move(java.nio.file.Paths.get(staleDir, "part-00000-c000.snappy.parquet"),
+        java.nio.file.Paths.get(ckpt, "pending_w3", "part-00007-c000.snappy.parquet"))
+
+      new WaveEngine(spark, site, parsers, cfgOf(ckpt, maxW = 3)).resume()
+      for (d <- Seq("pending_w3", "seen/flush_3")) {
+        assert(new java.io.File(s"$ckpt/$d").list().toSeq == Seq("part-00000-c000.snappy.parquet"), d)
+      }
       val resumed = new WaveEngine(spark, site, parsers, cfgOf(ckpt))
       resumed.resume()
       assert(fetchedSet(resumed) == fetchedSet(full))
