@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import graft.model.UrlRecord
+import graft.model.{FetchResult, UrlRecord}
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.conf.{ParquetConfiguration, PlainParquetConfiguration}
 import org.apache.parquet.hadoop.ParquetWriter
@@ -13,23 +13,30 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.{LocalOutputFile, OutputFile}
 import org.apache.parquet.io.api.{Binary, RecordConsumer}
 import org.apache.parquet.schema.{GroupType, MessageType}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+import org.apache.spark.sql.graftbridge.TaskOutputBridge
 import org.apache.spark.sql.types._
 
 /**
- * Task-side parquet for the checkpoint planes (`pending_w*`, `seen/flush_*`,
- * `pace_w*`, `hostn_w*`, `lineage/upto_*`). A Dataset write pays Spark
+ * The engine's one parquet writer: every plane it writes goes through
+ * here — the checkpoint planes (`pending_w*`, `seen/flush_*`,
+ * `seen/compact_*`, `pace_w*`, `hostn_w*`), the lineage (`lineage/upto_*`)
+ * and the fetched pages (`fetched/wave_*`). A Dataset write pays Spark
  * SQL's fixed per-write cost (planning, a job, a commit protocol) for each
  * plane; on a short crawl that cost, not the rows, was most of the time
  * outside the waves. Here one Spark job writes every plane of a
- * checkpoint ([[checkpointTask]]), and driver-held rows are written with
- * no job at all.
+ * checkpoint ([[checkpointTask]]), a wave's fetch tasks write its pages as
+ * they fetch them ([[taskPart]]), and driver-held rows are written with no
+ * job at all.
  *
  * The files read back exactly as Spark's own: the parquet schema is Spark's
  * `SparkToParquetSchemaConverter` applied to the plane's StructType (maps
- * in the standard three-level layout), the footer carries Spark's row
- * metadata, and the codec is Spark's default SNAPPY with parquet-mr's
- * default row-group and page sizes, which are Spark's too.
+ * and arrays in the standard three-level layout, structs as groups), the
+ * footer carries Spark's row metadata, and the codec is Spark's default
+ * SNAPPY with parquet-mr's default row-group and page sizes, which are
+ * Spark's too. A part file written inside a task adds its bytes and rows
+ * to the task's output metrics, as a Dataset write's would.
  *
  * Crash and retry safety: the driver clears a plane's dir before the
  * write; a writer fills a hidden temp file (readers skip names that start
@@ -39,6 +46,7 @@ import org.apache.spark.sql.types._
 private[engine] object PlaneWriter {
 
   val urlRecordSchema: StructType = org.apache.spark.sql.Encoders.product[UrlRecord].schema
+  val fetchResultSchema: StructType = org.apache.spark.sql.Encoders.product[FetchResult].schema
   val seenSchema: StructType = StructType(Seq(
     StructField("url_hash", LongType), StructField("canonical", StringType),
     StructField("host_bucket", IntegerType), StructField("wave", IntegerType)))
@@ -79,53 +87,56 @@ private[engine] object PlaneWriter {
     * time, as a Dataset write of one plane does. Pending rows stream into
     * their file; the bucket states (the cached objects, not copies) are
     * kept until the pending file commits and then feed the seen, pace and
-    * hostN files. Seen rows are the log chunks newer than `sinceWave` (the
-    * changelog flush). Returns the bytes and rows written, for the task's
-    * output metrics. */
-  def checkpointTask(index: Int, rows: Iterator[(Int, AnyRef)], dirs: Dirs,
-      sinceWave: Int): (Long, Long) = {
+    * hostN files. Seen rows are the log chunks newer than `sinceWave`: the
+    * changelog flush, or with `sinceWave = -1` the whole log (a
+    * compaction). */
+  def checkpointTask(index: Int, rows: Iterator[(Int, AnyRef)], dirs: Dirs, sinceWave: Int): Unit = {
     val states = scala.collection.mutable.ArrayBuffer.empty[(Int, BucketSeen)]
-    val pending = plane(dirs.pending, index, urlRecordSchema) { p =>
+    plane(dirs.pending, index, urlRecordSchema) { p =>
       rows.foreach {
         case (_, r: UrlRecord) => p.write(r)
         case (b, st: BucketSeen) => states += ((b, st))
       }
     }
-    val seen = plane(dirs.seen, index, seenSchema) { p =>
+    plane(dirs.seen, index, seenSchema) { p =>
       for ((b, st) <- states; ch <- st.log.iterator if ch.wave > sinceWave) {
         var i = 0
         while (i < ch.size) { p.write((ch.hashes(i), ch.canonical(i), b, ch.wave)); i += 1 }
       }
     }
-    val pace = dirs.pace.map(plane(_, index, paceSchema) { p =>
+    dirs.pace.foreach(plane(_, index, paceSchema) { p =>
       for ((b, st) <- states; (h, ms) <- st.pace) p.write((b, h, ms))
     })
-    val hostN = dirs.hostN.map(plane(_, index, hostNSchema) { p =>
+    dirs.hostN.foreach(plane(_, index, hostNSchema) { p =>
       for ((b, st) <- states; (h, n) <- st.hostN) p.write((b, h, n))
     })
-    (Seq(pending, seen) ++ pace ++ hostN).foldLeft((0L, 0L)) { (acc, w) =>
-      (acc._1 + w._1, acc._2 + w._2)
-    }
   }
 
-  /** Writes part file `index` of `dir` with `fill` and commits it:
-    * (bytes, rows). The file opens at its first row; index 0 always
-    * writes one, so an empty plane still has one footer-bearing file. */
-  private def plane(dir: String, index: Int, schema: StructType)(fill: Part => Unit): (Long, Long) = {
+  /** Part file `index` of `dir`, written row by row by the running task
+    * (a fetch task's pages, a reference interval's): a task that fails or
+    * ends before [[Part.finish]] leaves no file. */
+  def taskPart(dir: String, index: Int, schema: StructType): Part = {
     val p = new Part(dir, index, schema)
-    try { fill(p); if (index == 0) p.open(); p.commit() }
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => p.abort()))
+    p
+  }
+
+  /** Writes part file `index` of `dir` with `fill` and commits it. */
+  private def plane(dir: String, index: Int, schema: StructType)(fill: Part => Unit): Unit = {
+    val p = new Part(dir, index, schema)
+    try { fill(p); p.finish() }
     catch { case t: Throwable => p.abort(); throw t }
   }
 
-  /** Part file `index` of `dir`: opened lazily, written to a hidden temp
-    * file, renamed into place by [[commit]]. */
-  private final class Part(dir: String, index: Int, schema: StructType) {
+  /** Part file `index` of `dir`: opened at its first row, written to a
+    * hidden temp file, renamed into place by [[finish]]. */
+  final class Part private[PlaneWriter] (dir: String, index: Int, schema: StructType) {
     private val target: Path = Paths.get(dir, f"part-$index%05d-c000.snappy.parquet")
     private val tmp: Path = Paths.get(dir, s".${target.getFileName}.${java.util.UUID.randomUUID()}.tmp")
     private var writer: ParquetWriter[Product] = _
     private var rows = 0L
 
-    def open(): Unit = if (writer == null) {
+    private def open(): Unit = if (writer == null) {
       writer = new Builder(new LocalOutputFile(tmp), new ProductWriteSupport(schema))
         .withConf(new PlainParquetConfiguration())
         .withCompressionCodec(CompressionCodecName.SNAPPY)
@@ -135,17 +146,22 @@ private[engine] object PlaneWriter {
 
     def write(row: Product): Unit = { open(); writer.write(row); rows += 1 }
 
-    /** Closes an opened file and renames it into place: (bytes, rows). */
-    def commit(): (Long, Long) =
-      if (writer == null) (0L, 0L)
-      else {
+    /** Closes the file and renames it into place, adding its bytes and
+      * rows to the running task's output metrics. A part that got no row
+      * writes no file, except index 0, so an empty plane still has one
+      * footer-bearing file. */
+    def finish(): Unit = {
+      if (index == 0) open()
+      if (writer != null) {
         writer.close()
         writer = null
         val bytes = Files.size(tmp)
         Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-        (bytes, rows)
+        TaskOutputBridge.addOutput(bytes, rows)
       }
+    }
 
+    /** Drops an unfinished file; a no-op after [[finish]]. */
     def abort(): Unit = {
       if (writer != null) try writer.close() catch { case _: Throwable => () }
       writer = null
@@ -160,41 +176,66 @@ private[engine] object PlaneWriter {
     override def getWriteSupport(conf: ParquetConfiguration): WriteSupport[Product] = ws
   }
 
-  /** Writes a Product whose elements follow `schema`, in order: the
-    * planes' Int, Long, Boolean, String and string-map fields. A null
-    * element is an absent optional field, as Spark writes it. */
+  /** Writes a Product whose elements follow `schema`, in order: Int, Long,
+    * Boolean, String and binary fields, string maps, arrays and nested
+    * Products (structs). A null element is an absent optional field, as
+    * Spark writes it. */
   private final class ProductWriteSupport(schema: StructType) extends WriteSupport[Product] {
     private val message: MessageType = new SparkToParquetSchemaConverter().convert(schema)
-    private val names = schema.fieldNames
     private var rc: RecordConsumer = _
-    private val writers: Array[Any => Unit] =
-      schema.fields.indices.map(i => writerOf(schema.fields(i).dataType, message.getType(i))).toArray
+    private val fields: Any => Unit = fieldsWriter(schema, message)
+
+    /** Writes a non-null value as field `i` of its group; null writes nothing. */
+    private def field(gt: GroupType, i: Int, w: Any => Unit): Any => Unit = {
+      val name = gt.getType(i).getName
+      v => if (v != null) { rc.startField(name, i); w(v); rc.endField(name, i) }
+    }
+
+    /** A Product's elements as the fields of `gt` (a struct, or the row). */
+    private def fieldsWriter(st: StructType, gt: GroupType): Any => Unit = {
+      val ws = st.fields.indices.map(i => field(gt, i, writerOf(st.fields(i).dataType, gt.getType(i)))).toArray
+      v => {
+        val p = v.asInstanceOf[Product]
+        var i = 0
+        while (i < ws.length) { ws(i)(p.productElement(i)); i += 1 }
+      }
+    }
+
+    /** Spark's standard layout of a list or a map: group { repeated group
+      * { entry fields } }, an empty one an empty group. */
+    private def repeatedWriter(pt: org.apache.parquet.schema.Type, entries: Any => Iterator[Any])(
+        entry: GroupType => Any => Unit): Any => Unit = {
+      val rep = pt.asGroupType().getType(0).asGroupType()
+      val (name, ew) = (rep.getName, entry(rep))
+      v => {
+        val it = entries(v)
+        rc.startGroup()
+        if (it.hasNext) {
+          rc.startField(name, 0)
+          it.foreach { e => rc.startGroup(); ew(e); rc.endGroup() }
+          rc.endField(name, 0)
+        }
+        rc.endGroup()
+      }
+    }
 
     private def writerOf(t: DataType, pt: org.apache.parquet.schema.Type): Any => Unit = t match {
       case IntegerType => v => rc.addInteger(v.asInstanceOf[Int])
       case LongType => v => rc.addLong(v.asInstanceOf[Long])
       case BooleanType => v => rc.addBoolean(v.asInstanceOf[Boolean])
       case StringType => v => rc.addBinary(Binary.fromString(v.asInstanceOf[String]))
+      case BinaryType => v => rc.addBinary(Binary.fromConstantByteArray(v.asInstanceOf[Array[Byte]]))
+      case st: StructType =>
+        val fw = fieldsWriter(st, pt.asGroupType())
+        v => { rc.startGroup(); fw(v); rc.endGroup() }
+      case ArrayType(et, _) =>
+        repeatedWriter(pt, _.asInstanceOf[Iterable[Any]].iterator)(rep =>
+          field(rep, 0, writerOf(et, rep.getType(0))))
       case MapType(kt, vt, _) =>
-        // Spark's standard layout: group (MAP) { repeated group key_value
-        // { key; value } }, with an empty map an empty group
-        val kv: GroupType = pt.asGroupType().getType(0).asGroupType()
-        val (kvName, kName, vName) = (kv.getName, kv.getType(0).getName, kv.getType(1).getName)
-        val (kw, vw) = (writerOf(kt, kv.getType(0)), writerOf(vt, kv.getType(1)))
-        v => {
-          val m = v.asInstanceOf[scala.collection.Map[Any, Any]]
-          rc.startGroup()
-          if (m.nonEmpty) {
-            rc.startField(kvName, 0)
-            m.foreach { case (k, x) =>
-              rc.startGroup()
-              rc.startField(kName, 0); kw(k); rc.endField(kName, 0)
-              if (x != null) { rc.startField(vName, 1); vw(x); rc.endField(vName, 1) }
-              rc.endGroup()
-            }
-            rc.endField(kvName, 0)
-          }
-          rc.endGroup()
+        repeatedWriter(pt, _.asInstanceOf[scala.collection.Map[Any, Any]].iterator) { rep =>
+          val (kw, vw) = (field(rep, 0, writerOf(kt, rep.getType(0))),
+            field(rep, 1, writerOf(vt, rep.getType(1))))
+          e => { val (k, x) = e.asInstanceOf[(Any, Any)]; kw(k); vw(x) }
         }
     }
 
@@ -208,16 +249,7 @@ private[engine] object PlaneWriter {
 
     override def write(p: Product): Unit = {
       rc.startMessage()
-      var i = 0
-      while (i < writers.length) {
-        val v = p.productElement(i)
-        if (v != null) {
-          rc.startField(names(i), i)
-          writers(i)(v)
-          rc.endField(names(i), i)
-        }
-        i += 1
-      }
+      fields(p)
       rc.endMessage()
     }
   }

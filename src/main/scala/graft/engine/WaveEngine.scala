@@ -5,7 +5,7 @@ import graft.model._
 import graft.urls.UrlCanon
 import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.CollectionAccumulator
@@ -378,14 +378,21 @@ private[engine] final case class BucketWave(
 
 /** The reference-order replay's state at a checkpoint, in the scalable
   * path's own types: every bucket's seen state (`seen(b)` is bucket b) and
-  * the queued requests. An interval's output also carries its fetched
-  * rows and one lineage row per pop, for the interval's writes. */
+  * the queued requests. An interval's output also carries one lineage row
+  * per pop, for the driver's lineage write. */
 private[engine] final case class RefState(
     seen: Array[BucketSeen],
     queued: Array[UrlRecord],
     nextSeq: Long,
-    fetched: Array[FetchResult] = Array.empty,
     lineage: Array[(Int, Int, Long, Long, Long, Long, Long)] = Array.empty)
+
+/** A per-wave checkpoint dir kind: `<parent>/<prefix><N>` under the
+  * checkpoint root, committed by the checkpoint at wave N + `lag`. A
+  * `snapshot` plane holds the whole state at N, so a newer commit makes it
+  * obsolete; the changelogs (seen flushes and compacts, fetched pages)
+  * stay until a compaction covers them, or for good. */
+private[engine] final case class WaveDirKind(parent: String, prefix: String, lag: Int,
+    snapshot: Boolean)
 
 /**
  * Partition-level pure functions of the scalable core. Static (no
@@ -883,11 +890,12 @@ private[engine] object WaveCore {
     * `in`: the seen sets are copied once per interval and the input is
     * never mutated, so a retried task redoes the same pops. The interval's
     * marks form one chunk per bucket, tagged with the interval's last
-    * wave. */
+    * wave. With `fetchedDir`, each page is written as it is fetched to the
+    * dir's one part file, which a retried task replaces. */
   def referenceInterval(in: RefState, f: Fetcher, parsers: Map[String, PageParser],
       robotsEnabled: Boolean, robots: Map[String, Seq[String]], rps: Double,
       realtime: Boolean, t0: Long, startWave: Int, endWave: Int, maxPops: Long,
-      keepFetched: Boolean): RefState = {
+      fetchedDir: Option[String]): RefState = {
     val spacingMs = math.round(1000.0 / rps)
     val pid = TaskContext.getPartitionId()
     val queue = scala.collection.mutable.PriorityQueue.from(in.queued)(RefPopOrder)
@@ -897,8 +905,8 @@ private[engine] object WaveCore {
       seen(b).seen.add(h, UrlCanon.urlHash2(canon)) && { marks(b) += ((h, canon)); true }
     var nextFetchMs = in.seen.iterator.flatMap(_.pace.valuesIterator).maxOption.getOrElse(0L)
     var nextSeq = in.nextSeq
-    val fetched = scala.collection.mutable.ArrayBuffer.empty[FetchResult]
     val lineage = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long, Long, Long, Long, Long)]
+    val fetched = fetchedDir.map(PlaneWriter.taskPart(_, 0, PlaneWriter.fetchResultSchema))
     var wave = startWave
     while (wave < endWave && wave - startWave < maxPops && !queue.isEmpty) {
       val r = queue.dequeue()
@@ -920,18 +928,19 @@ private[engine] object WaveCore {
           c.url_hash, UrlCanon.hostOf(c.canonical), c.host_bucket, c.parse_fn, c.meta, c.priority,
           is_seed = false, wave = wave + 1, seq = nextSeq + i))
         nextSeq += novel.length
-        if (keepFetched) fetched += fr
+        fetched.foreach(_.write(fr))
         lineage += ((wave, pid, 1L, if (fr.ok) 1L else 0L, if (fr.status >= 400) 1L else 0L,
           (cands.length - novel.length).toLong, novel.length.toLong))
         wave += 1
       }
     }
+    fetched.foreach(_.finish())
     val out = seen.zip(marks).map { case (st, m) =>
       if (m.isEmpty) st
       else st.copy(count = st.count + m.length, log =
         graft.seen.SeenChunk.pack(wave, m.map(_._1).toArray, m.map(_._2).toArray) :: st.log)
     }
-    RefState(out, queue.toArray, nextSeq, fetched.toArray, lineage.toArray)
+    RefState(out, queue.toArray, nextSeq, lineage.toArray)
   }
 
   /** Scrapy's pop order, greatest first: queued follow-ups by priority,
@@ -972,7 +981,9 @@ private[engine] object WaveCore {
  *    the empty seed/resume state is built in place (no shuffle), and a
  *    checkpoint is ONE job whose tasks write every plane with
  *    [[PlaneWriter]], coalesced to one part file per 2^20 rows instead of
- *    one per fetch partition; the loop runs no count job outside its
+ *    one per fetch partition, and the fetched pages are written by the
+ *    wave's own fetch tasks; every engine parquet file comes from
+ *    PlaneWriter, and the loop runs no count or write job outside its
  *    waves and checkpoints;
  *  - within-wave dedup, the exact seen check, seq assignment and the
  *    seen-set add are ONE partition-local pass — no per-wave window
@@ -1014,8 +1025,7 @@ class WaveEngine(
 
   private val sc = spark.sparkContext
   private val ckpt = cfg.checkpointDir
-  private val fetchResultSchema = org.apache.spark.sql.Encoders.product[FetchResult].schema
-  import PlaneWriter.{lineageSchema, seenSchema, urlRecordSchema}
+  import PlaneWriter.{fetchResultSchema, lineageSchema, seenSchema, urlRecordSchema}
 
   private val partitioner = new HashPartitioner(cfg.fetchPartitions)
 
@@ -1064,7 +1074,7 @@ class WaveEngine(
 
   /** Durable seen dirs covering waves ≤ `maxWave`. Two dir kinds under
     * `seen/`: `flush_N` holds the DELTA committed at wave N; `compact_N`
-    * holds ALL marks ≤ N (written by [[compactSeen]]). The read set is the
+    * holds ALL marks ≤ N (see [[writeScalableCheckpoint]]). The read set is the
     * newest compact ≤ maxWave (if any) plus every flush strictly newer
     * than it — O(compactSeenAfter) dirs, however many checkpoints the
     * crawl has taken. Bounding by the committed LATEST wave closes the
@@ -1072,41 +1082,29 @@ class WaveEngine(
     * (ADVICE r1): resume must never dedup replayed candidates against
     * marks from an uncommitted future flush. */
   private def seenFlushDirs(maxWave: Int): Seq[String] = {
-    val dirs = Option(new java.io.File(s"$ckpt/seen").listFiles())
-      .getOrElse(Array.empty).filter(_.isDirectory)
-    val compacts = dirs.filter(_.getName.startsWith("compact_"))
-      .map(f => (f.getName.stripPrefix("compact_").toInt, f.getPath))
-      .filter(_._1 <= maxWave)
-    val base = if (compacts.isEmpty) -1 else compacts.map(_._1).max
-    val baseDir = compacts.filter(_._1 == base).map(_._2).toSeq
-    baseDir ++ dirs.filter(_.getName.startsWith("flush_"))
-      .map(f => (f.getName.stripPrefix("flush_").toInt, f.getPath))
-      .filter(t => t._1 > base && t._1 <= maxWave).sortBy(_._1).map(_._2).toSeq
+    val seen = waveDirs().filter { case (k, n, _) => k.parent == "seen" && n <= maxWave }
+    val base = seen.collect { case (k, n, _) if k.prefix == "compact_" => n }.maxOption.getOrElse(-1)
+    seen.filter { case (k, n, _) => n > base || n == base && k.prefix == "compact_" }
+      .sortBy(_._2).map(_._3.getPath)
   }
 
-  /** Merge every live seen dir ≤ `wave` into ONE `compact_$wave` dir when
-    * more than `compactSeenAfter` are live. Crash-safe by construction:
-    * the union is written OUTSIDE `seen/` and enters it via an atomic
-    * rename, so readers only ever see complete dirs; obsolete inputs are
-    * deleted AFTER the rename — a crash in between leaves an overlapping
-    * union, which is safe (rebuildPartition dedups) and is cleaned by the
-    * next compaction. */
-  private def compactSeen(wave: Int): Unit = {
-    val dirs = seenFlushDirs(wave)
-    if (dirs.length <= cfg.compactSeenAfter) return
-    val tmp = new java.io.File(s"$ckpt/seen_compacting")
-    graft.util.Fs.deleteRecursively(tmp) // orphan from a crashed attempt
-    spark.read.schema(seenSchema).parquet(dirs: _*)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.getPath)
-    Files.move(tmp.toPath, Paths.get(s"$ckpt/seen/compact_$wave"), StandardCopyOption.ATOMIC_MOVE)
-    Option(new java.io.File(s"$ckpt/seen").listFiles())
-      .getOrElse(Array.empty).filter(_.isDirectory)
-      .filter { f =>
-        (f.getName.startsWith("flush_") && f.getName.stripPrefix("flush_").toInt <= wave) ||
-          (f.getName.startsWith("compact_") && f.getName.stripPrefix("compact_").toInt < wave)
-      }
-      .foreach(graft.util.Fs.deleteRecursively)
-  }
+  /** Every per-wave dir the engine writes. A fetch wave's pages are
+    * committed by the next checkpoint, so `fetched/wave_N` lags by one. */
+  private val waveDirKinds = Seq(
+    WaveDirKind("", "pending_w", 0, snapshot = true),
+    WaveDirKind("", "pace_w", 0, snapshot = true),
+    WaveDirKind("", "hostn_w", 0, snapshot = true),
+    WaveDirKind("seen", "flush_", 0, snapshot = false),
+    WaveDirKind("seen", "compact_", 0, snapshot = false),
+    WaveDirKind("fetched", "wave_", 1, snapshot = false))
+
+  /** The per-wave dirs on disk, with their kind and wave. */
+  private def waveDirs(): Seq[(WaveDirKind, Int, java.io.File)] = for {
+    k <- waveDirKinds
+    f <- Option(new java.io.File(ckpt, k.parent).listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
+    if f.isDirectory && f.getName.startsWith(k.prefix)
+    n <- f.getName.stripPrefix(k.prefix).toIntOption
+  } yield (k, n, f)
 
   /** Seed URLs as wave-0 candidates (parent_seq = listed index, so listed
     * order is the per-host discovery order), deduped on the canonical. */
@@ -1237,47 +1235,45 @@ class WaveEngine(
     * its state file invisible (and resume deletes such orphans so a replay
     * at different wave numbers can't double them).
     *
+    * Compaction: when this flush would leave more than `compactSeenAfter`
+    * live seen dirs, the checkpoint writes `seen/compact_$wave` instead —
+    * the bucket states' whole log (every mark, resume's rebuilt chunk
+    * included), sized by `seenRows` — in the same job, so resume reads
+    * O(compactSeenAfter) dirs however many checkpoints the crawl took.
+    *
     * Commit order: the driver clears the plane dirs, the job writes them
     * (a retried task replaces its own part files), and only after the job
-    * returns are the state file and `LATEST` written. The per-host planes
-    * carry realtime pacing and the crawl budget across resume; the bench
-    * path (simulated, uncapped) writes neither. */
+    * returns are the state file and `LATEST` written. After the commit the
+    * obsolete snapshot planes, and after a compaction the seen dirs it
+    * covers, are deleted; a crash before that leaves them unread. The
+    * per-host planes carry realtime pacing and the crawl budget across
+    * resume; the bench path (simulated, uncapped) writes neither. */
   private def writeScalableCheckpoint(
       wave: Int,
       state: RDD[(Int, BucketSeen)],
       pending: RDD[(Int, UrlRecord)],
       pendingRows: Long,
       novelRows: Long,
+      seenRows: Long,
       nextSeq: Long,
       totalFetched: Long,
       totalDeduped: Long,
       sinceWave: Int): Unit = {
-    val dirs = PlaneWriter.Dirs(s"$ckpt/pending_w$wave", s"$ckpt/seen/flush_$wave",
+    val compact = seenFlushDirs(wave - 1).length >= cfg.compactSeenAfter
+    val (seenDir, since, seenFiles) =
+      if (compact) (s"$ckpt/seen/compact_$wave", -1, checkpointFiles(seenRows))
+      else (s"$ckpt/seen/flush_$wave", sinceWave, checkpointFiles(novelRows))
+    val dirs = PlaneWriter.Dirs(s"$ckpt/pending_w$wave", seenDir,
       if (cfg.realtime) Some(s"$ckpt/pace_w$wave") else None,
       if (cfg.maxPagesPerHost != Long.MaxValue) Some(s"$ckpt/hostn_w$wave") else None)
     dirs.all.foreach(PlaneWriter.clear)
     val rows = state.zipPartitions(pending)((st, pd) => st ++ pd: Iterator[(Int, AnyRef)])
-      .coalesce(math.max(checkpointFiles(pendingRows), checkpointFiles(novelRows)))
-    sc.runJob(rows, (ctx: TaskContext, it: Iterator[(Int, AnyRef)]) => {
-      val (bytes, n) = PlaneWriter.checkpointTask(ctx.partitionId(), it, dirs, sinceWave)
-      org.apache.spark.sql.graftbridge.TaskOutputBridge.addOutput(bytes, n)
-    })
+      .coalesce(math.max(checkpointFiles(pendingRows), seenFiles))
+    sc.runJob(rows, (ctx: TaskContext, it: Iterator[(Int, AnyRef)]) =>
+      PlaneWriter.checkpointTask(ctx.partitionId(), it, dirs, since))
     writeState(wave, nextSeq, totalFetched, totalDeduped)
-    // AFTER the commit (LATEST now points at `wave`): obsolete per-wave
-    // artifacts die here — resume reads only the committed wave's
-    // pending/pace, and leaving one dir per checkpoint ever taken is the
-    // same unbounded accumulation compactSeen exists to prevent
-    val dir = new java.io.File(ckpt)
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter { f =>
-        val nm = f.getName
-        (nm.startsWith("pending_w") && nm.stripPrefix("pending_w").toIntOption.exists(_ < wave)) ||
-          (nm.startsWith("pace_w") && nm.stripPrefix("pace_w").toIntOption.exists(_ < wave)) ||
-          (nm.startsWith("hostn_w") && nm.stripPrefix("hostn_w").toIntOption.exists(_ < wave))
-      }
-      .foreach(graft.util.Fs.deleteRecursively)
-    // compaction must only ever cover committed flushes
-    compactSeen(wave)
+    waveDirs().filter { case (k, n, _) => n < wave && (k.snapshot || compact && k.parent == "seen") }
+      .foreach(d => graft.util.Fs.deleteRecursively(d._3))
   }
 
   /** A FRESH run must not inherit ANY durable state from a prior run in
@@ -1292,22 +1288,19 @@ class WaveEngine(
     *    before its first checkpoint, resume() would revive the OLD run's
     *    pending against an empty seen set — now it fails fast ("no
     *    checkpoint") instead;
-    *  - `fetched/` is cleared too (fetchedTable() must not union a dead
+    *  - the fetched pages go too (fetchedTable() must not union a dead
     *    run's waves), unless the fetch cache reads from inside this very
     *    checkpoint dir. */
   private def clearStaleRun(): Unit = {
     val dir = new java.io.File(ckpt)
     new java.io.File(dir, "LATEST").delete()
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("state_w") || f.getName.startsWith("pending_w") ||
-        f.getName.startsWith("pace_w") || f.getName.startsWith("hostn_w"))
+    Option(dir.listFiles()).getOrElse(Array.empty).filter(_.getName.startsWith("state_w"))
       .foreach(graft.util.Fs.deleteRecursively)
-    graft.util.Fs.deleteRecursively(new java.io.File(dir, "seen"))
-    graft.util.Fs.deleteRecursively(new java.io.File(dir, "seen_compacting"))
     graft.util.Fs.deleteRecursively(new java.io.File(dir, "lineage"))
     val cacheInside = cfg.fetchCacheDir.exists(d =>
       new java.io.File(d).getCanonicalPath.startsWith(dir.getCanonicalPath))
-    if (!cacheInside) graft.util.Fs.deleteRecursively(new java.io.File(dir, "fetched"))
+    waveDirs().filter(d => !cacheInside || d._1.parent != "fetched")
+      .foreach(d => graft.util.Fs.deleteRecursively(d._3))
   }
 
   private def runScalable(seeds: Seq[SeedSpec]): CrawlRunResult = {
@@ -1329,7 +1322,7 @@ class WaveEngine(
     val nextSeq = (nSeeds + 1) * nB
     val state0 = out0.mapValues(_.state)
     val pending0 = novelOf(out0)
-    writeScalableCheckpoint(0, state0, pending0, nSeeds, nSeeds, nextSeq, 0L, 0L,
+    writeScalableCheckpoint(0, state0, pending0, nSeeds, nSeeds, seen0, nextSeq, 0L, 0L,
       sinceWave = -1)
     loopScalable(0, out0, pending0, None, nSeeds, seen0, nextSeq, 0L, 0L, lastFlushed0 = 0)
   }
@@ -1343,13 +1336,12 @@ class WaveEngine(
     val wave = latestCheckpointWave.getOrElse(
       throw new IllegalStateException(s"no checkpoint under $ckpt"))
     val (nextSeq, fetched, deduped) = readState(wave)
-    // delete orphan flushes from a crash window (flush landed, state file
-    // did not): a replay may checkpoint at different wave numbers, and a
-    // later resume must never union stale marks twice
-    Option(new java.io.File(s"$ckpt/seen").listFiles())
-      .getOrElse(Array.empty).filter(_.isDirectory)
-      .filter(f => f.getName.stripPrefix("flush_").stripPrefix("compact_").toInt > wave)
-      .foreach(graft.util.Fs.deleteRecursively)
+    // delete every uncommitted per-wave dir from a crash window (a write
+    // landed, its checkpoint did not): a replay may checkpoint at other
+    // wave numbers, and must never union stale seen marks or fetched
+    // pages with its own
+    waveDirs().filter { case (k, n, _) => n + k.lag > wave }
+      .foreach(d => graft.util.Fs.deleteRecursively(d._3))
     // the durable seen set = UNION of all changelog flushes ≤ the
     // committed wave (each flush carries only the delta since its
     // predecessor); rebuildPartition dedups, so a replayed overlap is safe
@@ -1402,8 +1394,10 @@ class WaveEngine(
    * The scalable wave loop. Per wave: one candidate shuffle (through the
    * [[CandidateSerializer]] codec) and one materializing action (the
    * per-bucket novel, candidate and seen counts, which also populates the
-   * localCheckpoint blocks), plus the optional fetched table write. No
-   * driver-side collect of state, no broadcast.
+   * localCheckpoint blocks). With `keepFetched`, the fetch tasks write the
+   * wave's pages to `fetched/wave_N` inside that same job, as the
+   * shuffle's map side drains them. No driver-side collect of state, no
+   * broadcast.
    *
    * Job accounting: the driver keeps the counts it already has, so the
    * loop runs no job of its own outside its waves and checkpoints. The
@@ -1412,10 +1406,11 @@ class WaveEngine(
    * materializing count), and each wave's reduce returns the next batch's
    * novel count and the new seen total. A checkpoint is one job
    * ([[writeScalableCheckpoint]], sized by those counts) and its lineage
-   * is written on the driver. With the per-host budget uncapped, no
-   * robots resolver and no fetched table, a fresh run is `waves + 3`
-   * jobs at `checkpointEvery` ≥ waves (seed wave, wave-0 and exit
-   * checkpoints) and one checkpoint job more per checkpointed wave.
+   * is written on the driver; a seen compaction rides the checkpoint's
+   * job. With the per-host budget uncapped, no robots resolver and no
+   * media store, a fresh run is `waves + 3` jobs at `checkpointEvery` ≥
+   * waves (seed wave, wave-0 and exit checkpoints) and one checkpoint job
+   * more per checkpointed wave, with or without the fetched table.
    */
   private def loopScalable(
       startWave: Int,
@@ -1758,18 +1753,17 @@ class WaveEngine(
           // touch the network at all)
           liveFetch(attachValidators(misses)).union(hits)
       }
-      val fetched =
-        if (cfg.keepFetched) {
-          val f = fetchedRdd.persist(StorageLevel.MEMORY_AND_DISK)
-          spark.createDataset(f).write.mode(SaveMode.Overwrite)
-            .parquet(s"$ckpt/fetched/wave_$wave")
-          // interleaved media plane: CAS-ingest this wave's media bytes
-          // (idempotent — a replayed wave re-ingests into the same store
-          // and the key-plane anti-join drops every row)
-          cfg.mediaStoreDir.foreach(dir =>
-            graft.sinks.MediaStore.ingestWave(spark, spark.createDataset(f).toDF(), dir))
-          f
-        } else fetchedRdd
+      // the fetched table: each fetch task writes its pages to its part
+      // file of the wave's dir as the parse below pulls them, and commits
+      // the file once they run out (++ is by-name)
+      val fetchedDir = Option.when(cfg.keepFetched)(s"$ckpt/fetched/wave_$wave")
+      val fetched = fetchedDir.fold(fetchedRdd) { dir =>
+        PlaneWriter.clear(dir)
+        fetchedRdd.mapPartitionsWithIndex { (i, it) =>
+          val part = PlaneWriter.taskPart(dir, i, fetchResultSchema)
+          it.map { fr => part.write(fr); fr } ++ { part.finish(); Iterator.empty }
+        }
+      }
 
       // parse → candidates → the wave's ONE shuffle (bucket-partitioned,
       // sized by the wave, never by the accumulated seen set). In realtime
@@ -1831,6 +1825,7 @@ class WaveEngine(
       lineageAcc.value.asScala.foreach { case (pid, in, ok, err) =>
         lineageBuf += ((wave, pid, in, ok, err, dedupedCount, novelCount))
       }
+      fetchedDir.foreach(ingestMedia)
 
       // next pending = deferred ∪ novel (same partitioner → the union is
       // partitioner-aware: partition count stays fixed, hosts stay whole)
@@ -1847,7 +1842,6 @@ class WaveEngine(
           s"deduped=$dedupedCount tWave=${System.currentTimeMillis() - tW0}ms")
 
       // release the previous wave (this wave's zip has been materialized)
-      if (cfg.keepFetched) fetched.unpersist(blocking = false)
       out.unpersist(blocking = false)
       pendingRetained.foreach(_.unpersist(blocking = false))
       // the tagged selection was fully consumed by the fetch job and the
@@ -1863,8 +1857,8 @@ class WaveEngine(
       wave += 1
 
       if (wave % cfg.checkpointEvery == 0 || done) {
-        writeScalableCheckpoint(wave, state, pending, batchCount, novelSinceFlush, nextSeq,
-          totalFetched, totalDeduped, sinceWave = lastFlushed)
+        writeScalableCheckpoint(wave, state, pending, batchCount, novelSinceFlush, totalSeen,
+          nextSeq, totalFetched, totalDeduped, sinceWave = lastFlushed)
         lastFlushed = wave
         novelSinceFlush = 0L
         flushLineage(wave, lineageBuf)
@@ -1872,8 +1866,8 @@ class WaveEngine(
     }
     if (latestCheckpointWave.forall(_ < wave)) {
       // loop exited on maxWaves/maxUrls between checkpoints
-      writeScalableCheckpoint(wave, state, pending, batchCount, novelSinceFlush, nextSeq,
-        totalFetched, totalDeduped, sinceWave = lastFlushed)
+      writeScalableCheckpoint(wave, state, pending, batchCount, novelSinceFlush, totalSeen,
+        nextSeq, totalFetched, totalDeduped, sinceWave = lastFlushed)
       lastFlushed = wave
       flushLineage(wave, lineageBuf)
     }
@@ -1881,6 +1875,13 @@ class WaveEngine(
     val elapsed = System.currentTimeMillis() - t0
     CrawlRunResult(wave - startWave, totalFetched, totalDeduped, totalSeen, elapsed)
   }
+
+  /** Interleaved media plane: CAS-ingests the media bytes of the pages
+    * just written to `fetchedDir`, when `mediaStoreDir` is set. Idempotent:
+    * a replayed wave re-ingests into the same store, and the key-plane
+    * anti-join drops every row. */
+  private def ingestMedia(fetchedDir: String): Unit = cfg.mediaStoreDir.foreach(dir =>
+    graft.sinks.MediaStore.ingestWave(spark, spark.read.schema(fetchResultSchema).parquet(fetchedDir), dir))
 
   /** Writes the driver-held lineage rows since the last flush to
     * `lineage/upto_$wave` with [[PlaneWriter]], on the driver: no Spark
@@ -1931,12 +1932,12 @@ class WaveEngine(
    * one-partition output, pinned with localCheckpoint like the scalable
    * loop's `out`. Per interval: the interval job, whose collect also
    * returns the task's lineage rows (one per pop, exactly once), the
-   * queue size, the next seq and the seen total; one
-   * `fetched/wave_<first pop>` write when `keepFetched`; the checkpoint,
-   * one job through the scalable path's [[writeScalableCheckpoint]]; and
-   * the lineage, written on the driver. That is 3 jobs per interval with
-   * the fetched table and 2 without (plus a seen compaction every
-   * `compactSeenAfter` checkpoints), whatever the pages it fetches. The
+   * queue size, the next seq and the seen total, and whose task writes
+   * the fetched pages to `fetched/wave_<first pop>` when `keepFetched`;
+   * the checkpoint, one job through the scalable path's
+   * [[writeScalableCheckpoint]] (a seen compaction included); and the
+   * lineage, written on the driver. That is 2 jobs per interval, whatever
+   * the pages it fetches (plus the media store's, when one is set). The
    * run's seen total is the last interval's; a run always runs at least
    * one interval, so it has one.
    */
@@ -1946,7 +1947,7 @@ class WaveEngine(
     // locals for task closures (never capture `this`)
     val parsersB = sc.broadcast(parsers)
     val (fetcherL, robotsEnabled, robots) = (fetcher, cfg.robotsEnabled, cfg.robotsDisallow)
-    val (rps, realtime, keepFetched) = (cfg.politenessRps, cfg.realtime, cfg.keepFetched)
+    val (rps, realtime) = (cfg.politenessRps, cfg.realtime)
     var wave = startWave
     var totalFetched = fetched0
     var totalDeduped = deduped0
@@ -1960,8 +1961,10 @@ class WaveEngine(
       val end = math.min(cfg.maxWaves.toLong,
         (start / cfg.checkpointEvery + 1).toLong * cfg.checkpointEvery).toInt
       val maxPops = cfg.maxUrls - totalFetched
+      val fetchedDir = Option.when(cfg.keepFetched)(s"$ckpt/fetched/wave_$start")
+      fetchedDir.foreach(PlaneWriter.clear)
       val next = st.map(WaveCore.referenceInterval(_, fetcherL, parsersB.value, robotsEnabled,
-        robots, rps, realtime, t0, start, end, maxPops, keepFetched))
+        robots, rps, realtime, t0, start, end, maxPops, fetchedDir))
       next.persist(StorageLevel.MEMORY_AND_DISK)
       next.localCheckpoint()
       val (lineage, pendingRows, nextSeq, seenCount) = next
@@ -1976,16 +1979,13 @@ class WaveEngine(
         wave += pops
         totalFetched += pops
         totalDeduped += lineage.map(_._6).sum
-        if (keepFetched) {
-          val f = spark.createDataset(next.flatMap(_.fetched.iterator))
-          f.write.mode(SaveMode.Overwrite).parquet(s"$ckpt/fetched/wave_$start")
-          cfg.mediaStoreDir.foreach(dir => graft.sinks.MediaStore.ingestWave(spark, f.toDF(), dir))
-        }
+        fetchedDir.foreach(ingestMedia)
         // the scalable path's writer, read back by the same readCheckpoint;
         // every pop marks at most itself and its novel follow-ups
         writeScalableCheckpoint(wave, next.flatMap(_.seen.iterator.map(b => (b.bucket, b))),
           next.flatMap(_.queued.iterator.map(r => (r.host_bucket, r))), pendingRows,
-          pops + lineage.map(_._7).sum, nextSeq, totalFetched, totalDeduped, sinceWave = start)
+          pops + lineage.map(_._7).sum, seenCount, nextSeq, totalFetched, totalDeduped,
+          sinceWave = start)
         flushLineage(wave, scala.collection.mutable.ArrayBuffer.from(lineage))
       }
       done = pendingRows == 0

@@ -1,7 +1,7 @@
 package graft.engine
 
 import graft.SparkTestSession
-import graft.model.UrlRecord
+import graft.model.{FetchResult, Span, UrlRecord}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +19,17 @@ class PlaneWriterSpec extends AnyFunSuite {
   val seen = Seq((Long.MinValue, "https://例え.jp/パス", 3, 0),
     (Long.MaxValue, "http://a.example/x", 0, 7), (0L, null, 1, 2))
   val lineage = Seq((0, 1, 2L, 3L, 0L, Long.MaxValue, Long.MinValue), (5, 0, 0L, 0L, 1L, 2L, 3L))
+  val fetched = Seq(
+    FetchResult("https://例え.jp/パス", "https://例え.jp/パス", Long.MinValue, "例え.jp", 3,
+      "follow_links", Map("ключ" -> "значение", "none" -> null), 0, Long.MaxValue, 200,
+      from_cache = false, 1L, 2L, 0, 1, "https://例え.jp/パス",
+      Seq(Span("text", "本文 ü — 第1段", null, 0), Span("link", "次へ", "/次", Int.MaxValue),
+        Span(null, null, null, -1))),
+    FetchResult("http://a.example/img", "http://a.example/img", Long.MaxValue, "a.example", 0,
+      "media", Map.empty, Int.MaxValue, -1L, 200, from_cache = true, Long.MinValue, Long.MaxValue,
+      -1, -1, "http://a.example/img", Nil, "image/png", Array[Byte](0, -1, 127, -128, 10)),
+    FetchResult("u", "c", 0L, null, -1, null, Map("k" -> ""), -1, 0L, 404, from_cache = false,
+      0L, 0L, 2, 0, null, Nil, null, null))
 
   def parts(dir: String): Seq[java.io.File] =
     new java.io.File(dir).listFiles().toSeq.filter(f => f.getName.startsWith("part-") &&
@@ -58,7 +69,18 @@ class PlaneWriterSpec extends AnyFunSuite {
     PlaneWriter.writeDir(s"$base/plane_lineage", PlaneWriter.lineageSchema, lineage.iterator)
     assertSameRead(s"$base/spark_lineage", s"$base/plane_lineage")
 
-    for (p <- Seq("pending", "seen", "lineage")) {
+    // the fetched plane: a list of structs, a binary column, nulls at
+    // every level
+    spark.createDataset(fetched).write.parquet(s"$base/spark_fetched")
+    PlaneWriter.writeDir(s"$base/plane_fetched", PlaneWriter.fetchResultSchema, fetched.iterator)
+    assertSameRead(s"$base/spark_fetched", s"$base/plane_fetched")
+    val back = spark.read.schema(PlaneWriter.fetchResultSchema).parquet(s"$base/plane_fetched")
+      .as[FetchResult].collect().toSeq.sortBy(_.seq)
+    assert(back.map(_.copy(media_bytes = null)) == fetched.sortBy(_.seq).map(_.copy(media_bytes = null)))
+    assert(back.map(r => Option(r.media_bytes).map(_.toSeq)) ==
+      fetched.sortBy(_.seq).map(r => Option(r.media_bytes).map(_.toSeq)))
+
+    for (p <- Seq("pending", "seen", "lineage", "fetched")) {
       assert(parts(s"$base/plane_$p").length == 1)
       assert(hidden(s"$base/plane_$p").isEmpty) // the temp file was renamed
     }

@@ -60,6 +60,23 @@ class WaveEngineSpec extends AnyFunSuite {
     engine.fetchedTable().select($"canonical", $"status").as[(String, Int)].collect().toSet
   }
 
+  /** A fetched page no crawl of `site` fetches. */
+  val staleFetch: graft.model.FetchResult = {
+    val canon = "https://stale.example/x"
+    graft.model.FetchResult(canon, canon, graft.urls.UrlCanon.urlHash(canon), "stale.example", 0,
+      "follow_links", Map.empty, 2, 1L << 40, 200, from_cache = false, 0L, 0L, 0, 0, canon, Nil)
+  }
+
+  /** Adds `row` to `dir` as a stale part file: one no attempt of a
+    * checkpoint task or fetch task writes (its index is above theirs). */
+  def writeStale(dir: String, schema: org.apache.spark.sql.types.StructType, row: Product): Unit = {
+    val tmp = SparkTestSession.tmpDir("stale")
+    PlaneWriter.writeDir(tmp, schema, Iterator(row))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    java.nio.file.Files.move(java.nio.file.Paths.get(tmp, "part-00000-c000.snappy.parquet"),
+      java.nio.file.Paths.get(dir, "part-00097-c000.snappy.parquet"))
+  }
+
   /** Spark jobs that `body` runs on this thread. */
   def jobsOf[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
@@ -125,10 +142,10 @@ class WaveEngineSpec extends AnyFunSuite {
     assert(orderSmall && orderBig)
     assert(jobsSmall == jobsBig, s"jobs: $jobsSmall for ${site.totalPages} pages, " +
       s"$jobsBig for ${big.totalPages}")
-    // exactly: the interval, the fetched table write and the one-job
-    // checkpoint; the start requests, the lineage and the seen total come
-    // from the driver
-    assert(jobsSmall == 3, s"jobs: $jobsSmall")
+    // exactly: the interval, whose task also writes the fetched pages, and
+    // the one-job checkpoint; the start requests, the lineage and the seen
+    // total come from the driver
+    assert(jobsSmall == 2, s"jobs: $jobsSmall")
   }
 
   test("reference-order kill/resume replays the Scrapy LIFO order exactly; no filter blobs") {
@@ -217,28 +234,36 @@ class WaveEngineSpec extends AnyFunSuite {
   }
 
   test("scalable run: one job per wave and per checkpoint, and no other job") {
-    def runJobs(every: Int): (CrawlRunResult, Int) = {
-      val e = new WaveEngine(spark, site, parsers, CrawlConfig(
-        checkpointDir = SparkTestSession.tmpDir(s"jobs$every"), hostBuckets = 8, fetchPartitions = 4,
-        maxPerHostPerWave = Int.MaxValue, keepFetched = false, checkpointEvery = every))
-      jobsOf(e.run(seeds))
+    // the fetched table costs no job: the fetch tasks write it
+    for (keep <- Seq(false, true)) {
+      def runJobs(every: Int): (CrawlRunResult, Int) = {
+        val e = new WaveEngine(spark, site, parsers, CrawlConfig(
+          checkpointDir = SparkTestSession.tmpDir(s"jobs$every$keep"), hostBuckets = 8,
+          fetchPartitions = 4, maxPerHostPerWave = Int.MaxValue, keepFetched = keep,
+          checkpointEvery = every))
+        val (r, jobs) = jobsOf(e.run(seeds))
+        if (keep) assert(e.fetchedTable().count() == r.fetched)
+        (r, jobs)
+      }
+      val (rare, jobsRare) = runJobs(1000000)
+      assert(rare.fetched == site.totalPages && rare.waves >= 3)
+      // the seed wave, the wave-0 checkpoint and the exit checkpoint
+      assert(jobsRare == rare.waves + 3, s"keepFetched $keep: $jobsRare jobs for ${rare.waves} waves")
+      val (every, jobsEvery) = runJobs(1)
+      assert(every == rare.copy(elapsedMs = every.elapsedMs))
+      // one checkpoint job per wave; the last wave's is the exit checkpoint
+      assert(jobsEvery == 2 * every.waves + 2,
+        s"keepFetched $keep: $jobsEvery jobs for ${every.waves} waves")
     }
-    val (rare, jobsRare) = runJobs(1000000)
-    assert(rare.fetched == site.totalPages && rare.waves >= 3)
-    // the seed wave, the wave-0 checkpoint and the exit checkpoint
-    assert(jobsRare == rare.waves + 3, s"$jobsRare jobs for ${rare.waves} waves")
-    val (every, jobsEvery) = runJobs(1)
-    assert(every == rare.copy(elapsedMs = every.elapsedMs))
-    // one checkpoint job per wave; the last wave's is the exit checkpoint
-    assert(jobsEvery == 2 * every.waves + 2, s"$jobsEvery jobs for ${every.waves} waves")
   }
 
   test("a crashed checkpoint write's leftovers are ignored or cleared; resume equals an uninterrupted run") {
     // a task killed mid-write leaves its hidden temp file, in a committed
     // checkpoint's dirs (every reader skips it) and above LATEST; an
     // attempt at the next checkpoint that never committed can also leave
-    // whole part files above LATEST. Resume deletes orphan seen flushes,
-    // and a checkpoint clears each plane dir before writing it.
+    // whole part files above LATEST: checkpoint planes, a seen compact and
+    // fetched pages. Resume deletes every per-wave dir above LATEST, and a
+    // checkpoint clears each plane dir before writing it.
     for (ref <- Seq(false, true)) {
       def cfgOf(ckpt: String, maxW: Int = 10000) = CrawlConfig(checkpointDir = ckpt,
         referenceOrder = ref, hostBuckets = 8, fetchPartitions = 2, maxPerHostPerWave = 1,
@@ -250,30 +275,50 @@ class WaveEngineSpec extends AnyFunSuite {
       val ckpt = SparkTestSession.tmpDir(s"tmpleft$ref")
       new WaveEngine(spark, site, parsers, cfgOf(ckpt, maxW = 2)).run(seeds)
       assert(new WaveEngine(spark, site, parsers, cfgOf(ckpt)).latestCheckpointWave.contains(2))
-      Seq("pending_w2", "seen/flush_2", "pending_w3", "seen/flush_3").foreach { d =>
+      Seq("pending_w2", "seen/flush_2", "pending_w3", "seen/flush_3", "fetched/wave_3").foreach { d =>
         val f = new java.io.File(s"$ckpt/$d/.part-00000-c000.snappy.parquet.crashed.tmp")
         f.getParentFile.mkdirs()
         java.nio.file.Files.writeString(f.toPath, "a torn write, not parquet")
       }
       // a part file of the uncommitted wave-3 attempt, holding a row no
-      // uninterrupted run fetches
-      val canon = "https://stale.example/x"
-      val staleDir = SparkTestSession.tmpDir("stale")
-      PlaneWriter.writeDir(staleDir, PlaneWriter.urlRecordSchema, Iterator(UrlRecord(canon, canon,
-        graft.urls.UrlCanon.urlHash(canon), "stale.example", 0, "follow_links", Map.empty, 0,
-        is_seed = false, wave = 3, seq = 1L << 40)))
-      java.nio.file.Files.move(java.nio.file.Paths.get(staleDir, "part-00000-c000.snappy.parquet"),
-        java.nio.file.Paths.get(ckpt, "pending_w3", "part-00007-c000.snappy.parquet"))
+      // uninterrupted run fetches ...
+      writeStale(s"$ckpt/pending_w3", PlaneWriter.urlRecordSchema, UrlRecord(staleFetch.url,
+        staleFetch.canonical, staleFetch.url_hash, staleFetch.host, 0, "follow_links", Map.empty, 0,
+        is_seed = false, wave = 3, seq = 1L << 40))
+      // ... and its fetched page and a seen compact holding its mark
+      writeStale(s"$ckpt/fetched/wave_3", PlaneWriter.fetchResultSchema, staleFetch)
+      writeStale(s"$ckpt/seen/compact_3", PlaneWriter.seenSchema,
+        (staleFetch.url_hash, staleFetch.canonical, 0, 3))
 
       new WaveEngine(spark, site, parsers, cfgOf(ckpt, maxW = 3)).resume()
       for (d <- Seq("pending_w3", "seen/flush_3")) {
         assert(new java.io.File(s"$ckpt/$d").list().toSeq == Seq("part-00000-c000.snappy.parquet"), d)
       }
+      for (d <- Seq("seen/compact_3", "fetched/wave_3")) assert(!new java.io.File(s"$ckpt/$d").exists(), d)
       val resumed = new WaveEngine(spark, site, parsers, cfgOf(ckpt))
-      resumed.resume()
+      val res = resumed.resume()
+      assert(resumed.fetchedTable().count() == res.fetched)
       assert(fetchedSet(resumed) == fetchedSet(full))
       assert(seenHashSet(ckpt) == seenHashSet(fullCkpt))
       if (ref) assert(fetchOrder(resumed) == fetchOrder(full))
+    }
+  }
+
+  test("resume deletes uncommitted fetched pages: the fetched table holds exactly the run's pages") {
+    // a crash after a fetch wave (or interval) wrote its pages but before
+    // its checkpoint committed leaves fetched/wave_<LATEST> behind; a
+    // resume that pops nothing must not count it
+    for (ref <- Seq(false, true)) {
+      val ckpt = SparkTestSession.tmpDir(s"fetchedorphan$ref")
+      def cfgOf(maxW: Int) = CrawlConfig(checkpointDir = ckpt, referenceOrder = ref,
+        hostBuckets = 8, fetchPartitions = 2, maxPerHostPerWave = 1, maxWaves = maxW)
+      val first = new WaveEngine(spark, site, parsers, cfgOf(2)).run(seeds)
+      val idle = new WaveEngine(spark, site, parsers, cfgOf(2))
+      assert(idle.latestCheckpointWave.contains(2))
+      writeStale(s"$ckpt/fetched/wave_2", PlaneWriter.fetchResultSchema, staleFetch)
+      val res = idle.resume()
+      assert(res.waves == 0 && res.fetched == first.fetched)
+      assert(idle.fetchedTable().count() == res.fetched, s"referenceOrder $ref")
     }
   }
 
