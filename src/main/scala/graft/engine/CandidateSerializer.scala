@@ -31,9 +31,13 @@ import scala.reflect.ClassTag
  * unsigned LEB128: a negative int takes 5 bytes and a negative long 10,
  * and both round-trip.
  *
- * Both sides buffer [[CandidateSerializer.BufferSize]] bytes: Spark hands
- * the reduce side an unbuffered local shuffle-block stream (with shuffle
- * compression off, every read on it is a read call on the block's file).
+ * The read side buffers [[CandidateSerializer.ReadBufferSize]] bytes:
+ * Spark hands the reduce side an unbuffered local shuffle-block stream
+ * (with shuffle compression off, every read on it is a read call on the
+ * block's file). The write side only batches the field-by-field writes in
+ * [[CandidateSerializer.WriteBufferSize]] bytes: Spark's disk writer
+ * behind it is buffered already, and a map task holds one open stream per
+ * reduce partition for its whole run.
  *
  * Only (Int, Candidate) pairs are accepted; anything else fails loudly.
  * A stream that ends inside a record throws [[StreamCorruptedException]],
@@ -45,8 +49,12 @@ final class CandidateSerializer extends Serializer with Serializable {
 
 object CandidateSerializer {
 
-  /** Read and write buffer size per stream. */
-  val BufferSize: Int = 1 << 14
+  /** Read buffer size per stream; also the longest ASCII string read in
+    * one copy. */
+  val ReadBufferSize: Int = 1 << 14
+
+  /** Write buffer size per stream (at least the 10 bytes of a varlong). */
+  val WriteBufferSize: Int = 1 << 10
 
   private def unsupported(what: String, x: Any): Nothing =
     throw new IllegalArgumentException(
@@ -77,7 +85,7 @@ object CandidateSerializer {
   }
 
   private final class Output(out: OutputStream) extends SerializationStream {
-    private val buf = new Array[Byte](BufferSize)
+    private val buf = new Array[Byte](WriteBufferSize)
     private var pos = 0
 
     private def drain(): Unit =
@@ -170,11 +178,11 @@ object CandidateSerializer {
   }
 
   private final class Input(in: InputStream) extends DeserializationStream {
-    private val buf = new Array[Byte](BufferSize)
+    private val buf = new Array[Byte](ReadBufferSize)
     private var pos = 0
     private var lim = 0
 
-    /** Buffers at least `n` (≤ BufferSize) bytes; false if the stream
+    /** Buffers at least `n` (≤ ReadBufferSize) bytes; false if the stream
       * ends first. */
     private def fill(n: Int): Boolean = {
       if (lim - pos < n) {
@@ -236,7 +244,7 @@ object CandidateSerializer {
       else {
         val n = h - 1
         // fast path: an ASCII string wholly in the buffer is its bytes
-        if (n <= BufferSize && fill(n) && asciiAhead(n)) {
+        if (n <= ReadBufferSize && fill(n) && asciiAhead(n)) {
           val s = new String(buf, pos, n, StandardCharsets.ISO_8859_1)
           pos += n
           s

@@ -183,6 +183,11 @@ final case class UrlFilterSkippingParser(inner: PageParser,
 final case class CrawlConfig(
     checkpointDir: String,
     hostBuckets: Int = 64,
+    // the frontier's PARTITION count, not its task count: it sets the
+    // bucket → partition map, the state and pending partitions, the
+    // checkpoint and fetched part files, and one lineage row per partition
+    // per wave. Each scalable loop job runs in min(fetchPartitions,
+    // defaultParallelism) tasks, each running whole partitions in turn.
     fetchPartitions: Int = 32,
     politenessRps: Double = 1.0, // per host (reference: 1 rps GLOBAL; cross-host parallelism is the whole point)
     maxPerHostPerWave: Int = 256, // politeness budget per wave per host (Int.MaxValue = uncapped fast path)
@@ -502,9 +507,14 @@ private[engine] object WaveCore {
     * enforced with actual sleeps against the wall clock and
     * `fetched_at_ms` records the true fetch time; in simulated mode the
     * planned timestamp is recorded (deterministic). `stored_at_ms` is
-    * wall-clock in BOTH modes — it alone feeds the fetch-cache TTL (S11). */
+    * wall-clock in BOTH modes — it alone feeds the fetch-cache TTL (S11).
+    * `pid` is the fetch partition's index, which the lineage row and
+    * `partition_id` carry: the caller takes it from
+    * `mapPartitionsWithIndex`, because a task that runs several fetch
+    * partitions (a coalesced wave) has one `TaskContext` partition id. */
   def fetchIter(
       it: Iterator[UrlRecord],
+      pid: Int,
       f: Fetcher,
       rps: Double,
       realtime: Boolean,
@@ -518,7 +528,6 @@ private[engine] object WaveCore {
     // allocated a map, per-host arrays, and a tuple key per row
     val rows = it.toArray
     java.util.Arrays.sort(rows, UrlRecordOrder)
-    val pid = TaskContext.getPartitionId()
     // STREAMING: each FetchResult (page body + spans) is born when the
     // downstream parse pulls it and is garbage right after — materializing
     // the partition's results up front kept 100s of MB live per task and
@@ -527,6 +536,11 @@ private[engine] object WaveCore {
     // exhaustion, or — when a downstream consumer stops early (take/limit
     // short-circuit) — from the task-completion listener, so partial
     // consumption still emits the partition's lineage row (ADVICE r2).
+    // The listener holds only the counts, never this iterator: a coalesced
+    // task runs several fetch partitions, and a finished partition's rows
+    // must not stay live until the task ends.
+    val counts = new LineageCounts(pid, lineageAcc)
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => counts.report()))
     new Iterator[FetchResult] {
       private var i = 0
       private var slot = 0
@@ -534,21 +548,10 @@ private[engine] object WaveCore {
       private var hostStartMs = waveStartMs
       private var hostMsPerFetch = 0.0
       private var lastFetchMs = Long.MinValue // actual start of this host's previous fetch
-      private var nIn = 0L
-      private var nOk = 0L
-      private var nErr = 0L
-      private var reported = false
-
-      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
-        if (!reported) { reported = true; lineageAcc.add((pid, nIn, nOk, nErr)) }
-      })
 
       def hasNext: Boolean = {
         if (i < rows.length) true
-        else {
-          if (!reported) { reported = true; lineageAcc.add((pid, nIn, nOk, nErr)) }
-          false
-        }
+        else { counts.report(); false }
       }
 
       def next(): FetchResult = {
@@ -583,14 +586,21 @@ private[engine] object WaveCore {
           t
         } else plannedMs
         val out = fetchOne(r, f, fetchWave, fetchedAt, slot, pid)
-        nIn += 1
-        if (out.status >= 200 && out.status < 300) nOk += 1
-        if (out.status >= 400) nErr += 1
+        counts.nIn += 1
+        if (out.status >= 200 && out.status < 300) counts.nOk += 1
+        if (out.status >= 400) counts.nErr += 1
         slot += 1
         i += 1
         out
       }
     }
+  }
+
+  /** One fetch partition's lineage counts, added to `acc` once. */
+  private final class LineageCounts(pid: Int, acc: CollectionAccumulator[(Int, Long, Long, Long)]) {
+    var nIn, nOk, nErr = 0L
+    private var reported = false
+    def report(): Unit = if (!reported) { reported = true; acc.add((pid, nIn, nOk, nErr)) }
   }
 
   /** Fetch one frontier row, stamped `fetchedAt` by the caller's pacer. */
@@ -976,8 +986,11 @@ private[engine] object WaveCore {
  *    mapGroupsWithState across micro-batches;
  *  - fine partitions keep hot hosts from straggling only while a task's
  *    fixed cost stays small next to its rows, so the loop carries no
- *    per-task set-up it can avoid: the candidate shuffle is written by
- *    the fixed [[CandidateSerializer]] codec (no per-task Kryo instances),
+ *    per-task set-up it can avoid: every loop job runs its partitions in
+ *    at most one task per core (a narrow coalesce; a bulk wave's map side
+ *    writes slots × fetchPartitions shuffle files, not fetchPartitions²),
+ *    the candidate shuffle is written by the fixed [[CandidateSerializer]]
+ *    codec (no per-task Kryo instances),
  *    the empty seed/resume state is built in place (no shuffle), and a
  *    checkpoint is ONE job whose tasks write every plane with
  *    [[PlaneWriter]], coalesced to one part file per 2^20 rows instead of
@@ -1028,6 +1041,17 @@ class WaveEngine(
   import PlaneWriter.{fetchResultSchema, lineageSchema, seenSchema, urlRecordSchema}
 
   private val partitioner = new HashPartitioner(cfg.fetchPartitions)
+
+  /** Task slots of a scalable loop job: one per core, at most one per
+    * fetch partition. */
+  private val slots = math.min(cfg.fetchPartitions, sc.defaultParallelism)
+
+  /** `rdd` run in at most [[slots]] tasks. The coalesce is narrow (no
+    * shuffle): each task runs whole partitions of `rdd` one after another,
+    * so a fetch partition stays the unit of fetch order, lineage and part
+    * files while the task count follows the cores. */
+  private def inSlots[T](rdd: RDD[T]): RDD[T] =
+    if (rdd.getNumPartitions > slots) rdd.coalesce(slots) else rdd
 
   // ------------------------------------------------------------------
   // checkpointing (north rule: resumable, per-partition lineage + metrics)
@@ -1309,7 +1333,7 @@ class WaveEngine(
     val nB = cfg.hostBuckets.toLong
     val maxPerHostB = cfg.maxPagesPerHost // local: closures must not capture `this`
     val seedCands = shuffleCandidates(
-      sc.parallelize(seedCandidates(seeds), cfg.fetchPartitions).map(c => (c.host_bucket, c)))
+      sc.parallelize(seedCandidates(seeds), slots).map(c => (c.host_bucket, c)))
     // the seed wave runs through the same advance pass as every other wave:
     // seeds are marked seen at enqueue and get interleaved seqs
     val out0 = seedCands.zipPartitions(emptyStateRdd(), preservesPartitioning = true) {
@@ -1317,7 +1341,8 @@ class WaveEngine(
         seedWave = true, nBuckets = nB, maxPerHost = maxPerHostB)
     }
     out0.localCheckpoint()
-    val (nSeeds, seen0) = out0.map { case (_, bw) => (bw.novel.length.toLong, bw.state.count) }
+    val (nSeeds, seen0) = inSlots(out0)
+      .map { case (_, bw) => (bw.novel.length.toLong, bw.state.count) }
       .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
     val nextSeq = (nSeeds + 1) * nB
     val state0 = out0.mapValues(_.state)
@@ -1383,9 +1408,9 @@ class WaveEngine(
     val pendingKeyed = pending.persist(StorageLevel.MEMORY_AND_DISK)
     // one job materializes the rebuilt state and the pending rows, and
     // counts the seen marks and the first batch
-    val (seen0, batch0) = out0.zipPartitions(pendingKeyed) { (o, p) =>
+    val (seen0, batch0) = inSlots(out0.zipPartitions(pendingKeyed) { (o, p) =>
       Iterator.single((o.map(_._2.state.count).sum, p.size.toLong))
-    }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+    }).reduce((a, b) => (a._1 + b._1, a._2 + b._2))
     loopScalable(wave, out0, pendingKeyed, Some(pendingKeyed), batch0, seen0, nextSeq, fetched,
       deduped, lastFlushed0 = wave)
   }
@@ -1411,6 +1436,17 @@ class WaveEngine(
    * media store, a fresh run is `waves + 3` jobs at `checkpointEvery` ≥
    * waves (seed wave, wave-0 and exit checkpoints) and one checkpoint job
    * more per checkpointed wave, with or without the fetched table.
+   *
+   * Task accounting: every job here runs in [[slots]] = min(fetchPartitions,
+   * defaultParallelism) tasks through [[inSlots]]. A wave is two stages of
+   * `slots` tasks: the map stage fetches, parses, writes the fetched pages
+   * and combines candidates once per fetch partition (the partition's
+   * index, from `mapPartitionsWithIndex`, names its lineage row,
+   * `partition_id` and part file); the reduce stage advances groups of the
+   * state's partitions and fills the persisted wave output's blocks, which
+   * the job's local checkpoint then cuts. A checkpoint job runs in
+   * [[checkpointFiles]] tasks. So a 5-wave crawl at 32 fetch partitions on
+   * 4 cores, with its seed wave and two checkpoints, runs 50 tasks.
    */
   private def loopScalable(
       startWave: Int,
@@ -1471,7 +1507,7 @@ class WaveEngine(
           }
           .partitionBy(partitioner)
           .persist(StorageLevel.MEMORY_AND_DISK)
-        r.count() // materialize once, ahead of the first wave
+        inSlots(r).count() // materialize once, ahead of the first wave
         r
       }
     // every host resolves its robots exactly once, INCLUDING hosts with
@@ -1552,7 +1588,7 @@ class WaveEngine(
         // actually discovered under — hostOf strips ports from gate keys,
         // and "https://host/robots.txt" would miss http-only or
         // non-default-port sites entirely
-        val hostOrigins = hostScan.map { case (_, r) =>
+        val hostOrigins = inSlots(hostScan).map { case (_, r) =>
           val p = UrlCanon.parse(r.canonical)
           val origin =
             if (p.scheme != null && p.authority != null) p.scheme + "://" + p.authority
@@ -1592,7 +1628,7 @@ class WaveEngine(
                   !prefixes.exists(path.startsWith)
               }
             }.persist(StorageLevel.MEMORY_AND_DISK)
-            batchCount = gated.count()
+            batchCount = inSlots(gated).count()
             pendingRetained.foreach(_.unpersist(blocking = false))
             pending = gated
             pendingRetained = Some(gated: RDD[_])
@@ -1668,7 +1704,7 @@ class WaveEngine(
             preservesPartitioning = true)
           val d = sel.mapPartitions(_.collect { case (false, r) => (r.host_bucket, r) },
             preservesPartitioning = true)
-          (b, Some(d), b.count(), Some(sel: RDD[_]))
+          (b, Some(d), inSlots(b).count(), Some(sel: RDD[_]))
         }
 
       // per-partition lineage via accumulator (at-least-once under task
@@ -1681,6 +1717,8 @@ class WaveEngine(
       // carried per-host next-allowed time (cross-wave politeness
       // continuity); the pace map rides the already-persisted state
       // blocks, and simulated mode skips that read entirely.
+      // The fetch partition's index comes from mapPartitionsWithIndex (see
+      // fetchIter); the realtime zip hands its pace map and rows on to it.
       def liveFetch(rows: RDD[UrlRecord]): RDD[FetchResult] =
         if (realtime)
           state.zipPartitions(rows) { (st, it) =>
@@ -1690,11 +1728,14 @@ class WaveEngine(
                 m.updatedWith(h)(prev => Some(math.max(prev.getOrElse(0L), ms)))
               }
             }
-            WaveCore.fetchIter(it, fetcherL, rps, realtime, fetchWave, waveStartMs,
+            Iterator.single((pace, it))
+          }.mapPartitionsWithIndex { (pid, paced) =>
+            val (pace, it) = paced.next()
+            WaveCore.fetchIter(it, pid, fetcherL, rps, realtime, fetchWave, waveStartMs,
               lineageAcc, pace, robotsRpsW)
           }
-        else rows.mapPartitions(it =>
-          WaveCore.fetchIter(it, fetcherL, rps, realtime, fetchWave, waveStartMs,
+        else rows.mapPartitionsWithIndex((pid, it) =>
+          WaveCore.fetchIter(it, pid, fetcherL, rps, realtime, fetchWave, waveStartMs,
             lineageAcc, robotsRps = robotsRpsW))
 
       // S14: stamp each live-fetch row with its stored validator (left
@@ -1793,7 +1834,9 @@ class WaveEngine(
           WaveCore.combineCandidates(it.flatMap(fr =>
               WaveCore.candidateIter(fr, parsersB.value, buckets, robotsEnabled, robotsW)))
             .map(c => (c.host_bucket, c)))
-      val cands = shuffleCandidates(candsRaw)
+      // the map stage runs in slots: each task fetches, parses and
+      // combines whole fetch partitions and writes one shuffle output
+      val cands = shuffleCandidates(inSlots(candsRaw))
 
       // advance the seen state: dedup + seq + seen-set add in one pass
       val base = nextSeq
@@ -1812,7 +1855,9 @@ class WaveEngine(
       // young-GC copy time — but that object graph no longer exists)
       newOut.persist(StorageLevel.MEMORY_AND_DISK)
       newOut.localCheckpoint()
-      val (novelCount, emitted, seenCount) = newOut
+      // in slots too: the coalesced tasks fill newOut's cache blocks, and
+      // the job's checkpoint step still reaches newOut through the coalesce
+      val (novelCount, emitted, seenCount) = inSlots(newOut)
         .map { case (_, bw) => (bw.novel.length.toLong, bw.nCandidates, bw.state.count) }
         .reduce((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3)) // the materializing action
 
@@ -1833,7 +1878,7 @@ class WaveEngine(
         case None => (novelOf(newOut), None, novelCount)
         case Some(d) =>
           val np = d.union(novelOf(newOut)).persist(StorageLevel.MEMORY_AND_DISK)
-          val n = np.count()
+          val n = inSlots(np).count()
           (np, Some(np: RDD[_]), n)
       }
 

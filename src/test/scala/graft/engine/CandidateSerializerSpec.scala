@@ -40,10 +40,13 @@ class CandidateSerializerSpec extends AnyFunSuite {
       cand(6).copy(parent_seq = Long.MaxValue, url_hash = Long.MinValue),
       cand(7).copy(meta = null, parse_fn = null, canonical = "ü" * 5000),
       cand(8).copy(url = "https://h8.example.jp/" + "a" * 40000))
+    import CandidateSerializer.{ReadBufferSize, WriteBufferSize}
+    // the long strings cross both buffers, non-ASCII and ASCII alike
+    assert(5000 * 2 > WriteBufferSize && 40000 > 2 * ReadBufferSize)
     assert(odd(2).canonical == "" && odd(2).parse_fn == WaveCore.PaceFn)
     val pairs = odd.map(c => (c.host_bucket, c)) ++ (0 until 3000).map(i => (i % 128, cand(i)))
     val bytes = write(pairs)
-    assert(bytes.length > 4 * CandidateSerializer.BufferSize)
+    assert(bytes.length > 4 * math.max(ReadBufferSize, WriteBufferSize))
     assert(read(bytes) == pairs)
     // a new Candidate field needs a place in the codec's record layout
     assert(cand(0).productArity == 10)

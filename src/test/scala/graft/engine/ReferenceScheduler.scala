@@ -9,7 +9,7 @@ import graft.urls.UrlCanon
  * tested against (SURVEY.md §5.3).
  *
  * Models Scrapy under the reference's settings
- * (/root/reference/crawler/settings.py:23,28 — CONCURRENT_REQUESTS=1,
+ * (the reference crawler's settings.py:23,28 — CONCURRENT_REQUESTS=1,
  * DOWNLOAD_DELAY=1):
  *  - one request in flight at a time (globally sequential, ≤1 rps);
  *  - follow-ups pushed to a LIFO memory queue as yielded, popped

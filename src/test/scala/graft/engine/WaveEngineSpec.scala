@@ -6,6 +6,8 @@ import graft.model.UrlRecord
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 class WaveEngineSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -77,26 +79,37 @@ class WaveEngineSpec extends AnyFunSuite {
       java.nio.file.Paths.get(dir, "part-00097-c000.snappy.parquet"))
   }
 
-  /** Spark jobs that `body` runs on this thread. */
-  def jobsOf[T](body: => T): (T, Int) = {
+  /** Spark jobs that `body` runs on this thread, and the task count of
+    * every stage they submit. */
+  def sparkWorkOf[T](body: => T): (T, Int, Seq[Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
     val sc = spark.sparkContext
     val group = s"jobs-${java.util.UUID.randomUUID()}"
+    def ours(p: java.util.Properties) = p != null && p.getProperty("spark.jobGroup.id") == group
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (ours(e.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties)) stageTasks.add(e.stageInfo.numTasks)
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, group)
     try {
       val out = body
       org.apache.spark.ListenerDrain(sc)
-      (out, jobs.get())
+      (out, jobs.get(), stageTasks.asScala.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** Spark jobs that `body` runs on this thread. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val (out, jobs, _) = sparkWorkOf(body)
+    (out, jobs)
   }
 
   test("reference-order mode replays the Scrapy LIFO order exactly") {
@@ -353,6 +366,96 @@ class WaveEngineSpec extends AnyFunSuite {
     assert(res256.deduped == res2.deduped)
   }
 
+  test("waves run in task slots; fetch partitions keep their identity in lineage, rows and part files") {
+    // 12 hosts over 64 buckets spread over many fetch partitions, so a
+    // coalesced task runs several non-empty ones
+    val s12 = SyntheticSite(nHosts = 12, basePagesPerHost = 6, branching = 2, hotFactor = 2)
+    val seeds12 = (0 until 12).map(k => SeedSpec(s12.pageUrl(k, 0)))
+    val cores = spark.sparkContext.defaultParallelism
+    def run(parts: Int): (Set[String], Map[String, Seq[String]], Seq[Int]) = {
+      val ckpt = SparkTestSession.tmpDir(s"slots$parts")
+      val e = new WaveEngine(spark, s12, parsers, CrawlConfig(checkpointDir = ckpt,
+        hostBuckets = 64, fetchPartitions = parts, maxPerHostPerWave = 3))
+      val (res, _, stageTasks) = sparkWorkOf(e.run(seeds12))
+      assert(res.fetched == s12.totalPages && res.waves >= 3)
+      import spark.implicits._
+      // one lineage row per fetch partition per wave, ids 0 until parts
+      val ids = e.lineageTable().select($"wave", $"partition_id").as[(Int, Int)].collect()
+        .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
+      assert(ids.size == res.waves)
+      ids.foreach { case (w, ps) => assert(ps == (0 until parts), s"wave $w: $ps") }
+      assert(e.lineageReport().select($"n_partitions").as[Long].collect().forall(_ == parts))
+      // a page's partition is its bucket's, and its part file is named by it
+      val rows = e.fetchedTable()
+        .select($"host_bucket", $"partition_id", input_file_name().as("file"))
+        .as[(Int, Int, String)].collect()
+      assert(rows.length == res.fetched)
+      rows.foreach { case (b, pid, file) =>
+        assert(pid == b % parts, s"bucket $b in partition $pid")
+        assert(file.contains(f"/part-$pid%05d-"), s"partition $pid in $file")
+      }
+      (fetchedSet(e).map(_._1), perHostOrder(e), stageTasks)
+    }
+    val (set2, order2, _) = run(2)
+    for (parts <- Seq(8, 256)) {
+      val (set, order, stageTasks) = run(parts)
+      val slots = math.min(parts, cores)
+      assert(stageTasks.max == slots, s"fetchPartitions $parts: stage tasks $stageTasks")
+      assert(set == set2 && order == order2, s"fetchPartitions $parts")
+    }
+  }
+
+  test("the state RDD's lineage stays cut when the wave's reduce runs in slots") {
+    // the reduce runs over a coalesce of the persisted wave output; the
+    // job's checkpoint step must still reach that output and cut it
+    val chain = SyntheticSite(nHosts = 2, basePagesPerHost = 12, branching = 1, hotFactor = 1)
+    val sc = spark.sparkContext
+    val firstId = sc.emptyRDD[Int].id
+    val e = new WaveEngine(spark, chain, parsers, CrawlConfig(
+      checkpointDir = SparkTestSession.tmpDir("cut"), hostBuckets = 16, fetchPartitions = 8,
+      maxPerHostPerWave = Int.MaxValue, checkpointEvery = 1000000))
+    val res = e.run((0 until 2).map(k => SeedSpec(chain.pageUrl(k, 0))))
+    assert(res.fetched == chain.totalPages && res.waves >= 5, res)
+    def depth(r: org.apache.spark.rdd.RDD[_]): Int =
+      1 + r.dependencies.map(d => depth(d.rdd)).maxOption.getOrElse(0)
+    // uncapped and simulated, the loop keeps only the last wave's output
+    val kept = sc.getPersistentRDDs.values.filter(_.id > firstId).toSeq
+    assert(kept.nonEmpty)
+    kept.foreach { r =>
+      assert(r.isCheckpointed && depth(r) <= 2, s"${r.id}: depth ${depth(r)}\n${r.toDebugString}")
+    }
+  }
+
+  test("realtime politeness holds when several fetch partitions share a task") {
+    // 8 fetch partitions on the session's 4 cores: each wave task runs
+    // two partitions one after another, and each partition's pace map and
+    // index come through the explicit-index zip. Budget 2 per host per
+    // wave gives same-host pairs inside a wave and across each boundary.
+    val s8 = SyntheticSite(nHosts = 8, basePagesPerHost = 4, branching = 2, hotFactor = 1)
+    val rps = 4.0
+    val ckpt = SparkTestSession.tmpDir("rtslots")
+    val e = new WaveEngine(spark, s8, parsers, CrawlConfig(checkpointDir = ckpt,
+      hostBuckets = 16, fetchPartitions = 8, maxPerHostPerWave = 2, politenessRps = rps,
+      realtime = true))
+    val (res, _, stageTasks) = sparkWorkOf(e.run((0 until 8).map(k => SeedSpec(s8.pageUrl(k, 0)))))
+    assert(res.fetched == s8.totalPages)
+    assert(stageTasks.max <= math.min(8, spark.sparkContext.defaultParallelism), stageTasks)
+    import spark.implicits._
+    val rows = e.fetchedTable()
+      .select($"host", $"wave", $"fetched_at_ms", $"host_bucket", $"partition_id")
+      .as[(String, Int, Long, Int, Int)].collect()
+    rows.foreach(r => assert(r._5 == r._4 % 8, s"bucket ${r._4} in partition ${r._5}"))
+    var within, across = 0
+    rows.groupBy(_._1).values.foreach { hostRows =>
+      val sorted = hostRows.sortBy(_._3)
+      sorted.zip(sorted.tail).foreach { case (a, b) =>
+        assert(b._3 - a._3 >= math.round(1000 / rps), s"${a._1}: fetches ${b._3 - a._3}ms apart (< 1/rps)")
+        if (a._2 == b._2) within += 1 else across += 1
+      }
+    }
+    assert(within > 0 && across > 0, s"$within same-wave and $across cross-wave pairs")
+  }
+
   test("lineage surface: per-wave report reconciles with the fetched table; skew audited") {
     val ckpt = SparkTestSession.tmpDir("lineage")
     val cfg = CrawlConfig(checkpointDir = ckpt, hostBuckets = 8, fetchPartitions = 4,
@@ -447,7 +550,7 @@ class WaveEngineSpec extends AnyFunSuite {
         Map.empty, 0, is_seed = true, 0, i.toLong)
     }
     val acc = new org.apache.spark.util.CollectionAccumulator[(Int, Long, Long, Long)]()
-    val out = WaveCore.fetchIter(rows.iterator, site, rps, realtime = true,
+    val out = WaveCore.fetchIter(rows.iterator, 0, site, rps, realtime = true,
       fetchWave = 0, waveStartMs = System.currentTimeMillis() - 10000L,
       lineageAcc = acc).toArray
     val ts = out.map(_.fetched_at_ms).sorted

@@ -7,11 +7,13 @@ traced run wrote, e.g. `python3 perfbench/run.py --workload crawl --seed 1
 gap before it (time no job of the span covers), its duration, and whether it
 is one of the crawl's waves. Then the totals inside and outside the waves.
 
-The trace names a job only by its number, so the waves are taken to be the
-W consecutive jobs with the largest summed duration, where W is
-`engine.waves` from the run's result JSON. That holds for `traced.run`: the
-bench crawl checkpoints only at wave 0 and at exit, so its waves run back to
-back between the seed wave and the checkpoint jobs.
+The trace names a job only by its number, so the waves are found by
+position. `traced.run` has a fixed layout: the seed wave, the wave-0
+checkpoint, W waves, and the exit checkpoint, where W is `engine.waves` from
+the run's result JSON (the bench crawl checkpoints only at wave 0 and at
+exit). So the waves are the span's jobs 2 .. W+1, counted from 0 in start
+order. Durations cannot pick them: once the waves are cheap, a checkpoint
+job can outlast a wave.
 
     python3 tools/crawl_jobs.py                     # this checkout
     python3 tools/crawl_jobs.py --root ../parent    # another checkout
@@ -40,12 +42,15 @@ def wave_count(out, run_id):
     return int(m["value"])
 
 
-def wave_window(durations, w):
-    """Start index of the w consecutive jobs with the largest summed duration."""
-    if w <= 0 or w > len(durations):
-        return None
-    sums = [sum(durations[i:i + w]) for i in range(len(durations) - w + 1)]
-    return max(range(len(sums)), key=lambda i: sums[i])
+FIRST_WAVE = 2  # after the seed wave and the wave-0 checkpoint
+
+
+def wave_flags(n_jobs, w):
+    """Per job of the span: whether it is one of the w waves (jobs 2..w+1)."""
+    if n_jobs != w + 3:
+        sys.exit("expected %d jobs in %s (seed wave, wave-0 checkpoint, %d waves, exit "
+                 "checkpoint), found %d" % (w + 3, SPAN, w, n_jobs))
+    return [FIRST_WAVE <= i < FIRST_WAVE + w for i in range(n_jobs)]
 
 
 def main():
@@ -73,8 +78,7 @@ def main():
         covered = max(covered, j["end_ms"])
     tail = max(0.0, span["end_ms"] - covered)
     wall = span["end_ms"] - span["start_ms"]
-    first = wave_window([r[2] for r in rows], waves)
-    in_wave = [first is not None and first <= i < first + waves for i in range(len(rows))]
+    in_wave = wave_flags(len(rows), waves)
 
     print("%s of %s: %d jobs, %d waves, pass %.0f ms" % (SPAN, run_id, len(rows), waves, wall))
     print("%-7s %-6s %9s %9s %9s" % ("job", "kind", "gap_ms", "job_ms", "sum_ms"))
