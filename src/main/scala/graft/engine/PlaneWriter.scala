@@ -55,6 +55,9 @@ private[engine] object PlaneWriter {
     StructField("in_count", LongType), StructField("fetched", LongType),
     StructField("errors", LongType), StructField("deduped_wave", LongType),
     StructField("novel_wave", LongType)))
+  /** A lineage row: (wave, partition_id, in_count, fetched, errors,
+    * deduped_wave, novel_wave), as [[lineageSchema]]. */
+  type LineageRow = (Int, Int, Long, Long, Long, Long, Long)
   /** A per-host plane (`pace_w*`: next_allowed_ms, `hostn_w*`: admitted). */
   private def hostSchema(value: String): StructType = StructType(Seq(
     StructField("host_bucket", IntegerType, nullable = false),

@@ -8,7 +8,6 @@ import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.util.CollectionAccumulator
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -375,11 +374,14 @@ private[engine] final case class BucketSeen(
     hostN: Map[Long, Long] = Map.empty)
 
 /** One bucket's wave output: advanced state + novel rows (with assigned
-  * seq) + the bucket's exact candidate count (for exact dedup metrics). */
+  * seq) + the bucket's exact candidate count (for exact dedup metrics) +
+  * the bucket's fetch counts (rows in, 2xx, >= 400) summed from the wave's
+  * lineage marks, which its fetch partition's lineage row adds up. */
 private[engine] final case class BucketWave(
     state: BucketSeen,
     novel: Array[UrlRecord],
-    nCandidates: Long)
+    nCandidates: Long,
+    nIn: Long = 0L, nOk: Long = 0L, nErr: Long = 0L)
 
 /** The reference-order replay's state at a checkpoint, in the scalable
   * path's own types: every bucket's seen state (`seen(b)` is bucket b) and
@@ -389,13 +391,13 @@ private[engine] final case class RefState(
     seen: Array[BucketSeen],
     queued: Array[UrlRecord],
     nextSeq: Long,
-    lineage: Array[(Int, Int, Long, Long, Long, Long, Long)] = Array.empty)
+    lineage: Array[PlaneWriter.LineageRow] = Array.empty)
 
 /** A per-wave checkpoint dir kind: `<parent>/<prefix><N>` under the
   * checkpoint root, committed by the checkpoint at wave N + `lag`. A
   * `snapshot` plane holds the whole state at N, so a newer commit makes it
-  * obsolete; the changelogs (seen flushes and compacts, fetched pages)
-  * stay until a compaction covers them, or for good. */
+  * obsolete; the changelogs (seen flushes and compacts, fetched pages,
+  * lineage rows) stay until a compaction covers them, or for good. */
 private[engine] final case class WaveDirKind(parent: String, prefix: String, lag: Int,
     snapshot: Boolean)
 
@@ -500,6 +502,51 @@ private[engine] object WaveCore {
     batches.flatten
   }
 
+  /** The map side of a wave's one shuffle, for one fetch partition's
+    * fetched rows (live fetches and cache hits alike): parse them into
+    * candidates, combine those ([[combineCandidates]]), and append, after
+    * the candidates, one [[paceMark]] per host in realtime mode (the
+    * host's last fetch + 1/[[hostRps]]) and one [[lineageMark]] per host
+    * bucket the rows came from, carrying its exact (in, 2xx, >= 400)
+    * fetch counts. The marks ride the shuffle to the bucket's reduce
+    * task, so a retried map task's marks replace its earlier ones and the
+    * wave's lineage counts each fetched row exactly once. */
+  def waveCandidates(it: Iterator[FetchResult], parserMap: Map[String, PageParser], buckets: Int,
+      robotsEnabled: Boolean, robots: Map[String, Seq[String]], realtime: Boolean, rps: Double,
+      robotsRps: Map[String, Double]): Iterator[(Int, Candidate)] = {
+    val counts = new java.util.HashMap[Int, Array[Long]]() // bucket → (in, ok, err)
+    // realtime: host → (bucket, last fetch ms, the row's meta, which
+    // carries its stamped table rate, so a mark needs no host→rate map)
+    val lastMs =
+      if (realtime) new java.util.HashMap[String, (Int, Long, Map[String, String])]() else null
+    val cands = combineCandidates(it.flatMap { fr =>
+      val n = counts.computeIfAbsent(fr.host_bucket, _ => new Array[Long](3))
+      n(0) += 1
+      if (fr.ok) n(1) += 1
+      if (fr.status >= 400) n(2) += 1
+      if (realtime) {
+        val prev = lastMs.get(fr.host)
+        if (prev == null || prev._2 < fr.fetched_at_ms)
+          lastMs.put(fr.host, (fr.host_bucket, fr.fetched_at_ms, fr.meta))
+      }
+      candidateIter(fr, parserMap, buckets, robotsEnabled, robots)
+    }).map(c => (c.host_bucket, c))
+    // ++ is by-name: the marks build AFTER the candidates are exhausted
+    cands ++ {
+      val pace =
+        if (lastMs == null) Iterator.empty
+        else lastMs.entrySet().iterator().asScala.map { e =>
+          val (b, ms, meta) = e.getValue
+          val hostMs = math.round(1000.0 / hostRps(meta, e.getKey, rps, robotsRps))
+          (b, paceMark(e.getKey, b, ms + hostMs))
+        }
+      pace ++ counts.entrySet().iterator().asScala.map { e =>
+        val c = e.getValue
+        (e.getKey: Int, lineageMark(e.getKey, c(0), c(1), c(2)))
+      }
+    }
+  }
+
   /** Per-partition politeness + fetch: per host, slots in (priority desc,
     * seq) order, paced at [[hostRps]] of the host's first row — its
     * stamped table rate or `rps`, slowed by any robots Crawl-delay in
@@ -508,10 +555,11 @@ private[engine] object WaveCore {
     * `fetched_at_ms` records the true fetch time; in simulated mode the
     * planned timestamp is recorded (deterministic). `stored_at_ms` is
     * wall-clock in BOTH modes — it alone feeds the fetch-cache TTL (S11).
-    * `pid` is the fetch partition's index, which the lineage row and
-    * `partition_id` carry: the caller takes it from
-    * `mapPartitionsWithIndex`, because a task that runs several fetch
-    * partitions (a coalesced wave) has one `TaskContext` partition id. */
+    * `pid` is the fetch partition's index, which `partition_id` carries:
+    * the caller takes it from `mapPartitionsWithIndex`, because a task that
+    * runs several fetch partitions (a coalesced wave) has one `TaskContext`
+    * partition id. The lineage counts are not kept here: the parse stage
+    * ([[waveCandidates]]) counts every fetched row, cache hits included. */
   def fetchIter(
       it: Iterator[UrlRecord],
       pid: Int,
@@ -520,7 +568,6 @@ private[engine] object WaveCore {
       realtime: Boolean,
       fetchWave: Int,
       waveStartMs: Long,
-      lineageAcc: CollectionAccumulator[(Int, Long, Long, Long)],
       pace: Map[Long, Long] = Map.empty,
       robotsRps: Map[String, Double] = Map.empty): Iterator[FetchResult] = {
     // one comparator sort groups hosts AND orders each host's run by
@@ -532,15 +579,7 @@ private[engine] object WaveCore {
     // downstream parse pulls it and is garbage right after — materializing
     // the partition's results up front kept 100s of MB live per task and
     // its survivor-copy cost dominated young-GC pauses (the measured
-    // Amdahl term of frontier scaling). Lineage is reported once: at
-    // exhaustion, or — when a downstream consumer stops early (take/limit
-    // short-circuit) — from the task-completion listener, so partial
-    // consumption still emits the partition's lineage row (ADVICE r2).
-    // The listener holds only the counts, never this iterator: a coalesced
-    // task runs several fetch partitions, and a finished partition's rows
-    // must not stay live until the task ends.
-    val counts = new LineageCounts(pid, lineageAcc)
-    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => counts.report()))
+    // Amdahl term of frontier scaling)
     new Iterator[FetchResult] {
       private var i = 0
       private var slot = 0
@@ -549,10 +588,7 @@ private[engine] object WaveCore {
       private var hostMsPerFetch = 0.0
       private var lastFetchMs = Long.MinValue // actual start of this host's previous fetch
 
-      def hasNext: Boolean = {
-        if (i < rows.length) true
-        else { counts.report(); false }
-      }
+      def hasNext: Boolean = i < rows.length
 
       def next(): FetchResult = {
         val r = rows(i)
@@ -586,21 +622,11 @@ private[engine] object WaveCore {
           t
         } else plannedMs
         val out = fetchOne(r, f, fetchWave, fetchedAt, slot, pid)
-        counts.nIn += 1
-        if (out.status >= 200 && out.status < 300) counts.nOk += 1
-        if (out.status >= 400) counts.nErr += 1
         slot += 1
         i += 1
         out
       }
     }
-  }
-
-  /** One fetch partition's lineage counts, added to `acc` once. */
-  private final class LineageCounts(pid: Int, acc: CollectionAccumulator[(Int, Long, Long, Long)]) {
-    var nIn, nOk, nErr = 0L
-    private var reported = false
-    def report(): Unit = if (!reported) { reported = true; acc.add((pid, nIn, nOk, nErr)) }
   }
 
   /** Fetch one frontier row, stamped `fetchedAt` by the caller's pacer. */
@@ -697,14 +723,27 @@ private[engine] object WaveCore {
       host_bucket = bucket, parse_fn = PaceFn,
       meta = Map.empty, priority = 0, parent_seq = nextAllowedMs, emission_idx = 0)
 
+  /** Lineage-mark pseudo-candidate marker: one fetch partition's counts for
+    * one bucket — `parent_seq` carries the rows fetched, `weight` the 2xx
+    * rows, `url_hash` the rows with status >= 400. One per (map partition,
+    * bucket) — never enters dedup. */
+  val LineageFn = "__lineage__"
+
+  def lineageMark(bucket: Int, nIn: Long, nOk: Long, nErr: Long): Candidate =
+    Candidate(url = null, canonical = "", url_hash = nErr, host_bucket = bucket,
+      parse_fn = LineageFn, meta = Map.empty, priority = 0, parent_seq = nIn,
+      emission_idx = 0, weight = nOk)
+
   /** Advance every bucket of one partition through one wave: sort the
     * bucket's candidates into discovery order, drop within-wave duplicates
     * and already-seen URLs, assign interleaved seqs (base + rank·B +
     * bucket — globally unique, per-host discovery order, independent of
     * parallelism), and add the novel keys to a fresh copy of the bucket's
-    * exact seen set (the log chunks are shared by reference). Pure
-    * function of (state, candidates): the input state is never mutated,
-    * so a retried task recomputes the same wave. */
+    * exact seen set (the log chunks are shared by reference). Pace marks
+    * fold into the state and lineage marks into the bucket's fetch counts
+    * before the sort; neither counts as a candidate. Pure function of
+    * (state, candidates): the input state is never mutated, so a retried
+    * task recomputes the same wave. */
   def advancePartition(
       states: Iterator[(Int, BucketSeen)],
       cands: Iterator[(Int, Candidate)],
@@ -715,9 +754,15 @@ private[engine] object WaveCore {
       maxPerHost: Long = Long.MaxValue): Iterator[(Int, BucketWave)] = {
     val byBucket = new java.util.HashMap[Int, scala.collection.mutable.ArrayBuffer[Candidate]]()
     val paceByBucket = new java.util.HashMap[Int, scala.collection.mutable.ArrayBuffer[Candidate]]()
+    val lineageByBucket = new java.util.HashMap[Int, Array[Long]]()
     cands.foreach { case (b, c) =>
-      val m = if (c.parse_fn == PaceFn) paceByBucket else byBucket
-      m.computeIfAbsent(b, _ => scala.collection.mutable.ArrayBuffer.empty[Candidate]) += c
+      if (c.parse_fn == LineageFn) {
+        val n = lineageByBucket.computeIfAbsent(b, _ => new Array[Long](3))
+        n(0) += c.parent_seq; n(1) += c.weight; n(2) += c.url_hash
+      } else {
+        val m = if (c.parse_fn == PaceFn) paceByBucket else byBucket
+        m.computeIfAbsent(b, _ => scala.collection.mutable.ArrayBuffer.empty[Candidate]) += c
+      }
     }
     states.map { case (b, st0) =>
       // fold pace marks first (independent of candidate novelty)
@@ -726,9 +771,10 @@ private[engine] object WaveCore {
         if (paceRows == null) st0
         else st0.copy(pace = st0.pace ++ paceRows.iterator.map(c =>
           c.url_hash -> math.max(st0.pace.getOrElse(c.url_hash, 0L), c.parent_seq)))
+      val n = lineageByBucket.getOrDefault(b, NoFetches)
       val raw = byBucket.get(b)
       if (raw == null) {
-        (b, BucketWave(st, Array.empty, 0L))
+        (b, BucketWave(st, Array.empty, 0L, n(0), n(1), n(2)))
       } else {
         val sorted = raw.toArray
         // comparator sort: sortBy would allocate a tuple key per candidate
@@ -817,10 +863,13 @@ private[engine] object WaveCore {
             bld.result()
           }
         (b, BucketWave(BucketSeen(b, seen, log, st.count + nn + nd, st.pace, hostN),
-          recs, emittedW))
+          recs, emittedW, n(0), n(1), n(2)))
       }
     }
   }
+
+  /** The fetch counts of a bucket no lineage mark reached (never written). */
+  private val NoFetches = new Array[Long](3)
 
   private val CandidateOrder: java.util.Comparator[Candidate] =
     new java.util.Comparator[Candidate] with Serializable {
@@ -1007,9 +1056,11 @@ private[engine] object WaveCore {
  *    memory+disk); durability comes from the parquet checkpoint every
  *    `checkpointEvery` waves — a crash replays at most that many waves,
  *    and replay is deterministic and idempotent;
- *  - per-partition lineage rows are accumulator-fed (at-least-once under
- *    task retry — documented); the headline fetched/deduped/novel totals
- *    are exact counts derived from materialized data.
+ *  - per-partition lineage rows ride the wave's own shuffle (one lineage
+ *    mark per map partition and bucket, summed by the reduce side), so
+ *    they are exactly-once under task retry, cache hits included, and the
+ *    headline fetched total is their sum; they are written inside the
+ *    checkpoint commit, so the orphan rule covers them.
  *
  * Ordering contract (SURVEY.md §2.5): `referenceOrder=true` replays
  * Scrapy's deterministic sequential order (start requests in listed
@@ -1113,14 +1164,17 @@ class WaveEngine(
   }
 
   /** Every per-wave dir the engine writes. A fetch wave's pages are
-    * committed by the next checkpoint, so `fetched/wave_N` lags by one. */
+    * committed by the next checkpoint, so `fetched/wave_N` lags by one;
+    * `lineage/upto_N` holds the rows of the waves the checkpoint at N
+    * commits. */
   private val waveDirKinds = Seq(
     WaveDirKind("", "pending_w", 0, snapshot = true),
     WaveDirKind("", "pace_w", 0, snapshot = true),
     WaveDirKind("", "hostn_w", 0, snapshot = true),
     WaveDirKind("seen", "flush_", 0, snapshot = false),
     WaveDirKind("seen", "compact_", 0, snapshot = false),
-    WaveDirKind("fetched", "wave_", 1, snapshot = false))
+    WaveDirKind("fetched", "wave_", 1, snapshot = false),
+    WaveDirKind("lineage", "upto_", 0, snapshot = false))
 
   /** The per-wave dirs on disk, with their kind and wave. */
   private def waveDirs(): Seq[(WaveDirKind, Int, java.io.File)] = for {
@@ -1171,10 +1225,10 @@ class WaveEngine(
   def fetchedTable(): DataFrame = spark.read.schema(fetchResultSchema)
     .option("recursiveFileLookup", "true").parquet(s"$ckpt/fetched")
 
-  /** The flushed per-(wave, partition) lineage rows — the north rule's
+  /** The committed per-(wave, partition) lineage rows — the north rule's
     * "per-partition lineage + metrics" as a queryable surface instead of
     * files an operator has to know the layout of. Explicit schema: an
-    * interrupted run may leave an empty flush dir (no parquet footer). */
+    * interrupted run may leave an empty dir (no parquet footer). */
   def lineageTable(): DataFrame = spark.read.schema(lineageSchema)
     .option("recursiveFileLookup", "true").parquet(s"$ckpt/lineage")
 
@@ -1182,29 +1236,22 @@ class WaveEngine(
     * audit: `skew` = max/mean of per-partition input rows for the wave —
     * the number that says whether one hot bucket is stalling the wave
     * barrier (the north star's "hot domains must not straggle" clause,
-    * measured instead of hoped). Lineage rows are accumulator-fed
-    * (at-least-once under task retry) so a retried wave can repeat a
-    * partition row; the rollup takes max per (wave, partition) first,
-    * making the report idempotent under retry. */
-  def lineageReport(): DataFrame = {
-    import org.apache.spark.sql.functions._
+    * measured instead of hoped). A committed wave has exactly one row per
+    * partition (a scalable wave one per fetch partition, a reference pop
+    * one), so the rollup sums them as they are. */
+  def lineageReport(): DataFrame =
     lineageTable()
-      .groupBy(col("wave"), col("partition_id"))
-      .agg(max(col("in_count")).as("in_count"), max(col("fetched")).as("fetched"),
-        max(col("errors")).as("errors"), max(col("deduped_wave")).as("deduped"),
-        max(col("novel_wave")).as("novel"))
       .groupBy(col("wave"))
       .agg(
         count(lit(1)).as("n_partitions"),
         sum(col("in_count")).as("in_count"),
         sum(col("fetched")).as("fetched"),
         sum(col("errors")).as("errors"),
-        max(col("deduped")).as("deduped"),   // wave-constant, repeated per row
-        max(col("novel")).as("novel"),
+        max(col("deduped_wave")).as("deduped"), // wave-constant, repeated per row
+        max(col("novel_wave")).as("novel"),
         round(max(col("in_count")) /
           greatest(avg(col("in_count")), lit(1e-9)), 4).as("skew"))
       .orderBy(col("wave"))
-  }
 
   // ==================================================================
   // scalable path: bucket-partitioned seen-state RDD core
@@ -1232,6 +1279,23 @@ class WaveEngine(
     * at least one, at most one per fetch partition. */
   private def checkpointFiles(rows: Long): Int =
     math.min(cfg.fetchPartitions.toLong, math.max(1L, (rows + (1L << 20) - 1) >> 20)).toInt
+
+  /** The materializing action of a wave over its output `out`, run in
+    * slots: (novel, emitted, seen) summed over the buckets, then (in, ok,
+    * err) per fetch partition, each bucket's fetch counts under its
+    * partition. */
+  private def waveCounts(out: RDD[(Int, BucketWave)]): Array[Long] = {
+    val (nParts, part) = (cfg.fetchPartitions, partitioner) // locals: never capture `this`
+    inSlots(out).mapPartitions { it =>
+      val a = new Array[Long](3 + 3 * nParts)
+      it.foreach { case (b, bw) =>
+        a(0) += bw.novel.length; a(1) += bw.nCandidates; a(2) += bw.state.count
+        val i = 3 + 3 * part.getPartition(b)
+        a(i) += bw.nIn; a(i + 1) += bw.nOk; a(i + 2) += bw.nErr
+      }
+      Iterator.single(a)
+    }.reduce((a, b) => Array.tabulate(a.length)(i => a(i) + b(i)))
+  }
 
   /** Novel rows of a wave output, keyed by bucket with the partitioner
     * preserved — the key keeps deferred∪novel a partitioner-aware union
@@ -1265,10 +1329,13 @@ class WaveEngine(
     * included), sized by `seenRows` — in the same job, so resume reads
     * O(compactSeenAfter) dirs however many checkpoints the crawl took.
     *
+    * `lineage` (the driver-held rows since the last checkpoint) is written
+    * to `lineage/upto_$wave` on the driver once the job returns.
+    *
     * Commit order: the driver clears the plane dirs, the job writes them
-    * (a retried task replaces its own part files), and only after the job
-    * returns are the state file and `LATEST` written. After the commit the
-    * obsolete snapshot planes, and after a compaction the seen dirs it
+    * (a retried task replaces its own part files), the lineage is written,
+    * and only then are the state file and `LATEST` written. After the
+    * commit the obsolete snapshot planes, and after a compaction the seen dirs it
     * covers, are deleted; a crash before that leaves them unread. The
     * per-host planes carry realtime pacing and the crawl budget across
     * resume; the bench path (simulated, uncapped) writes neither. */
@@ -1282,6 +1349,7 @@ class WaveEngine(
       nextSeq: Long,
       totalFetched: Long,
       totalDeduped: Long,
+      lineage: Seq[PlaneWriter.LineageRow],
       sinceWave: Int): Unit = {
     val compact = seenFlushDirs(wave - 1).length >= cfg.compactSeenAfter
     val (seenDir, since, seenFiles) =
@@ -1295,6 +1363,8 @@ class WaveEngine(
       .coalesce(math.max(checkpointFiles(pendingRows), seenFiles))
     sc.runJob(rows, (ctx: TaskContext, it: Iterator[(Int, AnyRef)]) =>
       PlaneWriter.checkpointTask(ctx.partitionId(), it, dirs, since))
+    if (lineage.nonEmpty)
+      PlaneWriter.writeDir(s"$ckpt/lineage/upto_$wave", lineageSchema, lineage.iterator)
     writeState(wave, nextSeq, totalFetched, totalDeduped)
     waveDirs().filter { case (k, n, _) => n < wave && (k.snapshot || compact && k.parent == "seen") }
       .foreach(d => graft.util.Fs.deleteRecursively(d._3))
@@ -1312,15 +1382,15 @@ class WaveEngine(
     *    before its first checkpoint, resume() would revive the OLD run's
     *    pending against an empty seen set — now it fails fast ("no
     *    checkpoint") instead;
-    *  - the fetched pages go too (fetchedTable() must not union a dead
-    *    run's waves), unless the fetch cache reads from inside this very
-    *    checkpoint dir. */
+    *  - the fetched pages and the lineage go too (fetchedTable() and
+    *    lineageTable() must not union a dead run's waves), unless the
+    *    fetch cache reads from inside this very checkpoint dir (then the
+    *    fetched pages stay). */
   private def clearStaleRun(): Unit = {
     val dir = new java.io.File(ckpt)
     new java.io.File(dir, "LATEST").delete()
     Option(dir.listFiles()).getOrElse(Array.empty).filter(_.getName.startsWith("state_w"))
       .foreach(graft.util.Fs.deleteRecursively)
-    graft.util.Fs.deleteRecursively(new java.io.File(dir, "lineage"))
     val cacheInside = cfg.fetchCacheDir.exists(d =>
       new java.io.File(d).getCanonicalPath.startsWith(dir.getCanonicalPath))
     waveDirs().filter(d => !cacheInside || d._1.parent != "fetched")
@@ -1341,14 +1411,13 @@ class WaveEngine(
         seedWave = true, nBuckets = nB, maxPerHost = maxPerHostB)
     }
     out0.localCheckpoint()
-    val (nSeeds, seen0) = inSlots(out0)
-      .map { case (_, bw) => (bw.novel.length.toLong, bw.state.count) }
-      .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+    val c0 = waveCounts(out0)
+    val (nSeeds, seen0) = (c0(0), c0(2))
     val nextSeq = (nSeeds + 1) * nB
     val state0 = out0.mapValues(_.state)
     val pending0 = novelOf(out0)
     writeScalableCheckpoint(0, state0, pending0, nSeeds, nSeeds, seen0, nextSeq, 0L, 0L,
-      sinceWave = -1)
+      lineage = Nil, sinceWave = -1)
     loopScalable(0, out0, pending0, None, nSeeds, seen0, nextSeq, 0L, 0L, lastFlushed0 = 0)
   }
 
@@ -1363,8 +1432,8 @@ class WaveEngine(
     val (nextSeq, fetched, deduped) = readState(wave)
     // delete every uncommitted per-wave dir from a crash window (a write
     // landed, its checkpoint did not): a replay may checkpoint at other
-    // wave numbers, and must never union stale seen marks or fetched
-    // pages with its own
+    // wave numbers, and must never union stale seen marks, fetched pages
+    // or lineage rows with its own
     waveDirs().filter { case (k, n, _) => n + k.lag > wave }
       .foreach(d => graft.util.Fs.deleteRecursively(d._3))
     // the durable seen set = UNION of all changelog flushes ≤ the
@@ -1417,34 +1486,41 @@ class WaveEngine(
 
   /**
    * The scalable wave loop. Per wave: one candidate shuffle (through the
-   * [[CandidateSerializer]] codec) and one materializing action (the
-   * per-bucket novel, candidate and seen counts, which also populates the
-   * localCheckpoint blocks). With `keepFetched`, the fetch tasks write the
-   * wave's pages to `fetched/wave_N` inside that same job, as the
-   * shuffle's map side drains them. No driver-side collect of state, no
-   * broadcast.
+   * [[CandidateSerializer]] codec, which also carries the pace and lineage
+   * marks) and one materializing action ([[waveCounts]]: the novel,
+   * candidate and seen counts and the per-fetch-partition lineage counts,
+   * which also populates the localCheckpoint blocks). With `keepFetched`,
+   * the fetch tasks write the wave's pages to `fetched/wave_N` inside that
+   * same job, as the shuffle's map side drains them. No driver-side
+   * collect of state, no broadcast.
    *
    * Job accounting: the driver keeps the counts it already has, so the
    * loop runs no job of its own outside its waves and checkpoints. The
    * first batch's size (`batchCount0`) and the seen total (`seen0`) come
    * from the caller (the seed wave's reduce on `run`, resume's one
    * materializing count), and each wave's reduce returns the next batch's
-   * novel count and the new seen total. A checkpoint is one job
-   * ([[writeScalableCheckpoint]], sized by those counts) and its lineage
-   * is written on the driver; a seen compaction rides the checkpoint's
-   * job. With the per-host budget uncapped, no robots resolver and no
-   * media store, a fresh run is `waves + 3` jobs at `checkpointEvery` ≥
-   * waves (seed wave, wave-0 and exit checkpoints) and one checkpoint job
-   * more per checkpointed wave, with or without the fetched table.
+   * novel count, the new seen total and the wave's lineage rows, whose
+   * `in_count`s sum to the pages it fetched (cache hits included) on every
+   * path. A checkpoint is one job ([[writeScalableCheckpoint]], sized by
+   * those counts) that also commits the lineage rows since the previous
+   * one; a seen compaction rides the checkpoint's job. With the per-host
+   * budget uncapped, no robots resolver and no media store, a fresh run is
+   * `waves + 3` jobs at `checkpointEvery` ≥ waves (seed wave, wave-0 and
+   * exit checkpoints) and one checkpoint job more per checkpointed wave,
+   * with or without the fetched table. The per-host budget path (a capped
+   * `maxPerHostPerWave`, or realtime) runs 2 jobs per wave: the wave, and
+   * the count of the next pending (deferred ∪ novel), which also cuts its
+   * lineage — `2·waves + 3` at `checkpointEvery` ≥ waves.
    *
    * Task accounting: every job here runs in [[slots]] = min(fetchPartitions,
    * defaultParallelism) tasks through [[inSlots]]. A wave is two stages of
    * `slots` tasks: the map stage fetches, parses, writes the fetched pages
    * and combines candidates once per fetch partition (the partition's
-   * index, from `mapPartitionsWithIndex`, names its lineage row,
-   * `partition_id` and part file); the reduce stage advances groups of the
-   * state's partitions and fills the persisted wave output's blocks, which
-   * the job's local checkpoint then cuts. A checkpoint job runs in
+   * index, from `mapPartitionsWithIndex`, names its `partition_id` and
+   * part file, and its buckets' lineage marks sum to its lineage row);
+   * the reduce stage advances groups of the state's partitions and fills
+   * the persisted wave output's blocks, which the job's local checkpoint
+   * then cuts. A checkpoint job runs in
    * [[checkpointFiles]] tasks. So a 5-wave crawl at 32 fetch partitions on
    * 4 cores, with its seed wave and two checkpoints, runs 50 tasks.
    */
@@ -1467,7 +1543,7 @@ class WaveEngine(
     var nextSeq = nextSeq0
     var totalFetched = fetched0
     var totalDeduped = deduped0
-    val lineageBuf = scala.collection.mutable.ArrayBuffer[(Int, Int, Long, Long, Long, Long, Long)]()
+    val lineageBuf = scala.collection.mutable.ArrayBuffer[PlaneWriter.LineageRow]()
 
     // locals for task closures (never capture `this`)
     val parsersB = sc.broadcast(parsers)
@@ -1569,9 +1645,14 @@ class WaveEngine(
 
     var batchCount = batchCount0 // exact: every batch row yields one FetchResult
     var totalSeen = seen0
-    var done = batchCount == 0
-    while (!done && wave < cfg.maxWaves && totalFetched < cfg.maxUrls) {
-      val tW0 = System.currentTimeMillis()
+    def checkpoint(): Unit = {
+      writeScalableCheckpoint(wave, state, pending, batchCount, novelSinceFlush, totalSeen,
+        nextSeq, totalFetched, totalDeduped, lineageBuf.toSeq, sinceWave = lastFlushed)
+      lastFlushed = wave
+      novelSinceFlush = 0L
+      lineageBuf.clear()
+    }
+    while (batchCount > 0 && wave < cfg.maxWaves && totalFetched < cfg.maxUrls) {
       val waveStartMs =
         if (realtime) System.currentTimeMillis() else t0 + wave.toLong * 1000L
       val fetchWave = wave
@@ -1581,8 +1662,8 @@ class WaveEngine(
       // rows the new rules forbid (their candidate-emission gate
       // necessarily ran before the rules existed). Costs one tiny
       // driver-side job per wave — O(distinct hosts) strings — on the
-      // robots-enabled-with-resolver path only, plus one re-count on the
-      // rare wave where a newly resolved host actually carries rules.
+      // robots-enabled-with-resolver path only; the gate itself is a
+      // filter the wave's own job runs.
       if (robotsEnabled && cfg.robotsResolve.isDefined) {
         // (host, origin) pairs carry the scheme+port each host was
         // actually discovered under — hostOf strips ports from gate keys,
@@ -1620,20 +1701,16 @@ class WaveEngine(
           if (newRules.nonEmpty) {
             robotsMap ++= newRules
             val gate = newRules // local: the closure must not capture vars
-            val gated = pending.filter { case (_, r) =>
+            // the filter keeps the partitioner; the gated wave may run
+            // empty, and the loop's own exit condition fires at its end
+            pending = pending.filter { case (_, r) =>
               gate.get(r.host) match {
                 case None => true
                 case Some(prefixes) => // parse once per row, not per prefix
                   val path = UrlCanon.parse(r.canonical).path
                   !prefixes.exists(path.startsWith)
               }
-            }.persist(StorageLevel.MEMORY_AND_DISK)
-            batchCount = inSlots(gated).count()
-            pendingRetained.foreach(_.unpersist(blocking = false))
-            pending = gated
-            pendingRetained = Some(gated: RDD[_])
-            // batchCount may now be 0: the wave runs empty and the loop's
-            // own exit condition fires at its end — no special case
+            }
           }
         }
       }
@@ -1668,8 +1745,8 @@ class WaveEngine(
       // batch selection: per-host politeness budget, partition-local
       // (hosts never span buckets, buckets never span partitions). The
       // per-host groupBy+sort runs ONCE, persisted tagged — batch (fetch
-      // job), its count, and the deferred complement all read the cached
-      // selection instead of re-sorting the partition three times.
+      // job) and the deferred complement both read the cached selection
+      // instead of re-sorting the partition twice.
       // a host paced SLOWER than the global rps (table rate or robots
       // Crawl-delay) additionally caps at ~maxHostWaveStallSec of
       // sequential sleeping per wave — delay × budget is what stalls the
@@ -1689,8 +1766,8 @@ class WaveEngine(
             math.max(1L, math.floor(stallSec * hr).toLong)).toInt
         }
       val needBudget = maxPerHost != Int.MaxValue || realtime
-      val (batch, deferred, waveBatchCount, selRetained) =
-        if (!needBudget) (pendingW.values, None, batchCount, None)
+      val (batch, deferred, selRetained) =
+        if (!needBudget) (pendingW.values, None, None)
         else {
           val sel = pendingW.mapPartitions(it =>
             it.map(_._2).toArray.groupBy(_.host).valuesIterator.flatMap { rows =>
@@ -1704,13 +1781,8 @@ class WaveEngine(
             preservesPartitioning = true)
           val d = sel.mapPartitions(_.collect { case (false, r) => (r.host_bucket, r) },
             preservesPartitioning = true)
-          (b, Some(d), inSlots(b).count(), Some(sel: RDD[_]))
+          (b, Some(d), Some(sel: RDD[_]))
         }
-
-      // per-partition lineage via accumulator (at-least-once under task
-      // retry — documented; headline totals are exact counts below)
-      val lineageAcc = new CollectionAccumulator[(Int, Long, Long, Long)]()
-      sc.register(lineageAcc, s"lineage_w$wave")
 
       // live-fetch an already-bucket-partitioned batch with politeness
       // slots. In realtime mode each host's first slot is seeded from the
@@ -1732,11 +1804,11 @@ class WaveEngine(
           }.mapPartitionsWithIndex { (pid, paced) =>
             val (pace, it) = paced.next()
             WaveCore.fetchIter(it, pid, fetcherL, rps, realtime, fetchWave, waveStartMs,
-              lineageAcc, pace, robotsRpsW)
+              pace, robotsRpsW)
           }
         else rows.mapPartitionsWithIndex((pid, it) =>
           WaveCore.fetchIter(it, pid, fetcherL, rps, realtime, fetchWave, waveStartMs,
-            lineageAcc, robotsRps = robotsRpsW))
+            robotsRps = robotsRpsW))
 
       // S14: stamp each live-fetch row with its stored validator (left
       // join on the O(urls) validator plane; rows the prior run never saw
@@ -1806,37 +1878,14 @@ class WaveEngine(
         }
       }
 
-      // parse → candidates → the wave's ONE shuffle (bucket-partitioned,
-      // sized by the wave, never by the accumulated seen set). In realtime
-      // mode the parse stage also emits one pace mark per host (its
-      // last fetch time + 1/rps) so the state advance can carry per-host
-      // next-allowed times into the next wave — O(hosts) extra shuffle
-      // rows, nothing on the simulated/bench path.
-      val candsRaw: RDD[(Int, Candidate)] =
-        if (realtime) fetched.mapPartitions { it =>
-          // third element: the row's meta, which carries its stamped
-          // table rate, so the pace mark needs no host→rate map in scope
-          val lastMs = new java.util.HashMap[String, (Int, Long, Map[String, String])]()
-          val main = WaveCore.combineCandidates(it.flatMap { fr =>
-            val prev = lastMs.get(fr.host)
-            if (prev == null || prev._2 < fr.fetched_at_ms)
-              lastMs.put(fr.host, (fr.host_bucket, fr.fetched_at_ms, fr.meta))
-            WaveCore.candidateIter(fr, parsersB.value, buckets, robotsEnabled, robotsW)
-          }).map(c => (c.host_bucket, c))
-          // ++ is by-name: the marks build AFTER `main` is exhausted
-          main ++ lastMs.entrySet().iterator().asScala.map { e =>
-            val (b, ms, meta) = e.getValue
-            val hostMs = math.round(1000.0 / WaveCore.hostRps(meta, e.getKey, rps, robotsRpsW))
-            (b, WaveCore.paceMark(e.getKey, b, ms + hostMs))
-          }
-        }
-        else fetched.mapPartitions(it =>
-          WaveCore.combineCandidates(it.flatMap(fr =>
-              WaveCore.candidateIter(fr, parsersB.value, buckets, robotsEnabled, robotsW)))
-            .map(c => (c.host_bucket, c)))
-      // the map stage runs in slots: each task fetches, parses and
-      // combines whole fetch partitions and writes one shuffle output
-      val cands = shuffleCandidates(inSlots(candsRaw))
+      // parse → candidates, pace marks and lineage marks → the wave's ONE
+      // shuffle (bucket-partitioned, sized by the wave, never by the
+      // accumulated seen set). The map stage runs in slots: each task
+      // fetches, parses and combines whole fetch partitions and writes one
+      // shuffle output
+      val cands = shuffleCandidates(inSlots(fetched.mapPartitions(it =>
+        WaveCore.waveCandidates(it, parsersB.value, buckets, robotsEnabled, robotsW, realtime, rps,
+          robotsRpsW))))
 
       // advance the seen state: dedup + seq + seen-set add in one pass
       val base = nextSeq
@@ -1857,34 +1906,33 @@ class WaveEngine(
       newOut.localCheckpoint()
       // in slots too: the coalesced tasks fill newOut's cache blocks, and
       // the job's checkpoint step still reaches newOut through the coalesce
-      val (novelCount, emitted, seenCount) = inSlots(newOut)
-        .map { case (_, bw) => (bw.novel.length.toLong, bw.nCandidates, bw.state.count) }
-        .reduce((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3)) // the materializing action
-
+      val c = waveCounts(newOut)
+      val novelCount = c(0)
+      val dedupedCount = c(1) - novelCount // exact: both from the same pass
       nextSeq += (novelCount + 1) * nB
-      totalFetched += waveBatchCount
-      val dedupedCount = emitted - novelCount // exact: both from the same pass
       totalDeduped += dedupedCount
       novelSinceFlush += novelCount
-      totalSeen = seenCount
-      lineageAcc.value.asScala.foreach { case (pid, in, ok, err) =>
-        lineageBuf += ((wave, pid, in, ok, err, dedupedCount, novelCount))
+      totalSeen = c(2)
+      // one row per fetch partition, however its buckets were fetched
+      for (p <- 0 until cfg.fetchPartitions) {
+        val i = 3 + 3 * p
+        totalFetched += c(i)
+        lineageBuf += ((wave, p, c(i), c(i + 1), c(i + 2), dedupedCount, novelCount))
       }
       fetchedDir.foreach(ingestMedia)
 
       // next pending = deferred ∪ novel (same partitioner → the union is
-      // partitioner-aware: partition count stays fixed, hosts stay whole)
+      // partitioner-aware: partition count stays fixed, hosts stay whole).
+      // Its count also cuts its lineage: the union reads the previous
+      // pending's selection, so its lineage would otherwise grow every wave
       val (newPending, newRetained, newBatchCount) = deferred match {
         case None => (novelOf(newOut), None, novelCount)
         case Some(d) =>
           val np = d.union(novelOf(newOut)).persist(StorageLevel.MEMORY_AND_DISK)
+          np.localCheckpoint()
           val n = inSlots(np).count()
           (np, Some(np: RDD[_]), n)
       }
-
-      if (sys.env.contains("GRAFT_DEBUG"))
-        println(s"DBG wave=$wave fetched=$batchCount novel=$novelCount " +
-          s"deduped=$dedupedCount tWave=${System.currentTimeMillis() - tW0}ms")
 
       // release the previous wave (this wave's zip has been materialized)
       out.unpersist(blocking = false)
@@ -1898,24 +1946,12 @@ class WaveEngine(
       pendingRetained = newRetained
       hostScan = novelOf(newOut) // next wave's robots hook scans only these
       batchCount = newBatchCount
-      done = newBatchCount == 0
       wave += 1
 
-      if (wave % cfg.checkpointEvery == 0 || done) {
-        writeScalableCheckpoint(wave, state, pending, batchCount, novelSinceFlush, totalSeen,
-          nextSeq, totalFetched, totalDeduped, sinceWave = lastFlushed)
-        lastFlushed = wave
-        novelSinceFlush = 0L
-        flushLineage(wave, lineageBuf)
-      }
+      if (wave % cfg.checkpointEvery == 0 || batchCount == 0) checkpoint()
     }
-    if (latestCheckpointWave.forall(_ < wave)) {
-      // loop exited on maxWaves/maxUrls between checkpoints
-      writeScalableCheckpoint(wave, state, pending, batchCount, novelSinceFlush, totalSeen,
-        nextSeq, totalFetched, totalDeduped, sinceWave = lastFlushed)
-      lastFlushed = wave
-      flushLineage(wave, lineageBuf)
-    }
+    // loop exited on maxWaves/maxUrls between checkpoints
+    if (latestCheckpointWave.forall(_ < wave)) checkpoint()
     hostRpsRdd.foreach(_.unpersist(blocking = false))
     val elapsed = System.currentTimeMillis() - t0
     CrawlRunResult(wave - startWave, totalFetched, totalDeduped, totalSeen, elapsed)
@@ -1927,19 +1963,6 @@ class WaveEngine(
     * anti-join drops every row. */
   private def ingestMedia(fetchedDir: String): Unit = cfg.mediaStoreDir.foreach(dir =>
     graft.sinks.MediaStore.ingestWave(spark, spark.read.schema(fetchResultSchema).parquet(fetchedDir), dir))
-
-  /** Writes the driver-held lineage rows since the last flush to
-    * `lineage/upto_$wave` with [[PlaneWriter]], on the driver: no Spark
-    * job. Runs after the checkpoint at `wave` commits: a crash in between
-    * loses these rows, because resume does not replay committed waves. */
-  private def flushLineage(
-      wave: Int,
-      buf: scala.collection.mutable.ArrayBuffer[(Int, Int, Long, Long, Long, Long, Long)]): Unit = {
-    if (buf.nonEmpty) {
-      PlaneWriter.writeDir(s"$ckpt/lineage/upto_$wave", lineageSchema, buf.iterator)
-      buf.clear()
-    }
-  }
 
   // ==================================================================
   // reference-order (Scrapy LIFO) replay: one task per checkpoint interval
@@ -1979,12 +2002,12 @@ class WaveEngine(
    * returns the task's lineage rows (one per pop, exactly once), the
    * queue size, the next seq and the seen total, and whose task writes
    * the fetched pages to `fetched/wave_<first pop>` when `keepFetched`;
-   * the checkpoint, one job through the scalable path's
-   * [[writeScalableCheckpoint]] (a seen compaction included); and the
-   * lineage, written on the driver. That is 2 jobs per interval, whatever
-   * the pages it fetches (plus the media store's, when one is set). The
-   * run's seen total is the last interval's; a run always runs at least
-   * one interval, so it has one.
+   * and the checkpoint, one job through the scalable path's
+   * [[writeScalableCheckpoint]] (a seen compaction included), which also
+   * commits the interval's lineage rows. That is 2 jobs per interval,
+   * whatever the pages it fetches (plus the media store's, when one is
+   * set). The run's seen total is the last interval's; a run always runs
+   * at least one interval, so it has one.
    */
   private def loopReference(startWave: Int, st0: RDD[RefState], fetched0: Long,
       deduped0: Long): CrawlRunResult = {
@@ -2030,8 +2053,7 @@ class WaveEngine(
         writeScalableCheckpoint(wave, next.flatMap(_.seen.iterator.map(b => (b.bucket, b))),
           next.flatMap(_.queued.iterator.map(r => (r.host_bucket, r))), pendingRows,
           pops + lineage.map(_._7).sum, seenCount, nextSeq, totalFetched, totalDeduped,
-          sinceWave = start)
-        flushLineage(wave, scala.collection.mutable.ArrayBuffer.from(lineage))
+          lineage.toSeq, sinceWave = start)
       }
       done = pendingRows == 0
     } while (!done && wave < cfg.maxWaves && totalFetched < cfg.maxUrls)

@@ -86,6 +86,8 @@ class SourcesSpec extends AnyFunSuite {
     assert(total == site.totalPages)
     assert(fromCache == total) // every page was fresh in the cache
     assert(res2.fetched == total)
+    // cache hits are fetched rows of the lineage too
+    assert(e2.lineageReport().agg(sum($"in_count")).as[Long].head() == res2.fetched)
 
     // stale cache (ttl 0) → everything re-fetched live
     val ckpt3 = SparkTestSession.tmpDir("stalecache")

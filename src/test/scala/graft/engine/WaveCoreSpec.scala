@@ -47,6 +47,57 @@ class WaveCoreSpec extends AnyFunSuite {
     assert(out.size == 1 && out.head.weight == 7L && out.head.parent_seq == 0L)
   }
 
+  test("waveCandidates: one lineage mark per bucket, exact; advancePartition folds marks, never counts them") {
+    val buckets = 1 << 16
+    def host(k: Int) = s"h$k.example.jp"
+    def bucket(k: Int) = graft.urls.UrlCanon.hostBucket(host(k), buckets)
+    def canon(k: Int, path: String) = graft.urls.UrlCanon.canonicalize(s"http://${host(k)}$path")
+    assert(bucket(0) != bucket(1))
+    def page(k: Int, i: Int, status: Int) = {
+      val url = s"http://${host(k)}/p$i"
+      val links = if (status == 200) Seq(s"http://${host(k)}/shared", s"/p${i + 10}") else Nil
+      graft.model.FetchResult(url, url, url.hashCode.toLong, host(k), bucket(k), "follow_links",
+        Map.empty, 1, i.toLong, status, from_cache = false, 1000L * i, 0L, 0, 0, url,
+        links.zipWithIndex.map { case (l, j) => graft.model.Span("link", "", l, j) })
+    }
+    // bucket 0: 200, 404, 200; bucket 1: 500, 200 — interleaved, as cache
+    // hits and live fetches mix in one partition
+    val pages = Seq(page(0, 0, 200), page(1, 1, 500), page(0, 2, 404), page(0, 3, 200),
+      page(1, 4, 200))
+    val parsers = Map[String, PageParser]("follow_links" -> FollowAllLinks)
+    for (realtime <- Seq(false, true)) {
+      val out = WaveCore.waveCandidates(pages.iterator, parsers, buckets, robotsEnabled = false,
+        Map.empty, realtime, rps = 1.0, robotsRps = Map.empty).toSeq
+      val (marks, cands) = out.partition(_._2.parse_fn == WaveCore.LineageFn)
+      // (in, ok, err) per bucket, keyed and tagged with the bucket
+      assert(marks.map { case (b, m) => (b, m.host_bucket, m.parent_seq, m.weight, m.url_hash) }
+        .sorted == Seq((bucket(0), bucket(0), 3L, 2L, 1L), (bucket(1), bucket(1), 2L, 1L, 1L)).sorted)
+      // the marks follow every candidate, so the combiner never sees one
+      assert(out.takeRight(2) == marks)
+      val (pace, links) = cands.partition(_._2.parse_fn == WaveCore.PaceFn)
+      assert(pace.map(_._1).sorted == (if (realtime) Seq(bucket(0), bucket(1)).sorted else Nil))
+      // the links are combined: the shared one carries both copies
+      assert(links.map(_._2.canonical).distinct.length == links.length)
+      assert(links.map(_._2.weight).sum == 6L)
+      assert(links.collect { case (_, c) if c.canonical == canon(0, "/shared") => c.weight } == Seq(2L))
+
+      // a second map partition's marks for the same buckets add up; marks
+      // are neither candidates nor novel rows
+      def empty(k: Int) = bucket(k) -> BucketSeen(bucket(k), new graft.seen.SeenSet128(16), Nil, 0L)
+      val adv = WaveCore.advancePartition(Iterator(empty(0), empty(1)), (out ++ marks).iterator,
+        base = 0L, newWave = 2, seedWave = false, nBuckets = buckets.toLong).toMap
+      val (w0, w1) = (adv(bucket(0)), adv(bucket(1)))
+      assert((w0.nIn, w0.nOk, w0.nErr) == (6L, 4L, 2L))
+      assert((w1.nIn, w1.nOk, w1.nErr) == (4L, 2L, 2L))
+      assert(w0.nCandidates == 4L && w1.nCandidates == 2L)
+      assert(w0.novel.map(_.canonical).toSet == Set(canon(0, "/shared"), canon(0, "/p10"),
+        canon(0, "/p13")))
+      assert(w1.novel.map(_.canonical).toSet == Set(canon(1, "/shared"), canon(1, "/p14")))
+      assert(w0.state.count == 3L && w1.state.count == 2L)
+      assert(w0.state.pace.nonEmpty == realtime)
+    }
+  }
+
   test("advancePartition is pure: a retried wave recomputes the same rows from the same state") {
     // the input state is shared by every attempt of the wave's task, so
     // advancing it must never mutate it (its seen set is copied first)

@@ -249,10 +249,10 @@ class WaveEngineSpec extends AnyFunSuite {
   test("scalable run: one job per wave and per checkpoint, and no other job") {
     // the fetched table costs no job: the fetch tasks write it
     for (keep <- Seq(false, true)) {
-      def runJobs(every: Int): (CrawlRunResult, Int) = {
+      def runJobs(every: Int, cap: Int = Int.MaxValue): (CrawlRunResult, Int) = {
         val e = new WaveEngine(spark, site, parsers, CrawlConfig(
-          checkpointDir = SparkTestSession.tmpDir(s"jobs$every$keep"), hostBuckets = 8,
-          fetchPartitions = 4, maxPerHostPerWave = Int.MaxValue, keepFetched = keep,
+          checkpointDir = SparkTestSession.tmpDir(s"jobs$every$cap$keep"), hostBuckets = 8,
+          fetchPartitions = 4, maxPerHostPerWave = cap, keepFetched = keep,
           checkpointEvery = every))
         val (r, jobs) = jobsOf(e.run(seeds))
         if (keep) assert(e.fetchedTable().count() == r.fetched)
@@ -267,6 +267,11 @@ class WaveEngineSpec extends AnyFunSuite {
       // one checkpoint job per wave; the last wave's is the exit checkpoint
       assert(jobsEvery == 2 * every.waves + 2,
         s"keepFetched $keep: $jobsEvery jobs for ${every.waves} waves")
+      // a capped budget adds one job per wave: the next pending's count
+      val (capped, jobsCapped) = runJobs(1000000, cap = 1)
+      assert(capped.fetched == site.totalPages && capped.waves > rare.waves)
+      assert(jobsCapped == 2 * capped.waves + 3,
+        s"keepFetched $keep, capped: $jobsCapped jobs for ${capped.waves} waves")
     }
   }
 
@@ -302,6 +307,8 @@ class WaveEngineSpec extends AnyFunSuite {
       writeStale(s"$ckpt/fetched/wave_3", PlaneWriter.fetchResultSchema, staleFetch)
       writeStale(s"$ckpt/seen/compact_3", PlaneWriter.seenSchema,
         (staleFetch.url_hash, staleFetch.canonical, 0, 3))
+      // ... and its lineage, repeating a committed (wave, partition)
+      writeStale(s"$ckpt/lineage/upto_3", PlaneWriter.lineageSchema, (1, 0, 5L, 5L, 0L, 0L, 0L))
 
       new WaveEngine(spark, site, parsers, cfgOf(ckpt, maxW = 3)).resume()
       for (d <- Seq("pending_w3", "seen/flush_3")) {
@@ -314,13 +321,24 @@ class WaveEngineSpec extends AnyFunSuite {
       assert(fetchedSet(resumed) == fetchedSet(full))
       assert(seenHashSet(ckpt) == seenHashSet(fullCkpt))
       if (ref) assert(fetchOrder(resumed) == fetchOrder(full))
+      // the lineage holds exactly one row per (wave, partition), and sums
+      // to the uninterrupted run's
+      import spark.implicits._
+      val keys = resumed.lineageTable().select($"wave", $"partition_id").as[(Int, Int)].collect()
+      assert(keys.length == keys.distinct.length, s"referenceOrder $ref: ${keys.sorted.toSeq}")
+      val parts = if (ref) 1 else 2
+      assert(keys.groupBy(_._1).values.forall(_.length == parts), keys.sorted.toSeq)
+      def sums(e: WaveEngine) =
+        e.lineageTable().agg(sum($"in_count"), sum($"fetched")).as[(Long, Long)].head()
+      assert(sums(resumed) == sums(full) && sums(full)._1 == res.fetched)
     }
   }
 
   test("resume deletes uncommitted fetched pages: the fetched table holds exactly the run's pages") {
     // a crash after a fetch wave (or interval) wrote its pages but before
-    // its checkpoint committed leaves fetched/wave_<LATEST> behind; a
-    // resume that pops nothing must not count it
+    // its checkpoint committed leaves fetched/wave_<LATEST> (and that
+    // checkpoint's lineage) behind; a resume that pops nothing must not
+    // count it
     for (ref <- Seq(false, true)) {
       val ckpt = SparkTestSession.tmpDir(s"fetchedorphan$ref")
       def cfgOf(maxW: Int) = CrawlConfig(checkpointDir = ckpt, referenceOrder = ref,
@@ -329,9 +347,14 @@ class WaveEngineSpec extends AnyFunSuite {
       val idle = new WaveEngine(spark, site, parsers, cfgOf(2))
       assert(idle.latestCheckpointWave.contains(2))
       writeStale(s"$ckpt/fetched/wave_2", PlaneWriter.fetchResultSchema, staleFetch)
+      // ... and the lineage rows of that uncommitted checkpoint
+      writeStale(s"$ckpt/lineage/upto_3", PlaneWriter.lineageSchema, (2, 0, 1L, 1L, 0L, 0L, 0L))
       val res = idle.resume()
       assert(res.waves == 0 && res.fetched == first.fetched)
       assert(idle.fetchedTable().count() == res.fetched, s"referenceOrder $ref")
+      import spark.implicits._
+      assert(idle.lineageTable().agg(sum($"in_count")).as[Long].head() == res.fetched,
+        s"referenceOrder $ref")
     }
   }
 
@@ -407,22 +430,28 @@ class WaveEngineSpec extends AnyFunSuite {
 
   test("the state RDD's lineage stays cut when the wave's reduce runs in slots") {
     // the reduce runs over a coalesce of the persisted wave output; the
-    // job's checkpoint step must still reach that output and cut it
+    // job's checkpoint step must still reach that output and cut it. With
+    // a capped budget the next pending (deferred ∪ novel) is kept too, and
+    // its count must cut it, however many waves the crawl runs
     val chain = SyntheticSite(nHosts = 2, basePagesPerHost = 12, branching = 1, hotFactor = 1)
+    val wide = SyntheticSite(nHosts = 2, basePagesPerHost = 24, branching = 2, hotFactor = 1)
     val sc = spark.sparkContext
-    val firstId = sc.emptyRDD[Int].id
-    val e = new WaveEngine(spark, chain, parsers, CrawlConfig(
-      checkpointDir = SparkTestSession.tmpDir("cut"), hostBuckets = 16, fetchPartitions = 8,
-      maxPerHostPerWave = Int.MaxValue, checkpointEvery = 1000000))
-    val res = e.run((0 until 2).map(k => SeedSpec(chain.pageUrl(k, 0))))
-    assert(res.fetched == chain.totalPages && res.waves >= 5, res)
-    def depth(r: org.apache.spark.rdd.RDD[_]): Int =
-      1 + r.dependencies.map(d => depth(d.rdd)).maxOption.getOrElse(0)
-    // uncapped and simulated, the loop keeps only the last wave's output
-    val kept = sc.getPersistentRDDs.values.filter(_.id > firstId).toSeq
-    assert(kept.nonEmpty)
-    kept.foreach { r =>
-      assert(r.isCheckpointed && depth(r) <= 2, s"${r.id}: depth ${depth(r)}\n${r.toDebugString}")
+    for ((s, cap, minWaves) <- Seq((chain, Int.MaxValue, 5), (wide, 1, 20))) {
+      val firstId = sc.emptyRDD[Int].id
+      val e = new WaveEngine(spark, s, parsers, CrawlConfig(
+        checkpointDir = SparkTestSession.tmpDir("cut"), hostBuckets = 16, fetchPartitions = 8,
+        maxPerHostPerWave = cap, checkpointEvery = 1000000))
+      val res = e.run((0 until 2).map(k => SeedSpec(s.pageUrl(k, 0))))
+      assert(res.fetched == s.totalPages && res.waves >= minWaves, res)
+      def depth(r: org.apache.spark.rdd.RDD[_]): Int =
+        1 + r.dependencies.map(d => depth(d.rdd)).maxOption.getOrElse(0)
+      // simulated, the loop keeps only the last wave's output and, when
+      // capped, the next pending
+      val kept = sc.getPersistentRDDs.values.filter(_.id > firstId).toSeq
+      assert(kept.nonEmpty)
+      kept.foreach { r =>
+        assert(r.isCheckpointed && depth(r) <= 2, s"${r.id}: depth ${depth(r)}\n${r.toDebugString}")
+      }
     }
   }
 
@@ -549,10 +578,8 @@ class WaveEngineSpec extends AnyFunSuite {
         graft.urls.UrlCanon.hostOf(c), 0, "follow_links",
         Map.empty, 0, is_seed = true, 0, i.toLong)
     }
-    val acc = new org.apache.spark.util.CollectionAccumulator[(Int, Long, Long, Long)]()
     val out = WaveCore.fetchIter(rows.iterator, 0, site, rps, realtime = true,
-      fetchWave = 0, waveStartMs = System.currentTimeMillis() - 10000L,
-      lineageAcc = acc).toArray
+      fetchWave = 0, waveStartMs = System.currentTimeMillis() - 10000L).toArray
     val ts = out.map(_.fetched_at_ms).sorted
     ts.zip(ts.tail).foreach { case (a, b) =>
       assert(b - a >= 50L, s"overrun fetches ${b - a}ms apart (< 1/rps)")
