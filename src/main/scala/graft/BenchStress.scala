@@ -9,13 +9,15 @@ import org.apache.spark.sql.functions._
  * Scale-stress harness for the PACED + REVALIDATING frontier path
  * (VERDICT r5 #3) — SEPARATE from the frozen driver bench. The r5 10×
  * stress ran the plain path and caught the cuckoo-chain cliff; the two
- * per-wave state planes it did NOT size are exercised here:
+ * side tables it did NOT size are exercised here, both in the run's one
+ * side plane (built once, bucket-co-partitioned with the frontier, read
+ * by every wave through zipPartitions):
  *
- *  - `hostRpsTable` — the bucket-co-partitioned rate plane, stamped
- *    onto every pending row per wave via zipPartitions;
- *  - `revalidateFrom` — the cached O(urls) validator plane, equi-joined
- *    onto every wave's batch (phase B re-crawls phase A's corpus, so
- *    every fetch carries a validator and comes back 304-shaped).
+ *  - `hostRpsTable` — the per-host rates, stamped onto every pending row
+ *    per wave;
+ *  - `revalidateFrom` — the O(urls) fixed-width validators, looked up
+ *    for every live fetch (phase B re-crawls phase A's corpus, so every
+ *    fetch carries a validator and comes back 304-shaped).
  *
  * Runs the same deterministic synthetic crawl as `Bench.frontierRun`
  * (same site shape, same 128-bucket / 32-partition job) at a 1×

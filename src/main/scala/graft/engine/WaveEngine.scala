@@ -4,13 +4,16 @@ import graft.fetch.Fetcher
 import graft.model._
 import graft.urls.UrlCanon
 import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 /** A seed request (reference: spider `start_urls` / seed builders,
   * e.g. /root/reference/crawler/spiders/shugiin_spider.py:22-24). */
@@ -214,13 +217,14 @@ final case class CrawlConfig(
     // the per-host politeness override (host → requests/sec): a (host:
     // string, rps: double) DataFrame, e.g. graft.ops.Throttle.rpsTable of
     // an adaptive-delay table, or seed-host robots Crawl-delays as
-    // 1/delay. The engine bucket-partitions it ONCE with the frontier's
-    // own partitioner and stamps each pending row's rate per partition
-    // (zipPartitions — no shuffle, no driver map, no fat task closure:
-    // each task ever sees only ITS buckets' hosts). Two rows for one host
-    // resolve to the slower rate. Hosts absent here pace at
-    // `politenessRps`; robots Crawl-delays discovered mid-crawl
-    // min-compose on top (see WaveCore.hostRps). None = no stamping.
+    // 1/delay. It goes into the run's side plane, bucket-partitioned ONCE
+    // with the frontier's own partitioner, and each wave stamps each
+    // pending row's rate per partition (zipPartitions — no shuffle, no
+    // driver map, no fat task closure: each task ever sees only ITS
+    // buckets' hosts). Two rows for one host resolve to the slower rate.
+    // Hosts absent here pace at `politenessRps`; robots Crawl-delays
+    // discovered mid-crawl min-compose on top (see WaveCore.hostRps).
+    // None = no stamping.
     hostRpsTable: Option[DataFrame] = None,
     // upper clamp on a robots Crawl-delay (seconds). Hosts in a partition
     // fetch sequentially, so an unclamped hostile "Crawl-delay: 86400"
@@ -252,7 +256,10 @@ final case class CrawlConfig(
     maxPagesPerHost: Long = Long.MaxValue,
     // S11 — fetch cache: point at a prior run's `fetched` dir to reuse
     // still-fresh pages instead of re-fetching (reference: filesystem HTTP
-    // cache with 600 s TTL, /root/reference/crawler/settings.py:84-86)
+    // cache with 600 s TTL, /root/reference/crawler/settings.py:84-86).
+    // Its 2xx rows stored within `cacheTtlSec` (wall clock) go into the
+    // run's side plane, bucket-partitioned once; two copies of one URL
+    // resolve to the latest (wave, seq) (see PriorCopy.newerThan).
     fetchCacheDir: Option[String] = None,
     cacheTtlSec: Long = 600,
     // S14 — HTTP revalidation: point at a prior run's `fetched` dir and
@@ -262,9 +269,10 @@ final case class CrawlConfig(
     // back as body-less 304 rows (resolve them against the prior corpus
     // with graft.ops.Revalidate.resolve). This is the DISTRIBUTIVE
     // validator path for refresh crawls too big to seed with per-URL meta
-    // (Sources.revalidatingSeeds): the validator plane is one O(urls)
-    // fixed-width cached frame (hash of spans, never spans), attached by
-    // an equi-join per wave. Composes with the S11 cache: cache hits skip
+    // (Sources.revalidatingSeeds): the validators are one O(urls)
+    // fixed-width part of the run's side plane (hash of spans, never
+    // spans; latest (wave, seq) copy wins), bucket-partitioned once and
+    // looked up per fetch partition. Composes with the S11 cache: cache hits skip
     // the network entirely; only cache MISSES revalidate. Differs from
     // S11 in contract: the cache trusts a TTL and never contacts the
     // host; revalidation always contacts the host (politeness slot and
@@ -691,10 +699,10 @@ private[engine] object WaveCore {
   val PaceFn = "__pace__"
 
   /** Meta key carrying a row's base rps from `CrawlConfig.hostRpsTable`:
-    * stamped per partition from the bucket-co-located rate plane, so the
-    * rate rides the ROW through every downstream path (cache misses,
-    * validator re-bucketing, unions) and no task closure ever holds a
-    * host→rate map. Read only by [[hostRps]]; stripped before a parser
+    * stamped per partition from the run's bucket-co-located side plane, so
+    * the rate rides the ROW through every downstream path (budget
+    * selection, deferred unions, cache misses) and no task closure ever
+    * holds a host→rate map. Read only by [[hostRps]]; stripped before a parser
     * sees the meta. */
   val RpsKey = "__rps__"
 
@@ -1418,8 +1426,27 @@ class WaveEngine(
     val pending0 = novelOf(out0)
     writeScalableCheckpoint(0, state0, pending0, nSeeds, nSeeds, seen0, nextSeq, 0L, 0L,
       lineage = Nil, sinceWave = -1)
-    loopScalable(0, out0, pending0, None, nSeeds, seen0, nextSeq, 0L, 0L, lastFlushed0 = 0)
+    loopScalable(new Loop(0, state0, pending0, nSeeds, seen0, nextSeq, fetched = 0L,
+      deduped = 0L, release = List(out0)))
   }
+
+  /** The Spark SQL read behind every [[loadPlane]] source: the rows of the
+    * engine's parquet under `dirs` (recursively) as `A`, projected to
+    * `cols` when given. */
+  private def readRows[A: Encoder: ClassTag](schema: StructType, dirs: Seq[String],
+      cols: String*): RDD[A] =
+    if (dirs.isEmpty) sc.emptyRDD[A]
+    else {
+      val df = spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(dirs: _*)
+      (if (cols.isEmpty) df else df.select(cols.map(col): _*)).as[A].rdd
+    }
+
+  /** The one loader of every bucket-keyed plane, the side plane and each
+    * plane resume reads back: the union of `sources`, already keyed by
+    * bucket, in one `partitionBy(part)` (no source: an empty plane). */
+  private def loadPlane[T: ClassTag](part: HashPartitioner, sources: RDD[(Int, T)]*)
+      : RDD[(Int, T)] =
+    (if (sources.isEmpty) sc.emptyRDD[(Int, T)] else sc.union(sources)).partitionBy(part)
 
   /** Reads the committed checkpoint (LATEST): (wave, next seq, fetched,
     * deduped, bucket states rebuilt from the seen changelog, pending rows),
@@ -1439,35 +1466,23 @@ class WaveEngine(
     // the durable seen set = UNION of all changelog flushes ≤ the
     // committed wave (each flush carries only the delta since its
     // predecessor); rebuildPartition dedups, so a replayed overlap is safe
-    val dirs = seenFlushDirs(wave)
-    val seenRows: RDD[(Int, (Long, String))] =
-      if (dirs.isEmpty) sc.emptyRDD[(Int, (Long, String))].partitionBy(part)
-      else spark.read.schema(seenSchema).parquet(dirs: _*)
-        .select($"host_bucket", $"url_hash", $"canonical")
-        .as[(Int, Long, String)].rdd
-        .map { case (b, h, c) => (b, (h, c)) }
-        .partitionBy(part)
-    def hostPlane(dir: String, value: String): RDD[(Int, (Long, Long))] =
-      if (!new java.io.File(dir).isDirectory) sc.emptyRDD[(Int, (Long, Long))].partitionBy(part)
-      else spark.read.parquet(dir)
-        .select($"host_bucket", $"host_hash", col(value))
-        .as[(Int, Long, Long)].rdd
-        .map { case (b, h, v) => (b, (h, v)) }
-        .partitionBy(part)
-    // restore the per-host pace map (absent for simulated-mode checkpoints
-    // and checkpoints from before the pace file existed → empty, the
-    // pre-round-4 behavior)
-    val paceRows = hostPlane(s"$ckpt/pace_w$wave", "next_allowed_ms")
-    // per-host crawl-budget counts (absent when the budget is off)
-    val hostNRows = hostPlane(s"$ckpt/hostn_w$wave", "admitted")
+    val seenRows = loadPlane(part, readRows[(Int, Long, String)](seenSchema, seenFlushDirs(wave),
+      "host_bucket", "url_hash", "canonical").map { case (b, h, c) => (b, (h, c)) })
+    // the per-host pace map (absent for simulated-mode checkpoints → empty)
+    // and crawl-budget counts (absent when the budget is off)
+    def hostPlane(dir: String, schema: StructType): RDD[(Int, (Long, Long))] =
+      loadPlane(part, readRows[(Int, Long, Long)](schema,
+        Seq(dir).filter(new java.io.File(_).isDirectory), schema.fieldNames.toSeq: _*)
+        .map { case (b, h, v) => (b, (h, v)) })
+    val paceRows = hostPlane(s"$ckpt/pace_w$wave", PlaneWriter.paceSchema)
+    val hostNRows = hostPlane(s"$ckpt/hostn_w$wave", PlaneWriter.hostNSchema)
     val out = seenRows.zipPartitions(paceRows, hostNRows, emptyStateRdd(part),
         preservesPartitioning = true) {
       (rows, pace, hostn, st) =>
         WaveCore.rebuildPartition(st, rows, wave, pace, hostn)
     }
-    val pending = spark.read.schema(urlRecordSchema)
-      .parquet(s"$ckpt/pending_w$wave").as[UrlRecord].rdd
-      .map(r => (r.host_bucket, r)).partitionBy(part)
+    val pending = loadPlane(part, readRows[UrlRecord](urlRecordSchema, Seq(s"$ckpt/pending_w$wave"))
+      .map(r => (r.host_bucket, r)))
     (wave, nextSeq, fetched, deduped, out, pending)
   }
 
@@ -1480,37 +1495,142 @@ class WaveEngine(
     val (seen0, batch0) = inSlots(out0.zipPartitions(pendingKeyed) { (o, p) =>
       Iterator.single((o.map(_._2.state.count).sum, p.size.toLong))
     }).reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-    loopScalable(wave, out0, pendingKeyed, Some(pendingKeyed), batch0, seen0, nextSeq, fetched,
-      deduped, lastFlushed0 = wave)
+    loopScalable(new Loop(wave, out0.mapValues(_.state), pendingKeyed, batch0, seen0, nextSeq,
+      fetched, deduped, release = List(out0, pendingKeyed)))
   }
 
+  /** The run's side plane: one [[SideLookup]] per fetch partition, from
+    * whichever of `hostRpsTable`, `fetchCacheDir` (its 2xx rows stored
+    * within `cacheTtlSec`, on the wall clock) and `revalidateFrom` (its
+    * non-media 2xx rows, as span hashes) are set. When none is (the bench
+    * loop), each wave task makes an empty lookup, and no job runs; else the
+    * tables are read, keyed by the bucket of their host ([[loadPlane]],
+    * under the frontier's own partitioner), and each partition's rows
+    * become its lookup, persisted: [[loopScalable]] builds it in ONE job
+    * and releases it at loop exit. The wave tasks read it only through
+    * zipPartitions, so each sees only its buckets' rows, and nothing of it
+    * rides a task closure or the driver. */
+  private def sidePlane(): RDD[SideLookup] = {
+    val buckets = cfg.hostBuckets // local: closures must not capture `this`
+    val rates = cfg.hostRpsTable.map { df =>
+      // validate up front, FAIL-FAST: a null host NPEs inside the
+      // partitionBy, and rps <= 0 turns into an infinite per-fetch
+      // delay that hangs a realtime partition (and the wave barrier)
+      // forever. Silently FILTERING a bad row would be worse than
+      // failing — a host whose rps was mistyped to 0/negative would
+      // fall back to the DEFAULT (faster) pacing, a politeness
+      // violation the operator never sees; a malformed plane aborts
+      // the crawl with a row-precise message instead.
+      df.select(df("host").cast("string"), df("rps").cast("double")).rdd.map { row =>
+        require(!row.isNullAt(0),
+          "hostRpsTable row with null host")
+        require(!row.isNullAt(1) && row.getDouble(1) > 0,
+          s"hostRpsTable row for host '${row.getString(0)}' has " +
+            s"invalid rps ${if (row.isNullAt(1)) "null" else row.getDouble(1)} (must be > 0)")
+        (UrlCanon.hostBucket(row.getString(0), buckets),
+          HostRate(row.getString(0), row.getDouble(1)): SideRow)
+      }
+    }
+    def prior(dir: String, keep: FetchResult => Boolean, keepPage: Boolean) =
+      readRows[FetchResult](fetchResultSchema, Seq(dir)).filter(fr => fr.ok && keep(fr))
+        .map(fr => (UrlCanon.hostBucket(UrlCanon.hostOf(fr.canonical), buckets),
+          PriorCopy.of(fr, keepPage): SideRow))
+    // TTL on the WALL-CLOCK store time — never the politeness-plan stamp
+    // (simulated-mode fetched_at_ms are wave-indexed planned times that
+    // outrun the wall clock on any warm run)
+    val cutoff = System.currentTimeMillis() - cfg.cacheTtlSec * 1000L
+    val cache = cfg.fetchCacheDir.map(prior(_, _.stored_at_ms >= cutoff, keepPage = true))
+    val validators = cfg.revalidateFrom.map(prior(_, _.parse_fn != WaveCore.MediaFn, keepPage = false))
+    val sources = (rates ++ cache ++ validators).toSeq
+    if (sources.isEmpty) sc.parallelize(Seq.empty[Int], cfg.fetchPartitions)
+      .mapPartitions(_ => Iterator.single(new SideLookup(Iterator.empty)))
+    else loadPlane(partitioner, sources: _*)
+      .mapPartitions(it => Iterator.single(new SideLookup(it.map(_._2))))
+      .setName("side plane").persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** The scalable loop's driver-side state between waves. No task closure
+    * captures it: each phase copies what its tasks need into locals.
+    * `release` is what the next commit unpersists: the previous wave's
+    * output and, on the budget path, its next pending. */
+  private final class Loop(
+      var wave: Int,
+      var state: RDD[(Int, BucketSeen)],
+      var pending: RDD[(Int, UrlRecord)],
+      var batchCount: Long, // exact: every batch row yields one FetchResult
+      var totalSeen: Long,
+      var nextSeq: Long,
+      fetched: Long,
+      deduped: Long,
+      var release: List[RDD[_]]) {
+    val startWave: Int = wave
+    val t0: Long = System.currentTimeMillis()
+    var totalFetched: Long = fetched
+    var totalDeduped: Long = deduped
+    var lastFlushed: Int = wave
+    var novelSinceFlush = 0L // sizes the next seen flush
+    val lineage = scala.collection.mutable.ArrayBuffer[PlaneWriter.LineageRow]()
+    // rows not yet host-scanned by the robots hook: the carried frontier on
+    // the first wave, then only each wave's novel rows — deferred rows
+    // were scanned when they first entered pending
+    var hostScan: RDD[(Int, UrlRecord)] = pending
+    // robots rules for hosts discovered mid-crawl extend the static map;
+    // host → 1/Crawl-delay of hosts whose robots set one mid-crawl, which
+    // WaveCore.hostRps min-composes with each row's stamped table rate;
+    // the hosts already resolved
+    var robotsMap: Map[String, Seq[String]] = cfg.robotsDisallow
+    var robotsRps = Map.empty[String, Double]
+    var robotsResolved = Set.empty[String]
+
+    def checkpoint(): Unit = {
+      writeScalableCheckpoint(wave, state, pending, batchCount, novelSinceFlush, totalSeen,
+        nextSeq, totalFetched, totalDeduped, lineage.toSeq, sinceWave = lastFlushed)
+      lastFlushed = wave
+      novelSinceFlush = 0L
+      lineage.clear()
+    }
+  }
+
+  /** One wave as its phases hand it on: [[select]] fixes the wave's clock,
+    * robots rules and rates, its batch and what it defers (with `release`,
+    * the persisted selection the commit unpersists). */
+  private final class Wave(val n: Int, val startMs: Long, val robots: Map[String, Seq[String]],
+      val robotsRps: Map[String, Double], val batch: RDD[UrlRecord],
+      val deferred: Option[RDD[(Int, UrlRecord)]], val release: List[RDD[_]])
+
   /**
-   * The scalable wave loop. Per wave: one candidate shuffle (through the
-   * [[CandidateSerializer]] codec, which also carries the pace and lineage
-   * marks) and one materializing action ([[waveCounts]]: the novel,
-   * candidate and seen counts and the per-fetch-partition lineage counts,
-   * which also populates the localCheckpoint blocks). With `keepFetched`,
-   * the fetch tasks write the wave's pages to `fetched/wave_N` inside that
-   * same job, as the shuffle's map side drains them. No driver-side
-   * collect of state, no broadcast.
+   * The scalable wave loop: five phases per wave over one [[Wave]] record
+   * ([[select]], [[fetch]], [[exchange]], [[advance]], [[commit]]), each
+   * optional feature the identity when unset. Per wave: one candidate
+   * shuffle (through the [[CandidateSerializer]] codec, which also carries
+   * the pace and lineage marks) and one materializing action
+   * ([[waveCounts]]: the novel, candidate and seen counts and the
+   * per-fetch-partition lineage counts, which also populates the
+   * localCheckpoint blocks). With `keepFetched`, the fetch tasks write the
+   * wave's pages to `fetched/wave_N` inside that same job, as the
+   * shuffle's map side drains them. No driver-side collect of state, no
+   * broadcast but the parsers', and no Spark SQL outside the media store's
+   * ingest: the rate table, the S11 cache and the S14 validators are one
+   * [[sidePlane]], built before the first wave.
    *
    * Job accounting: the driver keeps the counts it already has, so the
    * loop runs no job of its own outside its waves and checkpoints. The
-   * first batch's size (`batchCount0`) and the seen total (`seen0`) come
-   * from the caller (the seed wave's reduce on `run`, resume's one
-   * materializing count), and each wave's reduce returns the next batch's
-   * novel count, the new seen total and the wave's lineage rows, whose
-   * `in_count`s sum to the pages it fetched (cache hits included) on every
-   * path. A checkpoint is one job ([[writeScalableCheckpoint]], sized by
-   * those counts) that also commits the lineage rows since the previous
-   * one; a seen compaction rides the checkpoint's job. With the per-host
-   * budget uncapped, no robots resolver and no media store, a fresh run is
-   * `waves + 3` jobs at `checkpointEvery` ≥ waves (seed wave, wave-0 and
-   * exit checkpoints) and one checkpoint job more per checkpointed wave,
-   * with or without the fetched table. The per-host budget path (a capped
-   * `maxPerHostPerWave`, or realtime) runs 2 jobs per wave: the wave, and
-   * the count of the next pending (deferred ∪ novel), which also cuts its
-   * lineage — `2·waves + 3` at `checkpointEvery` ≥ waves.
+   * first batch's size and the seen total come from the caller (the seed
+   * wave's reduce on `run`, resume's one materializing count), and each
+   * wave's reduce returns the next batch's novel count, the new seen total
+   * and the wave's lineage rows, whose `in_count`s sum to the pages it
+   * fetched (cache hits included) on every path. A checkpoint is one job
+   * ([[writeScalableCheckpoint]], sized by those counts) that also commits
+   * the lineage rows since the previous one; a seen compaction rides the
+   * checkpoint's job. With the per-host budget uncapped, no robots
+   * resolver and no media store, a fresh run is `waves + 3` jobs at
+   * `checkpointEvery` ≥ waves (seed wave, wave-0 and exit checkpoints),
+   * one checkpoint job more per checkpointed wave, and one job more for the
+   * side plane when any side table is set, with or without the fetched
+   * table. The per-host budget path (a capped `maxPerHostPerWave`, or
+   * realtime) runs 2 jobs per wave: the wave, and the count of the next
+   * pending (deferred ∪ novel), which also cuts its lineage — `2·waves +
+   * 3` at `checkpointEvery` ≥ waves.
    *
    * Task accounting: every job here runs in [[slots]] = min(fetchPartitions,
    * defaultParallelism) tasks through [[inSlots]]. A wave is two stages of
@@ -1524,437 +1644,260 @@ class WaveEngine(
    * [[checkpointFiles]] tasks. So a 5-wave crawl at 32 fetch partitions on
    * 4 cores, with its seed wave and two checkpoints, runs 50 tasks.
    */
-  private def loopScalable(
-      startWave: Int,
-      out0: RDD[(Int, BucketWave)],
-      pending0: RDD[(Int, UrlRecord)],
-      pending0Retained: Option[RDD[_]],
-      batchCount0: Long,
-      seen0: Long,
-      nextSeq0: Long,
-      fetched0: Long,
-      deduped0: Long,
-      lastFlushed0: Int): CrawlRunResult = {
-    val t0 = System.currentTimeMillis()
-    val nB = cfg.hostBuckets.toLong
-    var wave = startWave
-    var lastFlushed = lastFlushed0
-    var novelSinceFlush = 0L // sizes the next seen flush
-    var nextSeq = nextSeq0
-    var totalFetched = fetched0
-    var totalDeduped = deduped0
-    val lineageBuf = scala.collection.mutable.ArrayBuffer[PlaneWriter.LineageRow]()
-
-    // locals for task closures (never capture `this`)
+  private def loopScalable(l: Loop): CrawlRunResult = {
+    val side = sidePlane()
     val parsersB = sc.broadcast(parsers)
-    val buckets = cfg.hostBuckets
-    val robotsEnabled = cfg.robotsEnabled
-    // rules for hosts discovered mid-crawl extend these maps at the wave
-    // boundary (see the hook at the top of the loop); static when no
-    // resolver is configured — the common paths never touch them
-    var robotsMap = cfg.robotsDisallow
-    // host → 1/Crawl-delay of hosts whose robots set one mid-crawl; it
-    // starts empty, and WaveCore.hostRps min-composes it with each row's
-    // stamped table rate
-    var robotsRps = Map.empty[String, Double]
-    // table-valued pacing plane: bucket-keyed with the frontier's OWN
-    // partitioner, so each task's zipPartitions sees exactly its
-    // buckets' hosts — the rate plane never rides a task closure and
-    // never lives on the driver. Computed once, reused every wave.
-    val hostRpsRdd: Option[RDD[(Int, (String, Double))]] =
-      cfg.hostRpsTable.map { df =>
-        // validate up front, FAIL-FAST: a null host NPEs inside the
-        // partitionBy, and rps <= 0 turns into an infinite per-fetch
-        // delay that hangs a realtime partition (and the wave barrier)
-        // forever. Silently FILTERING a bad row would be worse than
-        // failing — a host whose rps was mistyped to 0/negative would
-        // fall back to the DEFAULT (faster) pacing, a politeness
-        // violation the operator never sees; a malformed plane aborts
-        // the crawl with a row-precise message instead.
-        val r = df.select(df("host").cast("string"), df("rps").cast("double"))
-          .rdd.map { row =>
-            require(!row.isNullAt(0),
-              "hostRpsTable row with null host")
-            require(!row.isNullAt(1) && row.getDouble(1) > 0,
-              s"hostRpsTable row for host '${row.getString(0)}' has " +
-                s"invalid rps ${if (row.isNullAt(1)) "null" else row.getDouble(1)} (must be > 0)")
-            (UrlCanon.hostBucket(row.getString(0), buckets),
-              (row.getString(0), row.getDouble(1)))
-          }
-          .partitionBy(partitioner)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        inSlots(r).count() // materialize once, ahead of the first wave
-        r
+    try {
+      // build a persisted plane once, ahead of the first wave
+      if (side.getStorageLevel.isValid) inSlots(side).count()
+      while (l.batchCount > 0 && l.wave < cfg.maxWaves && l.totalFetched < cfg.maxUrls) {
+        val w = select(l, side)
+        val pages = fetch(l, w, side)
+        val (out, counts) = advance(l, exchange(w, pages, parsersB))
+        commit(l, w, out, counts)
       }
-    // every host resolves its robots exactly once, INCLUDING hosts with
-    // static entries — a static rps override must not suppress a live
-    // Disallow, nor a static Disallow a live Crawl-delay (resolution
-    // UNIONS into the static maps, never replaces)
-    var robotsResolved: Set[String] = Set.empty
-    val maxPerHost = cfg.maxPerHostPerWave
-    val maxPerHostB = cfg.maxPagesPerHost // whole-crawl budget (trap guard)
-    val fetcherL = fetcher
-    val rps = cfg.politenessRps
-    val realtime = cfg.realtime
+      // loop exited on maxWaves/maxUrls between checkpoints
+      if (latestCheckpointWave.forall(_ < l.wave)) l.checkpoint()
+    } finally side.unpersist(blocking = false) // a failed build or wave must not leak it
+    CrawlRunResult(l.wave - l.startWave, l.totalFetched, l.totalDeduped, l.totalSeen,
+      System.currentTimeMillis() - l.t0)
+  }
 
-    var out = out0 // holds current state (+ last wave's novel); localCheckpointed
-    var state = out0.mapValues(_.state)
-    var pending = pending0
-    var pendingRetained: Option[RDD[_]] = pending0Retained
-    // rows not yet host-scanned by the robots hook: the carried frontier on
-    // the first iteration, then only each wave's novel rows — deferred rows
-    // were scanned when they first entered pending, so re-scanning the
-    // whole frontier every wave would be pure waste
-    var hostScan: RDD[(Int, UrlRecord)] = pending0
-
-    // S11 fetch cache: fresh rows of a prior run's fetched table
-    val cacheDF: Option[DataFrame] = cfg.fetchCacheDir.map { dir =>
-      val cutoff = System.currentTimeMillis() - cfg.cacheTtlSec * 1000L
-      // TTL on the WALL-CLOCK store time — never the politeness-plan stamp
-      // (simulated-mode fetched_at_ms are wave-indexed planned times that
-      // outrun the wall clock on any warm run)
-      spark.read.schema(fetchResultSchema)
-        .option("recursiveFileLookup", "true").parquet(dir)
-        .filter($"stored_at_ms" >= cutoff && $"status" >= 200 && $"status" < 300)
-        .select($"url_hash", $"canonical".as("c_canonical"), $"status".as("c_status"),
-          $"fetched_at_ms".as("c_fetched_at_ms"), $"stored_at_ms".as("c_stored_at_ms"),
-          $"doc_id".as("c_doc_id"),
-          $"spans".as("c_spans"),
-          // binary plane: media rows cache like pages (prior-run parquet
-          // without these columns reads them as null — schema-on-read)
-          $"media_type".as("c_media_type"), $"media_bytes".as("c_media_bytes"))
-        .dropDuplicates("url_hash", "c_canonical")
-        .cache()
+  /** Select: the S12 robots hook ([[resolveRobots]]), each pending row's
+    * table rate stamped from the side plane, and the per-host wave budget.
+    * Each is the identity when unset: the bench wave's batch is its
+    * pending. */
+  private def select(l: Loop, side: RDD[SideLookup]): Wave = {
+    if (cfg.robotsEnabled && cfg.robotsResolve.isDefined) resolveRobots(l)
+    val robotsRpsW = l.robotsRps // per-wave snapshot for the task closures
+    val (maxPerHost, rps, realtime) = (cfg.maxPerHostPerWave, cfg.politenessRps, cfg.realtime)
+    val startMs = if (realtime) System.currentTimeMillis() else l.t0 + l.wave.toLong * 1000L
+    // zipPartitions with the co-partitioned side plane: zero shuffle, and
+    // the only per-task state is the PARTITION's own hosts
+    val pending = l.pending.zipPartitions(side, preservesPartitioning = true) { (it, lk) =>
+      val rates = lk.next()
+      it.map { case (b, r) => (b, rates.stampRate(r)) }
     }
-
-    // S14 validator plane: one (url_hash, canonical, v_hash) row per page
-    // the prior run fetched successfully — latest (wave, seq) copy wins.
-    // Fixed-width (8-byte hash of the spans, never the spans) and cached:
-    // at the 10^10-URL design point this is the only state the refresh
-    // crawl holds about prior content, and it is O(urls), not O(corpus).
-    val validatorDF: Option[DataFrame] = cfg.revalidateFrom.map { dir =>
-      spark.read.schema(fetchResultSchema)
-        .option("recursiveFileLookup", "true").parquet(dir)
-        .filter($"status" >= 200 && $"status" < 300 &&
-          $"parse_fn" =!= WaveCore.MediaFn)
-        .groupBy($"url_hash", $"canonical")
-        .agg(max_by(graft.model.SpanHash.column($"spans"),
-          struct($"wave", $"seq")).as("v_hash"))
-        .cache()
+    // batch selection: per-host politeness budget, partition-local
+    // (hosts never span buckets, buckets never span partitions). The
+    // per-host groupBy+sort runs ONCE, persisted tagged — batch (fetch
+    // job) and the deferred complement both read the cached selection
+    // instead of re-sorting the partition twice.
+    // a host paced SLOWER than the global rps (table rate or robots
+    // Crawl-delay) additionally caps at ~maxHostWaveStallSec of
+    // sequential sleeping per wave — delay × budget is what stalls the
+    // wave barrier, and the per-fetch clamp alone can't bound it.
+    // Realtime-only: in simulated mode nothing sleeps, and the bench
+    // job's uncapped budget stays a plain constant.
+    val stallSec = cfg.maxHostWaveStallSec
+    // budget from a representative ROW (not just the host): the base
+    // rate rides the row's stamped meta, so the budget function needs
+    // no host→rate map beyond the robots deltas
+    val slowHostBudget: UrlRecord => Int =
+      if (!realtime) _ => maxPerHost
+      else { r0 =>
+        val hr = WaveCore.hostRps(r0.meta, r0.host, rps, robotsRpsW)
+        if (hr >= rps) maxPerHost
+        else math.min(maxPerHost.toLong,
+          math.max(1L, math.floor(stallSec * hr).toLong)).toInt
+      }
+    if (maxPerHost == Int.MaxValue && !realtime)
+      new Wave(l.wave, startMs, l.robotsMap, robotsRpsW, pending.values, None, Nil)
+    else {
+      val sel = pending.mapPartitions(it =>
+        it.map(_._2).toArray.groupBy(_.host).valuesIterator.flatMap { rows =>
+          val budget = slowHostBudget(rows.head)
+          rows.sortBy(r => (-r.priority, r.seq)).iterator.zipWithIndex
+            .map { case (r, i) => (i < budget, r) }
+        },
+        preservesPartitioning = true)
+        .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      val batch = sel.mapPartitions(_.collect { case (true, r) => r },
+        preservesPartitioning = true)
+      val deferred = sel.mapPartitions(_.collect { case (false, r) => (r.host_bucket, r) },
+        preservesPartitioning = true)
+      // the selection is consumed by the wave's job and the deferred count
+      new Wave(l.wave, startMs, l.robotsMap, robotsRpsW, batch, Some(deferred), List(sel))
     }
+  }
 
-    var batchCount = batchCount0 // exact: every batch row yields one FetchResult
-    var totalSeen = seen0
-    def checkpoint(): Unit = {
-      writeScalableCheckpoint(wave, state, pending, batchCount, novelSinceFlush, totalSeen,
-        nextSeq, totalFetched, totalDeduped, lineageBuf.toSeq, sinceWave = lastFlushed)
-      lastFlushed = wave
-      novelSinceFlush = 0L
-      lineageBuf.clear()
+  /** S12 mid-crawl host discovery: resolves robots for hosts making their
+    * first frontier appearance, then drops this wave's pending rows the new
+    * rules forbid (their candidate-emission gate necessarily ran before the
+    * rules existed). Costs one tiny driver-side job per wave — O(distinct
+    * hosts) strings — on the robots-enabled-with-resolver path only; the
+    * gate itself is a filter the wave's own job runs. Every host resolves
+    * its robots exactly once, INCLUDING hosts with static entries — a
+    * static rps override must not suppress a live Disallow, nor a static
+    * Disallow a live Crawl-delay (resolution UNIONS into the static maps,
+    * never replaces). */
+  private def resolveRobots(l: Loop): Unit = {
+    // (host, origin) pairs carry the scheme+port each host was
+    // actually discovered under — hostOf strips ports from gate keys,
+    // and "https://host/robots.txt" would miss http-only or
+    // non-default-port sites entirely
+    val hostOrigins = inSlots(l.hostScan).map { case (_, r) =>
+      val p = UrlCanon.parse(r.canonical)
+      val origin =
+        if (p.scheme != null && p.authority != null) p.scheme + "://" + p.authority
+        else "https://" + r.host
+      (r.host, origin)
+    }.distinct().collect()
+    val novel = hostOrigins.filter(ho => !l.robotsResolved(ho._1))
+    if (novel.nonEmpty) {
+      l.robotsResolved ++= novel.map(_._1)
+      // a host seen under several origins resolves them all — the
+      // policies union per gate key (conservative)
+      val policies = cfg.robotsResolve.get(novel.map(_._2).distinct.sorted.toSeq)
+      policies.foreach { case (h, p) =>
+        // Crawl-delay clamped (a hostile 24h delay must not stall the
+        // wave barrier); the rate rule keeps the slower of 1/delay and
+        // any delay already recorded, and min-composes the result with
+        // the host's base rate at every use — robots cannot grant more
+        // than the operator configured
+        p.crawlDelaySec.map(math.min(_, cfg.maxRobotsDelaySec)).filter(_ > 0).foreach { d =>
+          l.robotsRps += h -> WaveCore.hostRps(Map.empty, h, 1.0 / d, l.robotsRps)
+        }
+      }
+      val newRules = policies.collect {
+        case (h, p) if p.disallow.nonEmpty =>
+          // UNION with any static prefixes — live resolution must
+          // never widen what an operator already forbade
+          h -> (l.robotsMap.getOrElse(h, Nil) ++ p.disallow).distinct
+      }
+      if (newRules.nonEmpty) {
+        l.robotsMap ++= newRules
+        val gate = newRules // local: the closure must not capture vars
+        // the filter keeps the partitioner; the gated wave may run
+        // empty, and the loop's own exit condition fires at its end
+        l.pending = l.pending.filter { case (_, r) =>
+          gate.get(r.host) match {
+            case None => true
+            case Some(prefixes) => // parse once per row, not per prefix
+              val path = UrlCanon.parse(r.canonical).path
+              !prefixes.exists(path.startsWith)
+          }
+        }
+      }
     }
-    while (batchCount > 0 && wave < cfg.maxWaves && totalFetched < cfg.maxUrls) {
-      val waveStartMs =
-        if (realtime) System.currentTimeMillis() else t0 + wave.toLong * 1000L
-      val fetchWave = wave
+  }
 
-      // S12 mid-crawl host discovery: resolve robots for hosts making
-      // their first frontier appearance, then drop this wave's pending
-      // rows the new rules forbid (their candidate-emission gate
-      // necessarily ran before the rules existed). Costs one tiny
-      // driver-side job per wave — O(distinct hosts) strings — on the
-      // robots-enabled-with-resolver path only; the gate itself is a
-      // filter the wave's own job runs.
-      if (robotsEnabled && cfg.robotsResolve.isDefined) {
-        // (host, origin) pairs carry the scheme+port each host was
-        // actually discovered under — hostOf strips ports from gate keys,
-        // and "https://host/robots.txt" would miss http-only or
-        // non-default-port sites entirely
-        val hostOrigins = inSlots(hostScan).map { case (_, r) =>
-          val p = UrlCanon.parse(r.canonical)
-          val origin =
-            if (p.scheme != null && p.authority != null) p.scheme + "://" + p.authority
-            else "https://" + r.host
-          (r.host, origin)
-        }.distinct().collect()
-        val novel = hostOrigins.filter(ho => !robotsResolved(ho._1))
-        if (novel.nonEmpty) {
-          robotsResolved ++= novel.map(_._1)
-          // a host seen under several origins resolves them all — the
-          // policies union per gate key (conservative)
-          val policies = cfg.robotsResolve.get(novel.map(_._2).distinct.sorted.toSeq)
-          policies.foreach { case (h, p) =>
-            // Crawl-delay clamped (a hostile 24h delay must not stall the
-            // wave barrier); the rate rule keeps the slower of 1/delay and
-            // any delay already recorded, and min-composes the result with
-            // the host's base rate at every use — robots cannot grant more
-            // than the operator configured
-            p.crawlDelaySec.map(math.min(_, cfg.maxRobotsDelaySec)).filter(_ > 0).foreach { d =>
-              robotsRps += h -> WaveCore.hostRps(Map.empty, h, 1.0 / d, robotsRps)
-            }
-          }
-          val newRules = policies.collect {
-            case (h, p) if p.disallow.nonEmpty =>
-              // UNION with any static prefixes — live resolution must
-              // never widen what an operator already forbade
-              h -> (robotsMap.getOrElse(h, Nil) ++ p.disallow).distinct
-          }
-          if (newRules.nonEmpty) {
-            robotsMap ++= newRules
-            val gate = newRules // local: the closure must not capture vars
-            // the filter keeps the partitioner; the gated wave may run
-            // empty, and the loop's own exit condition fires at its end
-            pending = pending.filter { case (_, r) =>
-              gate.get(r.host) match {
-                case None => true
-                case Some(prefixes) => // parse once per row, not per prefix
-                  val path = UrlCanon.parse(r.canonical).path
-                  !prefixes.exists(path.startsWith)
-              }
-            }
-          }
+  /** Fetch: each fetch partition serves its S11 cache hits from its side
+    * lookup and live-fetches the rest, each stamped with its S14 validator
+    * ([[SideLookup.serve]]), with politeness slots ([[WaveCore.fetchIter]]).
+    * In realtime mode each host's first slot is seeded from the carried
+    * per-host next-allowed time (cross-wave politeness continuity, cache
+    * misses included); the pace map rides the already-persisted state
+    * blocks, and simulated mode skips that read entirely. The fetch
+    * partition's index comes from mapPartitionsWithIndex (see fetchIter).
+    * With `keepFetched`, each partition writes its pages to its part file
+    * of `fetched/wave_N` as the exchange pulls them, and commits the file
+    * once they run out (++ is by-name). */
+  private def fetch(l: Loop, w: Wave, side: RDD[SideLookup]): RDD[FetchResult] = {
+    val (f, rps, realtime, n, startMs, robotsRps) =
+      (fetcher, cfg.politenessRps, cfg.realtime, w.n, w.startMs, w.robotsRps)
+    val dir = Option.when(cfg.keepFetched)(s"$ckpt/fetched/wave_$n")
+    dir.foreach(PlaneWriter.clear)
+    // simulated mode reads no state: its (empty) pace maps come from the
+    // side plane's own partitions
+    val pace: RDD[Map[Long, Long]] =
+      if (!realtime) side.map(_ => Map.empty[Long, Long])
+      else l.state.mapPartitions(st => Iterator.single(st.foldLeft(Map.empty[Long, Long]) {
+        case (m, (_, bs)) => bs.pace.foldLeft(m) { case (m1, (h, ms)) =>
+          m1.updatedWith(h)(prev => Some(math.max(prev.getOrElse(0L), ms)))
+        }
+      }))
+    w.batch.zipPartitions(side, pace)((it, lk, pc) => Iterator.single((it, lk.next(), pc.next())))
+      .mapPartitionsWithIndex { (pid, p) =>
+        val (it, lk, pc) = p.next()
+        val (live, hits) = lk.serve(it, n)
+        val pages = WaveCore.fetchIter(live, pid, f, rps, realtime, n, startMs, pc, robotsRps) ++ hits
+        dir.fold(pages) { d =>
+          val part = PlaneWriter.taskPart(d, pid, fetchResultSchema)
+          pages.map { fr => part.write(fr); fr } ++ { part.finish(); Iterator.empty }
         }
       }
-      // per-wave snapshots for the task closures (the vars above advance)
-      val robotsW = robotsMap
-      val robotsRpsW = robotsRps
+  }
 
-      // table-valued pacing: stamp each pending row's base rate from the
-      // co-partitioned rate plane — zipPartitions, zero shuffle, and the
-      // only per-task state is the PARTITION's own hosts. Idempotent
-      // across waves (deferred rows re-stamp the same value); None = the
-      // bench path, untouched.
-      val pendingW = hostRpsRdd match {
-        case None => pending
-        case Some(rates) =>
-          pending.zipPartitions(rates, preservesPartitioning = true) { (it, rs) =>
-            val m = new java.util.HashMap[String, java.lang.Double]()
-            // two rows for one host: the slower rate wins — the polite
-            // choice, and independent of the rows' shuffle arrival order
-            rs.foreach { case (_, (h, rr)) =>
-              val prev = m.get(h)
-              if (prev == null || rr < prev) m.put(h, rr)
-            }
-            it.map { case (b, r) =>
-              val v = m.get(r.host)
-              if (v == null) (b, r)
-              else (b, r.copy(meta = r.meta + (WaveCore.RpsKey -> v.toString)))
-            }
-          }
-      }
+  /** Exchange: parse → candidates, pace marks and lineage marks
+    * ([[WaveCore.waveCandidates]]) → the wave's ONE shuffle
+    * (bucket-partitioned, sized by the wave, never by the accumulated seen
+    * set). The map stage runs in slots: each task fetches, parses and
+    * combines whole fetch partitions and writes one shuffle output. */
+  private def exchange(w: Wave, pages: RDD[FetchResult],
+      parsersB: Broadcast[Map[String, PageParser]]): RDD[(Int, Candidate)] = {
+    val (buckets, robotsEnabled, realtime, rps, robots, robotsRps) = (cfg.hostBuckets,
+      cfg.robotsEnabled, cfg.realtime, cfg.politenessRps, w.robots, w.robotsRps)
+    shuffleCandidates(inSlots(pages.mapPartitions(it =>
+      WaveCore.waveCandidates(it, parsersB.value, buckets, robotsEnabled, robots, realtime, rps,
+        robotsRps))))
+  }
 
-      // batch selection: per-host politeness budget, partition-local
-      // (hosts never span buckets, buckets never span partitions). The
-      // per-host groupBy+sort runs ONCE, persisted tagged — batch (fetch
-      // job) and the deferred complement both read the cached selection
-      // instead of re-sorting the partition twice.
-      // a host paced SLOWER than the global rps (table rate or robots
-      // Crawl-delay) additionally caps at ~maxHostWaveStallSec of
-      // sequential sleeping per wave — delay × budget is what stalls the
-      // wave barrier, and the per-fetch clamp alone can't bound it.
-      // Realtime-only: in simulated mode nothing sleeps, and the bench
-      // job's uncapped budget stays a plain constant.
-      val stallSec = cfg.maxHostWaveStallSec
-      // budget from a representative ROW (not just the host): the base
-      // rate rides the row's stamped meta, so the budget function needs
-      // no host→rate map beyond the robots deltas
-      val slowHostBudget: UrlRecord => Int =
-        if (!realtime) _ => maxPerHost
-        else { r0 =>
-          val hr = WaveCore.hostRps(r0.meta, r0.host, rps, robotsRpsW)
-          if (hr >= rps) maxPerHost
-          else math.min(maxPerHost.toLong,
-            math.max(1L, math.floor(stallSec * hr).toLong)).toInt
-        }
-      val needBudget = maxPerHost != Int.MaxValue || realtime
-      val (batch, deferred, selRetained) =
-        if (!needBudget) (pendingW.values, None, None)
-        else {
-          val sel = pendingW.mapPartitions(it =>
-            it.map(_._2).toArray.groupBy(_.host).valuesIterator.flatMap { rows =>
-              val budget = slowHostBudget(rows.head)
-              rows.sortBy(r => (-r.priority, r.seq)).iterator.zipWithIndex
-                .map { case (r, i) => (i < budget, r) }
-            },
-            preservesPartitioning = true)
-            .persist(StorageLevel.MEMORY_AND_DISK_SER)
-          val b = sel.mapPartitions(_.collect { case (true, r) => r },
-            preservesPartitioning = true)
-          val d = sel.mapPartitions(_.collect { case (false, r) => (r.host_bucket, r) },
-            preservesPartitioning = true)
-          (b, Some(d), Some(sel: RDD[_]))
-        }
-
-      // live-fetch an already-bucket-partitioned batch with politeness
-      // slots. In realtime mode each host's first slot is seeded from the
-      // carried per-host next-allowed time (cross-wave politeness
-      // continuity); the pace map rides the already-persisted state
-      // blocks, and simulated mode skips that read entirely.
-      // The fetch partition's index comes from mapPartitionsWithIndex (see
-      // fetchIter); the realtime zip hands its pace map and rows on to it.
-      def liveFetch(rows: RDD[UrlRecord]): RDD[FetchResult] =
-        if (realtime)
-          state.zipPartitions(rows) { (st, it) =>
-            var pace = Map.empty[Long, Long]
-            st.foreach { case (_, bs) =>
-              pace = bs.pace.foldLeft(pace) { case (m, (h, ms)) =>
-                m.updatedWith(h)(prev => Some(math.max(prev.getOrElse(0L), ms)))
-              }
-            }
-            Iterator.single((pace, it))
-          }.mapPartitionsWithIndex { (pid, paced) =>
-            val (pace, it) = paced.next()
-            WaveCore.fetchIter(it, pid, fetcherL, rps, realtime, fetchWave, waveStartMs,
-              pace, robotsRpsW)
-          }
-        else rows.mapPartitionsWithIndex((pid, it) =>
-          WaveCore.fetchIter(it, pid, fetcherL, rps, realtime, fetchWave, waveStartMs,
-            robotsRps = robotsRpsW))
-
-      // S14: stamp each live-fetch row with its stored validator (left
-      // join on the O(urls) validator plane; rows the prior run never saw
-      // pass through unstamped → ordinary full fetch). The join breaks the
-      // host-bucket partitioning, so rows re-bucket after — one extra
-      // fixed-width shuffle of THIS WAVE's rows, only on the
-      // revalidateFrom path (None = identity, the bench loop untouched).
-      def attachValidators(rows: RDD[UrlRecord]): RDD[UrlRecord] =
-        validatorDF match {
-          case None => rows
-          case Some(vd) =>
-            val ds = spark.createDataset(rows)
-            ds.joinWith(vd,
-                ds("url_hash") === vd("url_hash") &&
-                  ds("canonical") === vd("canonical"), "left_outer")
-              .map { case (r, v) =>
-                if (v == null) r
-                else r.copy(meta =
-                  r.meta + (Sources.IfHashKey -> v.getAs[Long]("v_hash").toString))
-              }
-              .rdd.map(r => (r.host_bucket, r)).partitionBy(partitioner).values
-        }
-
-      // fetch (serving fresh cache hits without politeness slots — S11)
-      val fetchedRdd: RDD[FetchResult] = cacheDF match {
-        case None => liveFetch(attachValidators(batch))
-        case Some(cache) =>
-          val batchDS = spark.createDataset(batch)
-          val hits = batchDS.joinWith(cache,
-              batchDS("url_hash") === cache("url_hash") &&
-                batchDS("canonical") === cache("c_canonical"))
-            .map { case (r, c) =>
-              FetchResult(r.url, r.canonical, r.url_hash, r.host, r.host_bucket,
-                r.parse_fn, r.meta, fetchWave, r.seq,
-                status = c.getAs[Int]("c_status"), from_cache = true,
-                fetched_at_ms = c.getAs[Long]("c_fetched_at_ms"),
-                // original write time survives: a chain of cache-served
-                // runs ages the entry from its REAL fetch, never refreshes
-                stored_at_ms = c.getAs[Long]("c_stored_at_ms"), slot = -1,
-                partition_id = -1, doc_id = c.getAs[String]("c_doc_id"),
-                spans = c.getAs[scala.collection.Seq[Row]]("c_spans")
-                  .map(sp => Span(sp.getAs[String]("kind"), sp.getAs[String]("text"),
-                    sp.getAs[String]("media_ref"), sp.getAs[Int]("offset"))).toSeq,
-                media_type = c.getAs[String]("c_media_type"),
-                media_bytes = c.getAs[Array[Byte]]("c_media_bytes"))
-            }.rdd
-          val misses = batchDS.join(
-              cache.select($"url_hash", $"c_canonical".as("canonical")),
-              Seq("url_hash", "canonical"), "left_anti")
-            .as[UrlRecord].rdd
-            .map(r => (r.host_bucket, r)).partitionBy(partitioner).values
-          // cache misses go through the same pace-seeded live fetch, so
-          // realtime politeness continuity holds on the S11 path too;
-          // with S14 configured, only the misses revalidate (hits never
-          // touch the network at all)
-          liveFetch(attachValidators(misses)).union(hits)
-      }
-      // the fetched table: each fetch task writes its pages to its part
-      // file of the wave's dir as the parse below pulls them, and commits
-      // the file once they run out (++ is by-name)
-      val fetchedDir = Option.when(cfg.keepFetched)(s"$ckpt/fetched/wave_$wave")
-      val fetched = fetchedDir.fold(fetchedRdd) { dir =>
-        PlaneWriter.clear(dir)
-        fetchedRdd.mapPartitionsWithIndex { (i, it) =>
-          val part = PlaneWriter.taskPart(dir, i, fetchResultSchema)
-          it.map { fr => part.write(fr); fr } ++ { part.finish(); Iterator.empty }
-        }
-      }
-
-      // parse → candidates, pace marks and lineage marks → the wave's ONE
-      // shuffle (bucket-partitioned, sized by the wave, never by the
-      // accumulated seen set). The map stage runs in slots: each task
-      // fetches, parses and combines whole fetch partitions and writes one
-      // shuffle output
-      val cands = shuffleCandidates(inSlots(fetched.mapPartitions(it =>
-        WaveCore.waveCandidates(it, parsersB.value, buckets, robotsEnabled, robotsW, realtime, rps,
-          robotsRpsW))))
-
-      // advance the seen state: dedup + seq + seen-set add in one pass
-      val base = nextSeq
-      val w1 = wave + 1
-      val newOut = state.zipPartitions(cands, preservesPartitioning = true) { (st, cd) =>
-        WaveCore.advancePartition(st, cd, base, w1, seedWave = false, nBuckets = nB,
-          maxPerHost = maxPerHostB)
-      }
-      // DESERIALIZED storage: since the state became packed primitive
-      // chunks (SeenChunk/SeenSet128 — no per-URL objects),
-      // keeping the blocks live costs the GC O(chunks) per bucket, and
-      // persist stores references instead of re-serializing the whole
-      // accumulated seen state every wave (the r2 SER level paid an
-      // O(seen)-byte Kryo pass per wave; with the old String-array logs
-      // SER was the right call — millions of live objects dominated
-      // young-GC copy time — but that object graph no longer exists)
-      newOut.persist(StorageLevel.MEMORY_AND_DISK)
-      newOut.localCheckpoint()
-      // in slots too: the coalesced tasks fill newOut's cache blocks, and
-      // the job's checkpoint step still reaches newOut through the coalesce
-      val c = waveCounts(newOut)
-      val novelCount = c(0)
-      val dedupedCount = c(1) - novelCount // exact: both from the same pass
-      nextSeq += (novelCount + 1) * nB
-      totalDeduped += dedupedCount
-      novelSinceFlush += novelCount
-      totalSeen = c(2)
-      // one row per fetch partition, however its buckets were fetched
-      for (p <- 0 until cfg.fetchPartitions) {
-        val i = 3 + 3 * p
-        totalFetched += c(i)
-        lineageBuf += ((wave, p, c(i), c(i + 1), c(i + 2), dedupedCount, novelCount))
-      }
-      fetchedDir.foreach(ingestMedia)
-
-      // next pending = deferred ∪ novel (same partitioner → the union is
-      // partitioner-aware: partition count stays fixed, hosts stay whole).
-      // Its count also cuts its lineage: the union reads the previous
-      // pending's selection, so its lineage would otherwise grow every wave
-      val (newPending, newRetained, newBatchCount) = deferred match {
-        case None => (novelOf(newOut), None, novelCount)
-        case Some(d) =>
-          val np = d.union(novelOf(newOut)).persist(StorageLevel.MEMORY_AND_DISK)
-          np.localCheckpoint()
-          val n = inSlots(np).count()
-          (np, Some(np: RDD[_]), n)
-      }
-
-      // release the previous wave (this wave's zip has been materialized)
-      out.unpersist(blocking = false)
-      pendingRetained.foreach(_.unpersist(blocking = false))
-      // the tagged selection was fully consumed by the fetch job and the
-      // deferred-union count above
-      selRetained.foreach(_.unpersist(blocking = false))
-      out = newOut
-      state = newOut.mapValues(_.state)
-      pending = newPending
-      pendingRetained = newRetained
-      hostScan = novelOf(newOut) // next wave's robots hook scans only these
-      batchCount = newBatchCount
-      wave += 1
-
-      if (wave % cfg.checkpointEvery == 0 || batchCount == 0) checkpoint()
+  /** Advance: the seen state zipped with the candidates — dedup, seq
+    * assignment and the seen-set add in one pass — persisted, locally
+    * checkpointed and counted by the wave's one materializing action,
+    * which runs in slots too: the coalesced tasks fill the output's cache
+    * blocks, and the job's checkpoint step still reaches it through the
+    * coalesce. Returns the output and its [[waveCounts]]. */
+  private def advance(l: Loop, cands: RDD[(Int, Candidate)])
+      : (RDD[(Int, BucketWave)], Array[Long]) = {
+    val (base, w1, nB, maxPerHost) =
+      (l.nextSeq, l.wave + 1, cfg.hostBuckets.toLong, cfg.maxPagesPerHost)
+    val out = l.state.zipPartitions(cands, preservesPartitioning = true) { (st, cd) =>
+      WaveCore.advancePartition(st, cd, base, w1, seedWave = false, nBuckets = nB,
+        maxPerHost = maxPerHost)
     }
-    // loop exited on maxWaves/maxUrls between checkpoints
-    if (latestCheckpointWave.forall(_ < wave)) checkpoint()
-    hostRpsRdd.foreach(_.unpersist(blocking = false))
-    val elapsed = System.currentTimeMillis() - t0
-    CrawlRunResult(wave - startWave, totalFetched, totalDeduped, totalSeen, elapsed)
+    // DESERIALIZED storage: since the state became packed primitive
+    // chunks (SeenChunk/SeenSet128 — no per-URL objects),
+    // keeping the blocks live costs the GC O(chunks) per bucket, and
+    // persist stores references instead of re-serializing the whole
+    // accumulated seen state every wave (the r2 SER level paid an
+    // O(seen)-byte Kryo pass per wave; with the old String-array logs
+    // SER was the right call — millions of live objects dominated
+    // young-GC copy time — but that object graph no longer exists)
+    out.persist(StorageLevel.MEMORY_AND_DISK)
+    out.localCheckpoint()
+    (out, waveCounts(out))
+  }
+
+  /** Commit: the wave's totals and one lineage row per fetch partition,
+    * however its buckets were fetched; the media store's ingest; the next
+    * pending; the release of what the wave no longer needs; and the
+    * checkpoint cadence. The next pending is the novel rows, or on the
+    * budget path deferred ∪ novel (same partitioner → a partitioner-aware
+    * union: partition count fixed, hosts whole), whose count also cuts its
+    * lineage: the union reads the previous pending's selection, so its
+    * lineage would otherwise grow every wave. */
+  private def commit(l: Loop, w: Wave, out: RDD[(Int, BucketWave)], c: Array[Long]): Unit = {
+    val novelCount = c(0)
+    val dedupedCount = c(1) - novelCount // exact: both from the same pass
+    l.nextSeq += (novelCount + 1) * cfg.hostBuckets
+    l.totalDeduped += dedupedCount
+    l.novelSinceFlush += novelCount
+    l.totalSeen = c(2)
+    for (p <- 0 until cfg.fetchPartitions) {
+      val i = 3 + 3 * p
+      l.totalFetched += c(i)
+      l.lineage += ((w.n, p, c(i), c(i + 1), c(i + 2), dedupedCount, novelCount))
+    }
+    if (cfg.keepFetched) ingestMedia(s"$ckpt/fetched/wave_${w.n}")
+    val (pending, kept, batchCount) = w.deferred match {
+      case None => (novelOf(out), Nil, novelCount)
+      case Some(d) =>
+        val np = d.union(novelOf(out)).persist(StorageLevel.MEMORY_AND_DISK)
+        np.localCheckpoint()
+        (np, List(np), inSlots(np).count())
+    }
+    // this wave's output and next pending are materialized: release the
+    // previous wave's and this wave's selection
+    (l.release ++ w.release).foreach(_.unpersist(blocking = false))
+    l.release = out :: kept
+    l.state = out.mapValues(_.state)
+    l.pending = pending
+    l.hostScan = novelOf(out) // the next wave's robots hook scans only these
+    l.batchCount = batchCount
+    l.wave += 1
+    if (l.wave % cfg.checkpointEvery == 0 || l.batchCount == 0) l.checkpoint()
   }
 
   /** Interleaved media plane: CAS-ingests the media bytes of the pages

@@ -246,7 +246,25 @@ class WaveEngineSpec extends AnyFunSuite {
     }
   }
 
+  /** A prior run's fetched pages (the S11 cache and S14 validators of the
+    * side-table cases) and a rate table naming every host of `site`. */
+  def sideTables(prior: String): Seq[(String, CrawlConfig => CrawlConfig)] = {
+    import spark.implicits._
+    val fetched = Some(s"$prior/fetched")
+    val rates = Some((0 until site.nHosts).map(k => graft.urls.UrlCanon.hostOf(
+      graft.urls.UrlCanon.canonicalize(site.pageUrl(k, 0))) -> (10.0 + k)).toDF("host", "rps"))
+    Seq(
+      "fresh cache" -> (_.copy(fetchCacheDir = fetched)),
+      "stale cache" -> (_.copy(fetchCacheDir = fetched, cacheTtlSec = 0)),
+      "revalidateFrom" -> (_.copy(revalidateFrom = fetched)),
+      "hostRpsTable" -> (_.copy(hostRpsTable = rates)),
+      "all three" -> (_.copy(fetchCacheDir = fetched, revalidateFrom = fetched, hostRpsTable = rates)))
+  }
+
   test("scalable run: one job per wave and per checkpoint, and no other job") {
+    val prior = SparkTestSession.tmpDir("jobsprior")
+    new WaveEngine(spark, site, parsers,
+      CrawlConfig(checkpointDir = prior, hostBuckets = 8, fetchPartitions = 4)).run(seeds)
     // the fetched table costs no job: the fetch tasks write it
     for (keep <- Seq(false, true)) {
       def runJobs(every: Int, cap: Int = Int.MaxValue): (CrawlRunResult, Int) = {
@@ -272,6 +290,84 @@ class WaveEngineSpec extends AnyFunSuite {
       assert(capped.fetched == site.totalPages && capped.waves > rare.waves)
       assert(jobsCapped == 2 * capped.waves + 3,
         s"keepFetched $keep, capped: $jobsCapped jobs for ${capped.waves} waves")
+      // each side table, and all three together, add one job: the side
+      // plane's build, ahead of the first wave
+      for ((name, withSide) <- sideTables(prior)) {
+        val e = new WaveEngine(spark, site, parsers, withSide(CrawlConfig(
+          checkpointDir = SparkTestSession.tmpDir("jobsside"), hostBuckets = 8,
+          fetchPartitions = 4, maxPerHostPerWave = Int.MaxValue, keepFetched = keep,
+          checkpointEvery = 1000000)))
+        val (r, jobs) = jobsOf(e.run(seeds))
+        // the synthetic site answers every validator with a 304, which
+        // has no links: revalidateFrom alone crawls the seeds only
+        if (name != "revalidateFrom") assert(r == rare.copy(elapsedMs = r.elapsedMs), name)
+        assert(jobs == r.waves + 4, s"keepFetched $keep, $name: $jobs jobs for ${r.waves} waves")
+      }
+    }
+  }
+
+  test("a run with side tables leaves nothing cached: its side plane is unpersisted at exit") {
+    val prior = SparkTestSession.tmpDir("leakprior")
+    new WaveEngine(spark, site, parsers,
+      CrawlConfig(checkpointDir = prior, hostBuckets = 8, fetchPartitions = 4)).run(seeds)
+    val sc = spark.sparkContext
+    for ((name, withSide) <- sideTables(prior)) {
+      val (frames, firstId) = (org.apache.spark.sql.CachedFrames(spark), sc.emptyRDD[Int].id)
+      val res = new WaveEngine(spark, site, parsers, withSide(CrawlConfig(
+        checkpointDir = SparkTestSession.tmpDir("leak"), hostBuckets = 8, fetchPartitions = 4)))
+        .run(seeds)
+      assert(res.fetched >= seeds.length, name)
+      assert(org.apache.spark.sql.CachedFrames(spark) == frames,
+        s"$name: cached frames left in the session")
+      // the run keeps only its last wave's checkpointed output
+      val kept = sc.getPersistentRDDs.values.filter(_.id > firstId).toSeq
+      assert(!kept.exists(_.name == "side plane"), name)
+      kept.foreach(r => assert(r.isCheckpointed, s"$name: ${r.id} ${r.name}\n${r.toDebugString}"))
+    }
+  }
+
+  test("S11/S14: two copies of one URL resolve to the latest (wave, seq), then a total tie-break") {
+    // a cache root holding two copies of each URL, one per part file: p0's
+    // differ in (wave, seq), p1's only in store time, p2's only in spans.
+    // The winner (cache: the page served; revalidation: the validator, which
+    // the live page matches exactly when the winner is the expected copy)
+    // does not depend on fetchPartitions or on which file holds which copy
+    import graft.model.{Document, FetchResult, Span, SpanHash}
+    import spark.implicits._
+    val now = System.currentTimeMillis()
+    val urls = (0 until 3).map(i => s"https://a.example.jp/p$i")
+    def spans(text: String) = Seq(Span("text", text, "", 0))
+    def copyOf(i: Int, wave: Int, seq: Long, storedAt: Long, text: String) = FetchResult(urls(i),
+      urls(i), graft.urls.UrlCanon.urlHash(urls(i)), "a.example.jp", 0, "follow_links",
+      Map.empty, wave, seq, 200, from_cache = false, 0L, storedAt, 0, 0, urls(i), spans(text))
+    val (x, y) = ("copy x", "copy y")
+    val tieWinner = Seq(x, y).maxBy(t => SpanHash.of(spans(t)))
+    val first = Seq(copyOf(0, 1, 9L, now, "old"), copyOf(1, 2, 5L, now - 1000L, "old"),
+      copyOf(2, 2, 5L, now, x))
+    val second = Seq(copyOf(0, 3, 1L, now - 1000L, "new"), copyOf(1, 2, 5L, now, "new"),
+      copyOf(2, 2, 5L, now, y))
+    val winners = Map(urls(0) -> "new", urls(1) -> "new", urls(2) -> tieWinner)
+    val live = new graft.fetch.MapFetcher(winners.map { case (u, t) => u -> Document(u, spans(t)) })
+    val noFollow: Map[String, PageParser] = Map("follow_links" -> NoFollow)
+    for (fp <- Seq(2, 4); swap <- Seq(false, true)) {
+      val root = SparkTestSession.tmpDir("copies")
+      val (a, b) = if (swap) (second, first) else (first, second)
+      PlaneWriter.writeDir(s"$root/a", PlaneWriter.fetchResultSchema, a.iterator)
+      PlaneWriter.writeDir(s"$root/b", PlaneWriter.fetchResultSchema, b.iterator)
+      def crawl(cfg: CrawlConfig => CrawlConfig) = {
+        val e = new WaveEngine(spark, live, noFollow, cfg(CrawlConfig(
+          checkpointDir = SparkTestSession.tmpDir("copiesrun"), hostBuckets = 8,
+          fetchPartitions = fp)))
+        e.run(urls.map(SeedSpec(_)))
+        e.fetchedTable().select($"canonical", $"status", $"from_cache", $"spans.text")
+          .as[(String, Int, Boolean, Seq[String])].collect().toSeq
+      }
+      val served = crawl(_.copy(fetchCacheDir = Some(root)))
+      assert(served.map(r => (r._1, r._3, r._4.mkString)).toSet ==
+        winners.map { case (u, t) => (u, true, t) }.toSet, s"fetchPartitions $fp, swap $swap")
+      val revalidated = crawl(_.copy(revalidateFrom = Some(root)))
+      assert(revalidated.map(r => (r._1, r._2)).toSet == urls.map(_ -> 304).toSet,
+        s"fetchPartitions $fp, swap $swap")
     }
   }
 
@@ -360,19 +456,24 @@ class WaveEngineSpec extends AnyFunSuite {
 
   test("scalable mode fetches the same URL set; per-host order is deterministic across parallelism") {
     val (oracleOrder, _) = ReferenceScheduler.crawl(seeds, site, parsers)
+    import spark.implicits._
 
-    def run(parts: Int): (Set[String], Map[String, Seq[String]], CrawlRunResult) = {
+    // (canonical, status, from_cache) of every page, per-host order (cache
+    // hits share slot -1; their seqs order them), and the run's result
+    def run(parts: Int, fetcher: graft.fetch.Fetcher = site,
+        withSide: CrawlConfig => CrawlConfig = identity)
+        : (Set[(String, Int, Boolean)], Map[String, Seq[String]], CrawlRunResult) = {
       val ckpt = SparkTestSession.tmpDir(s"scal$parts")
-      val cfg = CrawlConfig(checkpointDir = ckpt, hostBuckets = 8, fetchPartitions = parts,
-        maxPerHostPerWave = 3)
-      val engine = new WaveEngine(spark, site, parsers, cfg)
+      val cfg = withSide(CrawlConfig(checkpointDir = ckpt, hostBuckets = 8,
+        fetchPartitions = parts, maxPerHostPerWave = 3))
+      val engine = new WaveEngine(spark, fetcher, parsers, cfg)
       val res = engine.run(seeds)
-      import spark.implicits._
       val rows = engine.fetchedTable()
-        .orderBy($"wave", $"slot")
-        .select($"host", $"canonical").as[(String, String)].collect().toSeq
+        .orderBy($"wave", $"slot", $"seq")
+        .select($"host", $"canonical", $"status", $"from_cache")
+        .as[(String, String, Int, Boolean)].collect().toSeq
       val perHost = rows.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      (rows.map(_._2).toSet, perHost, res)
+      (rows.map(r => (r._2, r._3, r._4)).toSet, perHost, res)
     }
 
     val (set2, perHost2, res2) = run(2)
@@ -381,12 +482,38 @@ class WaveEngineSpec extends AnyFunSuite {
     // SortShuffleWriter/ExternalSorter instead of the bypass writer
     assert(spark.sparkContext.getConf.getInt("spark.shuffle.sort.bypassMergeThreshold", 200) < 256)
     val (set256, perHost256, res256) = run(256)
-    assert(set2 == oracleOrder.toSet)
+    assert(set2.map(_._1) == oracleOrder.toSet)
     assert(set8 == set2 && set256 == set2)
     // per-host fetch order independent of parallelism
     assert(perHost2 == perHost8 && perHost256 == perHost2)
     assert(res2.fetched == oracleOrder.size)
     assert(res256.deduped == res2.deduped)
+
+    // all three side tables: a fresh cache of host 0's pages, the
+    // validators of a prior run of the site's first version, and a rate
+    // table; the site changed since, so the misses answer 304 (no links)
+    // or 200 (links followed)
+    val priorCkpt = SparkTestSession.tmpDir("scalprior")
+    val prior = new WaveEngine(spark, graft.fetch.VersionedSite(site, 1), parsers,
+      CrawlConfig(checkpointDir = priorCkpt, hostBuckets = 8, fetchPartitions = 2))
+    prior.run(seeds)
+    val host0 = graft.urls.UrlCanon.hostOf(graft.urls.UrlCanon.canonicalize(site.pageUrl(0, 0)))
+    val cache = SparkTestSession.tmpDir("scalcache")
+    prior.fetchedTable().filter($"host" === host0).write.mode("overwrite").parquet(s"$cache/h0")
+    val rates = (0 until site.nHosts).map(k => graft.urls.UrlCanon.hostOf(
+      graft.urls.UrlCanon.canonicalize(site.pageUrl(k, 0))) -> (2.0 + k)).toDF("host", "rps")
+    val withSide: CrawlConfig => CrawlConfig = _.copy(fetchCacheDir = Some(cache),
+      revalidateFrom = Some(s"$priorCkpt/fetched"),
+      hostRpsTable = Some(rates))
+    val v2 = graft.fetch.VersionedSite(site, 2)
+    val sides = Seq(2, 8, 256).map(run(_, v2, withSide))
+    val (sideSet, sidePerHost, _) = sides.head
+    sides.tail.foreach { case (set, perHost, _) =>
+      assert(set == sideSet && perHost == sidePerHost)
+    }
+    assert(sideSet.exists(_._3) && sideSet.exists(r => !r._3 && r._2 == 304) &&
+      sideSet.exists(r => !r._3 && r._2 == 200), sideSet)
+    assert(sideSet.filter(_._3).map(_._1).forall(_.contains(host0)))
   }
 
   test("waves run in task slots; fetch partitions keep their identity in lineage, rows and part files") {
@@ -662,6 +789,25 @@ class WaveEngineSpec extends AnyFunSuite {
       assert(ts.length == 5)
       assert(ts.zip(ts.tail).map { case (a, b) => b - a }.toSeq == Seq.fill(4)(2000L),
         s"fetchPartitions $fp: ${ts.toSeq}")
+    }
+  }
+
+  test("hostRpsTable: a null host or an rps <= 0 fails the run by name, and leaves no plane") {
+    val site = SyntheticSite(nHosts = 1, basePagesPerHost = 2, branching = 1, hotFactor = 1)
+    import spark.implicits._
+    val sc = spark.sparkContext
+    for ((plane, msg) <- Seq(
+        Seq((null: String, 1.0)).toDF("host", "rps") -> "hostRpsTable row with null host",
+        Seq(("a.example.jp", 0.0)).toDF("host", "rps") ->
+          "hostRpsTable row for host 'a.example.jp' has invalid rps 0.0 (must be > 0)")) {
+      val firstId = sc.emptyRDD[Int].id
+      val e = new WaveEngine(spark, site, parsers, CrawlConfig(
+        checkpointDir = SparkTestSession.tmpDir("badrate"), hostBuckets = 8,
+        fetchPartitions = 2, hostRpsTable = Some(plane)))
+      val err = intercept[Exception](e.run(Seq(SeedSpec(site.pageUrl(0, 0)))))
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(t => t.getMessage != null && t.getMessage.contains(msg)), err)
+      assert(!sc.getPersistentRDDs.values.exists(r => r.id > firstId && r.name == "side plane"))
     }
   }
 
