@@ -5,11 +5,11 @@ import org.apache.spark.serializer.KryoRegistrator
 
 /**
  * Kryo registration for the classes the frontier keeps in serialized
- * cached blocks and ships through the resume path's shuffles (seen rows,
- * pending records). Unregistered Kryo prefixes each object graph with
- * full class-name strings; registered ids are varints. The wave's
- * candidate shuffle does not go through Kryo: it has its own fixed codec,
- * [[CandidateSerializer]].
+ * cached blocks and ships through the side plane's shuffle (prior runs'
+ * pages). Unregistered Kryo prefixes each object graph with full
+ * class-name strings; registered ids are varints. The wave's candidate
+ * shuffle does not go through Kryo: it has its own fixed codec,
+ * [[CandidateSerializer]], and resume's one shuffle is Java-serialized.
  */
 class GraftKryoRegistrator extends KryoRegistrator {
   override def registerClasses(kryo: Kryo): Unit = {

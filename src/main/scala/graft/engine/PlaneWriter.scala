@@ -3,19 +3,25 @@ package graft.engine
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
+import scala.reflect.runtime.universe.TypeTag
 
 import graft.model.{FetchResult, UrlRecord}
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.conf.{ParquetConfiguration, PlainParquetConfiguration}
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.{ReadSupport, WriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.{LocalOutputFile, OutputFile}
+import org.apache.parquet.io.{InputFile, LocalInputFile, LocalOutputFile, OutputFile}
 import org.apache.parquet.io.api.{Binary, RecordConsumer}
 import org.apache.parquet.schema.{GroupType, MessageType}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
+  SparkToParquetSchemaConverter}
 import org.apache.spark.sql.graftbridge.TaskOutputBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /**
@@ -255,5 +261,63 @@ private[engine] object PlaneWriter {
       fields(p)
       rc.endMessage()
     }
+  }
+}
+
+/**
+ * The engine's one parquet reader, [[PlaneWriter]]'s inverse: the task
+ * that needs a plane's rows reads its part files itself, through
+ * parquet-mr and Spark's own `ParquetReadSupport` (the row converter a
+ * `spark.read` scan uses), and decodes each row with the plane's encoder.
+ * No Spark SQL query runs: no planning, no file index, no scan RDD, so a
+ * resume in a fresh JVM pays no Spark SQL set-up before its first job.
+ */
+private[engine] object PlaneReader {
+
+  /** The reader of the plane written with `schema`: a part file's rows,
+    * decoded as `A` (a case class by field name, a tuple by position) and
+    * streamed; the file is closed when they run out or the running task
+    * ends. A task closure can carry it. */
+  def apply[A: TypeTag](schema: StructType): String => Iterator[A] = {
+    val (json, enc) =
+      (schema.json, ExpressionEncoder[A]().resolveAndBind(DataTypeUtils.toAttributes(schema)))
+    file => {
+      val conf = new Configuration(false)
+      conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, json)
+      sqlDefaults.foreach(e => conf.set(e.key, e.defaultValueString))
+      val reader = new Builder(new LocalInputFile(Paths.get(file))).withConf(conf).build()
+      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => reader.close()))
+      Iterator.continually(reader.read()).takeWhile(r => r != null || { reader.close(); false })
+        .map(enc.createDeserializer())
+    }
+  }
+
+  // the engine planes' readers, built once per JVM (an encoder costs
+  // reflection and analysis): a task closure that names them ships none
+  lazy val pending = apply[UrlRecord](PlaneWriter.urlRecordSchema)
+  lazy val seen = apply[(Long, String, Int, Int)](PlaneWriter.seenSchema)
+  lazy val pace = apply[(Int, Long, Long)](PlaneWriter.paceSchema)
+  lazy val hostN = apply[(Int, Long, Long)](PlaneWriter.hostNSchema)
+  lazy val pages = apply[FetchResult](PlaneWriter.fetchResultSchema)
+
+  /** The part files under `dirs`, recursively, in name order, skipping
+    * hidden and `_` names (a writer's temp file, a commit marker); a
+    * missing dir has none. */
+  def files(dirs: Seq[String]): Seq[String] = {
+    def under(d: java.io.File): Seq[String] =
+      Option(d.listFiles()).toSeq.flatten.sortBy(_.getName)
+        .filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
+        .flatMap(f => if (f.isDirectory) under(f) else Seq(f.getPath))
+    dirs.flatMap(d => under(new java.io.File(d)))
+  }
+
+  /** The SQL settings Spark's parquet row converter reads without a
+    * default, at their defaults. */
+  private val sqlDefaults = Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+    SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+    SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
+
+  private final class Builder(file: InputFile) extends ParquetReader.Builder[InternalRow](file) {
+    override def getReadSupport(): ReadSupport[InternalRow] = new ParquetReadSupport()
   }
 }

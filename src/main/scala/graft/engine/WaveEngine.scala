@@ -6,9 +6,9 @@ import graft.urls.UrlCanon
 import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
-import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.serializer.JavaSerializer
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -408,6 +408,10 @@ private[engine] final case class RefState(
   * lineage rows) stay until a compaction covers them, or for good. */
 private[engine] final case class WaveDirKind(parent: String, prefix: String, lag: Int,
     snapshot: Boolean)
+
+/** A per-host checkpoint row read back by resume: a `pace_w*` row (`pace`)
+  * or a `hostn_w*` row, for the host hashed to `hostHash`. */
+private[engine] final case class HostMark(pace: Boolean, hostHash: Long, value: Long)
 
 /**
  * Partition-level pure functions of the scalable core. Static (no
@@ -887,61 +891,47 @@ private[engine] object WaveCore {
       }
     }
 
-  /** Rebuild one partition's bucket states from durable seen rows
-    * (resume path). Rebuilt entries are packed into ONE chunk tagged
+  /** A bucket's state before its first mark. */
+  def emptyState(b: Int): BucketSeen = BucketSeen(b, new graft.seen.SeenSet128(16), Nil, 0L)
+
+  /** Rebuild one partition's plane from its checkpoint rows (resume): a
+    * state for each of its `buckets`, then its pending rows, the mix
+    * [[PlaneWriter.checkpointTask]] writes. A bucket's seen marks (`(url
+    * hash, canonical)` rows) are packed into ONE chunk tagged
     * `resumedWave`: they are already durable (read from flush dirs ≤
     * resumedWave), so later changelog flushes — which write only chunks
-    * with wave > the last flushed wave — never rewrite them. */
-  def rebuildPartition(
-      states: Iterator[(Int, BucketSeen)],
-      rows: Iterator[(Int, (Long, String))],
-      resumedWave: Int,
-      paceRows: Iterator[(Int, (Long, Long))] = Iterator.empty,
-      hostNRows: Iterator[(Int, (Long, Long))] = Iterator.empty): Iterator[(Int, BucketWave)] = {
-    val byBucket = new java.util.HashMap[Int, scala.collection.mutable.ArrayBuffer[(Long, String)]]()
-    rows.foreach { case (b, hc) =>
-      byBucket.computeIfAbsent(b, _ => scala.collection.mutable.ArrayBuffer.empty[(Long, String)]) += hc
+    * with wave > the last flushed wave — never rewrite them. Its
+    * [[HostMark]]s max-merge into its pace map (realtime politeness
+    * continuity across a resume) and admission counts (crawl-budget
+    * continuity: without them a resumed crawl would restart every host's
+    * budget from zero), like the in-run folds. */
+  def rebuildPartition(buckets: Seq[Int], rows: Iterator[(Int, AnyRef)],
+      resumedWave: Int): Iterator[(Int, AnyRef)] = {
+    import scala.collection.mutable.ArrayBuffer
+    val marks = new java.util.HashMap[Int, ArrayBuffer[(Long, String)]]()
+    val pace = new java.util.HashMap[Int, Map[Long, Long]]()
+    val hostN = new java.util.HashMap[Int, Map[Long, Long]]()
+    val pending = ArrayBuffer.empty[(Int, AnyRef)]
+    rows.foreach {
+      case (b, (h: Long, c: String)) =>
+        marks.computeIfAbsent(b, _ => ArrayBuffer.empty[(Long, String)]) += ((h, c))
+      case (b, HostMark(isPace, h, v)) => (if (isPace) pace else hostN)
+        .merge(b, Map(h -> v), (m, _) => m.updated(h, math.max(m.getOrElse(h, 0L), v)))
+      case r => pending += r
     }
-    // checkpointed per-host pace (realtime politeness continuity across a
-    // resume): hostHash -> next-allowed fetch ms, max-merged like the
-    // in-run pace-mark fold
-    val paceByBucket = new java.util.HashMap[Int, Map[Long, Long]]()
-    paceRows.foreach { case (b, (h, ms)) =>
-      val m = paceByBucket.getOrDefault(b, Map.empty)
-      paceByBucket.put(b, m.updated(h, math.max(m.getOrElse(h, 0L), ms)))
-    }
-    // checkpointed per-host admission counts (crawl-budget continuity
-    // across a resume — without them a resumed crawl would restart every
-    // host's budget from zero)
-    val hostNByBucket = new java.util.HashMap[Int, Map[Long, Long]]()
-    hostNRows.foreach { case (b, (h, n)) =>
-      val m = hostNByBucket.getOrDefault(b, Map.empty)
-      hostNByBucket.put(b, m.updated(h, math.max(m.getOrElse(h, 0L), n)))
-    }
-    states.map { case (b, empty0) =>
-      val pace = paceByBucket.getOrDefault(b, Map.empty)
-      val hostN = hostNByBucket.getOrDefault(b, Map.empty)
-      val empty1 = if (pace.isEmpty) empty0 else empty0.copy(pace = pace)
-      val empty = if (hostN.isEmpty) empty1 else empty1.copy(hostN = hostN)
-      val rs = byBucket.get(b)
-      if (rs == null) (b, BucketWave(empty, Array.empty, 0L))
+    buckets.iterator.map { b =>
+      val empty = emptyState(b).copy(pace = pace.getOrDefault(b, Map.empty),
+        hostN = hostN.getOrDefault(b, Map.empty))
+      val rs = marks.get(b)
+      if (rs == null) (b, empty)
       else {
         val seen = new graft.seen.SeenSet128(rs.size)
-        val hashBuf = new scala.collection.mutable.ArrayBuffer[Long](rs.size)
-        val canonBuf = new scala.collection.mutable.ArrayBuffer[String](rs.size)
-        rs.foreach { case (h, c) =>
-          if (seen.add(h, UrlCanon.urlHash2(c))) {
-            hashBuf += h
-            canonBuf += c
-          }
-        }
-        val chunk = graft.seen.SeenChunk.pack(resumedWave, hashBuf.toArray, canonBuf.toArray)
-        (b, BucketWave(
-          BucketSeen(b, seen, chunk :: Nil, hashBuf.length.toLong, empty.pace,
-            empty.hostN),
-          Array.empty, 0L))
+        val marked = rs.filter { case (h, c) => seen.add(h, UrlCanon.urlHash2(c)) } // in order, once
+        val chunk = graft.seen.SeenChunk.pack(resumedWave, marked.map(_._1).toArray,
+          marked.map(_._2).toArray)
+        (b, empty.copy(seen = seen, log = chunk :: Nil, count = marked.length.toLong))
       }
-    }
+    } ++ pending.iterator
   }
 
   /** One checkpoint interval of the reference-order replay: Scrapy's
@@ -1047,14 +1037,17 @@ private[engine] object WaveCore {
  *    at most one task per core (a narrow coalesce; a bulk wave's map side
  *    writes slots × fetchPartitions shuffle files, not fetchPartitions²),
  *    the candidate shuffle is written by the fixed [[CandidateSerializer]]
- *    codec (no per-task Kryo instances),
- *    the empty seed/resume state is built in place (no shuffle), and a
- *    checkpoint is ONE job whose tasks write every plane with
- *    [[PlaneWriter]], coalesced to one part file per 2^20 rows instead of
- *    one per fetch partition, and the fetched pages are written by the
- *    wave's own fetch tasks; every engine parquet file comes from
- *    PlaneWriter, and the loop runs no count or write job outside its
- *    waves and checkpoints;
+ *    codec (no per-task Kryo instances), and a checkpoint is ONE job
+ *    whose tasks write every plane with [[PlaneWriter]], coalesced to one
+ *    part file per 2^20 rows instead of one per fetch partition, and the
+ *    fetched pages are written by the wave's own fetch tasks; every engine
+ *    parquet file comes from PlaneWriter, and the loop runs no count or
+ *    write job outside resume's count, its waves and its checkpoints;
+ *  - one start path: a fresh run commits the wave-0 checkpoint from the
+ *    driver (the seeds' pending rows and seen marks, no job) and resumes
+ *    from it, so every crawl starts through the resume reader: the tasks
+ *    read the checkpoint's part files with [[PlaneReader]] (no Spark SQL)
+ *    and ONE shuffle brings every plane to its bucket's partition;
  *  - within-wave dedup, the exact seen check, seq assignment and the
  *    seen-set add are ONE partition-local pass — no per-wave window
  *    shuffle, no re-shuffle of the accumulated seen set, no driver-side
@@ -1085,8 +1078,6 @@ class WaveEngine(
     fetcher: Fetcher,
     parsers0: Map[String, PageParser],
     cfg: CrawlConfig) {
-
-  import spark.implicits._
 
   // media rows must never fall through to the FollowAllLinks default (their
   // span list is empty, so it would be a silent no-op — register the
@@ -1195,22 +1186,22 @@ class WaveEngine(
   /** Seed URLs as wave-0 candidates (parent_seq = listed index, so listed
     * order is the per-host discovery order), deduped on the canonical. */
   private def seedCandidates(seeds: Seq[SeedSpec]): Seq[Candidate] = {
-    val buckets = cfg.hostBuckets
-    val rows = seeds.zipWithIndex.map { case (s, i) =>
+    seeds.zipWithIndex.map { case (s, i) =>
       val canon = UrlCanon.canonicalize(s.url)
-      val host = UrlCanon.hostOf(canon)
       Candidate(if (s.url == canon) null else s.url, canon, UrlCanon.urlHash(canon),
-        UrlCanon.hostBucket(host, buckets), s.parseFn, s.meta, s.priority,
-        parent_seq = i.toLong, emission_idx = 0)
-    }
-    val seenC = scala.collection.mutable.HashSet[String]()
-    rows.filter(r => seenC.add(r.canonical))
+        UrlCanon.hostBucket(UrlCanon.hostOf(canon), cfg.hostBuckets), s.parseFn, s.meta,
+        s.priority, parent_seq = i.toLong, emission_idx = 0)
+    }.distinctBy(_.canonical)
   }
 
   // ------------------------------------------------------------------
   // entry points
   // ------------------------------------------------------------------
 
+  /** A fresh crawl of `seeds`: clears what a previous run left in the
+    * checkpoint dir, commits the wave-0 checkpoint from the driver (no
+    * job) and resumes from it, so every run starts through [[resume]]'s
+    * reader, in both modes. */
   def run(seeds: Seq[SeedSpec]): CrawlRunResult = {
     // the scalable-loop features (S11 cache, live robots, per-host rates,
     // S14 revalidation, crawl budget) have no place in the replay: its
@@ -1222,9 +1213,36 @@ class WaveEngine(
       "maxPagesPerHost" -> (cfg.maxPagesPerHost != Long.MaxValue)).collect { case (k, true) => k }
     require(!cfg.referenceOrder || scalableOnly.isEmpty,
       s"${scalableOnly.mkString(", ")} not supported in referenceOrder mode")
-    if (cfg.referenceOrder) runReference(seeds) else runScalable(seeds)
+    Files.createDirectories(Paths.get(ckpt))
+    clearStaleRun()
+    val cands = seedCandidates(seeds)
+    val (rows, nextSeq) =
+      if (cfg.referenceOrder) {
+        // start requests queue unmarked: Scrapy fingerprints one only when
+        // it is consumed, so a link-discovered copy can pre-empt it. Their
+        // seqs are listed indexes, so follow-up seqs start past the list
+        (cands.iterator.map(c => (c.host_bucket, UrlRecord(c.urlOrCanonical, c.canonical,
+          c.url_hash, UrlCanon.hostOf(c.canonical), c.host_bucket, c.parse_fn, c.meta, c.priority,
+          is_seed = true, wave = 0, seq = c.parent_seq): AnyRef)), seeds.length.toLong)
+      } else {
+        // the seeds run through the same advance as every wave, over every
+        // bucket's empty state: marked seen at enqueue, interleaved seqs,
+        // the per-host budget applied
+        val nB = cfg.hostBuckets
+        val out = WaveCore.advancePartition(
+          (0 until nB).iterator.map(b => (b, WaveCore.emptyState(b))),
+          cands.iterator.map(c => (c.host_bucket, c)), base = 0L, newWave = 0, seedWave = true,
+          nBuckets = nB, maxPerHost = cfg.maxPagesPerHost).toSeq
+        (out.iterator.flatMap { case (b, bw) =>
+          Iterator((b, bw.state: AnyRef)) ++ bw.novel.iterator.map(r => (b, r: AnyRef))
+        }, (out.map(_._2.novel.length.toLong).sum + 1) * nB)
+      }
+    PlaneWriter.checkpointTask(0, rows, checkpointDirs(0, s"$ckpt/seen/flush_0"), sinceWave = -1)
+    writeState(0, nextSeq, 0L, 0L)
+    resume()
   }
 
+  /** Continues the crawl from its committed checkpoint (`LATEST`). */
   def resume(): CrawlRunResult =
     if (cfg.referenceOrder) resumeReference() else resumeScalable()
 
@@ -1264,24 +1282,6 @@ class WaveEngine(
   // ==================================================================
   // scalable path: bucket-partitioned seen-state RDD core
   // ==================================================================
-
-  /** Empty per-bucket state, built in place: partition p holds the
-    * buckets the frontier partitioner maps to p, so no shuffle is needed.
-    * The RDD itself carries no partitioner; zip it behind a partitioned
-    * parent, whose partitioner the zip output keeps. */
-  private def emptyStateRdd(part: HashPartitioner = partitioner): RDD[(Int, BucketSeen)] = {
-    val nBuckets = cfg.hostBuckets
-    sc.parallelize(0 until part.numPartitions, part.numPartitions)
-      .mapPartitionsWithIndex((p, _) =>
-        (0 until nBuckets).iterator.filter(part.getPartition(_) == p)
-          .map(b => (b, BucketSeen(b, new graft.seen.SeenSet128(16), Nil, 0L))))
-  }
-
-  /** The wave's candidate shuffle, bucket-partitioned, through the fixed
-    * [[CandidateSerializer]] codec rather than the session serializer. */
-  private def shuffleCandidates(cands: RDD[(Int, Candidate)]): RDD[(Int, Candidate)] =
-    new ShuffledRDD[Int, Candidate, Candidate](cands, partitioner)
-      .setSerializer(new CandidateSerializer)
 
   /** Part files of a checkpoint write of `rows` rows: one per 2^20 rows,
     * at least one, at most one per fetch partition. */
@@ -1363,10 +1363,7 @@ class WaveEngine(
     val (seenDir, since, seenFiles) =
       if (compact) (s"$ckpt/seen/compact_$wave", -1, checkpointFiles(seenRows))
       else (s"$ckpt/seen/flush_$wave", sinceWave, checkpointFiles(novelRows))
-    val dirs = PlaneWriter.Dirs(s"$ckpt/pending_w$wave", seenDir,
-      if (cfg.realtime) Some(s"$ckpt/pace_w$wave") else None,
-      if (cfg.maxPagesPerHost != Long.MaxValue) Some(s"$ckpt/hostn_w$wave") else None)
-    dirs.all.foreach(PlaneWriter.clear)
+    val dirs = checkpointDirs(wave, seenDir)
     val rows = state.zipPartitions(pending)((st, pd) => st ++ pd: Iterator[(Int, AnyRef)])
       .coalesce(math.max(checkpointFiles(pendingRows), seenFiles))
     sc.runJob(rows, (ctx: TaskContext, it: Iterator[(Int, AnyRef)]) =>
@@ -1376,6 +1373,16 @@ class WaveEngine(
     writeState(wave, nextSeq, totalFetched, totalDeduped)
     waveDirs().filter { case (k, n, _) => n < wave && (k.snapshot || compact && k.parent == "seen") }
       .foreach(d => graft.util.Fs.deleteRecursively(d._3))
+  }
+
+  /** The plane dirs of the checkpoint at `wave`, cleared: `pending_w$wave`,
+    * `seenDir` and, when active, `pace_w$wave` and `hostn_w$wave`. */
+  private def checkpointDirs(wave: Int, seenDir: String): PlaneWriter.Dirs = {
+    val dirs = PlaneWriter.Dirs(s"$ckpt/pending_w$wave", seenDir,
+      if (cfg.realtime) Some(s"$ckpt/pace_w$wave") else None,
+      if (cfg.maxPagesPerHost != Long.MaxValue) Some(s"$ckpt/hostn_w$wave") else None)
+    dirs.all.foreach(PlaneWriter.clear)
+    dirs
   }
 
   /** A FRESH run must not inherit ANY durable state from a prior run in
@@ -1405,55 +1412,23 @@ class WaveEngine(
       .foreach(d => graft.util.Fs.deleteRecursively(d._3))
   }
 
-  private def runScalable(seeds: Seq[SeedSpec]): CrawlRunResult = {
-    Files.createDirectories(Paths.get(ckpt))
-    clearStaleRun()
-    val nB = cfg.hostBuckets.toLong
-    val maxPerHostB = cfg.maxPagesPerHost // local: closures must not capture `this`
-    val seedCands = shuffleCandidates(
-      sc.parallelize(seedCandidates(seeds), slots).map(c => (c.host_bucket, c)))
-    // the seed wave runs through the same advance pass as every other wave:
-    // seeds are marked seen at enqueue and get interleaved seqs
-    val out0 = seedCands.zipPartitions(emptyStateRdd(), preservesPartitioning = true) {
-      (cd, st) => WaveCore.advancePartition(st, cd, base = 0L, newWave = 0,
-        seedWave = true, nBuckets = nB, maxPerHost = maxPerHostB)
-    }
-    out0.localCheckpoint()
-    val c0 = waveCounts(out0)
-    val (nSeeds, seen0) = (c0(0), c0(2))
-    val nextSeq = (nSeeds + 1) * nB
-    val state0 = out0.mapValues(_.state)
-    val pending0 = novelOf(out0)
-    writeScalableCheckpoint(0, state0, pending0, nSeeds, nSeeds, seen0, nextSeq, 0L, 0L,
-      lineage = Nil, sinceWave = -1)
-    loopScalable(new Loop(0, state0, pending0, nSeeds, seen0, nextSeq, fetched = 0L,
-      deduped = 0L, release = List(out0)))
+  /** The rows of every part file under the `dirs` of each source, read in
+    * [[slots]] tasks: a task reads whole files, each with its source's
+    * `read` (a [[PlaneReader]] inside), and no Spark SQL runs. */
+  private def readPlanes[T: ClassTag](sources: (Seq[String], String => Iterator[T])*): RDD[T] = {
+    val reads = sources.map(_._2).toArray
+    val files = sources.map(_._1).zipWithIndex
+      .flatMap { case (d, k) => PlaneReader.files(d).map((k, _)) }
+    sc.parallelize(files, slots).flatMap { case (k, f) => reads(k)(f) }
   }
 
-  /** The Spark SQL read behind every [[loadPlane]] source: the rows of the
-    * engine's parquet under `dirs` (recursively) as `A`, projected to
-    * `cols` when given. */
-  private def readRows[A: Encoder: ClassTag](schema: StructType, dirs: Seq[String],
-      cols: String*): RDD[A] =
-    if (dirs.isEmpty) sc.emptyRDD[A]
-    else {
-      val df = spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(dirs: _*)
-      (if (cols.isEmpty) df else df.select(cols.map(col): _*)).as[A].rdd
-    }
-
-  /** The one loader of every bucket-keyed plane, the side plane and each
-    * plane resume reads back: the union of `sources`, already keyed by
-    * bucket, in one `partitionBy(part)` (no source: an empty plane). */
-  private def loadPlane[T: ClassTag](part: HashPartitioner, sources: RDD[(Int, T)]*)
-      : RDD[(Int, T)] =
-    (if (sources.isEmpty) sc.emptyRDD[(Int, T)] else sc.union(sources)).partitionBy(part)
-
   /** Reads the committed checkpoint (LATEST): (wave, next seq, fetched,
-    * deduped, bucket states rebuilt from the seen changelog, pending rows),
-    * keyed by bucket under `part` — the frontier partitioner for the
-    * scalable loop, one partition for the reference-order replay. */
-  private def readCheckpoint(part: HashPartitioner)
-      : (Int, Long, Long, Long, RDD[(Int, BucketWave)], RDD[(Int, UrlRecord)]) = {
+    * deduped, plane). The plane is every plane of the checkpoint, keyed by
+    * bucket and shuffled ONCE under `part` — the frontier partitioner for
+    * the scalable loop, one partition for the reference-order replay — and
+    * rebuilt per partition ([[WaveCore.rebuildPartition]]): each bucket's
+    * state, then the pending rows. */
+  private def readCheckpoint(part: HashPartitioner): (Int, Long, Long, Long, RDD[(Int, AnyRef)]) = {
     val wave = latestCheckpointWave.getOrElse(
       throw new IllegalStateException(s"no checkpoint under $ckpt"))
     val (nextSeq, fetched, deduped) = readState(wave)
@@ -1463,40 +1438,26 @@ class WaveEngine(
     // or lineage rows with its own
     waveDirs().filter { case (k, n, _) => n + k.lag > wave }
       .foreach(d => graft.util.Fs.deleteRecursively(d._3))
+    def hostMarks(pace: Boolean) = (f: String) => (if (pace) PlaneReader.pace else PlaneReader.hostN)(f)
+      .map { case (b, h, v) => (b, HostMark(pace, h, v)) }
     // the durable seen set = UNION of all changelog flushes ≤ the
     // committed wave (each flush carries only the delta since its
-    // predecessor); rebuildPartition dedups, so a replayed overlap is safe
-    val seenRows = loadPlane(part, readRows[(Int, Long, String)](seenSchema, seenFlushDirs(wave),
-      "host_bucket", "url_hash", "canonical").map { case (b, h, c) => (b, (h, c)) })
-    // the per-host pace map (absent for simulated-mode checkpoints → empty)
-    // and crawl-budget counts (absent when the budget is off)
-    def hostPlane(dir: String, schema: StructType): RDD[(Int, (Long, Long))] =
-      loadPlane(part, readRows[(Int, Long, Long)](schema,
-        Seq(dir).filter(new java.io.File(_).isDirectory), schema.fieldNames.toSeq: _*)
-        .map { case (b, h, v) => (b, (h, v)) })
-    val paceRows = hostPlane(s"$ckpt/pace_w$wave", PlaneWriter.paceSchema)
-    val hostNRows = hostPlane(s"$ckpt/hostn_w$wave", PlaneWriter.hostNSchema)
-    val out = seenRows.zipPartitions(paceRows, hostNRows, emptyStateRdd(part),
-        preservesPartitioning = true) {
-      (rows, pace, hostn, st) =>
-        WaveCore.rebuildPartition(st, rows, wave, pace, hostn)
-    }
-    val pending = loadPlane(part, readRows[UrlRecord](urlRecordSchema, Seq(s"$ckpt/pending_w$wave"))
-      .map(r => (r.host_bucket, r)))
-    (wave, nextSeq, fetched, deduped, out, pending)
-  }
-
-  private def resumeScalable(): CrawlRunResult = {
-    val (wave, nextSeq, fetched, deduped, out0, pending) = readCheckpoint(partitioner)
-    out0.localCheckpoint()
-    val pendingKeyed = pending.persist(StorageLevel.MEMORY_AND_DISK)
-    // one job materializes the rebuilt state and the pending rows, and
-    // counts the seen marks and the first batch
-    val (seen0, batch0) = inSlots(out0.zipPartitions(pendingKeyed) { (o, p) =>
-      Iterator.single((o.map(_._2.state.count).sum, p.size.toLong))
-    }).reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-    loopScalable(new Loop(wave, out0.mapValues(_.state), pendingKeyed, batch0, seen0, nextSeq,
-      fetched, deduped, release = List(out0, pendingKeyed)))
+    // predecessor); rebuildPartition dedups, so a replayed overlap is safe.
+    // The pace and budget planes are absent when off.
+    val rows = readPlanes[(Int, AnyRef)](
+      seenFlushDirs(wave) ->
+        ((f: String) => PlaneReader.seen(f).map { case (h, c, b, _) => (b, (h, c)) }),
+      Seq(s"$ckpt/pace_w$wave") -> hostMarks(pace = true),
+      Seq(s"$ckpt/hostn_w$wave") -> hostMarks(pace = false),
+      Seq(s"$ckpt/pending_w$wave") -> ((f: String) => PlaneReader.pending(f).map(r => (r.host_bucket, r))))
+    val nB = cfg.hostBuckets // local: closures must not capture `this`
+    // Java serialization: a Kryo shuffle stream costs a Kryo instance per
+    // task and reduce partition, most of a small resume's time
+    val plane = new ShuffledRDD[Int, AnyRef, AnyRef](rows, part)
+      .setSerializer(new JavaSerializer(sc.getConf)).mapPartitionsWithIndex((p, it) =>
+      WaveCore.rebuildPartition((0 until nB).filter(part.getPartition(_) == p), it, wave),
+      preservesPartitioning = true)
+    (wave, nextSeq, fetched, deduped, plane)
   }
 
   /** The run's side plane: one [[SideLookup]] per fetch partition, from
@@ -1504,9 +1465,10 @@ class WaveEngine(
     * within `cacheTtlSec`, on the wall clock) and `revalidateFrom` (its
     * non-media 2xx rows, as span hashes) are set. When none is (the bench
     * loop), each wave task makes an empty lookup, and no job runs; else the
-    * tables are read, keyed by the bucket of their host ([[loadPlane]],
-    * under the frontier's own partitioner), and each partition's rows
-    * become its lookup, persisted: [[loopScalable]] builds it in ONE job
+    * tables are read (the prior runs' pages inside tasks, by
+    * [[readPlanes]]), keyed by the bucket of their host, shuffled once
+    * under the frontier's own partitioner, and each partition's rows
+    * become its lookup, persisted: [[resumeScalable]] builds it in ONE job
     * and releases it at loop exit. The wave tasks read it only through
     * zipPartitions, so each sees only its buckets' rows, and nothing of it
     * rides a task closure or the driver. */
@@ -1532,7 +1494,7 @@ class WaveEngine(
       }
     }
     def prior(dir: String, keep: FetchResult => Boolean, keepPage: Boolean) =
-      readRows[FetchResult](fetchResultSchema, Seq(dir)).filter(fr => fr.ok && keep(fr))
+      readPlanes(Seq(dir) -> ((f: String) => PlaneReader.pages(f))).filter(fr => fr.ok && keep(fr))
         .map(fr => (UrlCanon.hostBucket(UrlCanon.hostOf(fr.canonical), buckets),
           PriorCopy.of(fr, keepPage): SideRow))
     // TTL on the WALL-CLOCK store time — never the politeness-plan stamp
@@ -1544,27 +1506,29 @@ class WaveEngine(
     val sources = (rates ++ cache ++ validators).toSeq
     if (sources.isEmpty) sc.parallelize(Seq.empty[Int], cfg.fetchPartitions)
       .mapPartitions(_ => Iterator.single(new SideLookup(Iterator.empty)))
-    else loadPlane(partitioner, sources: _*)
+    else sc.union(sources).partitionBy(partitioner)
       .mapPartitions(it => Iterator.single(new SideLookup(it.map(_._2))))
       .setName("side plane").persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** The scalable loop's driver-side state between waves. No task closure
     * captures it: each phase copies what its tasks need into locals.
-    * `release` is what the next commit unpersists: the previous wave's
-    * output and, on the budget path, its next pending. */
+    * `held` is every RDD the loop has persisted and not yet released: the
+    * resumed plane, then the last wave's output and, on the budget path,
+    * its next pending, plus what the wave in flight persists. Each commit
+    * releases all but its own wave's; a failed run releases all of it. */
   private final class Loop(
       var wave: Int,
       var state: RDD[(Int, BucketSeen)],
       var pending: RDD[(Int, UrlRecord)],
-      var batchCount: Long, // exact: every batch row yields one FetchResult
-      var totalSeen: Long,
       var nextSeq: Long,
       fetched: Long,
       deduped: Long,
-      var release: List[RDD[_]]) {
+      var held: List[RDD[_]]) {
     val startWave: Int = wave
     val t0: Long = System.currentTimeMillis()
+    var batchCount = 0L // exact: every batch row yields one FetchResult
+    var totalSeen = 0L
     var totalFetched: Long = fetched
     var totalDeduped: Long = deduped
     var lastFlushed: Int = wave
@@ -1582,6 +1546,12 @@ class WaveEngine(
     var robotsRps = Map.empty[String, Double]
     var robotsResolved = Set.empty[String]
 
+    /** `rdd`, persisted at `level` and held until a commit releases it. */
+    def hold[T](rdd: RDD[T], level: StorageLevel): RDD[T] = {
+      held ::= rdd.persist(level)
+      rdd
+    }
+
     def checkpoint(): Unit = {
       writeScalableCheckpoint(wave, state, pending, batchCount, novelSinceFlush, totalSeen,
         nextSeq, totalFetched, totalDeduped, lineage.toSeq, sinceWave = lastFlushed)
@@ -1592,62 +1562,84 @@ class WaveEngine(
   }
 
   /** One wave as its phases hand it on: [[select]] fixes the wave's clock,
-    * robots rules and rates, its batch and what it defers (with `release`,
-    * the persisted selection the commit unpersists). */
+    * robots rules and rates, its batch and what it defers. */
   private final class Wave(val n: Int, val startMs: Long, val robots: Map[String, Seq[String]],
       val robotsRps: Map[String, Double], val batch: RDD[UrlRecord],
-      val deferred: Option[RDD[(Int, UrlRecord)]], val release: List[RDD[_]])
+      val deferred: Option[RDD[(Int, UrlRecord)]])
 
   /**
-   * The scalable wave loop: five phases per wave over one [[Wave]] record
-   * ([[select]], [[fetch]], [[exchange]], [[advance]], [[commit]]), each
-   * optional feature the identity when unset. Per wave: one candidate
-   * shuffle (through the [[CandidateSerializer]] codec, which also carries
-   * the pace and lineage marks) and one materializing action
-   * ([[waveCounts]]: the novel, candidate and seen counts and the
-   * per-fetch-partition lineage counts, which also populates the
-   * localCheckpoint blocks). With `keepFetched`, the fetch tasks write the
-   * wave's pages to `fetched/wave_N` inside that same job, as the
-   * shuffle's map side drains them. No driver-side collect of state, no
-   * broadcast but the parsers', and no Spark SQL outside the media store's
-   * ingest: the rate table, the S11 cache and the S14 validators are one
-   * [[sidePlane]], built before the first wave.
+   * The scalable loop, from the committed checkpoint: resume's plane
+   * ([[readCheckpoint]], one shuffle) persisted, locally checkpointed and
+   * counted in ONE job (the seen marks and the first batch), then five
+   * phases per wave over one [[Wave]] record ([[select]], [[fetch]],
+   * [[exchange]], [[advance]], [[commit]]), each optional feature the
+   * identity when unset. Per wave: one candidate shuffle (through the
+   * [[CandidateSerializer]] codec, which also carries the pace and lineage
+   * marks) and one materializing action ([[waveCounts]]: the novel,
+   * candidate and seen counts and the per-fetch-partition lineage counts,
+   * which also populates the localCheckpoint blocks). With `keepFetched`,
+   * the fetch tasks write the wave's pages to `fetched/wave_N` inside that
+   * same job, as the shuffle's map side drains them. No driver-side
+   * collect of state, no broadcast but the parsers', and no Spark SQL
+   * outside the media store's ingest and a `hostRpsTable` DataFrame: the
+   * checkpoint planes and the prior runs' pages are read inside tasks
+   * ([[PlaneReader]]), and the rate table, the S11 cache and the S14
+   * validators are one [[sidePlane]], built before the first wave.
    *
    * Job accounting: the driver keeps the counts it already has, so the
-   * loop runs no job of its own outside its waves and checkpoints. The
-   * first batch's size and the seen total come from the caller (the seed
-   * wave's reduce on `run`, resume's one materializing count), and each
-   * wave's reduce returns the next batch's novel count, the new seen total
-   * and the wave's lineage rows, whose `in_count`s sum to the pages it
-   * fetched (cache hits included) on every path. A checkpoint is one job
-   * ([[writeScalableCheckpoint]], sized by those counts) that also commits
-   * the lineage rows since the previous one; a seen compaction rides the
-   * checkpoint's job. With the per-host budget uncapped, no robots
-   * resolver and no media store, a fresh run is `waves + 3` jobs at
-   * `checkpointEvery` ≥ waves (seed wave, wave-0 and exit checkpoints),
-   * one checkpoint job more per checkpointed wave, and one job more for the
-   * side plane when any side table is set, with or without the fetched
-   * table. The per-host budget path (a capped `maxPerHostPerWave`, or
-   * realtime) runs 2 jobs per wave: the wave, and the count of the next
-   * pending (deferred ∪ novel), which also cuts its lineage — `2·waves +
-   * 3` at `checkpointEvery` ≥ waves.
+   * loop runs no job of its own outside resume's count, its waves and its
+   * checkpoints. Each wave's reduce returns the next batch's novel count,
+   * the new seen total and the wave's lineage rows, whose `in_count`s sum
+   * to the pages it fetched (cache hits included) on every path. A
+   * checkpoint is one job ([[writeScalableCheckpoint]], sized by those
+   * counts) that also commits the lineage rows since the previous one; a
+   * seen compaction rides the checkpoint's job. A fresh [[run]] commits its
+   * wave-0 checkpoint on the driver and resumes, so with the per-host
+   * budget uncapped, no robots resolver and no media store, a run or a
+   * resume is `waves + 2` jobs at `checkpointEvery` ≥ waves (resume's
+   * count and the exit checkpoint), one checkpoint job more per
+   * checkpointed wave, and one job more for the side plane when any side
+   * table is set, with or without the fetched table. The per-host budget
+   * path (a capped `maxPerHostPerWave`, or realtime) runs 2 jobs per wave:
+   * the wave, and the count of the next pending (deferred ∪ novel), which
+   * also cuts its lineage — `2·waves + 2` at `checkpointEvery` ≥ waves.
    *
    * Task accounting: every job here runs in [[slots]] = min(fetchPartitions,
-   * defaultParallelism) tasks through [[inSlots]]. A wave is two stages of
-   * `slots` tasks: the map stage fetches, parses, writes the fetched pages
-   * and combines candidates once per fetch partition (the partition's
-   * index, from `mapPartitionsWithIndex`, names its `partition_id` and
-   * part file, and its buckets' lineage marks sum to its lineage row);
-   * the reduce stage advances groups of the state's partitions and fills
-   * the persisted wave output's blocks, which the job's local checkpoint
-   * then cuts. A checkpoint job runs in
+   * defaultParallelism) tasks through [[inSlots]]. Resume's count is two
+   * stages of `slots` tasks: the map stage reads the checkpoint's part
+   * files, the reduce stage rebuilds groups of the plane's partitions. A
+   * wave is two stages of `slots` tasks: the map stage fetches, parses,
+   * writes the fetched pages and combines candidates once per fetch
+   * partition (the partition's index, from `mapPartitionsWithIndex`, names
+   * its `partition_id` and part file, and its buckets' lineage marks sum to
+   * its lineage row); the reduce stage advances groups of the state's
+   * partitions and fills the persisted wave output's blocks, which the
+   * job's local checkpoint then cuts. A checkpoint job runs in
    * [[checkpointFiles]] tasks. So a 5-wave crawl at 32 fetch partitions on
-   * 4 cores, with its seed wave and two checkpoints, runs 50 tasks.
+   * 4 cores, with resume's count and the exit checkpoint, runs 49 tasks.
+   *
+   * A run that throws releases everything the loop holds (`Loop.held`) and
+   * the side plane; a normal exit keeps the last wave's checkpointed
+   * output.
    */
-  private def loopScalable(l: Loop): CrawlRunResult = {
+  private def resumeScalable(): CrawlRunResult = {
+    val (wave, nextSeq, fetched, deduped, plane) = readCheckpoint(partitioner)
     val side = sidePlane()
     val parsersB = sc.broadcast(parsers)
+    plane.persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
+    def part[T](pf: PartialFunction[(Int, AnyRef), (Int, T)]) =
+      plane.mapPartitions(_.collect(pf), preservesPartitioning = true)
+    val l = new Loop(wave, part { case (b, st: BucketSeen) => (b, st) },
+      part { case (b, r: UrlRecord) => (b, r) }, nextSeq, fetched, deduped, held = List(plane))
     try {
+      // one job materializes the rebuilt plane, and counts the seen marks
+      // and the first batch
+      val (seen0, batch0) = inSlots(plane).map {
+        case (_, st: BucketSeen) => (st.count, 0L)
+        case _ => (0L, 1L)
+      }.fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
+      l.totalSeen = seen0
+      l.batchCount = batch0
       // build a persisted plane once, ahead of the first wave
       if (side.getStorageLevel.isValid) inSlots(side).count()
       while (l.batchCount > 0 && l.wave < cfg.maxWaves && l.totalFetched < cfg.maxUrls) {
@@ -1658,6 +1650,10 @@ class WaveEngine(
       }
       // loop exited on maxWaves/maxUrls between checkpoints
       if (latestCheckpointWave.forall(_ < l.wave)) l.checkpoint()
+    } catch {
+      case t: Throwable =>
+        l.held.foreach(_.unpersist(blocking = false))
+        throw t
     } finally side.unpersist(blocking = false) // a failed build or wave must not leak it
     CrawlRunResult(l.wave - l.startWave, l.totalFetched, l.totalDeduped, l.totalSeen,
       System.currentTimeMillis() - l.t0)
@@ -1702,22 +1698,21 @@ class WaveEngine(
           math.max(1L, math.floor(stallSec * hr).toLong)).toInt
       }
     if (maxPerHost == Int.MaxValue && !realtime)
-      new Wave(l.wave, startMs, l.robotsMap, robotsRpsW, pending.values, None, Nil)
+      new Wave(l.wave, startMs, l.robotsMap, robotsRpsW, pending.values, None)
     else {
-      val sel = pending.mapPartitions(it =>
+      // the selection is consumed by the wave's job and the deferred count
+      val sel = l.hold(pending.mapPartitions(it =>
         it.map(_._2).toArray.groupBy(_.host).valuesIterator.flatMap { rows =>
           val budget = slowHostBudget(rows.head)
           rows.sortBy(r => (-r.priority, r.seq)).iterator.zipWithIndex
             .map { case (r, i) => (i < budget, r) }
         },
-        preservesPartitioning = true)
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
+        preservesPartitioning = true), StorageLevel.MEMORY_AND_DISK_SER)
       val batch = sel.mapPartitions(_.collect { case (true, r) => r },
         preservesPartitioning = true)
       val deferred = sel.mapPartitions(_.collect { case (false, r) => (r.host_bucket, r) },
         preservesPartitioning = true)
-      // the selection is consumed by the wave's job and the deferred count
-      new Wave(l.wave, startMs, l.robotsMap, robotsRpsW, batch, Some(deferred), List(sel))
+      new Wave(l.wave, startMs, l.robotsMap, robotsRpsW, batch, Some(deferred))
     }
   }
 
@@ -1822,15 +1817,17 @@ class WaveEngine(
   /** Exchange: parse → candidates, pace marks and lineage marks
     * ([[WaveCore.waveCandidates]]) → the wave's ONE shuffle
     * (bucket-partitioned, sized by the wave, never by the accumulated seen
-    * set). The map stage runs in slots: each task fetches, parses and
-    * combines whole fetch partitions and writes one shuffle output. */
+    * set), written by the fixed [[CandidateSerializer]] codec rather than
+    * the session serializer. The map stage runs in slots: each task
+    * fetches, parses and combines whole fetch partitions and writes one
+    * shuffle output. */
   private def exchange(w: Wave, pages: RDD[FetchResult],
       parsersB: Broadcast[Map[String, PageParser]]): RDD[(Int, Candidate)] = {
     val (buckets, robotsEnabled, realtime, rps, robots, robotsRps) = (cfg.hostBuckets,
       cfg.robotsEnabled, cfg.realtime, cfg.politenessRps, w.robots, w.robotsRps)
-    shuffleCandidates(inSlots(pages.mapPartitions(it =>
+    new ShuffledRDD[Int, Candidate, Candidate](inSlots(pages.mapPartitions(it =>
       WaveCore.waveCandidates(it, parsersB.value, buckets, robotsEnabled, robots, realtime, rps,
-        robotsRps))))
+        robotsRps))), partitioner).setSerializer(new CandidateSerializer)
   }
 
   /** Advance: the seen state zipped with the candidates — dedup, seq
@@ -1855,8 +1852,7 @@ class WaveEngine(
     // O(seen)-byte Kryo pass per wave; with the old String-array logs
     // SER was the right call — millions of live objects dominated
     // young-GC copy time — but that object graph no longer exists)
-    out.persist(StorageLevel.MEMORY_AND_DISK)
-    out.localCheckpoint()
+    l.hold(out, StorageLevel.MEMORY_AND_DISK).localCheckpoint()
     (out, waveCounts(out))
   }
 
@@ -1884,14 +1880,13 @@ class WaveEngine(
     val (pending, kept, batchCount) = w.deferred match {
       case None => (novelOf(out), Nil, novelCount)
       case Some(d) =>
-        val np = d.union(novelOf(out)).persist(StorageLevel.MEMORY_AND_DISK)
-        np.localCheckpoint()
+        val np = l.hold(d.union(novelOf(out)), StorageLevel.MEMORY_AND_DISK).localCheckpoint()
         (np, List(np), inSlots(np).count())
     }
     // this wave's output and next pending are materialized: release the
-    // previous wave's and this wave's selection
-    (l.release ++ w.release).foreach(_.unpersist(blocking = false))
-    l.release = out :: kept
+    // rest, the previous wave's and this wave's selection
+    l.held.filterNot((out :: kept).contains).foreach(_.unpersist(blocking = false))
+    l.held = out :: kept
     l.state = out.mapValues(_.state)
     l.pending = pending
     l.hostScan = novelOf(out) // the next wave's robots hook scans only these
@@ -1911,35 +1906,13 @@ class WaveEngine(
   // reference-order (Scrapy LIFO) replay: one task per checkpoint interval
   // ==================================================================
 
-  /** A fresh replay commits the wave-0 checkpoint (the start requests,
-    * no seen marks) and resumes from it: one start path, one reader. */
-  private def runReference(seeds: Seq[SeedSpec]): CrawlRunResult = {
-    Files.createDirectories(Paths.get(ckpt))
-    clearStaleRun()
-    // start requests queue unmarked: Scrapy fingerprints one only when it
-    // is consumed, so a link-discovered copy can pre-empt it
-    val seedRows = seedCandidates(seeds).map { c =>
-      UrlRecord(c.urlOrCanonical, c.canonical, c.url_hash, UrlCanon.hostOf(c.canonical),
-        c.host_bucket, c.parse_fn, c.meta, c.priority, is_seed = true, wave = 0, seq = c.parent_seq)
-    }
-    PlaneWriter.writeDir(s"$ckpt/pending_w0", urlRecordSchema, seedRows.iterator)
-    // seed seqs are listed indexes, so follow-up seqs start past the list
-    writeState(0, seeds.length.toLong, 0L, 0L)
-    resumeReference()
-  }
-
-  private def resumeReference(): CrawlRunResult = {
-    val (wave, nextSeq, fetched, deduped, out0, pending) = readCheckpoint(new HashPartitioner(1))
-    val st0 = out0.zipPartitions(pending) { (bs, rows) =>
-      Iterator.single(RefState(bs.map(_._2.state).toArray.sortBy(_.bucket),
-        rows.map(_._2).toArray, nextSeq))
-    }
-    loopReference(wave, st0, fetched, deduped)
-  }
-
   /**
-   * The reference-order loop: one Spark task per checkpoint interval, each
-   * running [[WaveCore.referenceInterval]] over the previous interval's
+   * The reference-order loop, from the committed checkpoint: its plane
+   * ([[readCheckpoint]] under one partition: every bucket's seen state and
+   * the queued requests; a fresh replay's wave-0 checkpoint holds the
+   * start requests and no seen marks) is the first interval's input. Then
+   * one Spark task per checkpoint interval, each running
+   * [[WaveCore.referenceInterval]] over the previous interval's
    * one-partition output, pinned with localCheckpoint like the scalable
    * loop's `out`. Per interval: the interval job, whose collect also
    * returns the task's lineage rows (one per pop, exactly once), the
@@ -1952,8 +1925,8 @@ class WaveEngine(
    * set). The run's seen total is the last interval's; a run always runs
    * at least one interval, so it has one.
    */
-  private def loopReference(startWave: Int, st0: RDD[RefState], fetched0: Long,
-      deduped0: Long): CrawlRunResult = {
+  private def resumeReference(): CrawlRunResult = {
+    val (startWave, nextSeq0, fetched0, deduped0, plane) = readCheckpoint(new HashPartitioner(1))
     val t0 = System.currentTimeMillis()
     // locals for task closures (never capture `this`)
     val parsersB = sc.broadcast(parsers)
@@ -1962,7 +1935,11 @@ class WaveEngine(
     var wave = startWave
     var totalFetched = fetched0
     var totalDeduped = deduped0
-    var st = st0
+    var st = plane.mapPartitions { it =>
+      val rows = it.map(_._2).toArray
+      Iterator.single(RefState(rows.collect { case b: BucketSeen => b },
+        rows.collect { case r: UrlRecord => r }, nextSeq0))
+    }
     var seen = 0L
     var done = false
     // at least one interval: one with no pop left to it (a resume at

@@ -125,14 +125,21 @@ object Queries {
     // UTF8 strings (the old array_sort default comparator + transform
     // lambda were both interpreted per element — the dominant cost of
     // this query), and translate() strips the order digits in one
-    // codegen'd pass over the already-concatenated result.
+    // codegen'd pass over the already-concatenated result. A row outside
+    // those bounds (a line number not in 1..7, a flag holding one of the
+    // digits) would sort or strip wrongly, so it fails the query by name
+    // inside the same expression: no extra pass, no extra job.
     "q05_ordered_concat" -> Q(
       (s, d) => t(s, d, "lineitem")
         .groupBy(col("l_orderkey"))
         .agg(
           translate(
             array_join(sort_array(collect_list(
-              concat(col("l_linenumber").cast("string"), col("l_returnflag")))), ""),
+              when(col("l_linenumber").between(1, 7) &&
+                  (col("l_returnflag") <=> translate(col("l_returnflag"), "1234567", "")),
+                concat(col("l_linenumber").cast("string"), col("l_returnflag")))
+                .otherwise(raise_error(lit("q05_ordered_concat: the packed sort key needs " +
+                  "l_linenumber in 1..7 and an l_returnflag without the digits 1-7"))))), ""),
             "1234567", "").as("flags"),
           count(lit(1)).cast("long").as("n_lines"))
         .orderBy(col("l_orderkey")),

@@ -2,8 +2,10 @@ package graft.engine
 
 import graft.SparkTestSession
 import graft.model.{FetchResult, Span, UrlRecord}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoder, Row}
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.reflect.runtime.universe.TypeTag
 
 class PlaneWriterSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -132,5 +134,63 @@ class PlaneWriterSpec extends AnyFunSuite {
       assert(spark.read.parquet(d).select($"canonical").as[String].collect().toSeq ==
         Seq("https://second.example/"))
     }
+  }
+
+  /** The rows of `dirs` through [[PlaneReader]] and through `spark.read`,
+    * each as `show` renders it, sorted. */
+  def bothReads[A: TypeTag: Encoder](schema: org.apache.spark.sql.types.StructType, dirs: Seq[String],
+      show: A => String = (a: A) => a.toString): (Seq[String], Seq[String]) = {
+    val reader = PlaneReader[A](schema)
+    val planes = PlaneReader.files(dirs).flatMap(reader).map(show).sorted
+    val sparks = spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(dirs: _*)
+      .as[A].collect().toSeq.map(show).sorted
+    (planes, sparks)
+  }
+
+  test("the plane reader returns spark.read's rows: pending, seen, pace, hostN and fetched planes") {
+    import spark.implicits._
+    val base = SparkTestSession.tmpDir("reader")
+    val hosts = Seq((3, Long.MinValue, Long.MaxValue), (0, 0L, -1L), (-1, 1L, 0L))
+    // null optional fields, non-ASCII canonicals, empty meta and spans
+    val planes: Seq[(String, org.apache.spark.sql.types.StructType, Seq[Product])] = Seq(
+      ("pending", PlaneWriter.urlRecordSchema, urls), ("seen", PlaneWriter.seenSchema, seen),
+      ("pace", PlaneWriter.paceSchema, hosts), ("hostn", PlaneWriter.hostNSchema, hosts),
+      ("fetched", PlaneWriter.fetchResultSchema, fetched))
+    for ((name, schema, rows) <- planes; empty <- Seq(false, true)) {
+      val dir = s"$base/$name$empty"
+      PlaneWriter.writeDir(dir, schema, if (empty) Iterator.empty else rows.iterator)
+      val (got, want) = name match {
+        case "pending" => bothReads[UrlRecord](schema, Seq(dir))
+        case "seen" => bothReads[(Long, String, Int, Int)](schema, Seq(dir))
+        case "pace" | "hostn" => bothReads[(Int, Long, Long)](schema, Seq(dir))
+        case "fetched" => bothReads[FetchResult](schema, Seq(dir),
+          fr => fr.copy(media_bytes = null).toString + Option(fr.media_bytes).map(_.toSeq))
+      }
+      assert(got == want, s"$name, empty $empty")
+      assert(got.length == (if (empty) 0 else rows.length), s"$name, empty $empty")
+    }
+    assert(bothReads[UrlRecord](PlaneWriter.urlRecordSchema, Seq(s"$base/pendingfalse"))._1 ==
+      urls.map(_.toString).sorted)
+  }
+
+  test("the plane reader skips hidden and _ files, recurses into dirs and reads a retried part once") {
+    import spark.implicits._
+    val base = SparkTestSession.tmpDir("readerdirs")
+    val dirs = PlaneWriter.Dirs(s"$base/w/pending", s"$base/w/seen", None, None)
+    dirs.all.foreach(PlaneWriter.clear)
+    // a retried task attempt replaces the first attempt's part file
+    for (canon <- Seq("https://first.example/", "https://второй.example/")) {
+      PlaneWriter.checkpointTask(0, Iterator((1, urls.head.copy(canonical = canon))), dirs, -1)
+    }
+    // a task killed mid-write leaves its hidden temp file; a Spark write
+    // leaves a marker
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(dirs.pending, ".part-00000-c000.snappy.parquet.crashed.tmp"), "torn")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dirs.pending, "_SUCCESS"), "")
+    assert(PlaneReader.files(Seq(s"$base/w")) ==
+      Seq(s"${dirs.pending}/part-00000-c000.snappy.parquet", s"${dirs.seen}/part-00000-c000.snappy.parquet"))
+    val (got, want) = bothReads[UrlRecord](PlaneWriter.urlRecordSchema, Seq(dirs.pending))
+    assert(got == want && got == Seq(urls.head.copy(canonical = "https://второй.example/").toString))
+    assert(PlaneReader.files(Seq(s"$base/missing")).isEmpty)
   }
 }

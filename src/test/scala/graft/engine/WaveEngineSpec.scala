@@ -278,17 +278,18 @@ class WaveEngineSpec extends AnyFunSuite {
       }
       val (rare, jobsRare) = runJobs(1000000)
       assert(rare.fetched == site.totalPages && rare.waves >= 3)
-      // the seed wave, the wave-0 checkpoint and the exit checkpoint
-      assert(jobsRare == rare.waves + 3, s"keepFetched $keep: $jobsRare jobs for ${rare.waves} waves")
+      // resume's count (the wave-0 checkpoint is committed on the driver)
+      // and the exit checkpoint
+      assert(jobsRare == rare.waves + 2, s"keepFetched $keep: $jobsRare jobs for ${rare.waves} waves")
       val (every, jobsEvery) = runJobs(1)
       assert(every == rare.copy(elapsedMs = every.elapsedMs))
       // one checkpoint job per wave; the last wave's is the exit checkpoint
-      assert(jobsEvery == 2 * every.waves + 2,
+      assert(jobsEvery == 2 * every.waves + 1,
         s"keepFetched $keep: $jobsEvery jobs for ${every.waves} waves")
       // a capped budget adds one job per wave: the next pending's count
       val (capped, jobsCapped) = runJobs(1000000, cap = 1)
       assert(capped.fetched == site.totalPages && capped.waves > rare.waves)
-      assert(jobsCapped == 2 * capped.waves + 3,
+      assert(jobsCapped == 2 * capped.waves + 2,
         s"keepFetched $keep, capped: $jobsCapped jobs for ${capped.waves} waves")
       // each side table, and all three together, add one job: the side
       // plane's build, ahead of the first wave
@@ -301,8 +302,42 @@ class WaveEngineSpec extends AnyFunSuite {
         // the synthetic site answers every validator with a 304, which
         // has no links: revalidateFrom alone crawls the seeds only
         if (name != "revalidateFrom") assert(r == rare.copy(elapsedMs = r.elapsedMs), name)
-        assert(jobs == r.waves + 4, s"keepFetched $keep, $name: $jobs jobs for ${r.waves} waves")
+        assert(jobs == r.waves + 3, s"keepFetched $keep, $name: $jobs jobs for ${r.waves} waves")
       }
+    }
+  }
+
+  test("run() and resume() read their planes inside tasks: no stage scans files through Spark SQL") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    val sc = spark.sparkContext
+    val prior = SparkTestSession.tmpDir("scanprior")
+    new WaveEngine(spark, site, parsers,
+      CrawlConfig(checkpointDir = prior, hostBuckets = 8, fetchPartitions = 4)).run(seeds)
+    val cached: CrawlConfig => CrawlConfig =
+      _.copy(fetchCacheDir = Some(s"$prior/fetched"), revalidateFrom = Some(s"$prior/fetched"))
+    for ((name, withSide) <- Seq("plain" -> identity[CrawlConfig] _, "cache + validators" -> cached)) {
+      val ckpt = SparkTestSession.tmpDir("scan")
+      def engine(maxW: Int) = new WaveEngine(spark, site, parsers, withSide(CrawlConfig(
+        checkpointDir = ckpt, hostBuckets = 8, fetchPartitions = 4, maxWaves = maxW)))
+      val group = s"scan-${java.util.UUID.randomUUID()}"
+      val rdds = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+          if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+            e.stageInfo.rddInfos.foreach(r => rdds.add(r.name))
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, group)
+      val res = try {
+        engine(1).run(seeds)
+        engine(10000).resume()
+      } finally {
+        org.apache.spark.ListenerDrain(sc)
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+      assert(res.fetched >= 1 && !rdds.isEmpty, name)
+      assert(!rdds.asScala.exists(_.contains("FileScanRDD")), s"$name: ${rdds.asScala.toSet}")
     }
   }
 
@@ -794,20 +829,31 @@ class WaveEngineSpec extends AnyFunSuite {
 
   test("hostRpsTable: a null host or an rps <= 0 fails the run by name, and leaves no plane") {
     val site = SyntheticSite(nHosts = 1, basePagesPerHost = 2, branching = 1, hotFactor = 1)
+    // a chain: wave n fetches page n, so this fetcher throws in wave 2
+    val chain = SyntheticSite(nHosts = 1, basePagesPerHost = 4, branching = 1, hotFactor = 1)
+    val bad = chain.pageUrl(0, 2)
+    val throwsInWave2: graft.fetch.Fetcher = new graft.fetch.Fetcher {
+      def fetch(url: String) =
+        if (url == bad) throw new IllegalStateException(s"fetch of $url failed") else chain.fetch(url)
+    }
     import spark.implicits._
     val sc = spark.sparkContext
-    for ((plane, msg) <- Seq(
-        Seq((null: String, 1.0)).toDF("host", "rps") -> "hostRpsTable row with null host",
-        Seq(("a.example.jp", 0.0)).toDF("host", "rps") ->
-          "hostRpsTable row for host 'a.example.jp' has invalid rps 0.0 (must be > 0)")) {
+    for ((fetcher, plane, msg) <- Seq(
+        (site, Some(Seq((null: String, 1.0)).toDF("host", "rps")), "hostRpsTable row with null host"),
+        (site, Some(Seq(("a.example.jp", 0.0)).toDF("host", "rps")),
+          "hostRpsTable row for host 'a.example.jp' has invalid rps 0.0 (must be > 0)"),
+        (throwsInWave2, None, s"fetch of $bad failed"))) {
       val firstId = sc.emptyRDD[Int].id
-      val e = new WaveEngine(spark, site, parsers, CrawlConfig(
+      val e = new WaveEngine(spark, fetcher, parsers, CrawlConfig(
         checkpointDir = SparkTestSession.tmpDir("badrate"), hostBuckets = 8,
-        fetchPartitions = 2, hostRpsTable = Some(plane)))
+        fetchPartitions = 2, hostRpsTable = plane))
       val err = intercept[Exception](e.run(Seq(SeedSpec(site.pageUrl(0, 0)))))
       assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
         .exists(t => t.getMessage != null && t.getMessage.contains(msg)), err)
-      assert(!sc.getPersistentRDDs.values.exists(r => r.id > firstId && r.name == "side plane"))
+      // neither the side plane nor the resumed plane, a wave's output or
+      // the wave in flight's is left persisted
+      val kept = sc.getPersistentRDDs.values.filter(_.id > firstId).toSeq
+      assert(kept.isEmpty, s"$msg: ${kept.map(r => s"${r.id} ${r.name}\n${r.toDebugString}")}")
     }
   }
 

@@ -795,4 +795,21 @@ class PlanSpec extends AnyFunSuite {
     assert(collectNodes(p).count(_.nodeName.contains("HashAggregate")) >= 2,
       names.distinct)
   }
+
+  test("q05 ordered concat: a line number outside 1..7 or a digit in a flag fails by name") {
+    import spark.implicits._
+    def q05(rows: Seq[(Long, Int, String)]): Seq[(Long, String, Long)] = {
+      val dir = SparkTestSession.tmpDir("q05")
+      rows.toDF("l_orderkey", "l_linenumber", "l_returnflag").write.parquet(s"$dir/lineitem.parquet")
+      graft.SparkEntry.queries("q05_ordered_concat")(spark, dir).as[(Long, String, Long)].collect().toSeq
+    }
+    // in bounds: (line number, flag) order, a null flag skipped as string_agg skips it
+    assert(q05(Seq((1L, 3, "R"), (1L, 1, "N"), (1L, 2, null), (2L, 7, "AB"), (2L, 7, "A"))) ==
+      Seq((1L, "NR", 3L), (2L, "AAB", 2L)))
+    for (bad <- Seq(Seq((1L, 8, "N")), Seq((1L, 0, "N")), Seq((1L, 1, "N2")))) {
+      val err = intercept[Exception](q05(bad))
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(t => t.getMessage != null && t.getMessage.contains("q05_ordered_concat")), err)
+    }
+  }
 }

@@ -8,10 +8,11 @@ gap before it (time no job of the span covers), its duration, and whether it
 is one of the crawl's waves. Then the totals inside and outside the waves.
 
 The trace names a job only by its number, so the waves are found by
-position. `traced.run` has a fixed layout: the seed wave, the wave-0
-checkpoint, W waves, and the exit checkpoint, where W is `engine.waves` from
-the run's result JSON (the bench crawl checkpoints only at wave 0 and at
-exit). So the waves are the span's jobs 2 .. W+1, counted from 0 in start
+position. `traced.run` has a fixed layout: the resume job (a fresh run
+commits its wave-0 checkpoint on the driver, then reads it back and counts
+it in one job), W waves, and the exit checkpoint, where W is `engine.waves`
+from the run's result JSON (the bench crawl checkpoints only at wave 0 and
+at exit). So the waves are the span's jobs 1 .. W, counted from 0 in start
 order. Durations cannot pick them: once the waves are cheap, a checkpoint
 job can outlast a wave.
 
@@ -42,14 +43,14 @@ def wave_count(out, run_id):
     return int(m["value"])
 
 
-FIRST_WAVE = 2  # after the seed wave and the wave-0 checkpoint
+FIRST_WAVE = 1  # after the resume job
 
 
 def wave_flags(n_jobs, w):
-    """Per job of the span: whether it is one of the w waves (jobs 2..w+1)."""
-    if n_jobs != w + 3:
-        sys.exit("expected %d jobs in %s (seed wave, wave-0 checkpoint, %d waves, exit "
-                 "checkpoint), found %d" % (w + 3, SPAN, w, n_jobs))
+    """Per job of the span: whether it is one of the w waves (jobs 1..w)."""
+    if n_jobs != w + 2:
+        sys.exit("expected %d jobs in %s (resume, %d waves, exit checkpoint), found %d"
+                 % (w + 2, SPAN, w, n_jobs))
     return [FIRST_WAVE <= i < FIRST_WAVE + w for i in range(n_jobs)]
 
 
